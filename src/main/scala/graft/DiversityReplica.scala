@@ -6,15 +6,14 @@ import org.apache.spark.sql.functions._
 /** Entity-DIVERSITY k-fold replica + recall re-measurement (round-13
   * verdict item 3).
   *
-  * The clone replicas (`ServingScaleProbe.replicate`, `FullReplica`) scale
-  * the VOLUME axis only: every copied row is the same entity under a new
-  * id, so the champion-tier recall instruments measured there
-  * (SCALE.md §champion-recall, vs-uncut 0.405) are anchored on clone
-  * geometry — the round-12 verdict's standing epistemic caveat. This
-  * builder scales the DIVERSITY axis too: replica 0 is the source
-  * verbatim; every replica >= 1 row is a NEW entity synthesized from the
-  * source's own token vocabulary by keyed hashing (xxhash64 — no RNG, so
-  * the replica is bit-reproducible):
+  * Clone replicas scale the VOLUME axis only: every copied row is the
+  * same entity under a new id, so the champion-tier recall instruments
+  * measured there (SCALE.md §champion-recall, vs-uncut 0.405) are
+  * anchored on clone geometry — the round-12 verdict's standing
+  * epistemic caveat. This builder scales the DIVERSITY axis too: replica
+  * 0 is the source verbatim; every replica >= 1 row is a NEW entity
+  * synthesized from the source's own token vocabulary by keyed hashing
+  * (xxhash64 — no RNG, so the replica is bit-reproducible):
   *
   *  - part names: 2-3 tokens drawn from the real 16-token pool in hashed
   *    order, ~1/4 of them with a deterministic single-char drop (the
@@ -65,8 +64,8 @@ object DiversityReplica {
   }
 
   /** Documents-only diverse replica with a DISTRIBUTED write — the
-    * operational-loop rehearsal input at decade scales (CadenceLoopProbe
-    * reads only the documents table), where `writeSingle`'s
+    * operational-loop rehearsal input at decade scales (the loop reads
+    * only the documents table), where `writeSingle`'s
     * one-partition file would serialize a multi-GB write through a
     * single thread. Values are bit-identical to [[build]]'s documents
     * table at the same k. */

@@ -57,13 +57,16 @@ object Lineage {
     * guide §5 — the ingest-chain argument applied to fan-in inputs; the
     * overlay anchor's four inline inputs are the motivating case:
     * sequential cuts 0.35+0.44+0.91+2.11 s, concurrent ≈ the longest).
-    * Results keep input order. Same small-relation-only rule as [[cut]]. */
+    * Results keep input order. Same small-relation-only rule as [[cut]].
+    * A failed cut is rethrown only after every other cut has finished, so
+    * no job of the call is still running when the caller sees the error. */
   private[graft] def cutAll(dfs: DataFrame*): Seq[DataFrame] = {
     if (dfs.lengthCompare(2) < 0) dfs.map(cut)
     else {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       val fs = dfs.map(df => Future(cut(df))(cutPool))
+      fs.foreach(Await.ready(_, Duration.Inf))
       fs.map(Await.result(_, Duration.Inf))
     }
   }

@@ -57,8 +57,8 @@ import org.apache.spark.sql.functions._
   * touched slice, spec-pinned == a full recount). A round's remaining
   * full-relation cost is the linear scan+write of the symbols artifact —
   * shuffle and window cost track the BATCH's symbol frequency. This is
-  * what makes vocab-scale training tractable: `graft.BpeScale` measures
-  * K=512 merges at sf0.01 (see SCALE.md). On a preemptible cluster, set
+  * what makes vocab-scale training tractable: K=512 merges were measured
+  * at sf0.01 (SCALE.md §BPE delta rounds). On a preemptible cluster, set
   * `spark.graft.reliableCheckpoint=true` + a durable checkpoint dir and
   * every lineage cut switches to reliable `.checkpoint()` (lineageCut).
   */
@@ -92,16 +92,6 @@ object BpeTrainer {
     * greedy-rejected in earlier peels), so P passes recover the greedy
     * prefix — measured ~4x more merges/round at P=4. */
   val BpeSelPasses = 4
-
-  /** Scale-run knobs (the K=512 demonstration, `graft.BpeScale`): a
-    * larger disjoint batch needs a wider candidate window and deeper
-    * peeling to FIND that many symbol-disjoint pairs (early rounds are
-    * conflict-limited: with ~30 base characters the max disjoint matching
-    * is ~15 pairs; the bound loosens as merges mint new symbols). The
-    * selection stays driver-trivial — every structure is ≤ window rows. */
-  val BpeScaleM = 64
-  val BpeScaleWindow = 1024
-  val BpeScalePasses = 8
 
   /** (word, cnt) — the ONLY corpus-sized stage. */
   private def wordCounts(spark: SparkSession, dir: String): DataFrame =
@@ -160,10 +150,8 @@ object BpeTrainer {
     * rank within the candidate window, dominance-filtered to
     * symbol-disjoint pairs, first `m` survivors. Output (a, b, c, sel)
     * with sel = 1..m the within-round application order. The window and
-    * its self-join are both ≤ `window` rows — driver-trivial. */
-  private[graft] def bestPairsFrom(pc: DataFrame, m: Int,
-                                   window: Int = BpeCandWindow,
-                                   passes: Int = BpeSelPasses): DataFrame = {
+    * its self-join are both ≤ [[BpeCandWindow]] rows — driver-trivial. */
+  private[graft] def bestPairsFrom(pc: DataFrame, m: Int): DataFrame = {
     val rankW = Window.orderBy(col("c").desc, col("a"), col("b"))
     // eager localCheckpoint: the peel fold below references the window
     // ~3x per pass (3^P subtree copies) — over the raw window plan that
@@ -172,12 +160,12 @@ object BpeTrainer {
     // Durability is lineageCut's concern: local blocks by default,
     // reliable .checkpoint() under spark.graft.reliableCheckpoint=true.
     val win = lineageCut(pc
-      .orderBy(col("c").desc, col("a"), col("b")).limit(window)
+      .orderBy(col("c").desc, col("a"), col("b")).limit(BpeCandWindow)
       .withColumn("rank", row_number().over(rankW)))
     // iterated peeling (see BpeSelPasses): every pass's survivors are
     // greedy-kept and pairwise disjoint; conflicts with survivors leave
     // the pool before the next pass
-    val (peels, _) = (1 to passes).foldLeft((Seq.empty[DataFrame], win)) {
+    val (peels, _) = (1 to BpeSelPasses).foldLeft((Seq.empty[DataFrame], win)) {
       case ((acc, rem), _) =>
         val hi = rem.select(col("rank").as("h_rank"), col("a").as("h_a"),
           col("b").as("h_b"))
@@ -286,18 +274,14 @@ object BpeTrainer {
     * round (batch, symbols, pair counts; round-5's two-artifact chain
     * recomputed pair counts from the full relation every round). The
     * round's batch selects from the MAINTAINED pc artifact, so no round
-    * after t=0 windows over the full symbol relation. `fam` isolates the
-    * scale-demo chain's artifact family from the gate's. */
-  private[graft] def ensureIter(spark: SparkSession, dir: String, t: Int,
-                                m: Int = BpeRoundM, window: Int = BpeCandWindow,
-                                passes: Int = BpeSelPasses, fam: String = "",
-                                words: (SparkSession, String) => DataFrame = wordCounts)
+    * after t=0 windows over the full symbol relation. */
+  private[graft] def ensureIter(spark: SparkSession, dir: String, t: Int)
       : (String, String, String) = {
     val V = 3
-    def kind(x: String) = s"graft_bpe$fam" + "_" + x
+    def kind(x: String) = s"graft_bpe_$x"
     if (t == 0) {
       val sPath = graft.Materialize.ensure(spark, kind("s0"), dir, V) { p =>
-        symbols0(words(spark, dir)).write.mode("overwrite").parquet(p)
+        symbols0(wordCounts(spark, dir)).write.mode("overwrite").parquet(p)
       }
       val pcPath = graft.Materialize.ensure(spark, kind("pc0"), dir, V) { p =>
         pairCounts(spark.read.parquet(sPath))
@@ -305,10 +289,9 @@ object BpeTrainer {
       }
       ("", sPath, pcPath)
     } else {
-      val (_, sPrev, pcPrev) =
-        ensureIter(spark, dir, t - 1, m, window, passes, fam, words)
+      val (_, sPrev, pcPrev) = ensureIter(spark, dir, t - 1)
       val bPath = graft.Materialize.ensure(spark, kind(s"b$t"), dir, V) { p =>
-        bestPairsFrom(spark.read.parquet(pcPrev), m, window, passes)
+        bestPairsFrom(spark.read.parquet(pcPrev), BpeRoundM)
           .coalesce(1).write.mode("overwrite").parquet(p)
       }
       val sPath = graft.Materialize.ensure(spark, kind(s"s$t"), dir, V) { p =>
@@ -326,60 +309,6 @@ object BpeTrainer {
       }
       (bPath, sPath, pcPath)
     }
-  }
-
-  /** The scale run's corpus: token n-gram PHRASES as the word unit. The
-    * driver's synthetic documents have a 31-word vocabulary (107 possible
-    * within-word merges — single-word BPE exhausts at ~89, measured), so
-    * the vocabulary-scale demonstration derives a combinatorial word
-    * unit from the same text; n is the VOCABULARY-SCALE knob of the
-    * data-boundedness measurement (sf0.1: n=2 → 931 distinct words,
-    * n=3 → 27k, n=4 → 211k — a ~200× relation range from the same
-    * corpus). Same trainer, same relations — only the t=0 word-count
-    * derivation differs. */
-  private[graft] def phraseCountsN(spark: SparkSession, dir: String, n: Int): DataFrame =
-    Tables.documents(spark, dir)
-      .select(explode(graft.functions.TextFunctions.tokenWindows(
-        tokens(lower(col("text"))), n)).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-
-  /** K-merge scale run (driven by `graft.BpeScale`): rounds of the delta
-    * chain at the scale knobs ([[BpeScaleM]] disjoint merges/round,
-    * window [[BpeScaleWindow]], [[BpeScalePasses]] peels) over the phrase
-    * corpus until `target` merges are learned or a round yields none.
-    * Returns (rounds, merges). Artifact count: 2 at t=0 (s0, pc0) + 3 per
-    * round (b, s, pc). */
-  /** One measured round of [[bpeTrainAtScale]]: wall seconds for the
-    * round's three artifact builds PLUS its three instrumentation counts
-    * (round 1 also pays the t=0 roots), merges learned, and the
-    * post-round symbol/pair-count relation sizes — the axes of the
-    * data-bound-vs-overhead-bound question. The counts live INSIDE the
-    * timer so Σ per-round sec reconciles with the harness's headline
-    * wall (parquet counts are footer-metadata sums — negligible). */
-  case class BpeRoundStat(round: Int, merges: Long, sec: Double,
-                          symbolRows: Long, pairRows: Long)
-
-  def bpeTrainAtScale(spark: SparkSession, dir: String, target: Int,
-                      maxRounds: Int = 64, n: Int = 2): (Int, Long, Seq[BpeRoundStat]) = {
-    val fam = if (n == 2) "scale" else s"scale$n"
-    var t = 0
-    var total = 0L
-    var lastBatch = -1L
-    val stats = Seq.newBuilder[BpeRoundStat]
-    while (total < target && t < maxRounds && lastBatch != 0L) {
-      t += 1
-      val t0 = System.nanoTime()
-      val (b, s, pc) = ensureIter(spark, dir, t,
-        BpeScaleM, BpeScaleWindow, BpeScalePasses, fam = fam,
-        words = phraseCountsN(_, _, n))
-      lastBatch = spark.read.parquet(b).count()
-      val (sRows, pcRows) =
-        (spark.read.parquet(s).count(), spark.read.parquet(pc).count())
-      val sec = (System.nanoTime() - t0) / 1e9
-      total += lastBatch
-      stats += BpeRoundStat(t, lastBatch, sec, sRows, pcRows)
-    }
-    (t, total, stats.result())
   }
 
   /** Gate query: the learned merge table — global merge index (round

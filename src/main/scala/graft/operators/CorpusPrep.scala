@@ -577,12 +577,12 @@ object CorpusPrep {
   }
 
   /** One production ingest increment (cadence step 1). Requires the
-    * standing corpus bootstrapped (`ensureDocBase` built — append refuses
-    * otherwise); call once per arriving batch. Returns the screen
-    * verdicts; the overlay stays deferred until [[compactionRefresh]].
-    * Screens anti-join the batch's own ids out of the standing side, so
-    * the verdict plan is correct even when evaluated after the band
-    * append below admits the batch. An at-least-once caller (the
+    * standing corpus bootstrapped (`ensureDocBase` built — refused before
+    * any chain starts otherwise); call once per arriving batch. Returns
+    * the screen verdicts; the overlay stays deferred until
+    * [[compactionRefresh]]. The screens read the standing side after the
+    * appends admit the batch and anti-join the batch's own ids out of
+    * it. An at-least-once caller (the
     * streaming cadence face) passes `batchTag`: the three artifact
     * appends route through `Materialize.appendBatch`, so a REPLAYED
     * batch converges to one copy of its rows and the recomputed verdicts
@@ -590,6 +590,8 @@ object CorpusPrep {
   def ingestIncrement(spark: SparkSession, dir: String,
                       batch: DataFrame,
                       batchTag: Option[String] = None): DataFrame = {
+    require(graft.Materialize.isBuilt(spark, "graft_docbase", dir, DocBaseVersion),
+      s"ingest into $dir: no docbase — build it with ensure() first")
     val batchDocs = batch.select(col("doc_id"), col("text"))
     val batchIds = batchDocs.select(col("doc_id"))
     // The three artifact maintenances (docbase labels, band index, window
@@ -601,9 +603,7 @@ object CorpusPrep {
     // batch (r16, guide §5). Ordering is safe across chains because an
     // ADDED documents file does not stale a manifest (staleness is
     // modified/removed recorded inputs only) and each chain keeps its own
-    // ensure-then-append order. The docbase read path resolves through
-    // servingPath (no build): if the docbase is absent the append's loud
-    // bootstrap refusal still reaches the caller via the awaited future.
+    // ensure-then-append order.
     val fDocBase = scala.concurrent.Future(
       appendToDocBase(spark, dir, batch, batchTag = batchTag))(ingestChainPool)
     // window-posting chain (row-local, same ensure-over-standing +
@@ -615,28 +615,32 @@ object CorpusPrep {
         .select(col("doc_id"), col("text")))
       appendToDocWins(spark, dir, batchDocs, batchTag = batchTag)
     }(ingestChainPool)
-    val standingHashes = spark.read.parquet(graft.Materialize.servingPath(
-        spark, "graft_docbase", dir, DocBaseVersion))
-      .join(batchIds, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("screen_hash"))
-    def standingBands = {
-      val standing = graft.Tables.documents(spark, dir)
-        .join(batchIds, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("text"))
-      spark.read.parquet(Dedup.ensureBandsIndex(spark, dir, standing))
-        .join(batchIds, Seq("doc_id"), "left_anti")
-    }
-    val verdict = ingestScreenOver(batchDocs, standingHashes, standingBands)
-    Dedup.appendToBandsIndex(spark, dir, batchDocs, batchTag = batchTag)
-    // join the concurrent chains before returning: the verdict is only
-    // EVALUATED by the caller, so every read it embeds (docbase files,
-    // bands) sees the settled artifact directories — the same
-    // anti-join-the-batch-ids argument the sequential spelling relied on
-    scala.concurrent.Await.result(fDocBase,
+    // Each screen side is read from the path its append RETURNED: a
+    // replayed tag's repair deletes the crashed attempt's files, so a
+    // listing taken before the append settles could plan over files that
+    // no longer exist. The batch's own rows are anti-joined out.
+    val bandsPath =
+      try {
+        Dedup.ensureBandsIndex(spark, dir, graft.Tables.documents(spark, dir)
+          .join(batchIds, Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("text")))
+        Dedup.appendToBandsIndex(spark, dir, batchDocs, batchTag = batchTag)
+      } finally {
+        // a failed caller-thread chain still waits out the other two, so
+        // no job of this increment is running when its exception surfaces
+        Seq(fDocBase, fDocWins).foreach(
+          scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+      }
+    val docBasePath = scala.concurrent.Await.result(fDocBase,
       scala.concurrent.duration.Duration.Inf)
     scala.concurrent.Await.result(fDocWins,
       scala.concurrent.duration.Duration.Inf)
-    verdict
+    val standingHashes = spark.read.parquet(docBasePath)
+      .join(batchIds, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("screen_hash"))
+    val standingBands = spark.read.parquet(bandsPath)
+      .join(batchIds, Seq("doc_id"), "left_anti")
+    ingestScreenOver(batchDocs, standingHashes, standingBands)
   }
 
   /** Bootstrap the standing-corpus artifacts concurrently: docbase (row

@@ -261,9 +261,10 @@ object Dedup {
       spark.read.parquet(ensureContainmentDf(spark, dir)), threshold)
 
   /** The prediction core over explicit (id, grams) + (g, df) relations —
-    * shared by the artifact-fed gate row and ContainCapProbe, so the
-    * probe can never drift from the spelling the dispatcher actually
-    * runs (the spec's independent recount stays separate on purpose). */
+    * the spelling the dispatcher runs and the one SCALE.md's
+    * containment-budget numbers were measured with (§The containment
+    * budget earned for the asymmetric join); the spec's independent
+    * recount stays separate on purpose. */
   private[graft] def containmentCandidateCostOver(c: DataFrame, dfRel: DataFrame,
                                                   threshold: Double): DataFrame = {
     val withDf = c.select(col("id"), explode(col("grams")).as("g"))
@@ -1640,8 +1641,9 @@ object Dedup {
         .groupBy(col("fp")).agg(sum(col("c")).as("c")))
 
   /** The prediction core over an explicit (fp, c) relation — shared by
-    * the artifact-fed gate row and WinnowCapProbe's crafted corpus, so
-    * the probe measures the spelling the dispatcher actually runs. */
+    * the artifact-fed gate row and the crafted-corpus measurement
+    * (SCALE.md §The winnow df-cap's value case), so the measured spelling
+    * is the one the dispatcher runs. */
   private[graft] def winnowCandidateCostOver(fc: DataFrame): DataFrame =
     fc.agg(coalesce(sum(col("c") * col("c")), lit(0L)).cast("long")
         .as("candidate_rows"),
@@ -1817,8 +1819,8 @@ object Dedup {
     * ≈ 0.33 µs/row + fixed; the capped form ~1.4 s slower than uncapped
     * when nothing is hot, measured at the 10× replica). 8 M keeps the
     * EXACT uncapped semantics wherever it is not measurably the slower
-    * plan — the WinnowCapProbe boilerplate corpus predicts ~50 M pairs
-    * and correctly escalates. */
+    * plan — the boilerplate corpus of SCALE.md §The winnow df-cap's
+    * value case predicts ~50 M pairs and correctly escalates. */
   val WinnowCandidateBudget: Long = 8L * 1000 * 1000
 
   /** Memo for the dispatch predictions — `.head()` is a

@@ -96,17 +96,6 @@ object FuzzySearch {
     rankCandidates(c, q, hits, numResults, cap, filters)
   }
 
-  /** Materialized-index fuzzy search: candidate generation reads the
-    * PRE-BUILT posting-pairs relation (NgramIndex.postingPairsMulti) from
-    * an ngram-clustered parquet layout instead of deriving postings inline
-    * per query. The query's trigram set becomes an `isin` predicate PUSHED
-    * INTO the parquet scan (PushedFilters: In(ngram, ...)), so with the
-    * pairs sorted by ngram within each file, row-group min/max stats skip
-    * everything but the probed trigrams' postings — the index-lookup read
-    * pattern SCALE.md promises (at 100 TB: bucketed+sorted by ngram, a
-    * query touches |q-grams|/|gram-space| of the index). Scoring is the
-    * identical pipeline (FuzzyIndexSpec pins bit-equal results; the shared
-    * oracle gates it). */
   /** Canonical posting-index layout: pairs clustered by ngram into a fixed
     * file count, sorted within files so scan stats are tight. Shared by the
     * initial build and compaction so the two can never drift. */
@@ -149,12 +138,23 @@ object FuzzySearch {
         .write.mode("append").parquet(p)
     }
 
+  /** Materialized-index fuzzy search: candidate generation reads the
+    * PRE-BUILT posting-pairs relation (NgramIndex.postingPairsMulti) from
+    * an ngram-clustered parquet layout instead of deriving postings inline
+    * per query. The query's trigram set becomes an `isin` predicate PUSHED
+    * INTO the parquet scan (PushedFilters: In(ngram, ...)), so with the
+    * pairs sorted by ngram within each file, row-group min/max stats skip
+    * everything but the probed trigrams' postings — the index-lookup read
+    * pattern SCALE.md promises (at 100 TB: bucketed+sorted by ngram, a
+    * query touches |q-grams|/|gram-space| of the index). Scoring is the
+    * identical pipeline (FuzzyIndexSpec pins bit-equal results; the shared
+    * oracle gates it). Serves the part-name [[corpus]] only: the posting
+    * artifact is keyed by input dir and version, not by corpus. */
   def fuzzySearchIndexed(spark: SparkSession, dir: String, query: String,
-                         numResults: Int, cap: Int = DefaultCap,
-                         corpusOf: (SparkSession, String) => DataFrame = corpus): DataFrame = {
+                         numResults: Int, cap: Int = DefaultCap): DataFrame = {
     val q = cleanQuery(query)
     val qGramSet = queryTrigrams(q).distinct
-    val c = corpusOf(spark, dir)
+    val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
     val hits = spark.read.parquet(path)
       .filter(col("ngram").isin(qGramSet: _*))
@@ -652,9 +652,9 @@ object FuzzySearch {
   }
 
   /** The stop-gram cut's allowed set: grams whose multiplicity df clears
-    * df · dfCapInverse ≤ n. ONE derivation shared by the operator and
-    * FuzzyCostProbe, so the published candidate-volume measurements can
-    * never drift from what the shipped operator does. */
+    * df · dfCapInverse ≤ n. ONE derivation, the one SCALE.md's published
+    * candidate-volume measurements (the `fuzzy_batch` audit row) were
+    * taken with. */
   private[graft] def allowedGrams(postings: DataFrame, n: Long,
                                   dfCapInverse: Long): DataFrame =
     postings.groupBy(col("ngram"))
@@ -986,7 +986,7 @@ object FuzzySearch {
     * (0 = channel off). Catch probability at 2-row bands:
     * 1−(1−J²)^bands — measured candidate ceilings at the round-14
     * diversity replica: 16 bands 0.948 of the uncut top-k, 8 bands
-    * 0.759 (LshCeilingProbe; SCALE.md §fuzzy-lsh). Round 15 added the
+    * 0.759 (SCALE.md §fuzzy-lsh). Round 15 added the
     * 12/10 intermediate widths: end-to-end effective recall at sfdiv1
     * steps 0.9766 / 0.9680 / 0.9594 / 0.9328 down the 16/12/10/8 ladder
     * while bucket volume steps 1.0 / 0.77 / 0.65 / 0.51 — one knob

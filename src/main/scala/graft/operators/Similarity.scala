@@ -569,93 +569,6 @@ object Similarity {
        |         / count(*)::DOUBLE AS agreement
        |FROM flat f JOIN assign2 a USING (vec_id)""".stripMargin
 
-  /** The [[RecallProbeCap]]-budgeted probe set shared by the replica
-    * recall measurements below: the first 64 probes of the batch stride —
-    * deterministic, linear-in-N ground-truth cost forever. */
-  private[graft] def recallProbes(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") % BatchProbeMod === 0 &&
-        col("vec_id") < BatchProbeMod * RecallProbeCap)
-      .select(col("vec_id").as("pid"), col("embedding").as("pemb"))
-
-  /** Per-probe top-`nprobe` cells by FLAT centroid ranking, for a probe
-    * TABLE (the single-probe ivfBucketedTopK selection, batched). */
-  private[graft] def flatProbeCellsBatch(fine: DataFrame, probes: DataFrame,
-                                         nprobe: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("pc").desc, col("cid"))
-    fine.crossJoin(broadcast(probes))
-      .select(col("pid"), col("cid"), cosine(col("cemb"), col("pemb")).as("pc"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
-      .select(col("pid"), col("cid").as("cell"))
-  }
-
-  /** Per-probe top-`nprobe` cells by the TWO-LEVEL selection rule
-    * ([[ivf2ProbeCells]], batched): rank coarse reps per probe, keep
-    * `nprobe1` groups, rank only those groups' fine centroids. The probe
-    * rule must quantize exactly as the two-level BUILD did or the read
-    * looks for vectors where the build never put them. */
-  private[graft] def twoLevelProbeCellsBatch(fine: DataFrame, probes: DataFrame,
-                                             centroidMod: Long, coarseStride: Long,
-                                             numCoarse: Int, nprobe1: Int,
-                                             nprobe: Int): DataFrame = {
-    val coarse = coarseReps(fine, centroidMod, coarseStride, numCoarse)
-    val f2c = fineToCoarse(fine, coarse)
-    val gW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("gc").desc, col("gid"))
-    val pg = coarse.crossJoin(broadcast(probes))
-      .select(col("pid"), col("pemb"), col("gid"),
-        cosine(col("gemb"), col("pemb")).as("gc"))
-      .withColumn("grn", row_number().over(gW)).filter(col("grn") <= nprobe1)
-      .select(col("pid"), col("pemb"), col("gid"))
-    val cW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("pc").desc, col("cid"))
-    pg.join(broadcast(fine.join(broadcast(f2c), "cid")), "gid")
-      .select(col("pid"), col("cid"), cosine(col("cemb"), col("pemb")).as("pc"))
-      .withColumn("rn", row_number().over(cW)).filter(col("rn") <= nprobe)
-      .select(col("pid"), col("cid").as("cell"))
-  }
-
-  /** Mean recall@k of a cell-partitioned index read (candidates = the
-    * index rows in each probe's `probeCells`, re-ranked exact-cosine) vs
-    * the exact cosine top-k, over the [[RecallProbeCap]]-budgeted probe
-    * stride. Measurement-only (BuildScaleProbe's replica rehearsal — the
-    * gated single-probe rows `ann_ivf2_assigned_recall`/`ann_ivf2_recall`
-    * anchor the same numbers against DuckDB at the gate): one row
-    * (n_probes, k_total, hits_total, recall). Ground truth is bounded at
-    * RecallProbeCap·N — linear in the corpus forever — and the per-probe
-    * windows partition by pid, so the probe budget prunes both sides. */
-  private[graft] def indexBatchRecall(e: DataFrame, index: DataFrame,
-                                      probes: DataFrame, probeCells: DataFrame,
-                                      k: Int): DataFrame = {
-    val exW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("cos").desc, col("vec_id"))
-    val exact = e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        cosine(col("embedding"), col("pemb")).as("cos"))
-      .withColumn("rk", row_number().over(exW)).filter(col("rk") <= k)
-      .select(col("pid"), col("vec_id"))
-    val apW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("cos").desc, col("vec_id"))
-    val approx = index.select(col("vec_id"), col("embedding"), col("cell"))
-      .join(broadcast(probeCells), "cell")
-      .join(broadcast(probes), "pid")
-      .filter(col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        cosine(col("embedding"), col("pemb")).as("cos"))
-      .withColumn("rk", row_number().over(apW)).filter(col("rk") <= k)
-      .select(col("pid"), col("vec_id"))
-    val perHit = exact.join(approx, Seq("pid", "vec_id"))
-      .groupBy(col("pid")).agg(count(lit(1)).as("hits"))
-    exact.groupBy(col("pid")).agg(count(lit(1)).as("kx"))
-      .join(perHit, Seq("pid"), "left")
-      .select(col("pid"), col("kx"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .agg(count(lit(1)).as("n_probes"), sum(col("kx")).as("k_total"),
-        sum(col("hits")).as("hits_total"),
-        (sum(col("hits")).cast("double") / sum(col("kx")).cast("double"))
-          .as("recall"))
-  }
-
   /** The fixed-size deterministic codebook: every `centroidMod`-th vector,
     * capped at `numCentroids` — C never scales with N. FROZEN under
     * appends: the id cap (`centroidMod * numCentroids`) means later batches
@@ -676,14 +589,6 @@ object Similarity {
       .groupBy(col("vec_id")).agg(max(col("sc")).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cell"))
 
-  /** The materialized IVF index path: cell assignment written ONCE as
-    * cell-partitioned parquet (the ingest-time index build), then the query
-    * reads ONLY the `nprobe` probed cells' partitions — directory-level
-    * partition pruning via dynamic partition pruning on the broadcast
-    * probe-cells join. Same results as `ivfTopK` (one oracle gates both);
-    * the physical difference is the read: nprobe/C of the index instead of
-    * a full scan. This is the 100 TB shape: the index build is a one-time
-    * linear job, every query is a pruned read. */
   /** Write-once IVF index build (at scale this runs at ingest): vectors
     * cell-assigned against `cent` and written partitioned by cell. The
     * codebook parameters key the artifact alongside the data dir +
@@ -728,6 +633,14 @@ object Similarity {
           .write.mode("overwrite").partitionBy("cell").parquet(tmp)
     }
 
+  /** The materialized IVF index path: cell assignment written ONCE as
+    * cell-partitioned parquet (the ingest-time index build), then the query
+    * reads ONLY the `nprobe` probed cells' partitions — directory-level
+    * partition pruning via dynamic partition pruning on the broadcast
+    * probe-cells join. Same results as `ivfTopK` (one oracle gates both);
+    * the physical difference is the read: nprobe/C of the index instead of
+    * a full scan. This is the 100 TB shape: the index build is a one-time
+    * linear job, every query is a pruned read. */
   def ivfBucketedTopK(spark: SparkSession, dir: String, probeId: Long, k: Int,
                       centroidMod: Long = 25L, nprobe: Int = 2,
                       numCentroids: Int = IvfNumCentroids): DataFrame = {
@@ -759,9 +672,9 @@ object Similarity {
     * serving a stale codebook size. At every gate corpus the derivation
     * lands on the anchor 16, so the fixed-ncells oracle gates this row
     * unchanged; OperatorParitySpec pins that equality explicitly plus
-    * the derived values at the replica counts, and IvfScaleProbe
-    * measures flat probed rows at the derived sizes without
-    * hand-tuning. The count() is one metadata-bounded job per build —
+    * the derived values at the replica counts, and SCALE.md §ncells
+    * growth measured records flat probed rows at the derived sizes
+    * without hand-tuning. The count() is one metadata-bounded job per build —
     * at 100 TB it rides the same ingest pass that writes the index. */
   /** Memo for the corpus count the derivation reads — a construction-time
     * job (the cost-memo precedent); keyed by the input-dir fingerprint so
@@ -789,7 +702,8 @@ object Similarity {
     * stats artifact is even needed. None = exact flat assignment; Some
     * ((numCoarse, nprobe1)) = the two-level quantized assignment at the
     * balanced coarse count C1 ≈ √C and the measured quarter-coverage
-    * probe width (the BuildScaleProbe sweep's recommended point). */
+    * probe width (the recommended point of the build sweep, SCALE.md
+    * §Build-path rehearsal). */
   def ivfBuildPlan(n: Long, numCentroids: Int,
                    budget: Long = IvfAssignBudget): Option[(Int, Int)] =
     if (n * numCentroids <= budget) None
@@ -1099,8 +1013,9 @@ object Similarity {
     * subspaces of `PqDim` dims, each quantized against a `PqK`-codeword
     * subspace codebook → a 16-byte code per vector (still 16× smaller
     * than the raw floats). Round 14 re-geometried the quantizer from
-    * (M=8, K=16) after AnnPqQualityProbe measured the ADC ranking as the
-    * refine ladder's real bottleneck — shortlist recall at 26·k depth
+    * (M=8, K=16) after the ADC ranking was measured as the refine
+    * ladder's real bottleneck (SCALE.md §ann-refine-sizing) — shortlist
+    * recall at 26·k depth
     * with ALL cells probed: (8,16) 0.68 gate / 0.64 diversity replica;
     * (16,64) 0.98 / 1.00. Finer subspaces cut quantization error far
     * faster than codeword count alone ((8,256) measured 0.84 at the
@@ -1591,13 +1506,13 @@ object Similarity {
     *    cannot cover ncells).
     *  - [[AnnCodeRowBudget]] bounds candidate code rows: nprobe cells ×
     *    the n/ncells cell size. Round 15: recalibrated 1024 → 8192 on the
-    *    measured diversity-replica coverage curve (AnnDivProbe, 64-probe
-    *    stride mean — the r14 single-probe 0.80 was one lucky probe):
-    *    1024 rows bought coverage 0.42, and each doubling of nprobe adds
-    *    ~0.15 until the knee at 64 probes (0.90 sample / 0.95 trained
-    *    centroids). 8192 16-byte codes = 128 KB per query — still flat
-    *    in N under the ncells ∝ N cell policy, and two decades under
-    *    the int8 tier it shortlists for.
+    *    measured diversity-replica coverage curve (SCALE.md
+    *    §ann-div-recall, 64-probe stride mean — the r14 single-probe
+    *    0.80 was one lucky probe): 1024 rows bought coverage 0.42, and
+    *    each doubling of nprobe adds ~0.15 until the knee at 64 probes
+    *    (0.90 sample / 0.95 trained centroids). 8192 16-byte codes =
+    *    128 KB per query — still flat in N under the ncells ∝ N cell
+    *    policy, and two decades under the int8 tier it shortlists for.
     *  - [[AnnRefineRowBudget]] bounds the int8 point reads: refine·k
     *    (512: at the 8× candidate pool the 256-row shortlist left a
     *    measured 0.02 ADC-ordering loss on the table). */
@@ -1674,7 +1589,7 @@ object Similarity {
     * KMeans.trainedCentroids) — the diversity replica is the first
     * corpus with real cluster structure, and the measured coverage gap
     * between the id-stride sample and the trained codebook is ~0.05
-    * recall at every nprobe (AnnDivProbe; SCALE.md §ann-div-recall).
+    * recall at every nprobe (SCALE.md §ann-div-recall).
     * Sample PQ books stay: trained books measured ZERO recall change
     * twice (the ladder is coverage-bound, and the int8 re-rank absorbs
     * ADC ordering noise). */
@@ -1860,34 +1775,6 @@ object Similarity {
        |ORDER BY cosine_sim DESC, d.vec_id
        |LIMIT $k""".stripMargin
   }
-
-  /** Recall@k of the coarse+refine path vs the exact float cosine top-k
-    * — the single-probe recall row of the refine knob (the `ivf2Recall`
-    * precedent): shows what the int8 re-rank recovers over the raw ADC
-    * ranking, bounded by the shortlist's coverage (refine·k deep). */
-  def ivf2PqRefineRecall(spark: SparkSession, dir: String, probeId: Long,
-                         k: Int, nprobe: Int = 2,
-                         refine: Int = 4): DataFrame = {
-    val exact = cosineTopK(spark, dir, probeId, k).select(col("vec_id"))
-    val approx = ivf2PqRefineTopK(spark, dir, probeId, k, nprobe = nprobe,
-        refine = refine)
-      .select(col("vec_id").as("a_id"))
-    exact.join(broadcast(approx), col("vec_id") === col("a_id"), "left")
-      .agg(count(lit(1)).as("k_exact"), count(col("a_id")).as("hits"))
-      .withColumn("recall",
-        col("hits").cast("double") / col("k_exact").cast("double"))
-      .orderBy(col("k_exact"))
-  }
-
-  def ivf2PqRefineRecallOracle(probeId: Long, k: Int, nprobe: Int = 2,
-                               refine: Int = 4): String =
-    s"""SELECT count(*) AS k_exact, count(a.a_id) AS hits,
-       |       count(a.a_id)::DOUBLE / count(*)::DOUBLE AS recall
-       |FROM (${cosineTopKOracle(probeId, k)}) e
-       |LEFT JOIN (SELECT vec_id AS a_id FROM (
-       |  ${ivf2PqRefineTopKOracle(probeId, k, nprobe = nprobe, refine = refine)})) a
-       |  ON e.vec_id = a.a_id
-       |ORDER BY k_exact""".stripMargin
 
   def ivf2PqTopKOracle(probeId: Long, k: Int, centroidMod: Long = 25L,
                        nprobe: Int = 2, numCentroids: Int = IvfNumCentroids,

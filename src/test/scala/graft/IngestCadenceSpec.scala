@@ -41,6 +41,17 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def manifestRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
+  /** No job is running. The status tracker reads the listener-fed status
+    * store, which trails job completion by milliseconds, so this waits up
+    * to one second for it to catch up — far less than the seconds a job
+    * still running would need. */
+  private def noActiveJobs(): Boolean = {
+    val deadline = System.nanoTime() + 1000000000L
+    def active = spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty
+    while (active && System.nanoTime() < deadline) Thread.sleep(20L)
+    !active
+  }
+
   test("ingest cadence: label+screen per batch, deferred overlay, refresh == from-scratch") {
     val all = spark.read.parquet(s"$srcDir/documents.parquet")
     val base = all.filter(pmod(col("doc_id"), lit(10L)) =!= 7L)
@@ -447,5 +458,52 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       batchTag = Some("t0")).count()
     assert(kinds.map(rowsOf) == before,
       "a folded batch's replay must still no-op")
+  }
+
+  test("ingest into a dir without a docbase is refused before any chain starts") {
+    val dir = Files.createTempDirectory("graft-cadence-noboot").toString
+    spark.read.parquet(s"$srcDir/documents.parquet")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException] {
+      CorpusPrep.ingestIncrement(spark, dir, Tables.documents(spark, dir)
+        .filter(pmod(col("doc_id"), lit(10L)) === 3L))
+    }
+    assert(e.getMessage.contains("docbase"))
+    assert(noActiveJobs(), "no chain of the refused increment may still be running")
+    assert(!graft.Materialize.isBuilt(spark, "graft_docwins", dir,
+      CorpusPrep.DocWinsVersion), "the refused increment must not build docwins")
+  }
+
+  test("a replayed tag's screens never plan over the crashed attempt's files") {
+    val dir = Files.createTempDirectory("graft-cadence-replayread").toString
+    val all = spark.read.parquet(s"$srcDir/documents.parquet")
+    val batchF = pmod(col("doc_id"), lit(10L)) === 2L
+    all.filter(!batchF).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val gen = new org.apache.hadoop.fs.Path(CorpusPrep.ensureDocBase(spark, dir))
+    all.filter(batchF).write.mode("overwrite").parquet(s"$dir/documents_b1.parquet")
+    // the crashed attempt of tag p1: a tag-prefixed data file in the
+    // docbase generation without its commit marker, which the replay's
+    // repair deletes
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = gen.getFileSystem(conf)
+    val donor = fs.listStatus(gen).filter(_.getPath.getName.endsWith(".parquet")).head
+    org.apache.hadoop.fs.FileUtil.copy(fs, donor.getPath, fs,
+      new org.apache.hadoop.fs.Path(gen, "batch-p1-crashed.parquet"), false, conf)
+    val verdict = CorpusPrep.ingestIncrement(spark, dir,
+      Tables.documents(spark, dir).filter(batchF), batchTag = Some("p1"))
+    assert(!verdict.inputFiles.exists(_.endsWith("batch-p1-crashed.parquet")),
+      "the screens must read the docbase generation the append settled")
+    assert(verdict.collect().length == all.filter(batchF).count())
+  }
+
+  test("Lineage.cutAll rethrows a failed cut only after its sibling cuts finish") {
+    val slow = udf { (x: Long) => Thread.sleep(3000L); x }
+    val failing = spark.range(1).select(raise_error(lit("planted cut failure")).as("x"))
+    val slowOk = spark.range(2).select(slow(col("id")).as("x"))
+    val e = intercept[Exception](Lineage.cutAll(failing, slowOk))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted cut failure")))
+    assert(noActiveJobs(),
+      "the sibling cut's job must have finished before the failure surfaced")
   }
 }

@@ -2,7 +2,8 @@
 # Run a graft main against the compiled classes without taking the sbt
 # target lock (sbt serializes runMain with any concurrent test/compile).
 # Usage: tools/run_main.sh graft.SomeMain [args...]
-# Honors SPARK_GRAFT_* env vars the same way the sbt fork does.
+# Honors SPARK_GRAFT_* env vars and the SPARK_DRIVER_MEM heap (default 8g)
+# the same way the sbt fork does.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes"
@@ -17,4 +18,4 @@ ADD_OPENS=(
 )
 FLAGS=()
 for p in "${ADD_OPENS[@]}"; do FLAGS+=(--add-opens "$p=ALL-UNNAMED"); done
-exec java "${FLAGS[@]}" -Xmx${GRAFT_XMX:-48g} -cp "$CP" "$@"
+exec java "${FLAGS[@]}" -Xmx"${SPARK_DRIVER_MEM:-8g}" -cp "$CP" "$@"
