@@ -31,7 +31,7 @@ object CadenceCrashChild {
     spark.sparkContext.setLogLevel("WARN")
     phase match {
       case "drain" =>
-        val schema = spark.read.parquet(s"$dataDir/documents.parquet").schema
+        val schema = Tables.parquet(spark, s"$dataDir/documents.parquet").schema
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(incoming)
         val q = graft.streaming.StreamOps.ingestCadenceStream(

@@ -91,7 +91,7 @@ object CadenceCrashProbe {
     val incoming = Files.createTempDirectory("graft-crash-in").toString
     val artDir = spark.conf.get("spark.graft.materialize.dir")
 
-    val all = spark.read.parquet(s"$srcDir/documents.parquet")
+    val all = Tables.parquet(spark, s"$srcDir/documents.parquet")
     all.filter(pmod(col("doc_id"), lit(10L)) < 7L)
       .write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
     graft.operators.CorpusPrep.ensureDocBase(spark, dataDir)
@@ -131,9 +131,9 @@ object CadenceCrashProbe {
     // from-scratch world: the same full corpus as one bootstrap, its own
     // artifact namespace (artifactPath keys on the data dir)
     all.write.mode("overwrite").parquet(s"$freshDir/documents.parquet")
-    val fresh = spark.read.parquet(
+    val fresh = Tables.parquet(spark,
       graft.operators.CorpusPrep.ensureDocGlobal(spark, freshDir))
-    val served = spark.read.parquet(graft.Materialize.servingPath(spark,
+    val served = Tables.parquet(spark, graft.Materialize.servingPath(spark,
       "graft_docglobal", dataDir, graft.operators.CorpusPrep.DocGlobalVersion))
     val diff = served.unionByName(fresh).groupBy(served.columns.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") =!= 2L).count()

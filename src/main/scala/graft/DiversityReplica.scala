@@ -47,7 +47,7 @@ object DiversityReplica {
     * bit-identical values. */
   private def diverseDocs(spark: SparkSession, src: String, k: Int): DataFrame = {
     val reps = spark.range(k).select(col("id").as("rep"))
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.parquet(spark, s"$src/documents.parquet")
     val docToks = docs.select(explode(split(col("text"), " ")).as("tok"))
       .distinct().orderBy(col("tok")).collect().map(_.getString(0)).toSeq
     val maxDoc = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
@@ -83,7 +83,7 @@ object DiversityReplica {
     val reps = spark.range(k).select(col("id").as("rep"))
 
     // ---- part: new entity names from the real token pool ----
-    val part = spark.read.parquet(s"$src/part.parquet")
+    val part = Tables.parquet(spark, s"$src/part.parquet")
     val nameToks = part.select(explode(split(col("p_name"), " ")).as("tok"))
       .distinct().orderBy(col("tok")).collect().map(_.getString(0)).toSeq
     val maxPart = part.agg(max(col("p_partkey"))).head().getLong(0) + 1L
@@ -114,7 +114,7 @@ object DiversityReplica {
     writeSingle(diverseDocs(spark, src, k), s"$dest/documents.parquet")
 
     // ---- embeddings: hash-noise around the real cluster structure ----
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$src/embeddings.parquet")
     val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
     val vSeed = col("vec_id") * lit(1000211L) + col("rep")
     val noisy = transform(col("embedding"), (x, i) =>
@@ -185,14 +185,14 @@ object DiversityReplica {
         // documents-only build for the loop rehearsal: no part table at
         // dest, so there is no name count or recall instrument to run
         buildDocs(spark, s, kk.toInt, d)
-        val n = spark.read.parquet(s"$d/documents.parquet").count()
+        val n = Tables.parquet(spark, s"$d/documents.parquet").count()
         println(s"""{"metric":"diversity_docs_replica","dir":"$d","docs":$n}""")
       case a =>
         val dir = a match {
           case spec(s, kk, d) => build(spark, s, kk.toInt, d); d
           case d => d
         }
-        val nNames = spark.read.parquet(s"$dir/part.parquet")
+        val nNames = Tables.parquet(spark, s"$dir/part.parquet")
           .select(countDistinct(col("p_name"))).head().getLong(0)
         println(s"""{"metric":"diversity_replica","dir":"$dir","distinct_names":$nNames}""")
         instruments.foreach { name =>

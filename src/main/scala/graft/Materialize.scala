@@ -520,7 +520,7 @@ object Materialize {
       val tmp = new Path(handlePath + ".compacting")
       if (fs.exists(tmp)) fs.delete(tmp, true)
       val manifest = readManifest(spark, cur.toString)
-      rewrite(spark.read.parquet(cur.toString), tmp.toString)
+      rewrite(Tables.parquet(spark, cur.toString), tmp.toString)
       require(fs.exists(new Path(tmp, "_SUCCESS")),
         s"rewrite did not commit to $tmp")
       // batch-append commit markers survive the file reorganization, so a
@@ -631,7 +631,7 @@ object Materialize {
           "base; rebuild with invalidate()+ensure() instead")
       val tmp = new Path(handlePath + ".refreshing")
       if (fs.exists(tmp)) fs.delete(tmp, true)
-      build(spark.read.parquet(g.path.toString), tmp.toString)
+      build(Tables.parquet(spark, g.path.toString), tmp.toString)
       require(fs.exists(new Path(tmp, "_SUCCESS")),
         s"refresh did not commit to $tmp")
       fs.listStatus(g.path).filter(_.getPath.getName.startsWith("_BATCH_"))
@@ -907,7 +907,7 @@ object Materialize {
       val p = artifactPath(spark, kind, dir, version)
       val marker = new Path(p, "_SUCCESS")
       if (fsOf(spark, marker).exists(marker)) {
-        val schemaDdl = spark.read.parquet(p).schema.toDDL
+        val schemaDdl = Tables.parquet(spark, p).schema.toDDL
         spark.sql(
           s"""CREATE TABLE $table ($schemaDdl) USING parquet
              |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS

@@ -419,7 +419,7 @@ object SparkEntry {
       q.awaitTermination()
       CorpusPrep.compactCadenceIfDue(s, work, maxPending = 2L)
       val (served, _) = CorpusPrep.compactionRefreshAuto(s, work, floorDocs = 1L)
-      s.read.parquet(served).orderBy(col("doc_id"))
+      Tables.parquet(s, served).orderBy(col("doc_id"))
     }),
     "text_quality" -> ((s, d) => TextAnalysis.qualityScore(s, d)),
     // intra-doc repetition (Gopher-style dup/top n-gram fractions)

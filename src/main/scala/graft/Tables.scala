@@ -1,12 +1,32 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
 
-/** Loaders for the driver-generated parquet tables (TESTDATA.md).
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Loaders for the generated input parquet tables (TESTDATA.md), and the
+  * one parquet read path of the program ([[parquet]]): input tables and
+  * materialized artifacts alike are read through it.
   *
   * Each loader is a plain parquet scan; filters/projections composed on top
   * are pushed into the scan by Catalyst (verify with `PushedFilters` /
   * `ReadSchema` in `.explain("formatted")`).
+  *
+  * Schema reuse: a bare `spark.read.parquet` runs one Spark job per call to
+  * read a footer and infer the schema — on a serving request that job is
+  * most of the fixed cost of a read. [[parquet]] infers once per key and
+  * hands the cached schema to every later read of that key, which then
+  * launches no job. Each read (a path, or the documents glob) keeps one
+  * entry, valid while the files it names and their (modification time,
+  * length) are unchanged — one `getFileStatus` or glob listing, no job —
+  * and under the same session schema-inference confs. So:
+  *  - a table re-published at the same path (new mtime) is re-inferred;
+  *  - an artifact generation is immutable apart from appends, which keep
+  *    its schema (and, adding files, move the directory's mtime anyway);
+  *  - the file listing is NOT cached: every read lists afresh, so rows
+  *    appended to a generation are visible on the next read.
   */
 object Tables {
   /** Every driver table (TESTDATA.md) — the single source for warmup
@@ -14,8 +34,11 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** An input table `<dir>/<name>.parquet`; a missing one is refused with
+    * an IllegalArgumentException naming the table and the dir. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readPath(spark, s"$dir/$name.parquet",
+      s"input table '$name' is missing: $dir has no $name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "nation")
@@ -43,13 +66,57 @@ object Tables {
     // every plan construction before its fixed-point retry globs
     // correctly — harmless but it pollutes the verify/entry gate logs
     // (r15 verdict item). Paths are sorted so the scan order (and any
-    // order-dependent downstream tie-break) is deterministic.
-    val g = new org.apache.hadoop.fs.Path(s"$dir/documents*.parquet")
+    // order-dependent downstream tie-break) is deterministic. The listing
+    // already carries each match's status, so the schema key costs no
+    // further filesystem call.
+    val g = new Path(s"$dir/documents*.parquet")
     val fs = g.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = Option(fs.globStatus(g))
-      .map(_.map(_.getPath.toString).sorted.toSeq).getOrElse(Seq.empty)
-    if (matches.isEmpty) spark.read.parquet(s"$dir/documents*.parquet")
-    else spark.read.parquet(matches: _*)
+    val matches = Option(fs.globStatus(g)).map(_.toSeq.sortBy(_.getPath.toString))
+      .getOrElse(Seq.empty)
+    require(matches.nonEmpty,
+      s"input table 'documents' is missing: $dir has no documents*.parquet")
+    read(spark, fs.makeQualified(g).toString, matches.map(_.getPath.toString), matches)
   }
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
+
+  /** Read parquet at `path` (a file or a directory, not a glob), inferring
+    * the schema only on the first read of a key (see the object doc). A
+    * missing path is refused with an IllegalArgumentException naming it. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    readPath(spark, path, s"parquet input $path does not exist")
+
+  /** The session confs that change what parquet schema inference returns;
+    * their values are part of the cache key. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private final case class Stamp(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  /** qualified path or glob → (stamp it was inferred under, schema) */
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  private def readPath(spark: SparkSession, p: String, missing: String): DataFrame = {
+    val path = new Path(p)
+    val st =
+      try path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path)
+      catch { case _: java.io.FileNotFoundException => throw new IllegalArgumentException(missing) }
+    read(spark, st.getPath.toString, Seq(p), Seq(st))
+  }
+
+  private def read(spark: SparkSession, key: String, paths: Seq[String],
+                   sts: Seq[FileStatus]): DataFrame = {
+    val stamp = Stamp(sts.map(s => (s.getPath.toString, s.getModificationTime, s.getLen)),
+      InferenceConfs.map(spark.conf.getOption))
+    Option(schemas.get(key)) match {
+      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(paths: _*)
+      case _ =>
+        val df = spark.read.parquet(paths: _*)
+        schemas.put(key, (stamp, df.schema))
+        df
+    }
+  }
 }

@@ -35,10 +35,6 @@ object GeoFunctions {
     lit(2 * EarthRadiusMiles) * atan2(sqrt(a), sqrt(lit(1.0) - a))
   }
 
-  /** Degrees of latitude spanned by `miles` — geometry.py:37-53. */
-  def latitudeDeltaFromMiles(miles: Column): Column =
-    miles / lit(EarthRadiusMiles) * lit(180.0 / math.Pi)
-
   /** Degrees of longitude spanned by `miles` at latitude `lat` —
     * geometry.py:56-75. */
   def longitudeDeltaFromMiles(lat: Column, miles: Column): Column =

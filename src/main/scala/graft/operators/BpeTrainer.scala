@@ -284,27 +284,27 @@ object BpeTrainer {
         symbols0(wordCounts(spark, dir)).write.mode("overwrite").parquet(p)
       }
       val pcPath = graft.Materialize.ensure(spark, kind("pc0"), dir, V) { p =>
-        pairCounts(spark.read.parquet(sPath))
+        pairCounts(Tables.parquet(spark, sPath))
           .write.mode("overwrite").parquet(p)
       }
       ("", sPath, pcPath)
     } else {
       val (_, sPrev, pcPrev) = ensureIter(spark, dir, t - 1)
       val bPath = graft.Materialize.ensure(spark, kind(s"b$t"), dir, V) { p =>
-        bestPairsFrom(spark.read.parquet(pcPrev), BpeRoundM)
+        bestPairsFrom(Tables.parquet(spark, pcPrev), BpeRoundM)
           .coalesce(1).write.mode("overwrite").parquet(p)
       }
       val sPath = graft.Materialize.ensure(spark, kind(s"s$t"), dir, V) { p =>
-        applyMerges(spark.read.parquet(sPrev), spark.read.parquet(bPath))
+        applyMerges(Tables.parquet(spark, sPrev), Tables.parquet(spark, bPath))
           .write.mode("overwrite").parquet(p)
       }
       val pcPath = graft.Materialize.ensure(spark, kind(s"pc$t"), dir, V) { p =>
-        val sOld = spark.read.parquet(sPrev)
-        val bs = spark.read.parquet(bPath)
+        val sOld = Tables.parquet(spark, sPrev)
+        val bs = Tables.parquet(spark, bPath)
         val tw = touchedWords(sOld, bs)
-        pairDelta(spark.read.parquet(pcPrev),
+        pairDelta(Tables.parquet(spark, pcPrev),
             sliceByWords(sOld, tw),
-            sliceByWords(spark.read.parquet(sPath), tw))
+            sliceByWords(Tables.parquet(spark, sPath), tw))
           .write.mode("overwrite").parquet(p)
       }
       (bPath, sPath, pcPath)
@@ -318,7 +318,7 @@ object BpeTrainer {
     * come from the round's input relation). */
   def bpeMerges(spark: SparkSession, dir: String, rounds: Int = BpeRounds): DataFrame =
     (1 to rounds).map { t =>
-      spark.read.parquet(ensureIter(spark, dir, t)._1)
+      Tables.parquet(spark, ensureIter(spark, dir, t)._1)
         .select((lit((t - 1).toLong * BpeRoundM) + col("sel")).as("iter"),
           col("a").as("pair_a"), col("b").as("pair_b"),
           concat(col("a"), col("b")).as("merged"), col("c").as("pair_count"))
@@ -328,7 +328,7 @@ object BpeTrainer {
     * real "LLM token cost" number text_tokens approximates with a regex.
     * One narrow corpus pass joined to the vocabulary-sized piece table. */
   def bpeEncode(spark: SparkSession, dir: String, rounds: Int = BpeRounds): DataFrame = {
-    val sK = spark.read.parquet(ensureIter(spark, dir, rounds)._2)
+    val sK = Tables.parquet(spark, ensureIter(spark, dir, rounds)._2)
     val pieces = sK.groupBy(col("word")).agg(count(lit(1)).as("n_sym"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(tokens(lower(col("text")))).as("word"))
@@ -381,7 +381,7 @@ object BpeTrainer {
     * work is the one symbol-frequency aggregate. */
   def vocabCoverage(spark: SparkSession, dir: String,
                     rounds: Int = BpeRounds): DataFrame = {
-    val sK = spark.read.parquet(ensureIter(spark, dir, rounds)._2)
+    val sK = Tables.parquet(spark, ensureIter(spark, dir, rounds)._2)
     val f = sK.groupBy(col("sym")).agg(sum(col("cnt")).as("f"))
     val rk = Window.orderBy(col("f").desc, col("sym"))
     val cum = rk.rowsBetween(Window.unboundedPreceding, Window.currentRow)

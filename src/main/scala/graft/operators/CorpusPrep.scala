@@ -124,13 +124,6 @@ object CorpusPrep {
       .sortWithinPartitions(col("w_hash"))
       .write.mode("overwrite").parquet(tmp)
 
-  /** Periodic fold of the window postings back to the 32-way
-    * w_hash-clustered canonical layout — pure file reorganization,
-    * contents unchanged. */
-  def compactDocWins(spark: SparkSession, dir: String,
-                     version: Int = DocWinsVersion): String =
-    graft.Materialize.compact(spark, "graft_docwins", dir, version)(docWinsFold)
-
   /** The screen over explicit train docs + eval window set — the core the
     * gate query and the streaming face (StreamOps.decontaminateStream)
     * share. `evalWindows` is BY-NAME: a streaming micro-batch re-reads a
@@ -325,7 +318,7 @@ object CorpusPrep {
     * median, the conservative cut). */
   private[graft] def docBaseOver(spark: SparkSession, d: DataFrame,
                                  modelPath: String): DataFrame =
-    docBaseOverModel(d, spark.read.parquet(modelPath))
+    docBaseOverModel(d, graft.Tables.parquet(spark, modelPath))
 
   /** The same labeling over an explicit model RELATION — what the
     * streaming ingest face passes by name so a version-bumped retrain is
@@ -444,14 +437,6 @@ object CorpusPrep {
       .sortWithinPartitions(col("doc_id"))
       .write.mode("overwrite").parquet(tmp)
 
-  /** Periodic fold of the row-local labels into a doc_id-clustered
-    * layout — pure file reorganization, contents unchanged (the serving
-    * join [[docMetaIndexed]] keys on doc_id, so the fold also restores
-    * the clustering the per-batch appends dilute). */
-  def compactDocBase(spark: SparkSession, dir: String,
-                     version: Int = DocBaseVersion): String =
-    graft.Materialize.compact(spark, "graft_docbase", dir, version)(docBaseFold)
-
   def ensureDocGlobal(spark: SparkSession, dir: String,
                       version: Int = DocGlobalVersion): String =
     graft.Materialize.ensure(spark, "graft_docglobal", dir, version) { p =>
@@ -463,8 +448,8 @@ object CorpusPrep {
     * by doc_id so the join is shuffle-free; here it is one narrow
     * equi-join of two artifact scans. */
   private[graft] def docMetaIndexed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureDocBase(spark, dir))
-      .join(spark.read.parquet(ensureDocGlobal(spark, dir)), "doc_id")
+    graft.Tables.parquet(spark, ensureDocBase(spark, dir))
+      .join(graft.Tables.parquet(spark, ensureDocGlobal(spark, dir)), "doc_id")
       .select(docMetaColumns: _*)
 
   /** The rollup both stats faces share: one hash aggregate on the source
@@ -635,10 +620,10 @@ object CorpusPrep {
       scala.concurrent.duration.Duration.Inf)
     scala.concurrent.Await.result(fDocWins,
       scala.concurrent.duration.Duration.Inf)
-    val standingHashes = spark.read.parquet(docBasePath)
+    val standingHashes = graft.Tables.parquet(spark, docBasePath)
       .join(batchIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("screen_hash"))
-    val standingBands = spark.read.parquet(bandsPath)
+    val standingBands = graft.Tables.parquet(spark, bandsPath)
       .join(batchIds, Seq("doc_id"), "left_anti")
     ingestScreenOver(batchDocs, standingHashes, standingBands)
   }
@@ -705,14 +690,14 @@ object CorpusPrep {
   private def deltaOverlayRefreshImpl(spark: SparkSession, dir: String,
                                       checkCoverage: Boolean): String = {
     val docs = graft.Tables.documents(spark, dir)
-    val normHashes = spark.read.parquet(ensureDocBase(spark, dir))
+    val normHashes = graft.Tables.parquet(spark, ensureDocBase(spark, dir))
       .select(col("doc_id"), col("norm_hash"))
     if (checkCoverage)
       require(normHashes.select(col("doc_id")).distinct().count() == docs.count(),
         s"delta overlay refresh of $dir: docbase has not labeled every " +
           "current doc — run ingestIncrement for each arrived batch first")
-    val bands = spark.read.parquet(Dedup.ensureBandsIndex(spark, dir, docs))
-    val wins = spark.read.parquet(ensureDocWins(spark, dir, docs))
+    val bands = graft.Tables.parquet(spark, Dedup.ensureBandsIndex(spark, dir, docs))
+    val wins = graft.Tables.parquet(spark, ensureDocWins(spark, dir, docs))
     graft.Materialize.refreshWith(spark, "graft_docglobal", dir,
         DocGlobalVersion) { (prior, tmp) =>
       deltaOverlayOver(normHashes, bands, wins, prior)
@@ -743,7 +728,7 @@ object CorpusPrep {
     // base (refreshWith rejects them); route straight to the exact rebuild
     if (!graft.Materialize.isDeltaBase(spark, "graft_docglobal", dir, DocGlobalVersion))
       return (compactionRefresh(spark, dir), "rebuild")
-    val n = spark.read.parquet(ensureDocBase(spark, dir))
+    val n = graft.Tables.parquet(spark, ensureDocBase(spark, dir))
       .select(col("doc_id")).distinct().count()
     // the delta's own cadence precondition, checked HERE (and only here —
     // the delta arm below skips its duplicate): a batch that reached the
@@ -764,7 +749,7 @@ object CorpusPrep {
     // caveat shared with the manifest itself: an edit that preserves a
     // child's mtime is invisible (then re-path the dir or bump the
     // version) — the previous anti-join spelling was equally blind to it.
-    val covered = spark.read.parquet(
+    val covered = graft.Tables.parquet(spark,
         graft.Materialize.servingPath(spark, "graft_docglobal", dir, DocGlobalVersion))
       .count()
     // The arithmetic's subset premise can be violated from OUTSIDE the

@@ -258,7 +258,7 @@ object Dedup {
   def containmentCandidateCost(spark: SparkSession, dir: String,
                                threshold: Double): DataFrame =
     containmentCandidateCostOver(canonGrams(spark, dir),
-      spark.read.parquet(ensureContainmentDf(spark, dir)), threshold)
+      Tables.parquet(spark, ensureContainmentDf(spark, dir)), threshold)
 
   /** The prediction core over explicit (id, grams) + (g, df) relations —
     * the spelling the dispatcher runs and the one SCALE.md's
@@ -308,7 +308,7 @@ object Dedup {
   def containmentPairsCapped(spark: SparkSession, dir: String,
                              threshold: Double, dfCapInverse: Long): DataFrame =
     cappedWithDf(canonGrams(spark, dir), threshold, dfCapInverse,
-      spark.read.parquet(ensureContainmentDf(spark, dir)))
+      Tables.parquet(spark, ensureContainmentDf(spark, dir)))
 
   /** Spec face: the capped screen over an explicit (id, grams) relation
     * with the df relation derived inline — what lets OperatorParitySpec
@@ -801,7 +801,7 @@ object Dedup {
       dedupPipeline(spark, dir).select(col("doc_id"), col("canonical_id"))
         .write.mode("overwrite").parquet(p)
     }
-    val base = spark.read.parquet(labelPath)
+    val base = Tables.parquet(spark, labelPath)
     // True pointer jumping: CURRENT labels on both join sides (depth
     // doubles per hop). The nested tree re-reads the label parquet 2^hops
     // times, but each read is the narrow materialized scan, not the
@@ -1612,7 +1612,7 @@ object Dedup {
     * serving plan is one artifact scan + the fp-keyed self-join, no
     * documents read anywhere (PlanShapeSpec pins it). */
   def winnowPairsIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val sel = spark.read.parquet(
+    val sel = Tables.parquet(spark,
         ensureWinnowSel(spark, dir, Tables.documents(spark, dir)))
       .repartition(col("fp"))
     val a = sel.select(col("doc_id").as("doc_a"), col("fp"))
@@ -1636,7 +1636,7 @@ object Dedup {
     * corpus the difference between linear and quadratic. */
   def winnowCandidateCost(spark: SparkSession, dir: String): DataFrame =
     winnowCandidateCostOver(
-      spark.read.parquet(
+      Tables.parquet(spark,
           ensureWinnowDf(spark, dir, Tables.documents(spark, dir)))
         .groupBy(col("fp")).agg(sum(col("c")).as("c")))
 
@@ -1666,7 +1666,7 @@ object Dedup {
     * rows, the winnow analogue of the stop-gram tier's quadratic. */
   def winnowCappedCandidateCost(spark: SparkSession, dir: String,
                                 dfCapInverse: Long): DataFrame = {
-    val fc = spark.read.parquet(
+    val fc = Tables.parquet(spark,
         ensureWinnowDf(spark, dir, Tables.documents(spark, dir)))
       .groupBy(col("fp")).agg(sum(col("c")).as("c"))
     val total = fc.agg(sum(col("c")).as("t"))
@@ -1856,7 +1856,7 @@ object Dedup {
     // the selection derivation (tokenize + windows + argmin over raw
     // text) dominated the inline read at the 100× replica, and it is
     // identical across tiers, so the dispatcher never re-pays it
-    def sel = spark.read.parquet(ensureWinnowSel(spark, dir, d))
+    def sel = Tables.parquet(spark, ensureWinnowSel(spark, dir, d))
       .repartition(col("fp"))
     if (predicted <= budget) winnowPairsFromSel(sel)
     else {
@@ -2003,7 +2003,7 @@ object Dedup {
     val corpus = Tables.documents(spark, dir)
       .filter(col("doc_id") % IncMod =!= IncRem)
       .select(col("doc_id"), col("text"))
-    spark.read.parquet(ensureBandsIndex(spark, dir, corpus))
+    Tables.parquet(spark, ensureBandsIndex(spark, dir, corpus))
   }
 
   /** The screen over explicit batch/corpus relations — the core both the

@@ -222,7 +222,7 @@ object Dsir {
   /** Fresh read of the materialized model (ensured on first call) —
     * BY-NAME consumers (the streaming face) see appends per batch. */
   def modelOf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(
+    graft.Tables.parquet(spark,
       ensureModel(spark, dir, graft.Tables.documents(spark, dir)))
 
   /** Quantized ratio table from the (possibly multi-batch) count

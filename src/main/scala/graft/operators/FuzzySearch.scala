@@ -156,7 +156,7 @@ object FuzzySearch {
     val qGramSet = queryTrigrams(q).distinct
     val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
-    val hits = spark.read.parquet(path)
+    val hits = Tables.parquet(spark, path)
       .filter(col("ngram").isin(qGramSet: _*))
       .groupBy(col("id")).agg(count(lit(1)).as("ngram_hits"))
     rankCandidates(c, q, hits, numResults, cap)
@@ -332,7 +332,7 @@ object FuzzySearch {
     val c = partitions.map(ps => c0.filter(col(partitionCol).isin(ps: _*)))
       .getOrElse(c0).withColumnRenamed(partitionCol, "partition")
     val path = ensurePartitionedPostingsIndex(spark, dir, c0, partitionCol)
-    val postings0 = spark.read.parquet(path)
+    val postings0 = Tables.parquet(spark, path)
       .filter(col("ngram").isin(qGramSet: _*))
     val postings = partitions.map(ps =>
       postings0.filter(col("partition").isin(ps: _*))).getOrElse(postings0)
@@ -574,7 +574,7 @@ object FuzzySearch {
                               cap: Int = DefaultCap): DataFrame = {
     val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
-    batchFuzzySearchOver(batchQueries(c), spark.read.parquet(path), c,
+    batchFuzzySearchOver(batchQueries(c), Tables.parquet(spark, path), c,
       numResults, cap)
   }
 
@@ -740,7 +740,7 @@ object FuzzySearch {
                                       cap: Int = DefaultCap): DataFrame = {
     val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
-    batchFuzzySearchOver(batchQueries(c), spark.read.parquet(path), c,
+    batchFuzzySearchOver(batchQueries(c), Tables.parquet(spark, path), c,
       numResults, cap, Some(allowedGramsIndexed(spark, dir, c, dfCapInverse)))
   }
 
@@ -761,9 +761,9 @@ object FuzzySearch {
   def allowedGramsDfIndexed(spark: SparkSession, dir: String, c: DataFrame,
                             dfCapInverse: Long, version: Int = 1): DataFrame = {
     val (dp, np) = ensureGramStats(spark, dir, c, version)
-    val dfRel = spark.read.parquet(dp).groupBy(col("ngram"))
+    val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
-    val nRel = spark.read.parquet(np).agg(sum(col("n")).as("n"))
+    val nRel = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
     dfRel.crossJoin(broadcast(nRel))
       .filter(col("df") * dfCapInverse <= col("n"))
       .select(col("ngram"), col("df"))
@@ -904,7 +904,7 @@ object FuzzySearch {
       // decides whether the rank-key join can stream the corpus
       val enteredVolume = entered
         .agg(coalesce(sum(col("df")), lit(0L)).as("v")).head().getLong(0)
-      val pruned = spark.read.parquet(postingsPath)
+      val pruned = Tables.parquet(spark, postingsPath)
         .join(broadcast(entered.select(col("ngram"))), "ngram")
       val enteredRows = (
         if (enteredVolume <= enteredBroadcastBudget)
@@ -954,7 +954,7 @@ object FuzzySearch {
         version), "rebuild")
     }
     val (_, np) = ensureGramStats(spark, dir, c, statsVersion)
-    val n = spark.read.parquet(np).agg(sum(col("n")).as("n"))
+    val n = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
       .head().getLong(0)
     val arrivals = batch.count()
     graft.Materialize.refreshPlan(n, arrivals, floorDocs, majority) match {
@@ -1077,7 +1077,7 @@ object FuzzySearch {
   private[graft] def lshCandidates(spark: SparkSession, dir: String,
                                    c: DataFrame, queries: DataFrame,
                                    bands: Int): DataFrame = {
-    val art = spark.read.parquet(ensureFuzzyLshIndex(spark, dir, c))
+    val art = Tables.parquet(spark, ensureFuzzyLshIndex(spark, dir, c))
       .filter(col("band_idx") < bands)
     val qb = queries.withColumn("sig", fuzzyGramSig(col("clean_q")))
       .select(col("qid"), posexplode(fuzzyBandArray(col("sig"))))
@@ -1101,7 +1101,7 @@ object FuzzySearch {
     * the ladder. */
   def lshChannelCosts(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val art = spark.read.parquet(ensureFuzzyLshIndex(spark, dir, c))
+    val art = Tables.parquet(spark, ensureFuzzyLshIndex(spark, dir, c))
     val qb = batchQueries(c).withColumn("sig", fuzzyGramSig(col("clean_q")))
       .select(col("qid"), posexplode(fuzzyBandArray(col("sig"))))
       .select(col("pos").as("band_idx"), col("col").as("band_hash"))
@@ -1132,7 +1132,7 @@ object FuzzySearch {
                                    lshBands: Int = FuzzyLshMaxBands): DataFrame = {
     val c = corpus(spark, dir)
     val path = ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap)
-    val champ = spark.read.parquet(path)
+    val champ = Tables.parquet(spark, path)
     if (rareGrams <= 0 && lshBands <= 0)
       batchFuzzySearchOver(batchQueries(c), champ, c, numResults, cap)
     else {
@@ -1140,7 +1140,7 @@ object FuzzySearch {
       val hits =
         if (rareGrams <= 0) indexHits(queries, champ, None)
         else {
-          val full = spark.read.parquet(ensurePostingsIndex(spark, dir, c))
+          val full = Tables.parquet(spark, ensurePostingsIndex(spark, dir, c))
           val allowedDf = allowedGramsDfIndexed(spark, dir, c, dfCapInverse)
           champRareUnionHits(queries, champ, full, allowedDf, rareGrams)
         }
@@ -1481,7 +1481,7 @@ object FuzzySearch {
   def batchCandidateCost(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
     val (dp, _) = ensureGramStats(spark, dir, c)
-    val dfRel = spark.read.parquet(dp).groupBy(col("ngram"))
+    val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
     val queries = batchQueries(c)
     val qc = queries.select(col("qid"),
@@ -1520,9 +1520,9 @@ object FuzzySearch {
                                  dfCapInverse: Long): DataFrame = {
     val c = corpus(spark, dir)
     val (dp, np) = ensureGramStats(spark, dir, c)
-    val dfRel = spark.read.parquet(dp).groupBy(col("ngram"))
+    val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
-    val nRel = spark.read.parquet(np).agg(sum(col("n")).as("n"))
+    val nRel = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
     val allowedDf = dfRel.crossJoin(broadcast(nRel))
       .filter(col("df") * dfCapInverse <= col("n"))
       .select(col("ngram"), col("df"))

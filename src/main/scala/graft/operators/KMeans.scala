@@ -115,7 +115,7 @@ object KMeans {
         (cent, _) => toCodebook(update(assign(e, cent)))
       }.write.mode("overwrite").parquet(p)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Gate query: the final iteration's update state in long form — one row
@@ -245,7 +245,7 @@ object KMeans {
         pqUpdate(e, Similarity.pqEncode(e, books))
       }.write.mode("overwrite").parquet(p)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** One PQ Lloyd update: per-(subspace, codeword, dim) quantized means

@@ -196,7 +196,7 @@ object LmQuality {
     * per branch. */
   def lmScoreIndexed(spark: SparkSession, dir: String): DataFrame =
     scoreAgainstModel(graft.Tables.documents(spark, dir),
-      spark.read.parquet(ensureModel(spark, dir)))
+      graft.Tables.parquet(spark, ensureModel(spark, dir)))
 
   /** Score a raw (doc_id, text) relation against the kind-partitioned
     * model relation — the core the indexed face and the streaming face

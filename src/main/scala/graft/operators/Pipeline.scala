@@ -491,7 +491,7 @@ object Pipeline {
                         threshold: Double = LeakageThreshold): DataFrame = {
     // canonicality alone — the corpus-global overlay is the narrower
     // artifact, so the audit never touches the row-local labels
-    val meta = spark.read.parquet(CorpusPrep.ensureDocGlobal(spark, dir))
+    val meta = Tables.parquet(spark, CorpusPrep.ensureDocGlobal(spark, dir))
       .select(col("doc_id"), col("is_canonical"))
     val labeled = graft.operators.Dedup.minhashPairs(spark, dir)
       .filter(col("est_jaccard") >= threshold)
@@ -709,7 +709,7 @@ object Pipeline {
       corpusShuffle(spark, dir).write.mode("overwrite")
         .partitionBy("shard").parquet(p)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("shard") === ShardProbe)
       // partition-column type inference narrows shard to INT; restore the
       // oracle's BIGINT
@@ -838,8 +838,8 @@ object Pipeline {
     * are NEVER read here (plan-spec-pinned). */
   private[graft] def e2eCleanFrom(spark: SparkSession, basePath: String,
                                   globalPath: String): DataFrame =
-    spark.read.parquet(basePath)
-      .join(spark.read.parquet(globalPath), "doc_id")
+    Tables.parquet(spark, basePath)
+      .join(Tables.parquet(spark, globalPath), "doc_id")
       .filter(col("is_canonical"))
       .select(col("doc_id"), col("source"), col("n_tok"), col("n_pieces"),
         col("content_hash"), col("lm_score"))
@@ -856,7 +856,7 @@ object Pipeline {
     * bit-equality. lm_score is dropped after the cut — no downstream
     * stage needs it. */
   private[graft] def e2eLmCutFrom(spark: SparkSession, cleanPath: String): DataFrame = {
-    val c = spark.read.parquet(cleanPath)
+    val c = Tables.parquet(spark, cleanPath)
     val med = c.agg(
       expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY lm_score)").as("m"))
     c.filter(col("lm_score") >= med.scalar()).drop("lm_score")
@@ -870,7 +870,7 @@ object Pipeline {
     * own per-copy hash key, so the per-doc keys have no downstream
     * consumer (storing them would be dead bytes at 100 TB). */
   private[graft] def e2eBudgetFrom(spark: SparkSession, cleanPath: String): DataFrame = {
-    val base = spark.read.parquet(cleanPath)
+    val base = Tables.parquet(spark, cleanPath)
       .filter(col("split") === "train")
       .drop("split")
       .withColumn("h",
@@ -885,7 +885,7 @@ object Pipeline {
   private[graft] def e2ePackFrom(spark: SparkSession, budgetPath: String): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spark.read.parquet(budgetPath)
+    Tables.parquet(spark, budgetPath)
       .withColumn("start_off", sum(col("n_pieces")).over(w) - col("n_pieces"))
       .withColumn("pack_id", expr(s"start_off div $PackBudget"))
       .withColumn("pack_off", col("start_off") - col("pack_id") * PackBudget)
@@ -931,7 +931,7 @@ object Pipeline {
     * single-partition stage); written shard-partitioned so a training
     * reader prunes to its shard's files. Reads only the pack artifact. */
   private[graft] def e2eShardsFrom(spark: SparkSession, packPath: String): DataFrame = {
-    val packed = spark.read.parquet(packPath)
+    val packed = Tables.parquet(spark, packPath)
     val plan = mixEpochCapOver(
       packed.groupBy(col("source")).agg(sum(col("n_tok")).as("n_tok")))
     val hc = polyHash(
@@ -958,7 +958,7 @@ object Pipeline {
     * global piece offset — any change to the packing assignment changes
     * it). One bounded hash aggregate over the final artifact only. */
   private[graft] def e2eManifestFrom(spark: SparkSession, shardsPath: String): DataFrame =
-    e2eManifestOver(spark.read.parquet(shardsPath))
+    e2eManifestOver(Tables.parquet(spark, shardsPath))
 
   /** The rollup over any (shard, n_tok, content_hash, pack_id, pack_off)
     * relation — split out so the spec can pin checksum order-freeness by
@@ -1112,7 +1112,7 @@ object Pipeline {
     * copy, pack_id, pack_off) — copy k of a doc re-reads the same pack
     * chunk at its own scheduled position. */
   def corpusE2eRead(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureCorpusE2e(spark, dir))
+    Tables.parquet(spark, ensureCorpusE2e(spark, dir))
       .filter(col("shard") === ShardProbe)
       // partition-column type inference narrows shard to INT; restore
       // the oracle's BIGINT

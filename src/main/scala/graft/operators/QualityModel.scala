@@ -89,7 +89,7 @@ object QualityModel {
     val path = graft.Materialize.ensure(spark, "graft_lrfeat", dir, version = 2) { p =>
       features(spark, dir).write.mode("overwrite").parquet(p)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   private def z(w: String => Column): Column =
@@ -162,7 +162,7 @@ object QualityModel {
   /** Fresh read of the weight artifact (BY-NAME consumers: the streaming
     * face picks up a refit on the next micro-batch). */
   def weightsOf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureWeights(spark, dir))
+    Tables.parquet(spark, ensureWeights(spark, dir))
 
   /** The serving twin of [[lrScore]]: IDENTICAL output (one oracle gates
     * both), weights read from the materialized artifact — the scoring

@@ -189,7 +189,7 @@ object RadiusSearch {
       math.min(math.floor((l + 90.0) / (180.0 / latBands)).toLong, latBands - 1L)
     val lo = bandOf(lat - latD)
     val hi = bandOf(lat + latD)
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .filter(col("lat_band") >= lo && col("lat_band") <= hi)
       .filter(!col("is_aggregate") &&
         ellipseContains(lit(lat), lit(lng), col("latitude"), col("longitude"),

@@ -95,14 +95,17 @@ object Retrieval {
     * on each evaluation. */
   def wordPostingsOf(spark: SparkSession, dir: String): DataFrame = {
     val (pp, _) = ensureWordIndex(spark, dir, Tables.documents(spark, dir))
-    spark.read.parquet(pp)
+    Tables.parquet(spark, pp)
   }
 
   /** The summed one-row (n, sdl) corpus stats from the artifact. */
   def wordStatsOf(spark: SparkSession, dir: String): DataFrame = {
     val (_, sp) = ensureWordIndex(spark, dir, Tables.documents(spark, dir))
-    spark.read.parquet(sp).agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
+    wordStatsAt(spark, sp)
   }
+
+  private def wordStatsAt(spark: SparkSession, sp: String): DataFrame =
+    Tables.parquet(spark, sp).agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
 
   /** Bloom sizing for the batch term probe: build side is the batch's
     * distinct term set; false positives only cost pruning efficiency (the
@@ -204,11 +207,11 @@ object Retrieval {
     * to the inline TextAnalysis.bm25TopK (one shared oracle gates both). */
   def bm25TopK(spark: SparkSession, dir: String, query: Seq[String], k: Int): DataFrame = {
     import TextAnalysis.Bm25Quant
-    val (pp, _) = ensureWordIndex(spark, dir, Tables.documents(spark, dir))
-    val matched = spark.read.parquet(pp).filter(col("term").isin(query: _*))
+    val (pp, sp) = ensureWordIndex(spark, dir, Tables.documents(spark, dir))
+    val matched = Tables.parquet(spark, pp).filter(col("term").isin(query: _*))
     val df = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val sc = matched.join(broadcast(df), "term")
-      .crossJoin(broadcast(wordStatsOf(spark, dir)))
+      .crossJoin(broadcast(wordStatsAt(spark, sp)))
       .select(col("doc_id"),
         TextAnalysis.bm25Qs(col("tf"), col("df"), col("n"), col("sdl"), col("dl")).as("qs"))
     sc.groupBy(col("doc_id"))

@@ -219,7 +219,7 @@ object ShapeOps {
     val filters: Seq[(String, Any)] =
       Seq("ref_data.state_prov" -> "ST6", "ref_data.country" -> "US")
     val pred = filters.map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .filter(pred)
       .select(col("id"), col("reference_code"), col("geo_type"),
         col("ref_data.state_prov").as("state_prov"),

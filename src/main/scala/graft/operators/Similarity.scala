@@ -274,7 +274,7 @@ object Similarity {
     val probeCells = ivf2ProbeCells(fine, probe, centroidMod,
       coarseStride, numCoarse, nprobe1, nprobe)
     val indexPath = ensureIvfIndex(spark, dir, e, fine, centroidMod, numCentroids)
-    spark.read.parquet(indexPath).join(broadcast(probeCells), "cell")
+    Tables.parquet(spark, indexPath).join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId)
       .crossJoin(broadcast(probe))
       .select(col("vec_id"), col("label"),
@@ -420,7 +420,7 @@ object Similarity {
       coarseStride, numCoarse, nprobe1, nprobe)
     val path = ensureIvf2AssignedIndex(spark, dir, e, fine, centroidMod,
       numCentroids, coarseStride, numCoarse, nprobe1)
-    spark.read.parquet(path).join(broadcast(probeCells), "cell")
+    Tables.parquet(spark, path).join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId)
       .crossJoin(broadcast(probe))
       .select(col("vec_id"), col("label"),
@@ -647,7 +647,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val cent = centroids(e, centroidMod, numCentroids)
     val indexPath = ensureIvfIndex(spark, dir, e, cent, centroidMod, numCentroids)
-    val bucketed = spark.read.parquet(indexPath)
+    val bucketed = Tables.parquet(spark, indexPath)
     val probe = e.filter(col("vec_id") === probeId)
       .select(col("embedding").as("pemb"))
     val probeCells = cent.crossJoin(broadcast(probe))
@@ -1151,7 +1151,7 @@ object Similarity {
                     mod: Long = 25L): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val books = pqCodebooks(e, mod)
-    val codes = spark.read.parquet(ensurePqCodes(spark, dir, e, books))
+    val codes = Tables.parquet(spark, ensurePqCodes(spark, dir, e, books))
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
     pqAdcTopK(codes, books, e, probeId, k)
   }
@@ -1284,7 +1284,7 @@ object Similarity {
       coarseStride, numCoarse, nprobe1, nprobe)
     val path = ensureIvfPqCodes(spark, dir, e, fine, books,
       centroidMod, numCentroids)
-    val codes = spark.read.parquet(path)
+    val codes = Tables.parquet(spark, path)
       .join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId)
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
@@ -1313,7 +1313,7 @@ object Similarity {
       .select(col("vec_id").as("pid"), col("embedding").as("pemb"))
     val path = ensureIvfPqCodes(spark, dir, e, cent, books,
       centroidMod, numCentroids)
-    ivfPqBatchTopKOver(probes, spark.read.parquet(path), cent, books,
+    ivfPqBatchTopKOver(probes, Tables.parquet(spark, path), cent, books,
       e.select(col("vec_id"), col("label")), k, nprobe)
   }
 
@@ -1607,7 +1607,7 @@ object Similarity {
       .select(col("embedding").cast("array<double>").as("pemb"))
     val probeCells = ivf2ProbeCellsD(fine, probe, 25L, 4L, ncoarse, np1, nprobe)
     val path = ensureIvfPqCodesTrained(spark, dir, e, fine, books, 25L, ncells)
-    val codes = spark.read.parquet(path)
+    val codes = Tables.parquet(spark, path)
       .join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId)
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
@@ -2066,7 +2066,7 @@ object Similarity {
     }
 
   def int8CodesOf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(
+    Tables.parquet(spark,
       ensureInt8Codes(spark, dir, Tables.embeddings(spark, dir)))
 
   /** Cosine top-k SERVED FROM the materialized int8 tier: probe and
@@ -2312,7 +2312,7 @@ object Similarity {
     }
 
   def rpProjOf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(
+    Tables.parquet(spark,
       ensureRpProj(spark, dir, Tables.embeddings(spark, dir)))
 
   /** rpTopK SERVED from the materialized projected artifact — probe and

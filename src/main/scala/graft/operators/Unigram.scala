@@ -211,7 +211,7 @@ object Unigram {
     * pass (PlanShapeSpec pins the two-scan plan). Shares encodeOracle. */
   def encodeIndexed(spark: SparkSession, dir: String): DataFrame =
     encodeOver(Tables.documents(spark, dir),
-      spark.read.parquet(ensureMinsegEnc(spark, dir)))
+      Tables.parquet(spark, ensureMinsegEnc(spark, dir)))
 
   // ------------------------------------------------------------- oracle
 

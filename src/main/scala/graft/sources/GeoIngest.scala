@@ -88,7 +88,7 @@ object GeoIngest {
     * (a pure repartition); IngestSpec pins count and content equality. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetFiles: Int): Unit =
-    spark.read.parquet(inPath)
+    graft.Tables.parquet(spark, inPath)
       .repartition(targetFiles)
       .write.mode("overwrite").parquet(outPath)
 

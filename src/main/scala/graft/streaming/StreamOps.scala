@@ -26,14 +26,6 @@ object StreamOps {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Sliding 1h/30m averages with watermark — same shape, 2 windows/row. */
-  def slidingAvg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"), avg(col("value")).as("avg_value"))
-      .select(col("w.start").as("window_start"), col("n_events"), col("avg_value"))
-
   /** Stream-static enrichment: the event stream joined to a static (batch)
     * dimension — Spark re-plans the static side per micro-batch, so a
     * broadcastable dimension costs one broadcast per batch and no stream
@@ -86,7 +78,7 @@ object StreamOps {
     * how requests chunk into batches (StreamingSpec pins stream-total ==
     * `fuzzy_batch` on the same query set, split across batches).
     * `postings`/`corpus` are BY-NAME: each micro-batch re-evaluates them,
-    * so a caller passing `spark.read.parquet(path)` gets a FRESH file
+    * so a caller passing `graft.Tables.parquet(spark, path)` gets a FRESH file
     * listing per batch and an index APPEND (Materialize.append) is picked
     * up on the next batch without restarting the query (spec-pinned). A
     * pre-built DataFrame would pin its InMemoryFileIndex at creation and
