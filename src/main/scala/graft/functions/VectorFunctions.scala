@@ -139,6 +139,28 @@ object VectorFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(best)
   }
 
+  /** PQ-ADC distance of one code array against a probe's lookup table:
+    * Σ lut(m·K + j) over m = 0..M-1, j the index of code m among the K
+    * sorted codeword ids, folded left to right from 0.0 — the order of
+    * the composed `array_sort(collect_list(struct(m, d)))` fold, so the
+    * distance is bit-identical to it. A code array of another length, or
+    * a code the table does not hold, was encoded against another codebook
+    * and is refused. */
+  def adcKernel(codes: ArrayData, ids: Array[Long], lut: Array[Double], m: Int): Double = {
+    if (codes.numElements() != m) throw new IllegalStateException(
+      s"PQ code array of ${codes.numElements()} codes, expected $m")
+    var acc = 0.0
+    var i = 0
+    while (i < m) {
+      val j = java.util.Arrays.binarySearch(ids, codes.getLong(i))
+      if (j < 0) throw new IllegalStateException(
+        s"PQ code ${codes.getLong(i)} is not a codeword of the lookup table")
+      acc += lut(i * ids.length + j)
+      i += 1
+    }
+    acc
+  }
+
   def dotF(a: Column, b: Column): Column =
     GraftShim.column(DotProductExpr(GraftShim.expression(a), GraftShim.expression(b)))
 
@@ -154,6 +176,9 @@ object VectorFunctions {
   def pqEncodeF(emb: Column, books: Column, m: Int, dim: Int): Column =
     GraftShim.column(PqEncodeExpr(
       GraftShim.expression(emb), GraftShim.expression(books), m, dim))
+
+  def adcDistanceF(codes: Column, ids: Array[Long], lut: Array[Double], m: Int): Column =
+    GraftShim.column(AdcDistanceExpr(GraftShim.expression(codes), ids, lut, m))
 
   def rpProjectF(emb: Column, dPrime: Int): Column =
     GraftShim.column(RpProjectExpr(GraftShim.expression(emb), dPrime))
@@ -286,4 +311,25 @@ case class PqEncodeExpr(left: Expression, right: Expression, m: Int, dim: Int)
       s"${ev.value} = graft.functions.VectorFunctions.pqEncodeKernel($a, $b, $m, $dim);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/** PQ-ADC distance of an array<bigint> code column against a lookup table
+  * held as plan constants: `ids` the sorted codeword ids, `lut` the
+  * m-major M×K distances (see VectorFunctions.adcKernel). NULL → NULL. */
+case class AdcDistanceExpr(child: Expression, ids: Array[Long], lut: Array[Double], m: Int)
+    extends UnaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "adc_distance"
+  override protected def stringArgs: Iterator[Any] = Iterator(child, m)
+  override protected def nullSafeEval(c: Any): Any =
+    VectorFunctions.adcKernel(c.asInstanceOf[ArrayData], ids, lut, m)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idsRef = ctx.addReferenceObj("adcIds", ids, "long[]")
+    val lutRef = ctx.addReferenceObj("adcLut", lut, "double[]")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.VectorFunctions.adcKernel($c, $idsRef, $lutRef, $m)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -106,8 +106,13 @@ object KMeans {
   val TrainedCentroidsVersion = 2
 
   def trainedCentroids(spark: SparkSession, dir: String, iters: Int = DefaultIters,
-                       mod: Long = 25L, numCentroids: Int = Similarity.IvfNumCentroids): DataFrame = {
-    val path = graft.Materialize.ensure(
+                       mod: Long = 25L, numCentroids: Int = Similarity.IvfNumCentroids): DataFrame =
+    Tables.parquet(spark, ensureTrainedCentroids(spark, dir, iters, mod, numCentroids))
+
+  /** The committed generation [[trainedCentroids]] reads. */
+  def ensureTrainedCentroids(spark: SparkSession, dir: String, iters: Int,
+                             mod: Long, numCentroids: Int): String =
+    graft.Materialize.ensure(
       spark, s"graft_kmeans_i${iters}_m${mod}_c$numCentroids", dir,
       version = TrainedCentroidsVersion) { p =>
       val e = Tables.embeddings(spark, dir)
@@ -115,8 +120,6 @@ object KMeans {
         (cent, _) => toCodebook(update(assign(e, cent)))
       }.write.mode("overwrite").parquet(p)
     }
-    Tables.parquet(spark, path)
-  }
 
   /** Gate query: the final iteration's update state in long form — one row
     * per (cell, dimension) with the exact integer sum shipped as the

@@ -1204,6 +1204,43 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .count() == 10)
   }
 
+  test("sized refine face == the composed per-request plan, over 56 probes and an absent id") {
+    import OperatorParitySpec.{composedProbeCells, composedRefineTopKSized, rows}
+    import org.apache.spark.sql.functions.col
+    // at this corpus the sized plan probes every cell and shortlists every
+    // candidate, so the sweep pins the probe fetch and the int8 re-rank;
+    // the probe-cell selection is pinned below under narrowed knobs, and
+    // the ADC shortlist on a corpus that prunes in AnnServingSpec
+    val ids = (0L until 500L by 9L) :+ 499L
+    assert(ids.size >= 50)
+    ids.foreach { id =>
+      val got = Similarity.ivf2PqRefineTopKSized(spark, dir, id, 10)
+      val want = composedRefineTopKSized(spark, dir, id, 10)
+      assert(got.schema == want.schema)
+      assert(rows(got) == rows(want) && rows(want).nonEmpty, s"probe $id")
+    }
+    val absent = Similarity.ivf2PqRefineTopKSized(spark, dir, 1000000L, 10)
+    assert(absent.collect().isEmpty)
+    assert(absent.columns.toSeq == Seq("vec_id", "label", "cosine_sim"))
+    assert(absent.schema == composedRefineTopKSized(spark, dir, 1000000L, 10).schema)
+
+    val model = Similarity.annModel(spark, dir)
+    val ncoarse = Similarity.annRefinePlan(model.n, 10)._2
+    val fine = Tables.parquet(spark, model.key.finePath)
+    val e = Tables.embeddings(spark, dir)
+    for (id <- ids.take(12); (np1, nprobe) <- Seq((1, 2), (2, 3), (3, 6))) {
+      val probe = e.filter(col("vec_id") === id)
+        .select(col("embedding").cast("array<double>").as("pemb"))
+      val p = probe.head().getSeq[Double](0).toArray
+      val got = model.copy(np1 = np1, nprobe = nprobe)
+        .probeCells(org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(p))
+      val want = composedProbeCells(fine, probe, ncoarse, np1, nprobe)
+        .collect().map(_.getAs[Number](0).longValue)
+      assert(got.toSeq == want.toSeq && got.length == nprobe,
+        s"probe $id at np1=$np1 nprobe=$nprobe")
+    }
+  }
+
   test("sig-factored near-canon == pairs spelling, incl. on a Zipf-hot corpus") {
     import org.apache.spark.sql.functions.{col, lit, pmod, when}
     // The round-9 skew fix (Dedup.nearCanonBySig doc): both spellings must
@@ -1282,5 +1319,71 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     assert(dstFree > 0, "no DST-free zone in the gate data — agreement check vacuous")
+  }
+}
+
+object OperatorParitySpec {
+  import graft.operators.KMeans
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.functions._
+
+  def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+
+  /** Reference for `Similarity.ivf2PqRefineTopKSized`: the sized face
+    * composed per request, every query-invariant input rebuilt as a Spark
+    * sub-plan — the count, the fine codebook, the coarse reps and
+    * fine→coarse assignment, the probe-cell ranking, the PQ codebooks and
+    * the joined ADC fold. It reads the same artifacts as the face. */
+  def composedRefineTopKSized(spark: SparkSession, dir: String, probeId: Long,
+                              k: Int): DataFrame = {
+    val e = Tables.embeddings(spark, dir)
+    val (ncells, ncoarse, np1, nprobe, refine) = Similarity.annRefinePlan(e.count(), k)
+    val finePath = KMeans.ensureTrainedCentroids(spark, dir,
+      Similarity.AnnTrainIters, 25L, ncells)
+    val fine = Tables.parquet(spark, finePath)
+    val books = Similarity.pqCodebooks(e, 25L)
+    val probe = e.filter(col("vec_id") === probeId)
+      .select(col("embedding").cast("array<double>").as("pemb"))
+    val probeCells = composedProbeCells(fine, probe, ncoarse, np1, nprobe)
+    val codes = Tables.parquet(spark,
+        Similarity.ensureIvfPqCodesTrained(spark, dir, finePath, 25L, ncells))
+      .join(broadcast(probeCells), "cell")
+      .filter(col("vec_id") =!= probeId)
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
+    val shortlist = Similarity.adcScore(codes, books, e, probe, k * refine)
+      .select(col("vec_id"))
+    val t = Similarity.int8CodesOf(spark, dir)
+      .withColumn("demb", transform(col("codes"), c => c.cast("double") * col("scale")))
+    val pInt8 = t.filter(col("vec_id") === probeId).select(col("demb").as("qemb"))
+    t.join(broadcast(shortlist), "vec_id")
+      .crossJoin(broadcast(pInt8))
+      .select(col("vec_id"), col("label"),
+        round(graft.functions.VectorFunctions.cosineDF(col("demb"), col("qemb")), 4)
+          .as("cosine_sim"))
+      .filter(!isnan(col("cosine_sim")))
+      .orderBy(col("cosine_sim").desc, col("vec_id"))
+      .limit(k)
+  }
+
+  /** The composed coarse→fine probe-cell selection over a trained
+    * (array<double>) codebook at centroidMod 25 and coarseStride 4. */
+  def composedProbeCells(fine: DataFrame, probe: DataFrame, ncoarse: Int,
+                         np1: Int, nprobe: Int): DataFrame = {
+    val cosD = graft.functions.VectorFunctions.cosineDF _
+    val coarse = Similarity.coarseReps(fine, 25L, 4L, ncoarse)
+    val f2c = KMeans.assign(
+        fine.select(col("cid").as("vec_id"), col("cemb").as("embedding")),
+        coarse.select(col("gid").as("cid"), col("gemb").as("cemb")))
+      .select(col("vec_id").as("cid"), col("cell").as("gid"))
+    val probeGroups = coarse.crossJoin(broadcast(probe))
+      .select(col("gid"), cosD(col("gemb"), col("pemb")).as("gc"))
+      .orderBy(col("gc").desc, col("gid")).limit(np1)
+      .select(col("gid"))
+    fine.join(broadcast(f2c), "cid")
+      .join(broadcast(probeGroups), "gid")
+      .crossJoin(broadcast(probe))
+      .select(col("cid"), cosD(col("cemb"), col("pemb")).as("pc"))
+      .orderBy(col("pc").desc, col("cid")).limit(nprobe)
+      .select(col("cid").as("cell"))
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path => JPath, Paths}
-import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import SparkJobs.jobsOf
 
 import scala.jdk.CollectionConverters._
 
@@ -31,26 +31,6 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  /** Spark jobs `body` launches on this thread. The status store is fed
-    * in event order, so once a marker job run afterwards is visible, every
-    * job of `body` is too. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    val group = s"read-${UUID.randomUUID}"
-    val marker = s"marker-${UUID.randomUUID}"
-    inGroup(group)(body)
-    inGroup(marker)(sc.parallelize(Seq(1), 1).count(): Unit)
-    val deadline = System.nanoTime() + 10000000000L
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(10L)
-    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, "marker job never reported")
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
@@ -59,8 +39,8 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.range(1, 201).toDF("p_partkey")
       .withColumn("p_name", concat(lit("part "), col("p_partkey")))
       .write.parquet(s"$dir/part.parquet")
-    assert(jobsOf(Tables.part(spark, dir)) == 1) // first read infers
-    assert(jobsOf(Tables.part(spark, dir)) == 0)
+    assert(jobsOf(spark)(Tables.part(spark, dir)) == 1) // first read infers
+    assert(jobsOf(spark)(Tables.part(spark, dir)) == 0)
     assert(Tables.part(spark, dir).count() == 200L)
 
     val kind = "graft_readspec_gen"
@@ -69,8 +49,8 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
         .repartition(3).write.mode("overwrite").parquet(p)
     }
     val gen = Materialize.servingPath(spark, kind, dir, 1)
-    assert(jobsOf(Tables.parquet(spark, gen)) == 1)
-    assert(jobsOf(Tables.parquet(spark, gen)) == 0)
+    assert(jobsOf(spark)(Tables.parquet(spark, gen)) == 1)
+    assert(jobsOf(spark)(Tables.parquet(spark, gen)) == 0)
     assert(Tables.parquet(spark, gen).agg(sum(col("sq"))).head().getLong(0) == 328350L)
   }
 
@@ -117,7 +97,7 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(inferred.columns.contains("lat_band"))
     Tables.parquet(spark, path) // primes the cache
     var cached: org.apache.spark.sql.DataFrame = null
-    assert(jobsOf { cached = Tables.parquet(spark, path) } == 0)
+    assert(jobsOf(spark) { cached = Tables.parquet(spark, path) } == 0)
     assert(cached.schema == inferred.schema)
     assert(cached.columns.toSeq == inferred.columns.toSeq)
     assert(rows(cached) == rows(inferred))
