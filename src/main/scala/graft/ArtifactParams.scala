@@ -53,12 +53,12 @@ object ArtifactParams {
     * artifact re-derives different content when the upstream derivation
     * changes, even though its own constants did not move. */
   def registry: Seq[Family] = Seq(
-    Family("graft_bands", Dedup.BandsVersion, Seq(
+    Family(Dedup.BandIndex.kind, Dedup.BandIndex.version, Seq(
       "minhash_k" -> Dedup.MinHashK.toString,
       "bands" -> Dedup.Bands.toString,
       "shingle_words" -> Dedup.ShingleWords.toString,
       "perm_family" -> permSample)),
-    Family("graft_fuzzylsh", FuzzySearch.FuzzyLshVersion, Seq(
+    Family(FuzzySearch.FuzzyLsh.kind, FuzzySearch.FuzzyLsh.version, Seq(
       "hashes" -> FuzzySearch.FuzzyLshHashes.toString,
       "rows_per_band" -> FuzzySearch.FuzzyLshRows.toString,
       "perm_family" -> permSample)),
@@ -68,11 +68,11 @@ object ArtifactParams {
       "bands" -> Dedup.Bands.toString,
       "shingle_words" -> Dedup.ShingleWords.toString,
       "perm_family" -> permSample)),
-    Family("graft_docbase", CorpusPrep.DocBaseVersion, Seq(
+    Family(CorpusPrep.DocBase.kind, CorpusPrep.DocBase.version, Seq(
       // the round-14 hash-space rule: identity-bearing joins live in the
       // 64-bit space; flipping this back to polyHash is a version bump
       "identity_hash" -> "xxhash64")),
-    Family("graft_docwins", CorpusPrep.DocWinsVersion, Seq(
+    Family(CorpusPrep.DocWins.kind, CorpusPrep.DocWins.version, Seq(
       "identity_hash" -> "xxhash64")),
     Family("graft_docglobal", CorpusPrep.DocGlobalVersion, Seq(
       "identity_hash" -> "xxhash64",

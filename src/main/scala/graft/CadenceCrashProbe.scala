@@ -94,7 +94,8 @@ object CadenceCrashProbe {
     val all = Tables.parquet(spark, s"$srcDir/documents.parquet")
     all.filter(pmod(col("doc_id"), lit(10L)) < 7L)
       .write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
-    graft.operators.CorpusPrep.ensureDocBase(spark, dataDir)
+    Materialize.ensure(spark, graft.operators.CorpusPrep.docBase(spark, dataDir), dataDir,
+      Tables.documents(spark, dataDir))
     graft.operators.CorpusPrep.ensureDocGlobal(spark, dataDir)
     Seq(7L, 8L, 9L).foreach { r =>
       all.filter(pmod(col("doc_id"), lit(10L)) === r)

@@ -17,9 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    dir, version) and only built when no committed generation exists,
   *    so repeat queries pay the pruned read, not the rebuild. This mirrors
   *    the production split: index build at ingest, index scan per query.
-  *    New data batches extend an existing artifact via [[append]] (new
-  *    files in the same layout) — no wholesale rebuild per ingest
-  *    increment.
+  *    An appendable kind is declared once as an [[Artifact]] descriptor
+  *    (kind, version, row-local derive, layout, compaction fold), and the
+  *    descriptor faces — `ensure(spark, a, dir, input)`, `append(spark, a,
+  *    dir, batch, batchTag)`, `compact(spark, a, dir)` and
+  *    `compactIfDue(spark, a, dir)` — are its one lifecycle: new data
+  *    batches land as new files in the same layout, and compaction folds
+  *    them back into the build layout. No per-kind ensure/append/compact
+  *    face exists.
   *  - **Staleness-guarded** — each artifact records a manifest of the
   *    input dir's direct children (name → mtime) at build/append time. A
   *    recorded child later MODIFIED or REMOVED marks the artifact stale:
@@ -172,25 +177,6 @@ object Materialize {
     val handle = new Path(artifactPath(spark, kind, dir, version))
     readGen(fsOf(spark, handle), handle).map(_.path.toString)
       .getOrElse(handle.toString)
-  }
-
-  /** Hard-delete EVERY generation and staging sibling of one artifact —
-    * a test/probe tool (honest cold-build timing, spec isolation), NOT a
-    * lifecycle face: production code invalidates (tombstone, readers keep
-    * the prior generation) or lets [[gc]] reclaim after the grace window.
-    * Bypasses the ensured-this-session guard by design. */
-  def purge(spark: SparkSession, kind: String, dir: String, version: Int): Unit = {
-    val handle = new Path(artifactPath(spark, kind, dir, version))
-    val fs = fsOf(spark, handle)
-    val base = handle.getName
-    locked(spark, handle.toString) {
-      try fs.listStatus(handle.getParent).foreach { st =>
-        val n = st.getPath.getName
-        if (n == base || n.startsWith(base + "."))
-          try { fs.delete(st.getPath, true); () }
-          catch { case _: java.io.IOException => () }
-      } catch { case _: java.io.IOException => () }
-    }
   }
 
   // ---------------------------------------------------------------- //
@@ -431,8 +417,8 @@ object Materialize {
     * artifact accumulates one file set per batch — at scale a periodic
     * compaction ([[compact]], now a next-generation fold) restores the
     * single-sorted-run read. */
-  def append(spark: SparkSession, kind: String, dir: String, version: Int)
-            (appendBuild: String => Unit): String = {
+  private[graft] def append(spark: SparkSession, kind: String, dir: String, version: Int)
+                            (appendBuild: String => Unit): String = {
     val handlePath = artifactPath(spark, kind, dir, version)
     locked(spark, handlePath) {
       val handle = new Path(handlePath)
@@ -490,8 +476,8 @@ object Materialize {
     * wholesale rebuild). The prior generation's files are never touched:
     * concurrent readers mid-plan keep a complete artifact; [[gc]]
     * reclaims it after the grace window. */
-  def compact(spark: SparkSession, kind: String, dir: String, version: Int)
-             (rewrite: (DataFrame, String) => Unit): String = {
+  private[graft] def compact(spark: SparkSession, kind: String, dir: String, version: Int)
+                             (rewrite: (DataFrame, String) => Unit): String = {
     val handlePath = artifactPath(spark, kind, dir, version)
     locked(spark, handlePath) {
       val handle = new Path(handlePath)
@@ -586,18 +572,55 @@ object Materialize {
   def compactPlan(pending: Long, maxPending: Long = CompactPendingMax): Boolean =
     pending >= maxPending
 
+  // ---------------------------------------------------------------- //
+  // descriptor faces: the one lifecycle of every appendable kind       //
+  // ---------------------------------------------------------------- //
+
+  /** Build `a` from `input` unless a fresh generation stands (the closure
+    * [[ensure]] with the descriptor's derive and build-side layout).
+    * `input` is by-name: an ensure hit never constructs it. */
+  def ensure(spark: SparkSession, a: Artifact, dir: String,
+             input: => DataFrame): String =
+    ensure(spark, a.kind, dir, a.version)(
+      a.write(a.derive(input), _, "overwrite", appending = false))
+
+  /** Land `batch`'s derived rows as new files in `a`'s append-side layout.
+    * With a `batchTag` the append is the idempotent, replay-safe
+    * [[appendBatch]] (at-least-once callers); without one, a plain
+    * [[append]]. */
+  def append(spark: SparkSession, a: Artifact, dir: String, batch: DataFrame,
+             batchTag: Option[String] = None): String = {
+    def write(p: String, mode: String): Unit =
+      a.write(a.derive(batch), p, mode, appending = true)
+    batchTag match {
+      case Some(t) =>
+        // appendBatch renames the staged top-level entries into the
+        // generation; `cell=` directories renamed that way would no
+        // longer read as partitions
+        require(a.layout != Artifact.Cells,
+          s"${a.kind} is cell-partitioned: batch-tagged appends are unsupported")
+        appendBatch(spark, a.kind, dir, a.version, t)(write(_, "overwrite"))
+      case None => append(spark, a.kind, dir, a.version)(write(_, "append"))
+    }
+  }
+
+  /** Fold `a`'s current rows into the next generation in the build-side
+    * layout ([[compact]]). */
+  def compact(spark: SparkSession, a: Artifact, dir: String): String =
+    compact(spark, a.kind, dir, a.version)((cur, tmp) =>
+      a.write(a.fold(cur), tmp, "overwrite", appending = false))
+
   /** [[compact]] behind the dispatch: folds when [[compactPlan]] says the
     * appended file debt is due, no-ops otherwise. Returns the CURRENT
     * generation path (the new fold, or the standing generation on defer)
     * and the decision string ("compact" | "defer"), the
     * refresh-dispatcher convention — probes record the decision next to
     * the wall so a replica that dispatched wrong is visible in the line. */
-  def compactIfDue(spark: SparkSession, kind: String, dir: String,
-                   version: Int, maxPending: Long = CompactPendingMax)
-                  (rewrite: (DataFrame, String) => Unit): (String, String) =
-    if (compactPlan(pendingBatches(spark, kind, dir, version), maxPending))
-      (compact(spark, kind, dir, version)(rewrite), "compact")
-    else (servingPath(spark, kind, dir, version), "defer")
+  def compactIfDue(spark: SparkSession, a: Artifact, dir: String,
+                   maxPending: Long = CompactPendingMax): (String, String) =
+    if (compactPlan(pendingBatches(spark, a.kind, dir, a.version), maxPending))
+      (compact(spark, a, dir), "compact")
+    else (servingPath(spark, a.kind, dir, a.version), "defer")
 
   /** In-place-IDENTITY artifact refresh from its own prior contents —
     * the DELTA face of [[invalidate]]+[[ensure]]: `build(prior, tmpPath)`
@@ -664,8 +687,8 @@ object Materialize {
     * generation like any other appended file set but carries the markers
     * forward, so a late replay after a compaction still short-circuits
     * instead of re-adding its rows. */
-  def appendBatch(spark: SparkSession, kind: String, dir: String, version: Int,
-                  batchTag: String)(build: String => Unit): String = {
+  private[graft] def appendBatch(spark: SparkSession, kind: String, dir: String,
+                                 version: Int, batchTag: String)(build: String => Unit): String = {
     // no '-' in tags: keeps `batch-<tag>-` prefixes prefix-free across
     // tags, so a committed tag's prefix can never also match another
     // tag's crashed-attempt files (the repair paths match marker-driven

@@ -89,40 +89,12 @@ object CorpusPrep {
 
   val DocWinsVersion = 2 // v2: xxhash64 window identity (v1: polyHash mod 1e9+7)
 
-  /** Write-once window-posting artifact over an explicit corpus slice
-    * (the bands-index pattern: the cadence builds it over the standing
-    * split and appends each arriving batch). */
-  def ensureDocWins(spark: SparkSession, dir: String, corpus: DataFrame,
-                    version: Int = DocWinsVersion): String =
-    graft.Materialize.ensure(spark, "graft_docwins", dir, version) { p =>
-      docWinRows(corpus).repartition(32, col("w_hash"))
-        .sortWithinPartitions(col("w_hash"))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  /** Incremental window maintenance — exact because the derivation is
-    * row-local per doc (IncrementalIndexSpec pins append == rebuild).
-    * `batchTag` routes through the idempotent batch-keyed append for
-    * at-least-once callers (the streaming cadence face). */
-  def appendToDocWins(spark: SparkSession, dir: String, batch: DataFrame,
-                      version: Int = DocWinsVersion,
-                      batchTag: Option[String] = None): String = {
-    def write(p: String, mode: String): Unit =
-      docWinRows(batch).repartition(4, col("w_hash"))
-        .sortWithinPartitions(col("w_hash"))
-        .write.mode(mode).parquet(p)
-    batchTag match {
-      case Some(t) => graft.Materialize.appendBatch(
-        spark, "graft_docwins", dir, version, t)(write(_, "overwrite"))
-      case None => graft.Materialize.append(
-        spark, "graft_docwins", dir, version)(write(_, "append"))
-    }
-  }
-
-  private def docWinsFold(cur: DataFrame, tmp: String): Unit =
-    cur.repartition(32, col("w_hash"))
-      .sortWithinPartitions(col("w_hash"))
-      .write.mode("overwrite").parquet(tmp)
+  /** The window-posting artifact over an explicit corpus slice (the
+    * bands-index pattern: the cadence builds it over the standing split
+    * and appends each arriving batch — exact because the derivation is
+    * row-local per doc; IncrementalIndexSpec pins append == rebuild). */
+  val DocWins: graft.Artifact = graft.Artifact("graft_docwins", DocWinsVersion,
+    docWinRows(_), graft.Artifact.Clustered(Seq("w_hash"), Seq("w_hash")))
 
   /** The screen over explicit train docs + eval window set — the core the
     * gate query and the streaming face (StreamOps.decontaminateStream)
@@ -405,37 +377,23 @@ object CorpusPrep {
   val DocGlobalVersion = 3 // v3: xxhash64 delta identity joins (contaminated/is_canonical
                            //     embed w_hash/norm_hash decisions); v2: splitmix minhash seeds
 
-  def ensureDocBase(spark: SparkSession, dir: String,
-                    version: Int = DocBaseVersion): String = {
-    val model = LmQuality.ensureModel(spark, dir)
-    graft.Materialize.ensure(spark, "graft_docbase", dir, version) { p =>
-      docBaseOver(spark, graft.Tables.documents(spark, dir), model)
-        .write.mode("overwrite").parquet(p)
-    }
-  }
+  /** The docbase artifact's identity, layout and compaction fold: built
+    * and appended as the labeling writes it, compacted into 32
+    * doc_id-clustered files. Its derivation scores against the LM model,
+    * so it derives only through [[docBase]]. */
+  val DocBase: graft.Artifact = graft.Artifact("graft_docbase", DocBaseVersion,
+    _ => throw new IllegalStateException(
+      "graft_docbase derives against the frozen LM model: use CorpusPrep.docBase"),
+    graft.Artifact.Plain,
+    _.repartition(32, col("doc_id")).sortWithinPartitions(col("doc_id")))
 
-  /** Incremental labeling: the batch's row-local labels land as new
-    * files beside the existing ones — the batch's own text is the ONLY
-    * text read. Scores use the standing frozen LM model (never a
-    * retrain mid-append). */
-  def appendToDocBase(spark: SparkSession, dir: String, batch: DataFrame,
-                      version: Int = DocBaseVersion,
-                      batchTag: Option[String] = None): String = {
+  /** [[DocBase]] deriving against `dir`'s LM model (ensured here). An
+    * append labels only the batch's own text, scored with the standing
+    * frozen model — never a retrain mid-append. */
+  def docBase(spark: SparkSession, dir: String): graft.Artifact = {
     val model = LmQuality.ensureModel(spark, dir)
-    def write(p: String, mode: String): Unit =
-      docBaseOver(spark, batch, model).write.mode(mode).parquet(p)
-    batchTag match {
-      case Some(t) => graft.Materialize.appendBatch(
-        spark, "graft_docbase", dir, version, t)(write(_, "overwrite"))
-      case None => graft.Materialize.append(
-        spark, "graft_docbase", dir, version)(write(_, "append"))
-    }
+    DocBase.copy(derive = docBaseOver(spark, _, model))
   }
-
-  private def docBaseFold(cur: DataFrame, tmp: String): Unit =
-    cur.repartition(32, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(tmp)
 
   def ensureDocGlobal(spark: SparkSession, dir: String,
                       version: Int = DocGlobalVersion): String =
@@ -448,7 +406,8 @@ object CorpusPrep {
     * by doc_id so the join is shuffle-free; here it is one narrow
     * equi-join of two artifact scans. */
   private[graft] def docMetaIndexed(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.parquet(spark, ensureDocBase(spark, dir))
+    graft.Tables.parquet(spark, graft.Materialize.ensure(spark, docBase(spark, dir), dir,
+        graft.Tables.documents(spark, dir)))
       .join(graft.Tables.parquet(spark, ensureDocGlobal(spark, dir)), "doc_id")
       .select(docMetaColumns: _*)
 
@@ -562,7 +521,7 @@ object CorpusPrep {
   }
 
   /** One production ingest increment (cadence step 1). Requires the
-    * standing corpus bootstrapped (`ensureDocBase` built — refused before
+    * standing corpus bootstrapped ([[DocBase]] built — refused before
     * any chain starts otherwise); call once per arriving batch. Returns
     * the screen verdicts; the overlay stays deferred until
     * [[compactionRefresh]]. The screens read the standing side after the
@@ -575,7 +534,7 @@ object CorpusPrep {
   def ingestIncrement(spark: SparkSession, dir: String,
                       batch: DataFrame,
                       batchTag: Option[String] = None): DataFrame = {
-    require(graft.Materialize.isBuilt(spark, "graft_docbase", dir, DocBaseVersion),
+    require(graft.Materialize.isBuilt(spark, DocBase.kind, dir, DocBase.version),
       s"ingest into $dir: no docbase — build it with ensure() first")
     val batchDocs = batch.select(col("doc_id"), col("text"))
     val batchIds = batchDocs.select(col("doc_id"))
@@ -590,15 +549,16 @@ object CorpusPrep {
     // modified/removed recorded inputs only) and each chain keeps its own
     // ensure-then-append order.
     val fDocBase = scala.concurrent.Future(
-      appendToDocBase(spark, dir, batch, batchTag = batchTag))(ingestChainPool)
+      graft.Materialize.append(spark, docBase(spark, dir), dir, batch, batchTag))(
+      ingestChainPool)
     // window-posting chain (row-local, same ensure-over-standing +
     // append-batch lifecycle as the bands): the deferred overlay's delta
     // refresh probes it for contamination
     val fDocWins = scala.concurrent.Future {
-      ensureDocWins(spark, dir, graft.Tables.documents(spark, dir)
+      graft.Materialize.ensure(spark, DocWins, dir, graft.Tables.documents(spark, dir)
         .join(batchIds, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("text")))
-      appendToDocWins(spark, dir, batchDocs, batchTag = batchTag)
+      graft.Materialize.append(spark, DocWins, dir, batchDocs, batchTag)
     }(ingestChainPool)
     // Each screen side is read from the path its append RETURNED: a
     // replayed tag's repair deletes the crashed attempt's files, so a
@@ -606,10 +566,11 @@ object CorpusPrep {
     // no longer exist. The batch's own rows are anti-joined out.
     val bandsPath =
       try {
-        Dedup.ensureBandsIndex(spark, dir, graft.Tables.documents(spark, dir)
-          .join(batchIds, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("text")))
-        Dedup.appendToBandsIndex(spark, dir, batchDocs, batchTag = batchTag)
+        graft.Materialize.ensure(spark, Dedup.BandIndex, dir,
+          graft.Tables.documents(spark, dir)
+            .join(batchIds, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("text")))
+        graft.Materialize.append(spark, Dedup.BandIndex, dir, batchDocs, batchTag)
       } finally {
         // a failed caller-thread chain still waits out the other two, so
         // no job of this increment is running when its exception surfaces
@@ -637,7 +598,8 @@ object CorpusPrep {
     * file-checks when already built. */
   def bootstrapStanding(spark: SparkSession, dir: String): Unit = {
     val fBase = scala.concurrent.Future(
-      ensureDocBase(spark, dir))(ingestChainPool)
+      graft.Materialize.ensure(spark, docBase(spark, dir), dir,
+        graft.Tables.documents(spark, dir)))(ingestChainPool)
     ensureDocGlobal(spark, dir)
     scala.concurrent.Await.result(fBase,
       scala.concurrent.duration.Duration.Inf)
@@ -690,14 +652,16 @@ object CorpusPrep {
   private def deltaOverlayRefreshImpl(spark: SparkSession, dir: String,
                                       checkCoverage: Boolean): String = {
     val docs = graft.Tables.documents(spark, dir)
-    val normHashes = graft.Tables.parquet(spark, ensureDocBase(spark, dir))
+    val normHashes = graft.Tables.parquet(spark,
+        graft.Materialize.ensure(spark, docBase(spark, dir), dir, docs))
       .select(col("doc_id"), col("norm_hash"))
     if (checkCoverage)
       require(normHashes.select(col("doc_id")).distinct().count() == docs.count(),
         s"delta overlay refresh of $dir: docbase has not labeled every " +
           "current doc — run ingestIncrement for each arrived batch first")
-    val bands = graft.Tables.parquet(spark, Dedup.ensureBandsIndex(spark, dir, docs))
-    val wins = graft.Tables.parquet(spark, ensureDocWins(spark, dir, docs))
+    val bands = graft.Tables.parquet(spark,
+      graft.Materialize.ensure(spark, Dedup.BandIndex, dir, docs))
+    val wins = graft.Tables.parquet(spark, graft.Materialize.ensure(spark, DocWins, dir, docs))
     graft.Materialize.refreshWith(spark, "graft_docglobal", dir,
         DocGlobalVersion) { (prior, tmp) =>
       deltaOverlayOver(normHashes, bands, wins, prior)
@@ -728,7 +692,8 @@ object CorpusPrep {
     // base (refreshWith rejects them); route straight to the exact rebuild
     if (!graft.Materialize.isDeltaBase(spark, "graft_docglobal", dir, DocGlobalVersion))
       return (compactionRefresh(spark, dir), "rebuild")
-    val n = graft.Tables.parquet(spark, ensureDocBase(spark, dir))
+    val n = graft.Tables.parquet(spark, graft.Materialize.ensure(spark, docBase(spark, dir), dir,
+        graft.Tables.documents(spark, dir)))
       .select(col("doc_id")).distinct().count()
     // the delta's own cadence precondition, checked HERE (and only here —
     // the delta arm below skips its duplicate): a batch that reached the
@@ -785,20 +750,14 @@ object CorpusPrep {
     * artifact kind → decision ("compact" | "defer"). */
   def compactCadenceIfDue(spark: SparkSession, dir: String,
                           maxPending: Long = graft.Materialize.CompactPendingMax): Map[String, String] = {
-    val decisions = Map(
-      "graft_docbase" -> graft.Materialize.compactIfDue(spark,
-        "graft_docbase", dir, DocBaseVersion, maxPending)(docBaseFold)._2,
-      "graft_bands" -> Dedup.compactBandsIfDue(spark, dir,
-        maxPending = maxPending)._2,
-      "graft_docwins" -> graft.Materialize.compactIfDue(spark,
-        "graft_docwins", dir, DocWinsVersion, maxPending)(docWinsFold)._2)
+    val owned = Seq(DocBase, Dedup.BandIndex, DocWins)
+    val decisions = owned.map(a =>
+      a.kind -> graft.Materialize.compactIfDue(spark, a, dir, maxPending)._2).toMap
     // retention sweep at the same quiesced window: superseded generations
     // (version-bump leftovers) and crash staging debris of the artifacts
     // this cadence owns — the fold already required the quiesced window,
     // so GC here costs one listing per kind and no extra coordination
-    Seq("graft_docbase" -> DocBaseVersion, "graft_bands" -> Dedup.BandsVersion,
-        "graft_docwins" -> DocWinsVersion,
-        "graft_docglobal" -> DocGlobalVersion)
+    (owned.map(a => a.kind -> a.version) :+ ("graft_docglobal" -> DocGlobalVersion))
       .foreach { case (k, v) => graft.Materialize.gc(spark, k, dir, v) }
     decisions
   }

@@ -1554,30 +1554,20 @@ object Dedup {
       .select(col("doc_id"), col("fp")).distinct()
       .groupBy(col("fp")).agg(count(lit(1)).as("c"))
 
-  /** Write-once winnow fingerprint-stats artifact. NOT gram-space-bounded
+  /** The winnow fingerprint-stats artifact. NOT gram-space-bounded
     * (fingerprints are corpus-scale, ~2/(W+1) of token positions), but
     * two narrow long columns after a groupBy — orders of magnitude under
     * the selection relation, and the prediction read below is one
-    * aggregate over it, never a join against the corpus. */
+    * aggregate over it, never a join against the corpus. A new ingest
+    * batch's (fp, c) rows land beside the existing files; reads fold with
+    * groupBy+sum. Exact by the additivity above (IncrementalIndexSpec pins
+    * append == rebuild). */
   val WinnowDfVersion = 1
 
-  private[graft] def ensureWinnowDf(spark: SparkSession, dir: String,
-                                    d: DataFrame,
-                                    version: Int = WinnowDfVersion): String =
-    graft.Materialize.ensure(spark, "graft_winnowdf", dir, version) { p =>
-      winnowFpDf(d).coalesce(4).write.mode("overwrite").parquet(p)
-    }
+  val WinnowDf: graft.Artifact = graft.Artifact("graft_winnowdf", WinnowDfVersion,
+    winnowFpDf, graft.Artifact.Coalesced(4, 1))
 
-  /** Incremental stats maintenance: a new ingest batch's (fp, c) rows land
-    * beside the existing files; reads fold with groupBy+sum. Exact by the
-    * additivity above (IncrementalIndexSpec pins append == rebuild). */
-  def appendToWinnowDf(spark: SparkSession, dir: String, batch: DataFrame,
-                       version: Int = WinnowDfVersion): String =
-    graft.Materialize.append(spark, "graft_winnowdf", dir, version) { p =>
-      winnowFpDf(batch).coalesce(1).write.mode("append").parquet(p)
-    }
-
-  /** Write-once winnowed SELECTION artifact — (doc_id, fp) distinct,
+  /** The winnowed SELECTION artifact — (doc_id, fp) distinct,
     * fp-clustered so the pair self-join reads co-located postings (the
     * posting-index layout convention). Row-local per document, so the
     * append face is exact by the same additivity as the df stats
@@ -1587,24 +1577,9 @@ object Dedup {
     * inline winnow form (measured 22.9 s of the 100×-replica read). */
   val WinnowSelVersion = 1
 
-  private[graft] def ensureWinnowSel(spark: SparkSession, dir: String,
-                                     d: DataFrame,
-                                     version: Int = WinnowSelVersion): String =
-    graft.Materialize.ensure(spark, "graft_winnowsel", dir, version) { p =>
-      graft.operators.TextAnalysis.winnowSelect(d)
-        .select(col("doc_id"), col("fp")).distinct()
-        .repartition(8, col("fp")).sortWithinPartitions(col("fp"))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  def appendToWinnowSel(spark: SparkSession, dir: String, batch: DataFrame,
-                        version: Int = WinnowSelVersion): String =
-    graft.Materialize.append(spark, "graft_winnowsel", dir, version) { p =>
-      graft.operators.TextAnalysis.winnowSelect(batch)
-        .select(col("doc_id"), col("fp")).distinct()
-        .repartition(2, col("fp")).sortWithinPartitions(col("fp"))
-        .write.mode("append").parquet(p)
-    }
+  val WinnowSel: graft.Artifact = graft.Artifact("graft_winnowsel", WinnowSelVersion,
+    graft.operators.TextAnalysis.winnowSelect(_).select(col("doc_id"), col("fp")).distinct(),
+    graft.Artifact.Clustered(Seq("fp"), Seq("fp"), build = 8, append = 2))
 
   /** The SERVED winnow pair join — [[winnowPairs]]' exact semantics (the
     * same oracle gates both) with the selection read from the
@@ -1613,7 +1588,7 @@ object Dedup {
     * documents read anywhere (PlanShapeSpec pins it). */
   def winnowPairsIndexed(spark: SparkSession, dir: String): DataFrame = {
     val sel = Tables.parquet(spark,
-        ensureWinnowSel(spark, dir, Tables.documents(spark, dir)))
+        graft.Materialize.ensure(spark, WinnowSel, dir, Tables.documents(spark, dir)))
       .repartition(col("fp"))
     val a = sel.select(col("doc_id").as("doc_a"), col("fp"))
     val b = sel.select(col("doc_id").as("doc_b"), col("fp"))
@@ -1637,7 +1612,7 @@ object Dedup {
   def winnowCandidateCost(spark: SparkSession, dir: String): DataFrame =
     winnowCandidateCostOver(
       Tables.parquet(spark,
-          ensureWinnowDf(spark, dir, Tables.documents(spark, dir)))
+          graft.Materialize.ensure(spark, WinnowDf, dir, Tables.documents(spark, dir)))
         .groupBy(col("fp")).agg(sum(col("c")).as("c")))
 
   /** The prediction core over an explicit (fp, c) relation — shared by
@@ -1667,7 +1642,7 @@ object Dedup {
   def winnowCappedCandidateCost(spark: SparkSession, dir: String,
                                 dfCapInverse: Long): DataFrame = {
     val fc = Tables.parquet(spark,
-        ensureWinnowDf(spark, dir, Tables.documents(spark, dir)))
+        graft.Materialize.ensure(spark, WinnowDf, dir, Tables.documents(spark, dir)))
       .groupBy(col("fp")).agg(sum(col("c")).as("c"))
     val total = fc.agg(sum(col("c")).as("t"))
     winnowCandidateCostOver(
@@ -1847,7 +1822,7 @@ object Dedup {
                       budget: Long = WinnowCandidateBudget,
                       perFpCap: Int = WinnowPerFpCap): DataFrame = {
     val d = Tables.documents(spark, dir)
-    val dp = ensureWinnowDf(spark, dir, d)
+    val dp = graft.Materialize.ensure(spark, WinnowDf, dir, d)
     val fps = (dir, graft.Materialize.fingerprint(spark, dir),
       graft.Materialize.fingerprint(spark, dp))
     val predicted = winnowCostMemo.getOrElseUpdate(fps,
@@ -1856,7 +1831,7 @@ object Dedup {
     // the selection derivation (tokenize + windows + argmin over raw
     // text) dominated the inline read at the 100× replica, and it is
     // identical across tiers, so the dispatcher never re-pays it
-    def sel = Tables.parquet(spark, ensureWinnowSel(spark, dir, d))
+    def sel = Tables.parquet(spark, graft.Materialize.ensure(spark, WinnowSel, dir, d))
       .repartition(col("fp"))
     if (predicted <= budget) winnowPairsFromSel(sel)
     else {
@@ -1912,8 +1887,8 @@ object Dedup {
     * key might match a batch key reach the shuffle, so the corpus-side
     * cost is a scan + bloom pass, not a full band join. False positives
     * only cost pruning efficiency (the exact band equi-join removes
-    * them); the corpus bands ARE a materialized artifact (graft_bands,
-    * ensure/append/compact lifecycle below) and the probe reads it —
+    * them); the corpus bands ARE a materialized artifact ([[BandIndex]],
+    * appended per ingest batch) and the probe reads it —
     * per-ingest cost is a bloom pass over band files plus the pruned
     * join, never a corpus signature re-derivation. */
   /** Signature + LSH band rows (doc_id, sig, band_idx, band_hash) for any
@@ -1931,69 +1906,22 @@ object Dedup {
         }: _*)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
 
-  /** Canonical corpus-band layout: band-key-clustered into a fixed file
-    * count, sorted within files so the bloom-surviving read stays tight.
-    * Shared by the initial build and compaction (the graft_postings
-    * pattern keyed by (band_hash, band_idx)). */
-  private def writeBandsLayout(rows: DataFrame, path: String): Unit =
-    rows.repartition(32, col("band_hash"), col("band_idx"))
-      .sortWithinPartitions(col("band_hash"), col("band_idx"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Artifact version of the graft_bands index — referenced by the
-    * cadence GC wiring (CorpusPrep.compactCadenceIfDue) so a future bump
-    * here moves retention with it (the DocBaseVersion/DocWinsVersion
-    * pattern; a hard-coded literal there would leave GC sweeping a stale
-    * generation forever). */
+  /** Artifact version of the graft_bands index. [[BandIndex]] carries it,
+    * and the cadence compaction and GC (CorpusPrep.compactCadenceIfDue)
+    * and ArtifactParams read it from there, so a bump here moves them all. */
   val BandsVersion = 3 // v3: 32-hash signatures + splitmix permutation seeds
 
-  /** Write-once corpus band artifact (at scale this runs at ingest): the
-    * signature + LSH band derivation of the standing corpus, materialized
-    * so the incremental screen probes files instead of re-deriving
-    * minhash signatures per ingest batch. */
-  def ensureBandsIndex(spark: SparkSession, dir: String, corpus: DataFrame,
-                       version: Int = BandsVersion): String =
-    graft.Materialize.ensure(spark, "graft_bands", dir, version) { p =>
-      writeBandsLayout(bandRows(corpus), p)
-    }
-
-  /** Incremental band maintenance: a new corpus batch's band rows land as
-    * new band-clustered files. Exact because the signature derivation is
-    * row-local per doc: bands(corpus ∪ batch) == bands(corpus) ∪
-    * bands(batch) (IncrementalIndexSpec pins append-then-screen ==
-    * rebuild-then-screen). */
-  def appendToBandsIndex(spark: SparkSession, dir: String, batch: DataFrame,
-                         version: Int = BandsVersion,
-                         batchTag: Option[String] = None): String = {
-    def write(p: String, mode: String): Unit =
-      bandRows(batch)
-        .repartition(4, col("band_hash"), col("band_idx"))
-        .sortWithinPartitions(col("band_hash"), col("band_idx"))
-        .write.mode(mode).parquet(p)
-    batchTag match {
-      case Some(t) => graft.Materialize.appendBatch(
-        spark, "graft_bands", dir, version, t)(write(_, "overwrite"))
-      case None => graft.Materialize.append(
-        spark, "graft_bands", dir, version)(write(_, "append"))
-    }
-  }
-
-  /** Periodic compaction back to the canonical 32-way band-clustered
-    * layout. Pure file reorganization — contents unchanged. */
-  def compactBandsIndex(spark: SparkSession, dir: String,
-                        version: Int = BandsVersion): String =
-    graft.Materialize.compact(spark, "graft_bands", dir, version) {
-      (cur, tmp) => writeBandsLayout(cur, tmp)
-    }
-
-  /** [[compactBandsIndex]] behind the pending-batch dispatch
-    * (`Materialize.compactIfDue`) — the cadence's compaction clock folds
-    * only when the committed pending-batch count is due, instead of
-    * unconditionally. Returns (path, "compact" | "defer"). */
-  def compactBandsIfDue(spark: SparkSession, dir: String, version: Int = BandsVersion,
-                        maxPending: Long = graft.Materialize.CompactPendingMax): (String, String) =
-    graft.Materialize.compactIfDue(spark, "graft_bands", dir, version,
-      maxPending) { (cur, tmp) => writeBandsLayout(cur, tmp) }
+  /** The corpus band artifact (at scale built at ingest): the signature +
+    * LSH band derivation of the standing corpus, materialized so the
+    * incremental screen probes files instead of re-deriving minhash
+    * signatures per ingest batch. Band-key-clustered into a fixed file
+    * count, sorted within files so the bloom-surviving read stays tight
+    * (the graft_postings pattern keyed by (band_hash, band_idx)).
+    * Appendable because the signature derivation is row-local per doc:
+    * bands(corpus ∪ batch) == bands(corpus) ∪ bands(batch)
+    * (IncrementalIndexSpec pins append-then-screen == rebuild-then-screen). */
+  val BandIndex: graft.Artifact = graft.Artifact("graft_bands", BandsVersion, bandRows,
+    graft.Artifact.Clustered(Seq("band_hash", "band_idx"), Seq("band_hash", "band_idx")))
 
   /** Fresh read of the materialized corpus bands (ensured on first call)
     * — the standing-corpus side of the incremental screen. BY-NAME
@@ -2003,7 +1931,7 @@ object Dedup {
     val corpus = Tables.documents(spark, dir)
       .filter(col("doc_id") % IncMod =!= IncRem)
       .select(col("doc_id"), col("text"))
-    Tables.parquet(spark, ensureBandsIndex(spark, dir, corpus))
+    Tables.parquet(spark, graft.Materialize.ensure(spark, BandIndex, dir, corpus))
   }
 
   /** The screen over explicit batch/corpus relations — the core both the

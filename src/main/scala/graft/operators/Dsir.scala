@@ -194,36 +194,18 @@ object Dsir {
         coalesce(col("q"), lit(0L)).as("q"))
   }
 
-  /** Write-once fit (at scale this runs at ingest; every scoring pass is
-    * a read). The artifact is Buckets rows per build/append — one file. */
-  def ensureModel(spark: SparkSession, dir: String, docs: DataFrame,
-                  version: Int = ModelVersion): String =
-    graft.Materialize.ensure(spark, "graft_dsirmodel", dir, version) { p =>
-      modelCounts(docs).coalesce(1).write.mode("overwrite").parquet(p)
-    }
-
-  /** Incremental fit maintenance: a new corpus batch lands as one more
-    * Buckets-row count file; the read's per-bucket fold absorbs it. */
-  def appendToModel(spark: SparkSession, dir: String, batch: DataFrame,
-                    version: Int = ModelVersion): Unit =
-    graft.Materialize.append(spark, "graft_dsirmodel", dir, version) { p =>
-      modelCounts(batch).coalesce(1).write.mode("append").parquet(p)
-    }
-
-  /** Fold appended count files back to one (sums are associative). */
-  def compactModel(spark: SparkSession, dir: String,
-                   version: Int = ModelVersion): Unit =
-    graft.Materialize.compact(spark, "graft_dsirmodel", dir, version) {
-      (cur, tmp) =>
-        cur.groupBy("bucket").agg(sum(col("t")).as("t"), sum(col("q")).as("q"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
+  /** The fit model (at scale fitted at ingest; every scoring pass is a
+    * read): Buckets rows per build/append, one file each, and compaction
+    * folds the count files back to one (sums are associative). */
+  val Model: graft.Artifact = graft.Artifact("graft_dsirmodel", ModelVersion,
+    modelCounts, graft.Artifact.Coalesced(1, 1),
+    _.groupBy("bucket").agg(sum(col("t")).as("t"), sum(col("q")).as("q")))
 
   /** Fresh read of the materialized model (ensured on first call) —
     * BY-NAME consumers (the streaming face) see appends per batch. */
   def modelOf(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.parquet(spark,
-      ensureModel(spark, dir, graft.Tables.documents(spark, dir)))
+      graft.Materialize.ensure(spark, Model, dir, graft.Tables.documents(spark, dir)))
 
   /** Quantized ratio table from the (possibly multi-batch) count
     * artifact: fold additive rows by bucket, then the same window/ratio

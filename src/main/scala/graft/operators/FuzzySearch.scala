@@ -96,47 +96,19 @@ object FuzzySearch {
     rankCandidates(c, q, hits, numResults, cap, filters)
   }
 
-  /** Canonical posting-index layout: pairs clustered by ngram into a fixed
-    * file count, sorted within files so scan stats are tight. Shared by the
-    * initial build and compaction so the two can never drift. */
-  private def writePostingsLayout(pairs: DataFrame, path: String): Unit =
-    pairs.repartition(32, col("ngram")).sortWithinPartitions(col("ngram"))
-      .write.mode("overwrite").parquet(path)
+  /** The posting index (`graft_postings`, at scale built at ingest):
+    * multiplicity-preserving (ngram, id) pairs clustered by ngram into 32
+    * files, sorted within files so scan stats are tight. Appendable —
+    * `add_entity` (geo_manager.py:451-476) against the materialized
+    * layout — because the explode is row-local: pairs(corpus ∪ batch) ==
+    * pairs(corpus) ∪ pairs(batch) (IncrementalIndexSpec pins append ==
+    * rebuild and compact == rebuild). */
+  val Postings: graft.Artifact = graft.Artifact("graft_postings", 1,
+    NgramIndex.postingPairsMulti(_), graft.Artifact.Clustered(Seq("ngram"), Seq("ngram")))
 
-  /** Write-once posting-index build (at scale this runs at ingest):
-    * multiplicity-preserving pairs clustered by ngram, sorted within files
-    * so scan stats are tight. Returns the artifact path. */
-  def ensurePostingsIndex(spark: SparkSession, dir: String, c: DataFrame,
-                          version: Int = 1): String =
-    graft.Materialize.ensure(spark, "graft_postings", dir, version) { p =>
-      writePostingsLayout(NgramIndex.postingPairsMulti(c), p)
-    }
-
-  /** Periodic compaction after appends: rewrites the accumulated file sets
-    * (one per appended batch) back into the canonical 32-way ngram-clustered
-    * layout. Pure file reorganization — contents unchanged
-    * (IncrementalIndexSpec pins compact-then-read == rebuild-then-read). */
-  def compactPostingsIndex(spark: SparkSession, dir: String,
-                           version: Int = 1): String =
-    graft.Materialize.compact(spark, "graft_postings", dir, version) {
-      (cur, tmp) => writePostingsLayout(cur, tmp)
-    }
-
-  /** Incremental posting-index maintenance — `add_entity`
-    * (geo_manager.py:451-476) against the MATERIALIZED layout: the new
-    * batch's posting pairs land as new ngram-clustered files alongside the
-    * existing ones. Exact because the explode is row-local:
-    * pairs(corpus ∪ batch) == pairs(corpus) ∪ pairs(batch)
-    * (IncrementalIndexSpec pins append-then-read == rebuild-then-read).
-    * The batch writes fewer, batch-sized files (not the full 32-way
-    * layout); per-file ngram runs stay sorted so row-group stats prune. */
-  def appendToPostingsIndex(spark: SparkSession, dir: String, batch: DataFrame,
-                            version: Int = 1): String =
-    graft.Materialize.append(spark, "graft_postings", dir, version) { p =>
-      NgramIndex.postingPairsMulti(batch)
-        .repartition(4, col("ngram")).sortWithinPartitions(col("ngram"))
-        .write.mode("append").parquet(p)
-    }
+  /** [[Postings]] ensured over `c`; returns the artifact path. */
+  def ensurePostingsIndex(spark: SparkSession, dir: String, c: DataFrame): String =
+    graft.Materialize.ensure(spark, Postings, dir, c)
 
   /** Materialized-index fuzzy search: candidate generation reads the
     * PRE-BUILT posting-pairs relation (NgramIndex.postingPairsMulti) from
@@ -275,43 +247,20 @@ object FuzzySearch {
       .orderBy(col("partition"), col("score").desc, col("id"))
   }
 
-  /** Write-once PARTITIONED posting index — the partitioned mode's
-    * serving artifact (the `fuzzy_indexed` precedent applied to the
-    * reference's declared-but-disabled partitioned branch,
-    * geo_manager.py:463-476): (ngram, partition, id) occurrence pairs
-    * clustered by ngram so the single query's trigram literals push into
-    * the scan as In(ngram) and row-group stats skip everything else;
-    * the partition predicate (when a partition subset is queried) pushes
-    * beside it. Kind carries the partition column — a country-keyed
+  /** The PARTITIONED posting index — the partitioned mode's serving
+    * artifact (the `fuzzy_indexed` precedent applied to the reference's
+    * declared-but-disabled partitioned branch, geo_manager.py:463-476):
+    * (ngram, partition, id) occurrence pairs clustered by ngram so the
+    * single query's trigram literals push into the scan as In(ngram) and
+    * row-group stats skip everything else; the partition predicate (when
+    * a partition subset is queried) pushes beside it. Row-local explode,
+    * so appendable. Kind carries the partition column — a country-keyed
     * artifact must never serve a different partitioning. */
-  def ensurePartitionedPostingsIndex(spark: SparkSession, dir: String,
-                                     c: DataFrame,
-                                     partitionCol: String = "country",
-                                     version: Int = 1): String =
-    graft.Materialize.ensure(spark, s"graft_partpost_$partitionCol", dir,
-      version) { p =>
-      c.select(col("id"), col(partitionCol).as("partition"),
-          explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-        .repartition(32, col("ngram"))
-        .sortWithinPartitions(col("ngram"), col("partition"))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  /** Incremental maintenance: row-local explode, so
-    * pairs(corpus ∪ batch) == pairs(corpus) ∪ pairs(batch)
-    * (IncrementalIndexSpec pins append == rebuild). */
-  def appendToPartitionedPostingsIndex(spark: SparkSession, dir: String,
-                                       batch: DataFrame,
-                                       partitionCol: String = "country",
-                                       version: Int = 1): String =
-    graft.Materialize.append(spark, s"graft_partpost_$partitionCol", dir,
-      version) { p =>
-      batch.select(col("id"), col(partitionCol).as("partition"),
-          explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-        .repartition(4, col("ngram"))
-        .sortWithinPartitions(col("ngram"), col("partition"))
-        .write.mode("append").parquet(p)
-    }
+  def partPostings(partitionCol: String = "country"): graft.Artifact =
+    graft.Artifact(s"graft_partpost_$partitionCol", 1,
+      _.select(col("id"), col(partitionCol).as("partition"),
+        explode(charNgrams(col("clean_value"), 3)).as("ngram")),
+      graft.Artifact.Clustered(Seq("ngram"), Seq("ngram", "partition")))
 
   /** [[fuzzySearchPartitioned]] SERVED from the materialized partitioned
     * posting artifact — identical semantics (the same oracle gates both),
@@ -331,7 +280,7 @@ object FuzzySearch {
     val c0 = corpusOf(spark, dir)
     val c = partitions.map(ps => c0.filter(col(partitionCol).isin(ps: _*)))
       .getOrElse(c0).withColumnRenamed(partitionCol, "partition")
-    val path = ensurePartitionedPostingsIndex(spark, dir, c0, partitionCol)
+    val path = graft.Materialize.ensure(spark, partPostings(partitionCol), dir, c0)
     val postings0 = Tables.parquet(spark, path)
       .filter(col("ngram").isin(qGramSet: _*))
     val postings = partitions.map(ps =>
@@ -679,45 +628,16 @@ object FuzzySearch {
   private[graft] def gramN(c: DataFrame): DataFrame =
     c.agg(count(lit(1)).as("n"))
 
-  /** Write-once gram-stats build (at scale this runs at ingest alongside
-    * the posting index): returns (df path, n path). The df relation is
-    * gram-space-bounded, so one file suffices at any corpus size. */
-  def ensureGramStats(spark: SparkSession, dir: String, c: DataFrame,
-                      version: Int = 1): (String, String) = {
-    val dp = graft.Materialize.ensure(spark, "graft_gramdf", dir, version) { p =>
-      gramDf(c).coalesce(1).write.mode("overwrite").parquet(p)
-    }
-    val np = graft.Materialize.ensure(spark, "graft_gramn", dir, version) { p =>
-      gramN(c).write.mode("overwrite").parquet(p)
-    }
-    (dp, np)
-  }
-
-  /** Incremental gram-stats maintenance: the batch's (ngram, df) rows and
-    * one (n) row land beside the existing files. Exact by additivity
-    * (IncrementalIndexSpec pins append-then-read == rebuild-then-read). */
-  def appendToGramStats(spark: SparkSession, dir: String, batch: DataFrame,
-                        version: Int = 1): Unit = {
-    graft.Materialize.append(spark, "graft_gramdf", dir, version) { p =>
-      gramDf(batch).coalesce(1).write.mode("append").parquet(p)
-    }
-    graft.Materialize.append(spark, "graft_gramn", dir, version) { p =>
-      gramN(batch).write.mode("append").parquet(p)
-    }
-  }
-
-  /** Periodic compaction: per-batch rows folded (sums are associative);
-    * contents under the fold unchanged. */
-  def compactGramStats(spark: SparkSession, dir: String, version: Int = 1): Unit = {
-    graft.Materialize.compact(spark, "graft_gramdf", dir, version) {
-      (cur, tmp) => cur.groupBy(col("ngram")).agg(sum(col("df")).as("df"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
-    graft.Materialize.compact(spark, "graft_gramn", dir, version) {
-      (cur, tmp) => cur.agg(sum(col("n")).as("n"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-  }
+  /** The gram-stats pair (at scale built at ingest beside the posting
+    * index): per-batch (ngram, df) rows, gram-space-bounded so one file
+    * suffices at any corpus size, and per-batch (n) rows. Additive, so
+    * appends land beside the existing files and compaction folds them by
+    * summing (IncrementalIndexSpec pins append == rebuild). */
+  val GramDf: graft.Artifact = graft.Artifact("graft_gramdf", 1, gramDf,
+    graft.Artifact.Coalesced(1, 1),
+    _.groupBy(col("ngram")).agg(sum(col("df")).as("df")))
+  val GramN: graft.Artifact = graft.Artifact("graft_gramn", 1, gramN,
+    graft.Artifact.Plain, _.agg(sum(col("n")).as("n")))
 
   /** The stop-gram cut SERVED from artifacts — batchFuzzySearchStopGram's
     * exact semantics (the same oracle gates both) with every corpus-sized
@@ -760,7 +680,8 @@ object FuzzySearch {
     * set through a second copy of the fold. */
   def allowedGramsDfIndexed(spark: SparkSession, dir: String, c: DataFrame,
                             dfCapInverse: Long, version: Int = 1): DataFrame = {
-    val (dp, np) = ensureGramStats(spark, dir, c, version)
+    val dp = graft.Materialize.ensure(spark, GramDf.copy(version = version), dir, c)
+    val np = graft.Materialize.ensure(spark, GramN.copy(version = version), dir, c)
     val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
     val nRel = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
@@ -833,7 +754,7 @@ object FuzzySearch {
         // v3 carries the rank key: a delta refresh re-ranks a merged list
         // row-locally instead of joining the corpus back on for population
         .select(col("ngram"), col("id"), col("population"))
-      writePostingsLayout(kept, path)
+      Postings.write(kept, path, "overwrite", appending = false)
     }
     // parameter sweeps (and the parity spec's deliberate K=∞ build) would
     // otherwise accumulate one full posting copy per (inv, K) pair forever
@@ -884,7 +805,8 @@ object FuzzySearch {
     // cut reads, so the entered arm's volume prediction cannot drift
     val allowedDf = allowedGramsDfIndexed(spark, dir, c, dfCapInverse,
       statsVersion)
-    val postingsPath = ensurePostingsIndex(spark, dir, c, postingsVersion)
+    val postingsPath = graft.Materialize.ensure(spark,
+      Postings.copy(version = postingsVersion), dir, c)
     graft.Materialize.refreshWith(spark, kind, dir, version) { (prior, tmpP) =>
       val priorGrams = prior.select(col("ngram")).distinct()
       val stayed = allowedDf.select(col("ngram")).join(priorGrams, "ngram")
@@ -918,7 +840,7 @@ object FuzzySearch {
             .orderBy(col("population").desc_nulls_last, col("id"))))
         .filter(col("prn") <= postingCap)
         .select(col("ngram"), col("id"), col("population"))
-      writePostingsLayout(kept, tmpP)
+      Postings.write(kept, tmpP, "overwrite", appending = false)
     }
   }
 
@@ -953,7 +875,8 @@ object FuzzySearch {
       return (ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap,
         version), "rebuild")
     }
-    val (_, np) = ensureGramStats(spark, dir, c, statsVersion)
+    graft.Materialize.ensure(spark, GramDf.copy(version = statsVersion), dir, c)
+    val np = graft.Materialize.ensure(spark, GramN.copy(version = statsVersion), dir, c)
     val n = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
       .head().getLong(0)
     val arrivals = batch.count()
@@ -1023,41 +946,17 @@ object FuzzySearch {
       .select(col("pos").as("band_idx"), col("col").as("band_hash"),
         col("clean_value"))
 
-  private def writeFuzzyLshLayout(rows: DataFrame, path: String): Unit =
-    rows.repartition(32, col("band_idx"), col("band_hash"))
-      .sortWithinPartitions(col("band_idx"), col("band_hash"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Write-once fuzzy LSH band artifact — one row per (band_idx,
-    * band_hash, DISTINCT clean_value): the join factors through distinct
-    * names by construction (the round-12 band-bucket discipline), so a
-    * clone-heavy corpus costs storage, never join volume. */
-  def ensureFuzzyLshIndex(spark: SparkSession, dir: String, c: DataFrame,
-                          version: Int = FuzzyLshVersion): String =
-    graft.Materialize.ensure(spark, "graft_fuzzylsh", dir, version) { p =>
-      writeFuzzyLshLayout(fuzzyLshRowsOf(c.select(col("clean_value")).distinct()), p)
-    }
-
-  /** Incremental maintenance: a batch's distinct names land as new
-    * band-clustered files. A name already indexed lands a DUPLICATE row —
-    * exact anyway because the serve counts `countDistinct(band_idx)` per
-    * (qid, name), so re-announcing a band changes nothing
-    * (IncrementalIndexSpec pins append == rebuild). */
-  def appendToFuzzyLshIndex(spark: SparkSession, dir: String, batch: DataFrame,
-                            version: Int = FuzzyLshVersion,
-                            batchTag: Option[String] = None): String = {
-    def write(p: String, mode: String): Unit =
-      fuzzyLshRowsOf(batch.select(col("clean_value")).distinct())
-        .repartition(4, col("band_idx"), col("band_hash"))
-        .sortWithinPartitions(col("band_idx"), col("band_hash"))
-        .write.mode(mode).parquet(p)
-    batchTag match {
-      case Some(t) => graft.Materialize.appendBatch(
-        spark, "graft_fuzzylsh", dir, version, t)(write(_, "overwrite"))
-      case None => graft.Materialize.append(
-        spark, "graft_fuzzylsh", dir, version)(write(_, "append"))
-    }
-  }
+  /** The fuzzy LSH band artifact — one row per (band_idx, band_hash,
+    * DISTINCT clean_value): the join factors through distinct names by
+    * construction (the round-12 band-bucket discipline), so a clone-heavy
+    * corpus costs storage, never join volume. Appendable: a batch's
+    * distinct names land as new band-clustered files, and a name already
+    * indexed lands a DUPLICATE row — exact anyway because the serve counts
+    * `countDistinct(band_idx)` per (qid, name), so re-announcing a band
+    * changes nothing (IncrementalIndexSpec pins append == rebuild). */
+  val FuzzyLsh: graft.Artifact = graft.Artifact("graft_fuzzylsh", FuzzyLshVersion,
+    names => fuzzyLshRowsOf(names.select(col("clean_value")).distinct()),
+    graft.Artifact.Clustered(Seq("band_idx", "band_hash"), Seq("band_idx", "band_hash")))
 
   /** LSH candidate (qid, id) pairs at `bands` bands: query band keys
     * (|Q|·bands rows — broadcast) probe the band artifact map-side;
@@ -1077,7 +976,7 @@ object FuzzySearch {
   private[graft] def lshCandidates(spark: SparkSession, dir: String,
                                    c: DataFrame, queries: DataFrame,
                                    bands: Int): DataFrame = {
-    val art = Tables.parquet(spark, ensureFuzzyLshIndex(spark, dir, c))
+    val art = Tables.parquet(spark, graft.Materialize.ensure(spark, FuzzyLsh, dir, c))
       .filter(col("band_idx") < bands)
     val qb = queries.withColumn("sig", fuzzyGramSig(col("clean_q")))
       .select(col("qid"), posexplode(fuzzyBandArray(col("sig"))))
@@ -1101,7 +1000,7 @@ object FuzzySearch {
     * the ladder. */
   def lshChannelCosts(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val art = Tables.parquet(spark, ensureFuzzyLshIndex(spark, dir, c))
+    val art = Tables.parquet(spark, graft.Materialize.ensure(spark, FuzzyLsh, dir, c))
     val qb = batchQueries(c).withColumn("sig", fuzzyGramSig(col("clean_q")))
       .select(col("qid"), posexplode(fuzzyBandArray(col("sig"))))
       .select(col("pos").as("band_idx"), col("col").as("band_hash"))
@@ -1480,7 +1379,8 @@ object FuzzySearch {
     * (sf1 rehearsal: 245 M rows ≈ 80 s vs a sub-second prediction). */
   def batchCandidateCost(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val (dp, _) = ensureGramStats(spark, dir, c)
+    val dp = graft.Materialize.ensure(spark, GramDf, dir, c)
+    graft.Materialize.ensure(spark, GramN, dir, c)
     val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
     val queries = batchQueries(c)
@@ -1519,7 +1419,8 @@ object FuzzySearch {
   def batchStopgramCandidateCost(spark: SparkSession, dir: String,
                                  dfCapInverse: Long): DataFrame = {
     val c = corpus(spark, dir)
-    val (dp, np) = ensureGramStats(spark, dir, c)
+    val dp = graft.Materialize.ensure(spark, GramDf, dir, c)
+    val np = graft.Materialize.ensure(spark, GramN, dir, c)
     val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
     val nRel = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
@@ -1592,8 +1493,8 @@ object FuzzySearch {
     * is parameterized by dfCapInverse, so it keys too). Unlike tier 1 it
     * ALSO keys on the gramn artifact fingerprint: the allowed-set
     * predicate df·inv ≤ n reads both stats artifacts, and the memo must
-    * re-predict if either moves — relying on appendToGramStats always
-    * mutating the pair together would make that invariant load-bearing
+    * re-predict if either moves — relying on every ingest appending to
+    * [[GramDf]] and [[GramN]] together would make that invariant load-bearing
     * here instead of where it belongs. */
   private val stopCostMemo =
     new scala.collection.concurrent.TrieMap[(String, String, String, String, Long), Long]
@@ -1727,7 +1628,9 @@ object FuzzySearch {
                            dfCapInverse: Long, cap: Int = DefaultCap,
                            budget: Long = BatchCandidateBudget,
                            postingCap: Int = 0): DataFrame = {
-    val (dp, np) = ensureGramStats(spark, dir, corpus(spark, dir))
+    val c = corpus(spark, dir)
+    val dp = graft.Materialize.ensure(spark, GramDf, dir, c)
+    val np = graft.Materialize.ensure(spark, GramN, dir, c)
     val fps = (dir, graft.Materialize.fingerprint(spark, dir),
       graft.Materialize.fingerprint(spark, dp))
     val predicted = costMemo.getOrElseUpdate(fps,

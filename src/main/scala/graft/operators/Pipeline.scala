@@ -1004,7 +1004,8 @@ object Pipeline {
     * clean stage keys on BOTH label artifacts (ensureMulti), so
     * transitive staleness flows from either half. */
   def ensureCorpusE2e(spark: SparkSession, dir: String): String = {
-    val base = CorpusPrep.ensureDocBase(spark, dir)
+    val base = graft.Materialize.ensure(spark, CorpusPrep.docBase(spark, dir), dir,
+      Tables.documents(spark, dir))
     val global = CorpusPrep.ensureDocGlobal(spark, dir)
     val clean = graft.Materialize.ensureMulti(spark, "graft_e2eclean",
         Seq(base, global), E2eVersion) {

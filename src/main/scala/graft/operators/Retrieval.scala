@@ -43,52 +43,22 @@ object Retrieval {
     docs.select(size(tokens(lower(col("text")))).cast("long").as("dl"))
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
 
-  /** Canonical posting layout: term-clustered into a fixed file count,
-    * sorted within files so row-group min/max stats prune a term probe to
+  /** The word index (at scale built at ingest): term-clustered postings
+    * sorted within files, so row-group min/max stats prune a term probe to
     * the probed terms' postings (the graft_postings layout keyed by term
-    * instead of trigram, FuzzySearch.scala's writePostingsLayout). */
-  private def writeWordLayout(rows: DataFrame, path: String): Unit =
-    rows.repartition(32, col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(path)
+    * instead of trigram), and the additive stats rows, folded to one by
+    * compaction. Both derivations are row-local per doc, so a batch's rows
+    * land beside the existing files exactly. */
+  val WordPostings: graft.Artifact = graft.Artifact("graft_wordpostings", 1,
+    wordPostings, graft.Artifact.Clustered(Seq("term"), Seq("term")))
+  val WordStats: graft.Artifact = graft.Artifact("graft_wordstats", 1, wordStats,
+    graft.Artifact.Plain, _.agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl")))
 
-  /** Write-once word index build (at scale this runs at ingest): returns
+  /** [[WordPostings]] and [[WordStats]] ensured over `docs`:
     * (postings path, stats path). */
-  def ensureWordIndex(spark: SparkSession, dir: String, docs: DataFrame,
-                      version: Int = 1): (String, String) = {
-    val pp = graft.Materialize.ensure(spark, "graft_wordpostings", dir, version) { p =>
-      writeWordLayout(wordPostings(docs), p)
-    }
-    val sp = graft.Materialize.ensure(spark, "graft_wordstats", dir, version) { p =>
-      wordStats(docs).write.mode("overwrite").parquet(p)
-    }
-    (pp, sp)
-  }
-
-  /** Incremental word-index maintenance: the batch's posting rows land as
-    * new term-clustered files; the stats artifact gains one (n, sdl) row.
-    * Exact because both derivations are row-local per doc. */
-  def appendToWordIndex(spark: SparkSession, dir: String, batch: DataFrame,
-                        version: Int = 1): Unit = {
-    graft.Materialize.append(spark, "graft_wordpostings", dir, version) { p =>
-      wordPostings(batch).repartition(4, col("term")).sortWithinPartitions(col("term"))
-        .write.mode("append").parquet(p)
-    }
-    graft.Materialize.append(spark, "graft_wordstats", dir, version) { p =>
-      wordStats(batch).write.mode("append").parquet(p)
-    }
-  }
-
-  /** Periodic compaction: postings back to the canonical 32-way layout;
-    * stats rows folded to one (sums are associative). Contents unchanged. */
-  def compactWordIndex(spark: SparkSession, dir: String, version: Int = 1): Unit = {
-    graft.Materialize.compact(spark, "graft_wordpostings", dir, version) {
-      (cur, tmp) => writeWordLayout(cur, tmp)
-    }
-    graft.Materialize.compact(spark, "graft_wordstats", dir, version) {
-      (cur, tmp) => cur.agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-  }
+  def ensureWordIndex(spark: SparkSession, dir: String, docs: DataFrame): (String, String) =
+    (graft.Materialize.ensure(spark, WordPostings, dir, docs),
+      graft.Materialize.ensure(spark, WordStats, dir, docs))
 
   /** Fresh read of the materialized posting relation (ensured on first
     * call) — BY-NAME consumers (streaming faces) pick up appended files

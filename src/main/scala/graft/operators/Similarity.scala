@@ -592,49 +592,25 @@ object Similarity {
       .groupBy(col("vec_id")).agg(max(col("sc")).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cell"))
 
-  /** Write-once IVF index build (at scale this runs at ingest): vectors
-    * cell-assigned against `cent` and written partitioned by cell. The
-    * codebook parameters key the artifact alongside the data dir +
-    * version. Returns the artifact path. */
-  def ensureIvfIndex(spark: SparkSession, dir: String, e: DataFrame, cent: DataFrame,
-                     centroidMod: Long, numCentroids: Int, version: Int = 1): String =
-    graft.Materialize.ensure(
-      spark, s"graft_ivf_m${centroidMod}_c$numCentroids", dir, version) { p =>
-      e.join(cellAssignment(e, cent), "vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
-    }
-
-  /** Incremental IVF maintenance: a new vector batch is assigned against
-    * the SAME (frozen) codebook and appended into the existing cell
-    * directories — new files per touched cell, no rewrite of old cells.
-    * Exact because assignment is row-local given a frozen codebook:
-    * assign(corpus ∪ batch) == assign(corpus) ∪ assign(batch)
-    * (IncrementalIndexSpec pins append-then-read == rebuild-then-read).
+  /** The IVF index (at scale built at ingest): vectors cell-assigned
+    * against the frozen codebook `cent` and written partitioned by cell;
+    * the codebook parameters key the artifact. Appendable — a new vector
+    * batch is assigned against the SAME codebook into the existing cell
+    * directories — because assignment is row-local given a frozen
+    * codebook: assign(corpus ∪ batch) == assign(corpus) ∪ assign(batch).
     * Cell skew accumulates batch-by-batch until a retrain (new codebook =
-    * version bump = full rebuild), which is the standard IVF lifecycle. */
-  def appendToIvfIndex(spark: SparkSession, dir: String, batch: DataFrame, cent: DataFrame,
-                       centroidMod: Long, numCentroids: Int, version: Int = 1): String =
-    graft.Materialize.append(
-      spark, s"graft_ivf_m${centroidMod}_c$numCentroids", dir, version) { p =>
-      batch.join(cellAssignment(batch, cent), "vec_id")
-        .write.mode("append").partitionBy("cell").parquet(p)
-    }
+    * version bump = full rebuild), the standard IVF lifecycle; compaction
+    * rewrites each cell's accumulated files into one file set per cell
+    * (IncrementalIndexSpec pins append == rebuild and compact == rebuild). */
+  def ivfIndex(cent: DataFrame, centroidMod: Long, numCentroids: Int): graft.Artifact =
+    graft.Artifact(s"graft_ivf_m${centroidMod}_c$numCentroids", 1,
+      e => e.join(cellAssignment(e, cent), "vec_id"), graft.Artifact.Cells,
+      _.repartition(col("cell")))
 
-  /** Periodic compaction after appends: rewrites each cell directory's
-    * accumulated per-batch files into one file set per cell (same
-    * partitioned layout, contents unchanged — IncrementalIndexSpec pins
-    * compact-then-read == rebuild-then-read). Runs after enough appends
-    * that small files dominate the probed cells' read cost; a RETRAIN
-    * (new codebook) is the version bump that rebuilds wholesale. */
-  def compactIvfIndex(spark: SparkSession, dir: String,
-                      centroidMod: Long, numCentroids: Int,
-                      version: Int = 1): String =
-    graft.Materialize.compact(
-      spark, s"graft_ivf_m${centroidMod}_c$numCentroids", dir, version) {
-      (cur, tmp) =>
-        cur.repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }
+  /** [[ivfIndex]] ensured over `e`; returns the artifact path. */
+  def ensureIvfIndex(spark: SparkSession, dir: String, e: DataFrame, cent: DataFrame,
+                     centroidMod: Long, numCentroids: Int): String =
+    graft.Materialize.ensure(spark, ivfIndex(cent, centroidMod, numCentroids), dir, e)
 
   /** The materialized IVF index path: cell assignment written ONCE as
     * cell-partitioned parquet (the ingest-time index build), then the query
@@ -726,8 +702,8 @@ object Similarity {
                          version: Int = 1): (String, Option[(Int, Int)]) =
     ivfBuildPlan(n, numCentroids, budget) match {
       case None =>
-        (ensureIvfIndex(spark, dir, e, cent, centroidMod, numCentroids,
-          version), None)
+        (graft.Materialize.ensure(spark,
+          ivfIndex(cent, centroidMod, numCentroids).copy(version = version), dir, e), None)
       case plan @ Some((numCoarse, nprobe1)) =>
         (ensureIvf2AssignedIndex(spark, dir, e, cent, centroidMod,
           numCentroids, 4L, numCoarse, nprobe1, version), plan)
@@ -1123,28 +1099,15 @@ object Similarity {
       .limit(k)
   }
 
-  /** Write-once PQ codes artifact — the ingest product: one row per
-    * vector, the whole M-code array, vec_id-clustered. At 100 TB this is
-    * the 8-byte column the coarse pass scans INSTEAD of the vectors. */
-  def ensurePqCodes(spark: SparkSession, dir: String, e: DataFrame,
-                    books: DataFrame, version: Int = 1): String =
-    graft.Materialize.ensure(spark, s"graft_pqcodes_m${PqM}k$PqK", dir, version) { p =>
-      pqCodesWide(e, books)
-        .repartition(8, col("vec_id")).sortWithinPartitions(col("vec_id"))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  /** Incremental codes maintenance: a new vector batch encodes against
-    * the SAME frozen subspace codebooks and appends as new files —
-    * encoding is row-local, so append-then-read == rebuild-then-read
-    * (IncrementalIndexSpec pins it, same as postings/IVF). */
-  def appendToPqCodes(spark: SparkSession, dir: String, batch: DataFrame,
-                      books: DataFrame, version: Int = 1): String =
-    graft.Materialize.append(spark, s"graft_pqcodes_m${PqM}k$PqK", dir, version) { p =>
-      pqCodesWide(batch, books)
-        .repartition(2, col("vec_id")).sortWithinPartitions(col("vec_id"))
-        .write.mode("append").parquet(p)
-    }
+  /** The PQ codes artifact — the ingest product: one row per vector, the
+    * whole M-code array, vec_id-clustered. At 100 TB this is the 8-byte
+    * column the coarse pass scans INSTEAD of the vectors. Encoding against
+    * the frozen subspace codebooks `books` is row-local, so a new vector
+    * batch appends as new files (IncrementalIndexSpec pins append ==
+    * rebuild, same as postings/IVF). */
+  def pqCodes(books: DataFrame): graft.Artifact =
+    graft.Artifact(s"graft_pqcodes_m${PqM}k$PqK", 1, pqCodesWide(_, books),
+      graft.Artifact.Clustered(Seq("vec_id"), Seq("vec_id"), build = 8, append = 2))
 
   /** PQ-ADC top-k over the MATERIALIZED codes artifact — identical
     * semantics to [[pqTopK]] (the shared oracle gates both); the query
@@ -1154,7 +1117,7 @@ object Similarity {
                     mod: Long = 25L): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val books = pqCodebooks(e, mod)
-    val codes = Tables.parquet(spark, ensurePqCodes(spark, dir, e, books))
+    val codes = Tables.parquet(spark, graft.Materialize.ensure(spark, pqCodes(books), dir, e))
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
     pqAdcTopK(codes, books, e, probeId, k)
   }
@@ -1233,38 +1196,17 @@ object Similarity {
   /** CELL-PARTITIONED PQ codes — the artifact [[ivfPqTopK]]'s docstring
     * promises at 100 TB ("the codes live beside the cell-partitioned
     * index files"): one row per vector (vec_id, codes, cell), written
-    * `partitionBy(cell)` like `graft_ivf`, so a probed query reads
+    * `partitionBy(cell)` like [[ivfIndex]], so a probed query reads
     * nprobe/C of an already-32×-smaller column with partition pruning —
-    * never the float vectors. Same frozen-codebook append story as the
-    * IVF index: encoding and cell assignment are both row-local, so new
-    * batches append into the touched cell directories exactly. */
-  def ensureIvfPqCodes(spark: SparkSession, dir: String, e: DataFrame,
-                       cent: DataFrame, books: DataFrame,
-                       centroidMod: Long, numCentroids: Int,
-                       version: Int = 1): String =
-    graft.Materialize.ensure(
-      spark, s"graft_ivfpq_m${centroidMod}_c${numCentroids}_m${PqM}k$PqK",
-      dir, version) { p =>
-      pqCodesWide(e, books).join(cellAssignment(e, cent), "vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
-    }
-
-  /** Incremental maintenance of the cell-partitioned codes: the batch
-    * encodes against the SAME frozen subspace codebooks and assigns
-    * against the SAME frozen coarse codebook — both row-local, so
-    * append-then-read == rebuild-then-read (IncrementalIndexSpec pins the
-    * same law for `graft_ivf` and `graft_pqcodes`; this artifact composes
-    * the two row-local derivations). */
-  def appendToIvfPqCodes(spark: SparkSession, dir: String, batch: DataFrame,
-                         cent: DataFrame, books: DataFrame,
-                         centroidMod: Long, numCentroids: Int,
-                         version: Int = 1): String =
-    graft.Materialize.append(
-      spark, s"graft_ivfpq_m${centroidMod}_c${numCentroids}_m${PqM}k$PqK",
-      dir, version) { p =>
-      pqCodesWide(batch, books).join(cellAssignment(batch, cent), "vec_id")
-        .write.mode("append").partitionBy("cell").parquet(p)
-    }
+    * never the float vectors. Encoding against the frozen subspace
+    * codebooks and assignment against the frozen coarse codebook are both
+    * row-local, so new batches append into the touched cell directories
+    * exactly (IncrementalIndexSpec pins append == rebuild). */
+  def ivfPqCodes(cent: DataFrame, books: DataFrame, centroidMod: Long,
+                 numCentroids: Int): graft.Artifact =
+    graft.Artifact(s"graft_ivfpq_m${centroidMod}_c${numCentroids}_m${PqM}k$PqK", 1,
+      e => pqCodesWide(e, books).join(cellAssignment(e, cent), "vec_id"),
+      graft.Artifact.Cells, _.repartition(col("cell")))
 
   /** The SERVED two-level IVF+PQ: [[ivf2ProbeCells]] selection (O(√C)
     * centroid work), then the nprobe cell directories of the
@@ -1285,8 +1227,8 @@ object Similarity {
       .select(col("embedding").as("pemb"))
     val probeCells = ivf2ProbeCells(fine, probe, centroidMod,
       coarseStride, numCoarse, nprobe1, nprobe)
-    val path = ensureIvfPqCodes(spark, dir, e, fine, books,
-      centroidMod, numCentroids)
+    val path = graft.Materialize.ensure(spark,
+      ivfPqCodes(fine, books, centroidMod, numCentroids), dir, e)
     val codes = Tables.parquet(spark, path)
       .join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId)
@@ -1314,8 +1256,8 @@ object Similarity {
     val books = pqCodebooks(e, mod)
     val probes = e.filter(col("vec_id") % BatchProbeMod === 0)
       .select(col("vec_id").as("pid"), col("embedding").as("pemb"))
-    val path = ensureIvfPqCodes(spark, dir, e, cent, books,
-      centroidMod, numCentroids)
+    val path = graft.Materialize.ensure(spark,
+      ivfPqCodes(cent, books, centroidMod, numCentroids), dir, e)
     ivfPqBatchTopKOver(probes, Tables.parquet(spark, path), cent, books,
       e.select(col("vec_id"), col("label")), k, nprobe)
   }
@@ -1541,7 +1483,7 @@ object Similarity {
   val AnnTrainIters = 2
 
   /** The cell-partitioned codes artifact ASSIGNED BY the trained fine
-    * codebook committed at `finePath` — [[ensureIvfPqCodes]] with
+    * codebook committed at `finePath` — [[ivfPqCodes]] with
     * KMeans.assign in place of the sample-centroid flat assignment. Own
     * kind: a trained-assigned build must never serve the sample-assigned
     * read (the parameter-blind-kind class); iters/mod/ncells and the PQ
@@ -1644,7 +1586,7 @@ object Similarity {
     val finePath = KMeans.ensureTrainedCentroids(spark, dir, AnnTrainIters, 25L, ncells)
     val key = AnnKey(fp, finePath,
       ensureIvfPqCodesTrained(spark, dir, finePath, 25L, ncells),
-      ensureInt8Codes(spark, dir, e))
+      graft.Materialize.ensure(spark, Int8Codes, dir, e))
     held.filter(_.key == key).getOrElse(annModelBuild.synchronized {
       Option(annModels.get(dir)).filter(_.key == key).getOrElse {
         val built = buildAnnModel(spark, e, key, n, ncoarse, np1, nprobe)
@@ -2178,24 +2120,15 @@ object Similarity {
       .withColumn("codes", int8CodesCol)
       .select(col("vec_id"), col("label"), col("scale"), col("codes"))
 
-  /** Write-once int8 code artifact (at scale this is the ingest-time
-    * quantization job): the serving tier stores 4×-compressed codes and a
-    * search never touches the float embeddings again. */
-  def ensureInt8Codes(spark: SparkSession, dir: String, e: DataFrame,
-                      version: Int = Int8Version): String =
-    graft.Materialize.ensure(spark, "graft_int8codes", dir, version) { p =>
-      int8CodeRows(e).write.mode("overwrite").parquet(p)
-    }
-
-  def appendToInt8Codes(spark: SparkSession, dir: String, batch: DataFrame,
-                        version: Int = Int8Version): Unit =
-    graft.Materialize.append(spark, "graft_int8codes", dir, version) { p =>
-      int8CodeRows(batch).write.mode("append").parquet(p)
-    }
+  /** The int8 code artifact (at scale the ingest-time quantization job):
+    * the serving tier stores 4×-compressed codes and a search never
+    * touches the float embeddings again. */
+  val Int8Codes: graft.Artifact =
+    graft.Artifact("graft_int8codes", Int8Version, int8CodeRows, graft.Artifact.Plain)
 
   def int8CodesOf(spark: SparkSession, dir: String): DataFrame =
     Tables.parquet(spark,
-      ensureInt8Codes(spark, dir, Tables.embeddings(spark, dir)))
+      graft.Materialize.ensure(spark, Int8Codes, dir, Tables.embeddings(spark, dir)))
 
   /** Cosine top-k SERVED FROM the materialized int8 tier: probe and
     * candidates both dequantize from stored codes (the honest serving
@@ -2420,28 +2353,16 @@ object Similarity {
 
   val RpVersion = 1
 
-  /** Write-once projected-vector artifact (at scale: the ingest-time
-    * projection job). Row-local derivation → appendable exactly like the
-    * int8/PQ code artifacts (append == rebuild). */
-  def ensureRpProj(spark: SparkSession, dir: String, e: DataFrame,
-                   version: Int = RpVersion): String =
-    graft.Materialize.ensure(spark, "graft_rpproj", dir, version) { p =>
-      e.select(col("vec_id"), col("label"),
-          rpProject(col("embedding")).as("rp"))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  def appendToRpProj(spark: SparkSession, dir: String, batch: DataFrame,
-                     version: Int = RpVersion): Unit =
-    graft.Materialize.append(spark, "graft_rpproj", dir, version) { p =>
-      batch.select(col("vec_id"), col("label"),
-          rpProject(col("embedding")).as("rp"))
-        .write.mode("append").parquet(p)
-    }
+  /** The projected-vector artifact (at scale: the ingest-time projection
+    * job). Row-local derivation → appendable exactly like the int8/PQ code
+    * artifacts (append == rebuild). */
+  val RpProj: graft.Artifact = graft.Artifact("graft_rpproj", RpVersion,
+    _.select(col("vec_id"), col("label"), rpProject(col("embedding")).as("rp")),
+    graft.Artifact.Plain)
 
   def rpProjOf(spark: SparkSession, dir: String): DataFrame =
     Tables.parquet(spark,
-      ensureRpProj(spark, dir, Tables.embeddings(spark, dir)))
+      graft.Materialize.ensure(spark, RpProj, dir, Tables.embeddings(spark, dir)))
 
   /** rpTopK SERVED from the materialized projected artifact — probe and
     * candidates both read 16-double rows; the plan never scans

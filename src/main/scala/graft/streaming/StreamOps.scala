@@ -101,7 +101,7 @@ object StreamOps {
     * Identical per-micro-batch plan: bloom-pruned index probe with the
     * broadcast allowed-gram set joined inside the scan stage. `allowed`
     * is BY-NAME like `postings`/`corpus`: re-evaluated each micro-batch,
-    * so gram-stats appends (appendToGramStats) are picked up on the next
+    * so gram-stats appends (`FuzzySearch.GramDf`/`GramN`) are picked up on the next
     * batch without restarting the query. Exact under any request
     * chunking for the same reason fuzzyStream is (a query's result
     * depends only on its own row); StreamingSpec pins stream-total ==
@@ -154,7 +154,7 @@ object StreamOps {
     * chunking (StreamingSpec pins stream-total == `ann_ivf_batch` on the
     * same probe set, split across batches). `indexed`/`cent` are BY-NAME —
     * re-evaluated per micro-batch, so an index APPEND
-    * (`Similarity.appendToIvfIndex`) is visible on the next micro-batch
+    * (`Materialize.append` of `Similarity.ivfIndex`) is visible on the next micro-batch
     * when the caller passes a fresh read (see fuzzyStream). */
   def annStream(probes: DataFrame, indexed: => DataFrame, cent: => DataFrame,
                 k: Int, nprobe: Int)
@@ -177,7 +177,7 @@ object StreamOps {
     * (StreamingSpec pins stream-total == the batch core on the same probe
     * set split across batches). `codes`/`cent`/`books`/`labels` are
     * BY-NAME — re-evaluated per micro-batch, so a codes APPEND
-    * (`Similarity.appendToIvfPqCodes`) is visible on the next micro-batch
+    * (`Materialize.append` of `Similarity.ivfPqCodes`) is visible on the next micro-batch
     * when the caller passes a fresh read (see fuzzyStream). */
   def annPqStream(probes: DataFrame, codes: => DataFrame, cent: => DataFrame,
                   books: => DataFrame, labels: => DataFrame,
@@ -221,7 +221,7 @@ object StreamOps {
     * labeled per micro-batch with the EXACT `CorpusPrep.docBaseOverModel`
     * plan — language/quality gates, token + BPE-piece counts, content
     * hash, LM score against the FROZEN served model. This is the
-    * ingest-side twin of `appendToDocBase`: every docbase column is
+    * ingest-side twin of the `CorpusPrep.docBase` append: every docbase column is
     * row-local (the LM score is text vs a static artifact), so
     * per-micro-batch evaluation is exact under any chunking
     * (StreamingSpec pins stream-total == the batch labeling of the same

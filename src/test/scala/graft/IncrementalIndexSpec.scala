@@ -39,9 +39,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("posting index: append-then-read == rebuild-then-read, bit-identical") {
     val (full, base, batch) = corpusParts()
     assert(batch.count() > 0 && base.count() > 0)
-    val appended = FuzzySearch.ensurePostingsIndex(spark, dir, base, version = 901)
-    FuzzySearch.appendToPostingsIndex(spark, dir, batch, version = 901)
-    val rebuilt = FuzzySearch.ensurePostingsIndex(spark, dir, full, version = 902)
+    val appended = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 901), dir, base)
+    Materialize.append(spark, FuzzySearch.Postings.copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 902), dir, full)
     def rows(p: String): Seq[(String, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getAs[String]("ngram"), r.getAs[Long]("id"))).toSeq.sorted
@@ -54,9 +54,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = zc.filter(pmod(col("id"), lit(7)) =!= 0)
     val batch = zc.filter(pmod(col("id"), lit(7)) === 0)
     assert(batch.count() > 0 && base.count() > 0)
-    val appended = FuzzySearch.ensurePartitionedPostingsIndex(spark, dir, base, version = 901)
-    FuzzySearch.appendToPartitionedPostingsIndex(spark, dir, batch, version = 901)
-    val rebuilt = FuzzySearch.ensurePartitionedPostingsIndex(spark, dir, zc, version = 902)
+    val appended = Materialize.ensure(spark, FuzzySearch.partPostings().copy(version = 901), dir, base)
+    Materialize.append(spark, FuzzySearch.partPostings().copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, FuzzySearch.partPostings().copy(version = 902), dir, zc)
     def rows(p: String): Seq[(String, String, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getAs[String]("ngram"), r.getAs[String]("partition"),
@@ -70,9 +70,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // overlap the batch's names with the base on purpose: appends
     // re-announce already-indexed names as duplicate band rows, and the
     // serve's countDistinct(band_idx) must make that invisible
-    val appended = FuzzySearch.ensureFuzzyLshIndex(spark, dir, base, version = 901)
-    FuzzySearch.appendToFuzzyLshIndex(spark, dir, full, version = 901)
-    val rebuilt = FuzzySearch.ensureFuzzyLshIndex(spark, dir, full, version = 902)
+    val appended = Materialize.ensure(spark, FuzzySearch.FuzzyLsh.copy(version = 901), dir, base)
+    Materialize.append(spark, FuzzySearch.FuzzyLsh.copy(version = 901), dir, full)
+    val rebuilt = Materialize.ensure(spark, FuzzySearch.FuzzyLsh.copy(version = 902), dir, full)
     val queries = FuzzySearch.batchQueries(full)
     def served(version: Int): Seq[(Long, Long)] = {
       // lshCandidates reads via ensure (memoized path) — read both
@@ -94,9 +94,12 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("gram stats: append-then-fold == rebuild-then-fold (df + n additive)") {
     val (full, base, batch) = corpusParts()
-    val (adf, an) = FuzzySearch.ensureGramStats(spark, dir, base, version = 901)
-    FuzzySearch.appendToGramStats(spark, dir, batch, version = 901)
-    val (rdf, rn) = FuzzySearch.ensureGramStats(spark, dir, full, version = 902)
+    val (df1, n1) = (FuzzySearch.GramDf.copy(version = 901), FuzzySearch.GramN.copy(version = 901))
+    val (df2, n2) = (FuzzySearch.GramDf.copy(version = 902), FuzzySearch.GramN.copy(version = 902))
+    val (adf, an) = (Materialize.ensure(spark, df1, dir, base), Materialize.ensure(spark, n1, dir, base))
+    Materialize.append(spark, df1, dir, batch)
+    Materialize.append(spark, n1, dir, batch)
+    val (rdf, rn) = (Materialize.ensure(spark, df2, dir, full), Materialize.ensure(spark, n2, dir, full))
     def foldDf(p: String): Seq[(String, Long)] =
       spark.read.parquet(p).groupBy(col("ngram")).agg(sum(col("df")).as("df"))
         .collect().map(r => (r.getAs[String]("ngram"), r.getAs[Long]("df"))).toSeq.sorted
@@ -106,7 +109,8 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.nonEmpty && a == foldDf(rdf))
     assert(foldN(an) == foldN(rn))
     // compaction folds per-batch rows; the folded view is unchanged
-    FuzzySearch.compactGramStats(spark, dir, version = 901)
+    Materialize.compact(spark, df1, dir)
+    Materialize.compact(spark, n1, dir)
     assert(foldDf(adf) == a && foldN(an) == foldN(rn))
   }
 
@@ -118,9 +122,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(batch.count() > 0 && base.count() > 0)
     // winnowing is row-local per document, so per-fp df is additive across
     // batches — the property that licenses the append face at all
-    val ap = Dedup.ensureWinnowDf(spark, dir, base, version = 901)
-    Dedup.appendToWinnowDf(spark, dir, batch, version = 901)
-    val rp = Dedup.ensureWinnowDf(spark, dir, d, version = 902)
+    val ap = Materialize.ensure(spark, Dedup.WinnowDf.copy(version = 901), dir, base)
+    Materialize.append(spark, Dedup.WinnowDf.copy(version = 901), dir, batch)
+    val rp = Materialize.ensure(spark, Dedup.WinnowDf.copy(version = 902), dir, d)
     def fold(p: String): Seq[(Long, Long)] =
       spark.read.parquet(p).groupBy(col("fp")).agg(sum(col("c")).as("c"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
@@ -139,17 +143,13 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // labels(batch) — the property that licenses the append face. The
     // shared model is ensured over the FULL dir on both paths, so the
     // comparison isolates the labeling, not a model drift.
-    val ap = CorpusPrep.ensureDocBase(spark, dir, version = 901)
-    // rebuild under a fresh version must see the full corpus: build the
-    // appended artifact from the base slice by hand (ensureDocBase labels
-    // the whole dir, so the append case needs the Over face directly)
-    val model = graft.operators.LmQuality.ensureModel(spark, dir)
-    val apSlice = graft.Materialize.ensure(spark, "graft_docbase_slice", dir, 901) { p =>
-      CorpusPrep.docBaseOver(spark, base, model).write.mode("overwrite").parquet(p)
-    }
-    graft.Materialize.append(spark, "graft_docbase_slice", dir, 901) { p =>
-      CorpusPrep.docBaseOver(spark, batch, model).write.mode("append").parquet(p)
-    }
+    val docBase = CorpusPrep.docBase(spark, dir)
+    val ap = Materialize.ensure(spark, docBase.copy(version = 901), dir, d)
+    // the appended artifact, under its own kind: built from the base slice,
+    // then the batch appended
+    val slice = docBase.copy(kind = "graft_docbase_slice", version = 901)
+    val apSlice = Materialize.ensure(spark, slice, dir, base)
+    Materialize.append(spark, slice, dir, batch)
     def rows(p: String): Seq[Seq[Any]] =
       spark.read.parquet(p).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
     val appended = rows(apSlice)
@@ -162,9 +162,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = Tables.documents(spark, dir)
     val base = d.filter(pmod(col("doc_id"), lit(7)) =!= 0)
     val batch = d.filter(pmod(col("doc_id"), lit(7)) === 0)
-    val ap = Dedup.ensureWinnowSel(spark, dir, base, version = 901)
-    Dedup.appendToWinnowSel(spark, dir, batch, version = 901)
-    val rp = Dedup.ensureWinnowSel(spark, dir, d, version = 902)
+    val ap = Materialize.ensure(spark, Dedup.WinnowSel.copy(version = 901), dir, base)
+    Materialize.append(spark, Dedup.WinnowSel.copy(version = 901), dir, batch)
+    val rp = Materialize.ensure(spark, Dedup.WinnowSel.copy(version = 902), dir, d)
     def rows(p: String): Seq[(Long, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
@@ -177,9 +177,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = Tables.documents(spark, dir)
     val base = d.filter(pmod(col("doc_id"), lit(7)) =!= 0)
     val batch = d.filter(pmod(col("doc_id"), lit(7)) === 0)
-    val ap = CorpusPrep.ensureDocWins(spark, dir, base, version = 901)
-    CorpusPrep.appendToDocWins(spark, dir, batch, version = 901)
-    val rp = CorpusPrep.ensureDocWins(spark, dir, d, version = 902)
+    val ap = Materialize.ensure(spark, CorpusPrep.DocWins.copy(version = 901), dir, base)
+    Materialize.append(spark, CorpusPrep.DocWins.copy(version = 901), dir, batch)
+    val rp = Materialize.ensure(spark, CorpusPrep.DocWins.copy(version = 902), dir, d)
     def rows(p: String): Seq[(Long, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
@@ -192,19 +192,19 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = Tables.documents(spark, dir)
     val base = d.filter(pmod(col("doc_id"), lit(7)) =!= 0)
     val batch = d.filter(pmod(col("doc_id"), lit(7)) === 0)
-    val ap = CorpusPrep.ensureDocWins(spark, dir, base, version = 931)
+    val ap = Materialize.ensure(spark, CorpusPrep.DocWins.copy(version = 931), dir, base)
     def rows(p: String): Seq[(Long, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    CorpusPrep.appendToDocWins(spark, dir, batch, version = 931,
-      batchTag = Some("b1"))
+    Materialize.append(spark, CorpusPrep.DocWins.copy(version = 931), dir, batch,
+      Some("b1"))
     val once = rows(ap)
-    val rp = CorpusPrep.ensureDocWins(spark, dir, d, version = 932)
+    val rp = Materialize.ensure(spark, CorpusPrep.DocWins.copy(version = 932), dir, d)
     assert(once.nonEmpty && once == rows(rp),
       "batch-keyed append must equal the plain rebuild")
     // replay the same tag: at-least-once delivery must not double the rows
-    CorpusPrep.appendToDocWins(spark, dir, batch, version = 931,
-      batchTag = Some("b1"))
+    Materialize.append(spark, CorpusPrep.DocWins.copy(version = 931), dir, batch,
+      Some("b1"))
     assert(rows(ap) == once, "replayed tag must converge, not double")
     // an orphaned file from a crashed prior attempt of ANOTHER tag: the
     // next attempt of that tag must delete it before moving its own in
@@ -216,8 +216,8 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       new org.apache.hadoop.fs.Path(apPath, "batch-b2-orphan.parquet"),
       false, spark.sparkContext.hadoopConfiguration)
     assert(rows(ap) != once, "the planted orphan must be visible pre-retry")
-    CorpusPrep.appendToDocWins(spark, dir, batch.limit(0), version = 931,
-      batchTag = Some("b2"))
+    Materialize.append(spark, CorpusPrep.DocWins.copy(version = 931), dir, batch.limit(0),
+      Some("b2"))
     assert(rows(ap) == once,
       "retrying tag b2 must clear the orphaned partial attempt's file")
     // a crashed partial attempt must not get FOLDED IN by compaction:
@@ -235,8 +235,8 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(ap) == once,
       "compact must repair a crashed attempt's files away, not fold them in")
     // the folded b1's marker was carried forward: a late replay still no-ops
-    CorpusPrep.appendToDocWins(spark, dir, batch, version = 931,
-      batchTag = Some("b1"))
+    Materialize.append(spark, CorpusPrep.DocWins.copy(version = 931), dir, batch,
+      Some("b1"))
     assert(rows(ap) == once, "a late replay of a folded batch must still no-op")
   }
 
@@ -262,12 +262,14 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (exactly what v=903 did to the posting-compaction test)
     val v = 923
     // prior generation + the cadence's per-batch appends
-    FuzzySearch.ensurePostingsIndex(spark, dir, c0, version = v)
-    FuzzySearch.ensureGramStats(spark, dir, c0, version = v)
+    Materialize.ensure(spark, FuzzySearch.Postings.copy(version = v), dir, c0)
+    Materialize.ensure(spark, FuzzySearch.GramDf.copy(version = v), dir, c0)
+    Materialize.ensure(spark, FuzzySearch.GramN.copy(version = v), dir, c0)
     FuzzySearch.ensureChampionIndex(spark, dir, c0, dfCapInverse = 2L,
       postingCap = 2, version = v)
-    FuzzySearch.appendToPostingsIndex(spark, dir, batch, version = v)
-    FuzzySearch.appendToGramStats(spark, dir, batch, version = v)
+    Materialize.append(spark, FuzzySearch.Postings.copy(version = v), dir, batch)
+    Materialize.append(spark, FuzzySearch.GramDf.copy(version = v), dir, batch)
+    Materialize.append(spark, FuzzySearch.GramN.copy(version = v), dir, batch)
     val dp = FuzzySearch.deltaChampionRefresh(spark, dir, full, batch,
       dfCapInverse = 2L, postingCap = 2, version = v,
       statsVersion = v, postingsVersion = v)
@@ -318,10 +320,12 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the cadence appends the batch's postings + stats, then dispatches:
     // n (9 docs, from the additive stats fold) is under the default
     // floor → the exact rebuild arm, equal to a from-scratch build
-    FuzzySearch.ensurePostingsIndex(spark, dir, c0, version = v)
-    FuzzySearch.ensureGramStats(spark, dir, c0, version = v)
-    FuzzySearch.appendToPostingsIndex(spark, dir, batch, version = v)
-    FuzzySearch.appendToGramStats(spark, dir, batch, version = v)
+    Materialize.ensure(spark, FuzzySearch.Postings.copy(version = v), dir, c0)
+    Materialize.ensure(spark, FuzzySearch.GramDf.copy(version = v), dir, c0)
+    Materialize.ensure(spark, FuzzySearch.GramN.copy(version = v), dir, c0)
+    Materialize.append(spark, FuzzySearch.Postings.copy(version = v), dir, batch)
+    Materialize.append(spark, FuzzySearch.GramDf.copy(version = v), dir, batch)
+    Materialize.append(spark, FuzzySearch.GramN.copy(version = v), dir, batch)
     val (p1, d1) = FuzzySearch.championRefreshAuto(spark, dir, full, batch,
       dfCapInverse = 2L, postingCap = 2,
       version = v, statsVersion = v, postingsVersion = v)
@@ -352,8 +356,8 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (_, base, batch) = corpusParts()
     // Build at the OPERATOR's version so fuzzySearchIndexed's ensure() sees
     // the appended artifact and skips the rebuild.
-    FuzzySearch.ensurePostingsIndex(spark, dir, base, version = 1)
-    FuzzySearch.appendToPostingsIndex(spark, dir, batch, version = 1)
+    Materialize.ensure(spark, FuzzySearch.Postings, dir, base)
+    Materialize.append(spark, FuzzySearch.Postings, dir, batch)
     val viaIndex = FuzzySearch.fuzzySearchIndexed(spark, dir, "smal widget", 15).collect().toSeq
     val inline = FuzzySearch.fuzzySearch(spark, dir, "smal widget", 15).collect().toSeq
     assert(viaIndex.nonEmpty && viaIndex == inline)
@@ -369,12 +373,10 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("IVF index: append-then-read == rebuild-then-read, bit-identical") {
     val (e, cent, base, batch) = embParts()
-    val appended = Similarity.ensureIvfIndex(spark, dir, base, cent, 25L,
-      Similarity.IvfNumCentroids, version = 901)
-    Similarity.appendToIvfIndex(spark, dir, batch, cent, 25L,
-      Similarity.IvfNumCentroids, version = 901)
-    val rebuilt = Similarity.ensureIvfIndex(spark, dir, e, cent, 25L,
-      Similarity.IvfNumCentroids, version = 902)
+    val ivf = Similarity.ivfIndex(cent, 25L, Similarity.IvfNumCentroids)
+    val appended = Materialize.ensure(spark, ivf.copy(version = 901), dir, base)
+    Materialize.append(spark, ivf.copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, ivf.copy(version = 902), dir, e)
     def rows(p: String): Seq[(Long, Long, String, Seq[Float])] =
       spark.read.parquet(p)
         .select(col("vec_id"), col("cell").cast("long"),
@@ -388,12 +390,11 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bucketed IVF top-k over an appended index == unindexed IVF top-k") {
     val (_, cent, base, batch) = embParts()
+    val ivf = Similarity.ivfIndex(cent, 25L, Similarity.IvfNumCentroids)
     // Build at the operator's version so ivfBucketedTopK reads the
     // appended artifact.
-    Similarity.ensureIvfIndex(spark, dir, base, cent, 25L,
-      Similarity.IvfNumCentroids, version = 1)
-    Similarity.appendToIvfIndex(spark, dir, batch, cent, 25L,
-      Similarity.IvfNumCentroids, version = 1)
+    Materialize.ensure(spark, ivf, dir, base)
+    Materialize.append(spark, ivf, dir, batch)
     val viaIndex = Similarity.ivfBucketedTopK(spark, dir, probeId = 7L, k = 10)
       .collect().toSeq
     val inline = Similarity.ivfTopK(spark, dir, probeId = 7L, k = 10)
@@ -404,7 +405,7 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("append to an absent artifact is refused (build with ensure first)") {
     val (_, _, batch) = corpusParts()
     intercept[IllegalArgumentException] {
-      FuzzySearch.appendToPostingsIndex(spark, dir, batch, version = 999)
+      Materialize.append(spark, FuzzySearch.Postings.copy(version = 999), dir, batch)
     }
   }
 
@@ -413,13 +414,13 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("posting compaction restores the canonical file count, contents unchanged") {
     val (full, base, batch) = corpusParts()
-    val appended = FuzzySearch.ensurePostingsIndex(spark, dir, base, version = 903)
-    FuzzySearch.appendToPostingsIndex(spark, dir, batch, version = 903)
+    val appended = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 903), dir, base)
+    Materialize.append(spark, FuzzySearch.Postings.copy(version = 903), dir, batch)
     val before = parquetFiles(appended)
     // compaction commits a NEW generation (the appended one keeps serving
     // in-flight readers until gc) — the canonical layout is at its path
-    val compacted = FuzzySearch.compactPostingsIndex(spark, dir, version = 903)
-    val rebuilt = FuzzySearch.ensurePostingsIndex(spark, dir, full, version = 904)
+    val compacted = Materialize.compact(spark, FuzzySearch.Postings.copy(version = 903), dir)
+    val rebuilt = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 904), dir, full)
     def rows(p: String): Seq[(String, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getAs[String]("ngram"), r.getAs[Long]("id"))).toSeq.sorted
@@ -435,14 +436,11 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("IVF compaction preserves contents and the cell-partitioned layout") {
     val (e, cent, base, batch) = embParts()
-    val appended = Similarity.ensureIvfIndex(spark, dir, base, cent, 25L,
-      Similarity.IvfNumCentroids, version = 903)
-    Similarity.appendToIvfIndex(spark, dir, batch, cent, 25L,
-      Similarity.IvfNumCentroids, version = 903)
-    val compacted = Similarity.compactIvfIndex(spark, dir, 25L,
-      Similarity.IvfNumCentroids, version = 903)
-    val rebuilt = Similarity.ensureIvfIndex(spark, dir, e, cent, 25L,
-      Similarity.IvfNumCentroids, version = 904)
+    val ivf = Similarity.ivfIndex(cent, 25L, Similarity.IvfNumCentroids)
+    val appended = Materialize.ensure(spark, ivf.copy(version = 903), dir, base)
+    Materialize.append(spark, ivf.copy(version = 903), dir, batch)
+    val compacted = Materialize.compact(spark, ivf.copy(version = 903), dir)
+    val rebuilt = Materialize.ensure(spark, ivf.copy(version = 904), dir, e)
     def rows(p: String): Seq[(Long, Long)] =
       spark.read.parquet(p)
         .select(col("vec_id"), col("cell").cast("long"))
@@ -456,7 +454,7 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compact of an absent artifact is refused") {
     intercept[IllegalArgumentException] {
-      FuzzySearch.compactPostingsIndex(spark, dir, version = 999)
+      Materialize.compact(spark, FuzzySearch.Postings.copy(version = 999), dir)
     }
   }
 
@@ -467,17 +465,17 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val books = Similarity.pqCodebooks(e, 25L)
     val base = e.filter(col("vec_id") % 3 =!= 0)
     val batch = e.filter(col("vec_id") % 3 === 0)
-    val appended = Similarity.ensurePqCodes(spark, dir, base, books, version = 901)
-    Similarity.appendToPqCodes(spark, dir, batch, books, version = 901)
-    val rebuilt = Similarity.ensurePqCodes(spark, dir, e, books, version = 902)
+    val appended = Materialize.ensure(spark, Similarity.pqCodes(books).copy(version = 901), dir, base)
+    Materialize.append(spark, Similarity.pqCodes(books).copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, Similarity.pqCodes(books).copy(version = 902), dir, e)
     def rows(p: String): Seq[(Long, Seq[Long])] =
       spark.read.parquet(p).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
     val a = rows(appended)
     assert(a.nonEmpty && a == rows(rebuilt))
     // operator-version artifact so pqTopKIndexed reads it
-    Similarity.ensurePqCodes(spark, dir, base, books, version = 1)
-    Similarity.appendToPqCodes(spark, dir, batch, books, version = 1)
+    Materialize.ensure(spark, Similarity.pqCodes(books), dir, base)
+    Materialize.append(spark, Similarity.pqCodes(books), dir, batch)
     val viaIndex = Similarity.pqTopKIndexed(spark, dir, probeId = 7L, k = 10)
       .collect().toSeq
     val inline = Similarity.pqTopK(spark, dir, probeId = 7L, k = 10)
@@ -491,12 +489,10 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // paths — the composition of the two row-local derivations the IVF
     // and flat-codes tests pin separately
     val books = Similarity.pqCodebooks(e, 25L)
-    val appended = Similarity.ensureIvfPqCodes(spark, dir, base, cent, books,
-      25L, Similarity.IvfNumCentroids, version = 901)
-    Similarity.appendToIvfPqCodes(spark, dir, batch, cent, books,
-      25L, Similarity.IvfNumCentroids, version = 901)
-    val rebuilt = Similarity.ensureIvfPqCodes(spark, dir, e, cent, books,
-      25L, Similarity.IvfNumCentroids, version = 902)
+    val ivfPq = Similarity.ivfPqCodes(cent, books, 25L, Similarity.IvfNumCentroids)
+    val appended = Materialize.ensure(spark, ivfPq.copy(version = 901), dir, base)
+    Materialize.append(spark, ivfPq.copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, ivfPq.copy(version = 902), dir, e)
     def rows(p: String): Seq[(Long, Long, Seq[Long])] =
       spark.read.parquet(p)
         .select(col("vec_id"), col("cell").cast("long"), col("codes"))
@@ -506,10 +502,8 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = rows(appended)
     assert(a.nonEmpty && a == rows(rebuilt))
     // operator-version artifact so the served query reads the appended one
-    Similarity.ensureIvfPqCodes(spark, dir, base, cent, books,
-      25L, Similarity.IvfNumCentroids, version = 1)
-    Similarity.appendToIvfPqCodes(spark, dir, batch, cent, books,
-      25L, Similarity.IvfNumCentroids, version = 1)
+    Materialize.ensure(spark, ivfPq, dir, base)
+    Materialize.append(spark, ivfPq, dir, batch)
     val served = Similarity.ivf2PqBucketedTopK(spark, dir, probeId = 7L, k = 10)
       .collect().toSeq
     val inline = Similarity.ivf2PqTopK(spark, dir, probeId = 7L, k = 10)
@@ -526,9 +520,14 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.operators.Retrieval
     val (full, base, batch) = docParts()
     assert(batch.count() > 0 && base.count() > 0)
-    val (appendedP, appendedS) = Retrieval.ensureWordIndex(spark, dir, base, version = 901)
-    Retrieval.appendToWordIndex(spark, dir, batch, version = 901)
-    val (rebuiltP, rebuiltS) = Retrieval.ensureWordIndex(spark, dir, full, version = 902)
+    val (p1, s1) = (Retrieval.WordPostings.copy(version = 901), Retrieval.WordStats.copy(version = 901))
+    val (p2, s2) = (Retrieval.WordPostings.copy(version = 902), Retrieval.WordStats.copy(version = 902))
+    val (appendedP, appendedS) =
+      (Materialize.ensure(spark, p1, dir, base), Materialize.ensure(spark, s1, dir, base))
+    Materialize.append(spark, p1, dir, batch)
+    Materialize.append(spark, s1, dir, batch)
+    val (rebuiltP, rebuiltS) =
+      (Materialize.ensure(spark, p2, dir, full), Materialize.ensure(spark, s2, dir, full))
     def rows(p: String): Seq[(String, Long, Long, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getAs[String]("term"), r.getAs[Long]("doc_id"),
@@ -549,15 +548,17 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (_, base, batch) = docParts()
     // Build at the OPERATOR's version so bm25Batch/bm25TopK read the
     // appended artifact and skip the rebuild.
-    Retrieval.ensureWordIndex(spark, dir, base, version = 1)
-    Retrieval.appendToWordIndex(spark, dir, batch, version = 1)
+    Retrieval.ensureWordIndex(spark, dir, base)
+    Materialize.append(spark, Retrieval.WordPostings, dir, batch)
+    Materialize.append(spark, Retrieval.WordStats, dir, batch)
     val reqs = Seq(0L -> "spark", 0L -> "query", 1L -> "customer", 1L -> "table")
     val viaIndex = Retrieval.bm25Batch(spark, dir, reqs, 10).collect().toSeq
     val inline = Retrieval.bm25BatchInline(reqs.toDF("qid", "term"),
       Tables.documents(spark, dir), 10).collect().toSeq
     assert(viaIndex.nonEmpty && viaIndex == inline)
     // compaction folds the appended file sets; contents (and query) unchanged
-    Retrieval.compactWordIndex(spark, dir, version = 1)
+    Materialize.compact(spark, Retrieval.WordPostings, dir)
+    Materialize.compact(spark, Retrieval.WordStats, dir)
     val afterCompact = Retrieval.bm25Batch(spark, dir, reqs, 10).collect().toSeq
     assert(afterCompact == inline)
     // single-query face: the inline corpus-scan operator stays the pinned
@@ -580,16 +581,16 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = corpus.filter(col("doc_id") % 3 =!= 1)
     val inc = corpus.filter(col("doc_id") % 3 === 1)
     assert(base.count() > 0 && inc.count() > 0)
-    val appended = Dedup.ensureBandsIndex(spark, dir, base, version = 901)
-    Dedup.appendToBandsIndex(spark, dir, inc, version = 901)
-    val rebuilt = Dedup.ensureBandsIndex(spark, dir, corpus, version = 902)
+    val appended = Materialize.ensure(spark, Dedup.BandIndex.copy(version = 901), dir, base)
+    Materialize.append(spark, Dedup.BandIndex.copy(version = 901), dir, inc)
+    val rebuilt = Materialize.ensure(spark, Dedup.BandIndex.copy(version = 902), dir, corpus)
     def screen(bandsPath: String): Seq[Seq[Any]] =
       Dedup.incrementalNearDupsOver(ingest, spark.read.parquet(bandsPath))
         .collect().map(_.toSeq).toSeq
     val a = screen(appended)
     assert(a.nonEmpty && a == screen(rebuilt))
     // compaction reorganizes files only: screen unchanged
-    Dedup.compactBandsIndex(spark, dir, version = 901)
+    Materialize.compact(spark, Dedup.BandIndex.copy(version = 901), dir)
     assert(screen(appended) == a)
   }
 
@@ -599,9 +600,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = e.filter(col("vec_id") % 3 =!= 0)
     val batch = e.filter(col("vec_id") % 3 === 0)
     assert(base.count() > 0 && batch.count() > 0)
-    val appended = Similarity.ensureInt8Codes(spark, dir, base, version = 901)
-    Similarity.appendToInt8Codes(spark, dir, batch, version = 901)
-    val rebuilt = Similarity.ensureInt8Codes(spark, dir, e, version = 902)
+    val appended = Materialize.ensure(spark, Similarity.Int8Codes.copy(version = 901), dir, base)
+    Materialize.append(spark, Similarity.Int8Codes.copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, Similarity.Int8Codes.copy(version = 902), dir, e)
     def rows(p: String): Seq[(Long, Double, Seq[Long])] =
       spark.read.parquet(p).collect()
         .map(r => (r.getLong(0), r.getDouble(2), r.getSeq[Long](3).toSeq))
@@ -616,9 +617,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = e.filter(col("vec_id") % 3 =!= 0)
     val batch = e.filter(col("vec_id") % 3 === 0)
     assert(base.count() > 0 && batch.count() > 0)
-    val appended = Similarity.ensureRpProj(spark, dir, base, version = 901)
-    Similarity.appendToRpProj(spark, dir, batch, version = 901)
-    val rebuilt = Similarity.ensureRpProj(spark, dir, e, version = 902)
+    val appended = Materialize.ensure(spark, Similarity.RpProj.copy(version = 901), dir, base)
+    Materialize.append(spark, Similarity.RpProj.copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, Similarity.RpProj.copy(version = 902), dir, e)
     def rows(p: String): Seq[(Long, Seq[Double])] =
       spark.read.parquet(p).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](2).toSeq))
@@ -634,9 +635,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = d.filter(col("doc_id") % 3 =!= 1)
     val inc = d.filter(col("doc_id") % 3 === 1)
     assert(base.count() > 0 && inc.count() > 0)
-    val appended = Dsir.ensureModel(spark, dir, base, version = 901)
-    Dsir.appendToModel(spark, dir, inc, version = 901)
-    val rebuilt = Dsir.ensureModel(spark, dir, d, version = 902)
+    val appended = Materialize.ensure(spark, Dsir.Model.copy(version = 901), dir, base)
+    Materialize.append(spark, Dsir.Model.copy(version = 901), dir, inc)
+    val rebuilt = Materialize.ensure(spark, Dsir.Model.copy(version = 902), dir, d)
     // additive counts: the folded appended artifact == the one-shot refit
     def counts(p: String): Seq[(Long, Long, Long)] =
       spark.read.parquet(p).groupBy("bucket")
@@ -653,7 +654,7 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = score(appended)
     assert(s.nonEmpty && s == score(rebuilt))
     // compaction folds count files only: scores unchanged
-    Dsir.compactModel(spark, dir, version = 901)
+    Materialize.compact(spark, Dsir.Model.copy(version = 901), dir)
     assert(score(appended) == s)
   }
 

@@ -62,7 +62,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val m0 = manifestRows(Pipeline.corpusE2e(spark, dataDir))
     val baseN = base.count()
     assert(spark.read.parquet(
-      CorpusPrep.ensureDocBase(spark, dataDir)).count() == baseN)
+      TestArtifacts.docBaseOf(spark, dataDir)).count() == baseN)
 
     // a batch ARRIVES as a new sibling data file: the unseen split plus a
     // planted verbatim duplicate of a standing doc (text copied, new id)
@@ -97,7 +97,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // here over a real arrived file rather than a carved slice)
     val model = LmQuality.ensureModel(spark, dataDir)
     val appendedBase = manifestRows(
-      spark.read.parquet(CorpusPrep.ensureDocBase(spark, dataDir))
+      spark.read.parquet(TestArtifacts.docBaseOf(spark, dataDir))
         .orderBy("doc_id"))
     val rebuiltBase = manifestRows(
       CorpusPrep.docBaseOver(spark, Tables.documents(spark, dataDir), model)
@@ -192,7 +192,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     base.write.mode("overwrite").parquet(s"$dDir/documents.parquet")
     // bootstrap the label pair over the standing corpus (the PRIOR
     // overlay generation the delta will extend)
-    CorpusPrep.ensureDocBase(spark, dDir)
+    TestArtifacts.docBaseOf(spark, dDir)
     CorpusPrep.ensureDocGlobal(spark, dDir)
     // a batch arrives; the per-batch cadence step labels + screens it
     batch.write.mode("overwrite").parquet(s"$dDir/documents_b1.parquet")
@@ -238,7 +238,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     base.write.mode("overwrite").parquet(s"$dDir/documents.parquet")
 
     // no committed overlay yet → the face bootstraps through plain ensure
-    CorpusPrep.ensureDocBase(spark, dDir)
+    TestArtifacts.docBaseOf(spark, dDir)
     val (p0, d0) = CorpusPrep.compactionRefreshAuto(spark, dDir)
     assert(d0 == "bootstrap" &&
       spark.read.parquet(p0).count() == base.count())
@@ -267,7 +267,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the dispatcher's count-arithmetic arrival derivation (docbase
     // distinct ids minus overlay count-star) must equal the anti-join it
     // replaced, on live cadence state with a genuine pending arrival
-    val baseIds = spark.read.parquet(CorpusPrep.ensureDocBase(spark, dDir))
+    val baseIds = spark.read.parquet(TestArtifacts.docBaseOf(spark, dDir))
       .select(col("doc_id")).distinct()
     val overlay = spark.read.parquet(graft.Materialize.servingPath(
       spark, "graft_docglobal", dDir, CorpusPrep.DocGlobalVersion))
@@ -296,7 +296,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = spark.read.parquet(s"$srcDir/documents.parquet")
     val base = all.filter(pmod(col("doc_id"), lit(10L)) =!= 5L)
     base.write.mode("overwrite").parquet(s"$dDir/documents.parquet")
-    CorpusPrep.ensureDocBase(spark, dDir)
+    TestArtifacts.docBaseOf(spark, dDir)
     CorpusPrep.ensureDocGlobal(spark, dDir)
     // re-publish: the corpus file is REWRITTEN in place with different
     // contents — the manifest's staleness case, NOT an append. The prior
@@ -322,7 +322,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = all.filter(pmod(col("doc_id"), lit(10L)) =!= 8L)
     val rogue = all.filter(pmod(col("doc_id"), lit(10L)) === 8L)
     base.write.mode("overwrite").parquet(s"$dDir/documents.parquet")
-    CorpusPrep.ensureDocBase(spark, dDir)
+    TestArtifacts.docBaseOf(spark, dDir)
     CorpusPrep.ensureDocGlobal(spark, dDir)
     // the batch lands in the corpus dir but NOBODY ran the cadence step:
     // it is in neither docbase nor the overlay, so the dispatcher's id
@@ -346,7 +346,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = spark.read.parquet(s"$srcDir/documents.parquet")
     all.filter(pmod(col("doc_id"), lit(10L)) =!= 6L)
       .write.mode("overwrite").parquet(s"$dDir/documents.parquet")
-    CorpusPrep.ensureDocBase(spark, dDir)
+    TestArtifacts.docBaseOf(spark, dDir)
     val overlayPath = CorpusPrep.ensureDocGlobal(spark, dDir)
     // the broken state itself: overlay rows doubled for a slice of docs
     spark.read.parquet(overlayPath).limit(5)
@@ -373,12 +373,12 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     def runCadence(partialFirst: Boolean): (String, Seq[Seq[Any]]) = {
       val dir = Files.createTempDirectory("graft-cadence-crashrep").toString
       all.filter(baseF).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      CorpusPrep.ensureDocBase(spark, dir)
+      TestArtifacts.docBaseOf(spark, dir)
       all.filter(batchF).write.mode("overwrite")
         .parquet(s"$dir/documents_b1.parquet")
       val arrived = Tables.documents(spark, dir).filter(batchF)
       if (partialFirst) // the "crash": only the docbase append committed
-        CorpusPrep.appendToDocBase(spark, dir, arrived, batchTag = Some(tag))
+        Materialize.append(spark, CorpusPrep.docBase(spark, dir), dir, arrived, Some(tag))
       (dir, CorpusPrep.ingestIncrement(spark, dir, arrived,
         batchTag = Some(tag))
         .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")))
@@ -391,9 +391,9 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     def artRows(dir: String): Seq[Seq[Any]] = {
       val docs = Tables.documents(spark, dir)
       Seq(
-        spark.read.parquet(CorpusPrep.ensureDocBase(spark, dir)),
-        spark.read.parquet(Dedup.ensureBandsIndex(spark, dir, docs)),
-        spark.read.parquet(CorpusPrep.ensureDocWins(spark, dir, docs)))
+        spark.read.parquet(TestArtifacts.docBaseOf(spark, dir)),
+        spark.read.parquet(Materialize.ensure(spark, Dedup.BandIndex, dir, docs)),
+        spark.read.parquet(Materialize.ensure(spark, CorpusPrep.DocWins, dir, docs)))
         .flatMap(_.collect().map(_.toSeq)).sortBy(_.mkString("|"))
     }
     assert(artRows(crashedDir) == artRows(cleanDir),
@@ -406,7 +406,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = spark.read.parquet(s"$srcDir/documents.parquet")
     all.filter(pmod(col("doc_id"), lit(4L)) =!= 0L)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    CorpusPrep.ensureDocBase(spark, dir)
+    TestArtifacts.docBaseOf(spark, dir)
     // two batches arrive through the cadence step — each lands one
     // batch-file set in all three appended artifacts
     Seq(0L, 4L).zipWithIndex.foreach { case (rem, i) =>
@@ -479,7 +479,7 @@ class IngestCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = spark.read.parquet(s"$srcDir/documents.parquet")
     val batchF = pmod(col("doc_id"), lit(10L)) === 2L
     all.filter(!batchF).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val gen = new org.apache.hadoop.fs.Path(CorpusPrep.ensureDocBase(spark, dir))
+    val gen = new org.apache.hadoop.fs.Path(TestArtifacts.docBaseOf(spark, dir))
     all.filter(batchF).write.mode("overwrite").parquet(s"$dir/documents_b1.parquet")
     // the crashed attempt of tag p1: a tag-prefixed data file in the
     // docbase generation without its commit marker, which the replay's

@@ -1,0 +1,66 @@
+package graft
+
+import java.nio.file.{Files, Path => JPath, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** One artifact lifecycle, enforced on the source: an appendable kind is
+  * an [[Artifact]] descriptor run by Materialize's descriptor faces, so
+  * `src/main` declares no per-kind `appendTo…` / `compact<Kind>` face and
+  * no operator calls the closure forms of the append and compact
+  * primitives (the ParquetReadSpec source-scan pattern). */
+class LifecycleScanSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private def sources(under: JPath): Seq[(JPath, String)] = {
+    assert(Files.isDirectory(under), s"run from the project root: no $under")
+    Files.walk(under).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toSeq
+  }
+
+  private def at(p: JPath, src: String, offset: Int): String =
+    s"$p:${src.substring(0, offset).count(_ == '\n') + 1}"
+
+  test("src/main declares no per-kind appendTo or compact face") {
+    val face = """def\s+(appendTo\w*|compact(?!IfDue\b|CadenceIfDue\b|Plan\b)[A-Z]\w*)""".r
+    val offenders = sources(root).flatMap { case (p, src) =>
+      face.findAllMatchIn(src).map(m => s"${at(p, src, m.start)} ${m.group(1)}")
+    }
+    assert(offenders.isEmpty,
+      s"per-kind lifecycle faces (declare an Artifact instead): ${offenders.mkString(", ")}")
+  }
+
+  /** A `Materialize.append/appendBatch/compact/compactIfDue(...)` call
+    * followed by a second argument list is the closure form of the
+    * primitive; `appendBatch` has no other form. */
+  private def closureCalls(src: String): Seq[(Int, String)] = {
+    val call = """Materialize\s*\.\s*(append|appendBatch|compact|compactIfDue)\s*\(""".r
+    call.findAllMatchIn(src).filter { m =>
+      var i = m.end
+      var depth = 1
+      var inString = false
+      while (depth > 0 && i < src.length) {
+        val ch = src(i)
+        if (inString) { if (ch == '"' && src(i - 1) != '\\') inString = false }
+        else if (ch == '"') inString = true
+        else if (ch == '(') depth += 1
+        else if (ch == ')') depth -= 1
+        i += 1
+      }
+      val next = src.substring(i).dropWhile(_.isWhitespace).take(1)
+      m.group(1) == "appendBatch" || next == "(" || next == "{"
+    }.map(m => m.start -> m.group(1)).toSeq
+  }
+
+  test("operators call the append and compact primitives only through a descriptor") {
+    val offenders = sources(root.resolve("graft/operators")).flatMap { case (p, src) =>
+      closureCalls(src).map { case (o, name) => s"${at(p, src, o)} Materialize.$name" }
+    }
+    assert(offenders.isEmpty,
+      s"closure-form lifecycle calls in operators: ${offenders.mkString(", ")}")
+  }
+}

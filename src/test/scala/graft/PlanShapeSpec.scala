@@ -491,7 +491,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("no e2e stage re-scans raw documents once its input artifact exists") {
     import graft.operators.{CorpusPrep, Pipeline}
     val shards = Pipeline.ensureCorpusE2e(spark, dir) // chain built (or cached)
-    val base = CorpusPrep.ensureDocBase(spark, dir)
+    val base = TestArtifacts.docBaseOf(spark, dir)
     val global = CorpusPrep.ensureDocGlobal(spark, dir)
     val clean = Materialize.servingPath(spark, "graft_e2eclean",
       s"$base|$global", Pipeline.E2eVersion)
@@ -548,10 +548,10 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.operators.{CorpusPrep, Dedup}
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val docs = Tables.documents(spark, dir)
-    val nh = spark.read.parquet(CorpusPrep.ensureDocBase(spark, dir))
+    val nh = spark.read.parquet(TestArtifacts.docBaseOf(spark, dir))
       .select(col("doc_id"), col("norm_hash"))
-    val bands = spark.read.parquet(Dedup.ensureBandsIndex(spark, dir, docs))
-    val wins = spark.read.parquet(CorpusPrep.ensureDocWins(spark, dir, docs))
+    val bands = spark.read.parquet(Materialize.ensure(spark, Dedup.BandIndex, dir, docs))
+    val wins = spark.read.parquet(Materialize.ensure(spark, CorpusPrep.DocWins, dir, docs))
     // the prior generation covers the STANDING split only, so the delta
     // sees real arrivals — with a full-coverage prior, AQE propagates the
     // empty arrival side through every join and the final plan collapses

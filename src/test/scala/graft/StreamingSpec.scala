@@ -331,7 +331,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stop-gram stream picks up gram-stats appends on the next micro-batch") {
     // The by-name `allowed` claim (StreamOps.fuzzyStopgramStream doc):
-    // appendToGramStats between micro-batches must change the NEXT batch's
+    // a gram-stats append between micro-batches must change the NEXT batch's
     // results without restarting the query. Exercised for real here — the
     // thunk re-folds the artifact each micro-batch, stats start at the
     // base slice, and the append lands mid-stream.
@@ -386,7 +386,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val qb = texts.zipWithIndex.map { case (t, i) => ((i + 101).toLong, t) }
       assert(expect(qb, allowedOf(base, inv)) != expect(qb, allowedOf(c, inv)),
         "probe queries must observe the stats change")
-      FuzzySearch.ensureGramStats(spark, dir, base, version = Ver)
+      Materialize.ensure(spark, FuzzySearch.GramDf.copy(version = Ver), dir, base)
+      Materialize.ensure(spark, FuzzySearch.GramN.copy(version = Ver), dir, base)
       val stream = MemoryStream[(Long, String)]
       val sdf = stream.toDF().toDF("qid", "clean_q")
       val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
@@ -398,7 +399,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         q.processAllAvailable()
         val first = buf.toList.sortBy(_.mkString("|"))
         buf.clear()
-        FuzzySearch.appendToGramStats(spark, dir, batch, version = Ver)
+        Materialize.append(spark, FuzzySearch.GramDf.copy(version = Ver), dir, batch)
+        Materialize.append(spark, FuzzySearch.GramN.copy(version = Ver), dir, batch)
         stream.addData(qb: _*)
         q.processAllAvailable()
         (first, buf.toList.sortBy(_.mkString("|")))
@@ -741,8 +743,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batchDocs = c.filter(pmod(col("id"), lit(7)) === 0)
     val baseDocs = c.filter(pmod(col("id"), lit(7)) =!= 0)
     // drop any artifact a previous run left (it would carry the append)
-    graft.Materialize.purge(spark, "graft_postings", dir, 905)
-    val path = FuzzySearch.ensurePostingsIndex(spark, dir, baseDocs, version = 905)
+    TestArtifacts.purge(spark, "graft_postings", dir, 905)
+    val path = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 905), dir, baseDocs)
     // target: an appended-batch doc that is its name group's WINNER under
     // the dedup order (score desc ⇒ highest population for an exact-match
     // query, tie → smallest id) — once indexed it must surface for its own
@@ -767,7 +769,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       stream.addData((1L, targetQ))
       q.processAllAvailable()
-      FuzzySearch.appendToPostingsIndex(spark, dir, batchDocs, version = 905)
+      Materialize.append(spark, FuzzySearch.Postings.copy(version = 905), dir, batchDocs)
       stream.addData((2L, targetQ))
       q.processAllAvailable()
     } finally q.stop()
@@ -787,8 +789,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = d.filter(pmod(col("doc_id"), lit(3)) =!= 1)
     val inc = d.filter(pmod(col("doc_id"), lit(3)) === 1)
     // drop any artifact a previous run left (it would carry the append)
-    graft.Materialize.purge(spark, "graft_dsirmodel", dir, 905)
-    val path = Dsir.ensureModel(spark, dir, base, version = 905)
+    TestArtifacts.purge(spark, "graft_dsirmodel", dir, 905)
+    val path = Materialize.ensure(spark, Dsir.Model.copy(version = 905), dir, base)
     val probe = d.filter(col("doc_id") === 2L).select(col("doc_id"), col("text"))
     val probeRow = probe.collect().map(r => (r.getLong(0), r.getString(1))).head
     val stream = MemoryStream[(Long, String)]
@@ -801,7 +803,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       stream.addData(probeRow)
       q.processAllAvailable()
-      Dsir.appendToModel(spark, dir, inc, version = 905)
+      Materialize.append(spark, Dsir.Model.copy(version = 905), dir, inc)
       stream.addData(probeRow)
       q.processAllAvailable()
     } finally q.stop()
@@ -902,8 +904,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = Tables.embeddings(spark, dir)
     val cent = Similarity.centroids(e, mod, Similarity.IvfNumCentroids)
     val books = Similarity.pqCodebooks(e, mod)
-    val codesPath = Similarity.ensureIvfPqCodes(spark, dir, e, cent, books,
-      mod, Similarity.IvfNumCentroids)
+    val codesPath = Materialize.ensure(spark,
+      Similarity.ivfPqCodes(cent, books, mod, Similarity.IvfNumCentroids), dir, e)
     val labels = e.select(col("vec_id"), col("label"))
     // denser stride than the gate's probe table so the split is non-trivial
     val probes = e.filter(col("vec_id") % 29 === 0)
@@ -955,8 +957,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       base.write.mode("overwrite").parquet(s"$sDir/documents.parquet")
       base.write.mode("overwrite").parquet(s"$tDir/documents.parquet")
       // bootstrap both corpora's standing label half (frozen LM model)
-      CorpusPrep.ensureDocBase(spark, sDir)
-      CorpusPrep.ensureDocBase(spark, tDir)
+      TestArtifacts.docBaseOf(spark, sDir)
+      TestArtifacts.docBaseOf(spark, tDir)
 
       def tuples(df: DataFrame): Seq[(Long, String, String, String, Long)] =
         df.select("doc_id", "text", "lang", "source", "n_chars").collect()
@@ -997,14 +999,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // artifact parity across all three cadence artifacts
       def rowsAt(p: String): List[String] =
         spark.read.parquet(p).collect().map(_.toString).toList.sorted
-      val sBase = rowsAt(CorpusPrep.ensureDocBase(spark, sDir))
-      assert(sBase == rowsAt(CorpusPrep.ensureDocBase(spark, tDir)))
+      val sBase = rowsAt(TestArtifacts.docBaseOf(spark, sDir))
+      assert(sBase == rowsAt(TestArtifacts.docBaseOf(spark, tDir)))
       def standing(dir: String): DataFrame =
         Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val sBands = rowsAt(Dedup.ensureBandsIndex(spark, sDir, standing(sDir)))
-      assert(sBands == rowsAt(Dedup.ensureBandsIndex(spark, tDir, standing(tDir))))
-      val sWins = rowsAt(CorpusPrep.ensureDocWins(spark, sDir, standing(sDir)))
-      assert(sWins == rowsAt(CorpusPrep.ensureDocWins(spark, tDir, standing(tDir))))
+      val sBands = rowsAt(Materialize.ensure(spark, Dedup.BandIndex, sDir, standing(sDir)))
+      assert(sBands == rowsAt(Materialize.ensure(spark, Dedup.BandIndex, tDir, standing(tDir))))
+      val sWins = rowsAt(Materialize.ensure(spark, CorpusPrep.DocWins, sDir, standing(sDir)))
+      assert(sWins == rowsAt(Materialize.ensure(spark, CorpusPrep.DocWins, tDir, standing(tDir))))
 
       // REPLAY: re-deliver micro-batch 1 under its own tag (foreachBatch's
       // at-least-once failure mode) — the tag is CONTENT-derived, so the
@@ -1013,11 +1015,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the originals
       val replayVerdicts = CorpusPrep.ingestIncrement(spark, sDir, b2,
           batchTag = Some(StreamOps.cadenceBatchTag(b2))).collect().map(_.toSeq)
-      assert(rowsAt(CorpusPrep.ensureDocBase(spark, sDir)) == sBase,
+      assert(rowsAt(TestArtifacts.docBaseOf(spark, sDir)) == sBase,
         "replayed batch must not double the docbase labels")
-      assert(rowsAt(Dedup.ensureBandsIndex(spark, sDir, standing(sDir))) == sBands,
+      assert(rowsAt(Materialize.ensure(spark, Dedup.BandIndex, sDir, standing(sDir))) == sBands,
         "replayed batch must not double the band rows")
-      assert(rowsAt(CorpusPrep.ensureDocWins(spark, sDir, standing(sDir))) == sWins,
+      assert(rowsAt(Materialize.ensure(spark, CorpusPrep.DocWins, sDir, standing(sDir))) == sWins,
         "replayed batch must not double the window postings")
       val b2Ids = b2.select("doc_id").collect().map(_.getLong(0)).toSet
       val b2Verdicts = twinBuf.toList
@@ -1045,7 +1047,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Tables.documents(spark, sDir).count() == all.count() + b3.count(),
         "a restarted stream's new batch (engine id 0 again) must be admitted")
       val b3Ids = b3.select("doc_id").collect().map(_.getLong(0)).toSet
-      val labeledIds = spark.read.parquet(CorpusPrep.ensureDocBase(spark, sDir))
+      val labeledIds = spark.read.parquet(TestArtifacts.docBaseOf(spark, sDir))
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(b3Ids.subsetOf(labeledIds),
         "the restart batch's docs must be labeled in the docbase")
