@@ -19,14 +19,14 @@ object GeoFunctions {
   /** Earth radius in miles — reference geometry.py:4. */
   val EarthRadiusMiles: Double = 3958.756
 
-  /** Great-circle distance in miles (haversine, atan2 form).
-    * Reference: geometry.py:7-34 (`2R*arctan(sqrt(a)/sqrt(1-a))` == atan2).
-    */
   /** x*x written as multiplication, not pow(x, 2): java.lang.Math.pow and
     * the oracle's libm pow may differ in the last ulp; x*x is IEEE-exact
     * and bit-identical everywhere. */
   private def sq(c: Column): Column = c * c
 
+  /** Great-circle distance in miles (haversine, atan2 form).
+    * Reference: geometry.py:7-34 (`2R*arctan(sqrt(a)/sqrt(1-a))` == atan2).
+    */
   def haversineMiles(lat1: Column, lng1: Column, lat2: Column, lng2: Column): Column = {
     val dLat = radians(lat2 - lat1) / 2
     val dLng = radians(lng2 - lng1) / 2

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantically identical to the composed built-in pipeline
   *   tokens → polyHash each → per bit b: sign_b(h) = parity of the b-th
   *   affine re-mix ((h·A_b + B_b) mod P), bit set iff Σ signs >= 0
-  * (Dedup.simhashSigsComposed, oracle'd in DuckDB), but evaluated in tight
+  * (OperatorParitySpec.simhashSigsComposed, oracle'd in DuckDB), but evaluated in tight
   * JVM loops: the composed form runs `nBits` interpreted `aggregate` HOFs
   * per row, which made the pair join compute the fingerprint stage twice
   * at ~1.3s/side at sf0.1 — this expression is the same ~ms-scale kernel

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Text / fuzzy-matching primitives as pure `Column` builders.
   *
@@ -33,21 +32,13 @@ object TextFunctions {
     lower(regexp_replace(c, "[^0-9a-zA-Z ]+", ""))
 
   /** fuzzy.py:5-6 — character n-grams; `len < n` → empty array.
-    * Native codegen'd expression (CharNgramsExpr); the composed HOF forms
-    * below are the spec-parity reference. */
+    * Native codegen'd expression (CharNgramsExpr); VectorKernelSpec pins
+    * it to the composed HOF form. */
   def charNgrams(c: Column, n: Int): Column = CharNgramsExpr.charNgramsF(c, n)
 
   /** Distinct character n-grams (the reference scores on q-gram SETS —
     * `set(ngrams(...))` at fuzzy.py:10-11), first-occurrence order. */
   def charNgramSet(c: Column, n: Int): Column = CharNgramsExpr.charNgramSetF(c, n)
-
-  /** Composed-HOF reference implementations (interpreted; spec-only). */
-  def charNgramsComposed(c: Column, n: Int): Column =
-    when(length(c) < n, array().cast(ArrayType(StringType)))
-      .otherwise(transform(sequence(lit(0), length(c) - n), i => c.substr(i + 1, lit(n))))
-
-  def charNgramSetComposed(c: Column, n: Int): Column =
-    array_distinct(charNgramsComposed(c, n))
 
   /** fuzzy.py:9-31 — Tversky index over two DISTINCT n-gram arrays.
     * `|A∩B| / (|A∩B| + a·|A\B| + b·|B\A|)`; empty side → 0; 0/0 → 0.
@@ -103,8 +94,8 @@ object TextFunctions {
     * string per window; fewer than `win` tokens → empty array. The ONE
     * window derivation decontamination and repetition both use — a fix
     * here and in OracleSql.tokenWindows cannot drift per-operator.
-    * NATIVE codegen kernel (TokenWindowsExpr, r16) — the composed twin
-    * below is kept for the FunctionsSpec bit-parity pin. The coalesce
+    * NATIVE codegen kernel (TokenWindowsExpr, r16) — FunctionsSpec pins
+    * it bit-equal to the composed twin. The coalesce
     * mirrors the composed form's null-ARRAY fallthrough: `when(size(null)
     * >= win, …).otherwise(empty)` yields an empty array for a null token
     * array (null text), and the null-intolerant kernel alone would yield
@@ -113,32 +104,14 @@ object TextFunctions {
     coalesce(TokenWindowsExpr.tokenWindowsF(tk, win),
       array().cast("array<string>"))
 
-  /** Composed-HOF reference implementation (interpreted; spec-only). */
-  def tokenWindowsComposed(tk: Column, win: Int): Column =
-    when(size(tk) >= win,
-      transform(sequence(lit(0), size(tk) - win),
-        i => array_join(slice(tk, i + lit(1), lit(win)), " ")))
-      .otherwise(array().cast("array<string>"))
-
   /** Deterministic polynomial rolling hash of a string:
     * fold over code points, `h = (h*31 + code) mod 1000000007`.
     * Oracle-replicable in ANSI SQL (DuckDB `list_reduce`), unlike Spark's
     * murmur3 `hash()` / `xxhash64()` which have no DuckDB equivalent.
     * ANSI-safe: intermediate `acc*31 + code` <= ~3.1e10 << Long.MaxValue.
-    * NATIVE codegen kernel (PolyHashExpr) — the composed twin below is
-    * kept for the FunctionsSpec bit-parity pin. */
+    * NATIVE codegen kernel (PolyHashExpr) — FunctionsSpec pins it
+    * bit-equal to the composed twin. */
   def polyHash(c: Column): Column = PolyHashExpr.polyHashF(c)
-
-  /** Composed-HOF reference implementation (interpreted; spec-only). */
-  def polyHashComposed(c: Column): Column = {
-    // NOT split(c, ""): Java regex split keeps a trailing "" at limit -1,
-    // which would fold in a spurious 0. sequence() needs the empty guard
-    // because Spark's sequence(1, 0) infers step -1 (yields [1, 0]).
-    val codes = when(length(c) === 0, array().cast(ArrayType(LongType)))
-      .otherwise(transform(sequence(lit(1), length(c)),
-        i => ascii(c.substr(i, lit(1))).cast("long")))
-    aggregate(codes, lit(0L), (acc, x) => (acc * 31L + x) % HashMod)
-  }
 
   /** Combine an array of longs into one hash (for band signatures):
     * fold `h = (h*31 + x) mod 1000000007`. */

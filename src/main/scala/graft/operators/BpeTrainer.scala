@@ -100,7 +100,7 @@ object BpeTrainer {
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
 
   /** Initial symbol relation: one row per (word, char position). */
-  private def symbols0(wc: DataFrame): DataFrame = {
+  private[graft] def symbols0(wc: DataFrame): DataFrame = {
     val chars = transform(sequence(lit(1), length(col("word"))),
       i => col("word").substr(i, lit(1)))
     wc.select(col("word"), col("cnt"), posexplode(chars).as(Seq("idx", "sym")))
@@ -337,32 +337,6 @@ object BpeTrainer {
       .orderBy(col("doc_id"))
   }
 
-  /** Un-materialized in-plan BATCHED fold over an explicit corpus —
-    * spec-only (crafted tiny inputs; the plan growth per round is why
-    * the gate path materializes). Returns (merges, finalSymbols). With
-    * m=1 the dominance window degenerates to the single argmax pair, so
-    * this reproduces the sequential fold exactly — the parity spec pins
-    * that equivalence and the run-parity application it inherits. */
-  private[graft] def symbols0ForTest(docs: DataFrame): DataFrame =
-    symbols0(docs.select(explode(tokens(lower(col("text")))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt")))
-
-  private[graft] def trainOver(docs: DataFrame, rounds: Int, m: Int = 1): (DataFrame, DataFrame) = {
-    val s0 = symbols0ForTest(docs)
-    val (merges, sK) = (1 to rounds).foldLeft((Seq.empty[DataFrame], s0)) {
-      case ((ms, s), t) =>
-        val bs = bestPairs(s, m)
-        val tagged = bs.select((lit((t - 1).toLong * m) + col("sel")).as("iter"),
-          col("a").as("pair_a"), col("b").as("pair_b"),
-          concat(col("a"), col("b")).as("merged"), col("c").as("pair_count"))
-        // per-round lineage cut — the in-plan fold otherwise re-derives
-        // s_{t-1} for every consumer (2^t tree growth; the gate path
-        // materializes to parquet instead)
-        (ms :+ tagged, lineageCut(applyMerges(s, bs)))
-    }
-    (merges.reduce(_ union _).orderBy(col("iter")), sK)
-  }
-
   // ------------------------------------------------- vocabulary coverage
 
   /** Ranks dumped by the coverage instrument (the full curve is
@@ -411,11 +385,6 @@ object BpeTrainer {
 
   // ------------------------------------------------------------- oracle
 
-  /** MATERIALIZED CTE chain `t, wc, s0, n1, pc1, win1, b1, m1, r1, sel1,
-    * s1, …` reproducing the batched fold — MATERIALIZED is required: s_t
-    * is referenced by four consumers and DuckDB's default inlining makes
-    * the chain exponential (measured: >120 s inlined, 0.6 s
-    * materialized). */
   /** Unrolled peel passes of round `t`: `pIx$t` = pass-I survivors of the
     * pool `w{I-1}x$t`; `wIx$t` = the pool minus everything sharing a
     * symbol with a pass-I survivor. Mirrors bestPairs' fold exactly. */
@@ -433,6 +402,11 @@ object BpeTrainer {
          |              AND (h.a = w.a OR h.a = w.b OR h.b = w.a OR h.b = w.b)))$next""".stripMargin
     }.mkString(",\n") + ","
 
+  /** MATERIALIZED CTE chain `t, wc, s0, n1, pc1, win1, b1, m1, r1, sel1,
+    * s1, …` reproducing the batched fold — MATERIALIZED is required: s_t
+    * is referenced by four consumers and DuckDB's default inlining makes
+    * the chain exponential (measured: >120 s inlined, 0.6 s
+    * materialized). */
   def trainCtes(rounds: Int, m: Int = BpeRoundM): String = {
     val toks = OracleSql.tokens("lower(text)")
     val head =

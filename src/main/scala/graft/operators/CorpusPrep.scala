@@ -40,17 +40,6 @@ object CorpusPrep {
   val EvalMod = 7L
   val ContamWin = 8
 
-  /** Eval-set decontamination — the training-pipeline step the dedup
-    * family does NOT cover: mark every TRAIN document that shares any
-    * `win`-token window with any EVAL document (here the deterministic
-    * `doc_id % evalMod == 0` slice stands in for a benchmark suite). The
-    * standard n-gram-overlap decontamination of LLM training corpora:
-    * token windows explode on both sides and overlap is an equi-join on
-    * the window key — at 100 TB the eval side is a benchmark suite
-    * (thousands of docs, millions of windows), so its distinct windows
-    * BROADCAST and candidate marking is a map-side semi-join; no train-
-    * side self-join ever happens. Output keeps every train doc with its
-    * flag (the downstream cut is one `filter`), ordered for the gate. */
   /** The distinct token-window set of the eval slice — the benchmark-
     * suite fingerprint the train side is screened against (broadcast-
     * sized by construction: eval suites are tiny next to the corpus). */
@@ -97,9 +86,9 @@ object CorpusPrep {
     docWinRows(_), graft.Artifact.Clustered(Seq("w_hash"), Seq("w_hash")))
 
   /** The screen over explicit train docs + eval window set — the core the
-    * gate query and the streaming face (StreamOps.decontaminateStream)
-    * share. `evalWindows` is BY-NAME: a streaming micro-batch re-reads a
-    * refreshed eval suite without restart (see StreamOps.fuzzyStream). */
+    * gate query runs. A doc's flag depends only on its own windows vs the
+    * static eval set, so the screen is exact per micro-batch of a stream
+    * (StreamingSpec runs it that way). */
   def decontaminateOver(trainDocs: DataFrame, evalWindows: => DataFrame,
                         win: Int = ContamWin): DataFrame = {
     val wins = trainDocs.select(col("doc_id"), explode(
@@ -114,6 +103,17 @@ object CorpusPrep {
       .orderBy(col("doc_id"))
   }
 
+  /** Eval-set decontamination — the training-pipeline step the dedup
+    * family does NOT cover: mark every TRAIN document that shares any
+    * `win`-token window with any EVAL document (here the deterministic
+    * `doc_id % evalMod == 0` slice stands in for a benchmark suite). The
+    * standard n-gram-overlap decontamination of LLM training corpora:
+    * token windows explode on both sides and overlap is an equi-join on
+    * the window key — at 100 TB the eval side is a benchmark suite
+    * (thousands of docs, millions of windows), so its distinct windows
+    * BROADCAST and candidate marking is a map-side semi-join; no train-
+    * side self-join ever happens. Output keeps every train doc with its
+    * flag (the downstream cut is one `filter`), ordered for the gate. */
   def decontaminate(spark: SparkSession, dir: String, evalMod: Long = EvalMod,
                     win: Int = ContamWin): DataFrame =
     decontaminateOver(
@@ -451,33 +451,33 @@ object CorpusPrep {
 
   // --------------- deferred-overlay ingest cadence (the increment face)
 
-  /** The production ingest cadence over the split label table, as a
-    * first-class surface (round 12 — previously SCALE.md prose):
-    *
-    *  1. **Per batch** ([[ingestIncrement]]): append the batch's
-    *     row-local labels to `graft_docbase` (the batch's own text is the
-    *     only text read — batch-sized, not corpus-sized), screen the
-    *     arrivals against the STANDING corpus artifacts (exact dup via
-    *     the docbase content-hash column; near-dup via the materialized
-    *     LSH band artifact — never a corpus self-join), and admit the
-    *     batch's band rows so the NEXT increment screens against
-    *     corpus ∪ batch. The corpus-global overlay (`graft_docglobal`) is
-    *     deliberately NOT touched: its labels can flip on OLD docs, so an
-    *     exact refresh is a full dedup/decontamination pass — the screens
-    *     are its bounded per-batch approximation.
-    *  2. **Per compaction window** ([[compactionRefresh]]): drop and
-    *     re-ensure the overlay — the exact corpus-global pass over
-    *     everything ingested since the last window. Downstream chain
-    *     stages (graft_e2e*) go stale transitively through their artifact
-    *     manifests and rebuild on next ensure; IngestCadenceSpec pins the
-    *     refreshed chain output EQUAL to a from-scratch rebuild under the
-    *     standing frozen LM model.
-    *
-    * During the deferral window the served corpus view (docMetaIndexed,
-    * the e2e chain) is STABLE: arrivals have base labels but no overlay
-    * row yet, so the inner join excludes them until the refresh admits
-    * them with exact canonicality/contamination — a new batch can never
-    * half-enter the corpus with guessed global labels. */
+  // The production ingest cadence over the split label table, as a
+  // first-class surface (round 12 — previously SCALE.md prose):
+  //
+  //  1. **Per batch** ([[ingestIncrement]]): append the batch's
+  //     row-local labels to `graft_docbase` (the batch's own text is the
+  //     only text read — batch-sized, not corpus-sized), screen the
+  //     arrivals against the STANDING corpus artifacts (exact dup via
+  //     the docbase content-hash column; near-dup via the materialized
+  //     LSH band artifact — never a corpus self-join), and admit the
+  //     batch's band rows so the NEXT increment screens against
+  //     corpus ∪ batch. The corpus-global overlay (`graft_docglobal`) is
+  //     deliberately NOT touched: its labels can flip on OLD docs, so an
+  //     exact refresh is a full dedup/decontamination pass — the screens
+  //     are its bounded per-batch approximation.
+  //  2. **Per compaction window** ([[compactionRefresh]]): drop and
+  //     re-ensure the overlay — the exact corpus-global pass over
+  //     everything ingested since the last window. Downstream chain
+  //     stages (graft_e2e*) go stale transitively through their artifact
+  //     manifests and rebuild on next ensure; IngestCadenceSpec pins the
+  //     refreshed chain output EQUAL to a from-scratch rebuild under the
+  //     standing frozen LM model.
+  //
+  // During the deferral window the served corpus view (docMetaIndexed,
+  // the e2e chain) is STABLE: arrivals have base labels but no overlay
+  // row yet, so the inner join excludes them until the refresh admits
+  // them with exact canonicality/contamination — a new batch can never
+  // half-enter the corpus with guessed global labels.
 
   /** Screen core over explicit relations — shared by the gate row (inline
     * anchor derivations) and [[ingestIncrement]] (artifact reads). Exact

@@ -120,24 +120,24 @@ object Dedup {
 
   // ------------------------------------------- trigram containment (A⊆B)
 
-  /** Containment C(A,B) = |A∩B| / |A| — the ASYMMETRIC near-dup measure
-    * Jaccard misses: a record quoted whole inside a longer one scores
-    * containment ≈ 1 while its Jaccard ≈ |A|/|B| can sit far below any
-    * sane threshold. Ordered pairs (id_a ⊆ id_b, id_a ≠ id_b).
-    *
-    * Same exact-prefix-filter shape as [[jaccardPairs]], asymmetric: only
-    * the CONTAINED side can be prefix-pruned (any pair with C ≥ t shares
-    * one of A's s_a − ⌈t·s_a⌉ + 1 rarest trigrams — the containment/ALL
-    * variant of the prefix bound), while the containing side must index
-    * every trigram (no sound df cut exists for B: a superset may touch A
-    * only through A's rare grams). The candidate join is therefore
-    * Σ_a prefix_a·df(g) — rarest-gram-bounded like PPJoin but with full
-    * B-side postings; at 100 TB the admission-control precedent
-    * (`fuzzy_batch_cost`'s predicted candidate volume over the SAME df
-    * relation) is the knob that decides when to serve a stop-gram-cut
-    * variant instead. Verification recomputes exact containment, so the
-    * pruning never defines the result — a brute-force oracle gates it.
-    * See [[containmentPairs]]. */
+  // Containment C(A,B) = |A∩B| / |A| — the ASYMMETRIC near-dup measure
+  // Jaccard misses: a record quoted whole inside a longer one scores
+  // containment ≈ 1 while its Jaccard ≈ |A|/|B| can sit far below any
+  // sane threshold. Ordered pairs (id_a ⊆ id_b, id_a ≠ id_b).
+  //
+  // Same exact-prefix-filter shape as [[jaccardPairs]], asymmetric: only
+  // the CONTAINED side can be prefix-pruned (any pair with C ≥ t shares
+  // one of A's s_a − ⌈t·s_a⌉ + 1 rarest trigrams — the containment/ALL
+  // variant of the prefix bound), while the containing side must index
+  // every trigram (no sound df cut exists for B: a superset may touch A
+  // only through A's rare grams). The candidate join is therefore
+  // Σ_a prefix_a·df(g) — rarest-gram-bounded like PPJoin but with full
+  // B-side postings; at 100 TB the admission-control precedent
+  // (`fuzzy_batch_cost`'s predicted candidate volume over the SAME df
+  // relation) is the knob that decides when to serve a stop-gram-cut
+  // variant instead. Verification recomputes exact containment, so the
+  // pruning never defines the result — a brute-force oracle gates it.
+  // See [[containmentPairs]].
   /** The canonical (id, grams) relation both containment faces share. */
   private[graft] def canonGrams(spark: SparkSession, dir: String): DataFrame =
     FuzzySearch.corpus(spark, dir)
@@ -310,16 +310,7 @@ object Dedup {
     cappedWithDf(canonGrams(spark, dir), threshold, dfCapInverse,
       Tables.parquet(spark, ensureContainmentDf(spark, dir)))
 
-  /** Spec face: the capped screen over an explicit (id, grams) relation
-    * with the df relation derived inline — what lets OperatorParitySpec
-    * pin the cut's bite on a crafted hot corpus without an artifact. */
-  private[graft] def containmentCappedOver(c: DataFrame, threshold: Double,
-                                           dfCapInverse: Long): DataFrame =
-    cappedWithDf(c, threshold, dfCapInverse,
-      c.select(explode(col("grams")).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("df")))
-
-  private def cappedWithDf(c: DataFrame, threshold: Double, dfCapInverse: Long,
+  private[graft] def cappedWithDf(c: DataFrame, threshold: Double, dfCapInverse: Long,
                            dfRel: DataFrame): DataFrame = {
     val n = broadcast(c.agg(count(lit(1)).as("n")))
     val allowed = dfRel.crossJoin(n)
@@ -425,7 +416,7 @@ object Dedup {
     * folds from the gram-space-bounded stats and broadcasts; the
     * candidate join probes the corpus posting relation with the batch's
     * prefix grams (at 100 TB: the posting artifact under a batch-gram
-    * bloom — the fuzzyStream serving read). The corpus side never
+    * bloom — the fuzzy index's serving read). The corpus side never
     * self-joins. */
   def containmentScreen(spark: SparkSession, dir: String,
                         threshold: Double): DataFrame = {
@@ -437,8 +428,7 @@ object Dedup {
   }
 
   /** The screen core over explicit batch/corpus (id, grams) relations —
-    * shared by the gate row and the streaming ingest face
-    * (StreamOps.containmentScreenStream). A row's result depends only on
+    * the core of the gate row. A row's result depends only on
     * itself vs the standing corpus, so per-micro-batch evaluation is
     * exact under any chunking. */
   private[graft] def containmentScreenOver(batch: DataFrame, corpus: DataFrame,
@@ -518,8 +508,8 @@ object Dedup {
   /** MinHash signatures over word-3-shingles of documents.text — ONE
     * custom-expression eval per row (tight JVM loops; see
     * graft.functions.MinHashSignature for why the composed built-in HOF
-    * pipeline was ~30× slower). The composed form lives on in
-    * `minhashSignaturesComposed` as the cross-check. */
+    * pipeline was ~30× slower). VectorKernelSpec keeps the composed form
+    * as the cross-check. */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
     minhashSignaturesOver(Tables.documents(spark, dir))
 
@@ -528,20 +518,16 @@ object Dedup {
       graft.functions.MinHashSignature.minhashSignature(
         lower(col("text")), ShingleWords, MinHashK).as("sig"))
 
-  /** The same signature as composed built-in expressions (the original
-    * formulation; semantics pinned equal by DedupSpec). */
-  def minhashSignaturesComposed(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val toks = tokens(lower(col("text")))
-    val shingleHashes = array_distinct(transform(
-      wordShingles(toks, ShingleWords), s => polyHash(s)))
-    val sig = array((0 until MinHashK).map { i =>
-      array_min(transform(col("sh"), h => (h * permA(i) + permB(i)) % HashMod))
-    }: _*)
-    d.select(col("doc_id"), shingleHashes.as("sh"))
-      .withColumn("sig", sig)
-      .select(col("doc_id"), col("sig"))
-  }
+  /** est-Jaccard of two signature columns — fraction of agreeing
+    * positions, via the native [[graft.functions.SigAgreeExpr]] kernel
+    * (r16; the composed `size(filter(sequence(1,K), …))` HOF form it
+    * replaces ran k interpreted lambda calls PER CANDIDATE PAIR inside
+    * every band-bucket join — guide §4, the tokenWindows precedent).
+    * VectorKernelSpec pins bit-parity against the composed twin. */
+  private[graft] def sigEst(a: org.apache.spark.sql.Column,
+                            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.functions.SigAgreeExpr.sigAgreeF(a, b, MinHashK)
+      .cast("double") / MinHashK.toDouble
 
   /** LSH banding: near-dup candidate pairs from shared band buckets, with
     * the estimated Jaccard = fraction of agreeing signature positions.
@@ -552,24 +538,6 @@ object Dedup {
     * est_jaccard is computed before the dedup so `distinct` runs on narrow
     * (doc_a, doc_b, est) rows instead of dragging two 16-long signature
     * arrays through the shuffle. */
-  /** est-Jaccard of two signature columns — fraction of agreeing
-    * positions, via the native [[graft.functions.SigAgreeExpr]] kernel
-    * (r16; the composed `size(filter(sequence(1,K), …))` HOF form it
-    * replaces ran k interpreted lambda calls PER CANDIDATE PAIR inside
-    * every band-bucket join — guide §4, the tokenWindows precedent).
-    * DedupSpec pins bit-parity against the composed twin. */
-  private[graft] def sigEst(a: org.apache.spark.sql.Column,
-                            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.SigAgreeExpr.sigAgreeF(a, b, MinHashK)
-      .cast("double") / MinHashK.toDouble
-
-  /** Composed-HOF reference implementation (interpreted; spec-only). */
-  private[graft] def sigEstComposed(a: org.apache.spark.sql.Column,
-                                    b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    size(filter(sequence(lit(1), lit(MinHashK)),
-      i => element_at(a, i) === element_at(b, i)))
-      .cast("double") / MinHashK.toDouble
-
   def minhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val sigs = minhashSignatures(spark, dir)
     val bands = sigs.select(col("doc_id"), col("sig"),
@@ -748,14 +716,6 @@ object Dedup {
           .as("near_canon"))
   }
 
-  /** The pre-round-9 pairs-based spelling, kept as the parity reference
-    * for [[nearCanonBySig]] (spec-only; quadratic on hot clusters). */
-  private[graft] def nearCanonByPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashPairs(spark, dir)
-      .filter(col("est_jaccard") >= PipelineEstThreshold)
-      .groupBy(col("doc_b").as("doc_id"))
-      .agg(min(col("doc_a")).as("near_canon"))
-
   def dedupPipelineOracle: String = {
     val norm = s"array_to_string(${graft.oracle.OracleSql.tokens(graft.oracle.OracleSql.clean("text"))}, ' ')"
     s"""WITH mp AS ($minhashPairsOracle),
@@ -771,6 +731,13 @@ object Dedup {
        |ORDER BY we.doc_id""".stripMargin
   }
 
+  /** Version of the materialized single-pass label relation
+    * (graft_labels) — bumps with any change to the label DERIVATION.
+    * v2: splitmix minhash seeds (labels embed near-dup decisions; the
+    * round-14 seed fix would otherwise serve correlated-seed merges from
+    * a stale v1 — caught by the gate as dedup_transitive divergence). */
+  val LabelsVersion = 2
+
   /** Transitive canonicalization (opt-in escalation of `dedupPipeline`):
     * `hops` rounds of pointer jumping over the single-pass labels —
     * l_{k+1}(x) = l_k(l_k(x)) — so canonical chains of length up to
@@ -782,13 +749,6 @@ object Dedup {
     * join + coalesce keeps the pass harmless if that invariant ever broke.
     * hops=3 collapses chains of length 8 — beyond anything a near-dup
     * similarity graph of real text produces. */
-  /** Version of the materialized single-pass label relation
-    * (graft_labels) — bumps with any change to the label DERIVATION.
-    * v2: splitmix minhash seeds (labels embed near-dup decisions; the
-    * round-14 seed fix would otherwise serve correlated-seed merges from
-    * a stale v1 — caught by the gate as dedup_transitive divergence). */
-  val LabelsVersion = 2
-
   def dedupPipelineTransitive(spark: SparkSession, dir: String, hops: Int = 3): DataFrame = {
     // Materialize the single-pass labels ONCE: the nested hop joins would
     // otherwise re-derive the whole minhash pipeline 2^hops times (each
@@ -842,35 +802,14 @@ object Dedup {
     * fingerprints would collapse into clusters and the banded pair join
     * would explode. Narrow map-only stage at any scale.
     *
-    * Native kernel expression (SimHashFingerprint): the composed twin
-    * below runs `SimHashBits` interpreted aggregate HOFs per row and is
-    * kept only as the spec-parity reference (OperatorParitySpec pins them
-    * bit-equal). */
+    * Native kernel expression (SimHashFingerprint): OperatorParitySpec
+    * pins it bit-equal to the composed twin, which runs `SimHashBits`
+    * interpreted aggregate HOFs per row. */
   def simhashSigs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.SimHashFingerprint.simhashFingerprint(
           lower(col("text")), SimHashBits).as("simhash"))
-
-  private def bitSign(h: Column, b: Int): Column =
-    ((h * permA(b) + permB(b)) % HashMod % 2L) * 2L - 1L
-
-  /** Composed built-in form (interpreted; spec-only). NULL text → NULL
-    * fingerprint, explicitly — without the guard the per-bit
-    * `when(null >= 0, …).otherwise(0)` would collapse NULL docs to
-    * fingerprint 0 while the kernel (UnaryExpression null propagation)
-    * yields NULL, breaking the kernel==composed pin. */
-  def simhashSigsComposed(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val tokHashes = transform(tokens(lower(col("text"))), t => polyHash(t))
-    val bits: Column = (0 until SimHashBits).map { b =>
-      val sumSign = aggregate(col("th"), lit(0L), (acc, h) => acc + bitSign(h, b))
-      when(sumSign >= 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    d.select(col("doc_id"), tokHashes.as("th"))
-      .select(col("doc_id"),
-        when(col("th").isNull, lit(null).cast("long")).otherwise(bits).as("simhash"))
-  }
 
   def simhash(spark: SparkSession, dir: String): DataFrame =
     simhashSigs(spark, dir).orderBy(col("doc_id"))
@@ -1873,29 +1812,11 @@ object Dedup {
   val IncBloomItems = 100000L
   val IncBloomBits = 800000L
 
-  /** Incremental near-dup screening of a new ingest batch against the
-    * standing corpus — the continuous-pipeline face of dedup_minhash: a
-    * new batch must not re-run the corpus self-join, only probe it. Each
-    * batch doc is flagged if it shares an LSH band bucket with a corpus
-    * doc AND the signature-estimated Jaccard clears the pipeline
-    * threshold; `dup_of` is the smallest such corpus partner.
-    *
-    * Scale shape: the batch side is small by construction (one ingest
-    * increment), so its (band_idx, band_hash) keys fold into ONE bloom
-    * blob (scalar subquery) that probes the CORPUS band derivation below
-    * the join exchange — the q14 machinery: only corpus rows whose band
-    * key might match a batch key reach the shuffle, so the corpus-side
-    * cost is a scan + bloom pass, not a full band join. False positives
-    * only cost pruning efficiency (the exact band equi-join removes
-    * them); the corpus bands ARE a materialized artifact ([[BandIndex]],
-    * appended per ingest batch) and the probe reads it —
-    * per-ingest cost is a bloom pass over band files plus the pruned
-    * join, never a corpus signature re-derivation. */
   /** Signature + LSH band rows (doc_id, sig, band_idx, band_hash) for any
     * (doc_id, text) relation — the derivation minhashPairs explodes,
     * factored so the incremental screen can band the BATCH side and the
-    * corpus side independently (streaming face: the batch is a
-    * micro-batch; the corpus bands are the standing artifact). */
+    * corpus side independently (the batch is one ingest increment; the
+    * corpus bands are the standing artifact). */
   private[graft] def bandRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         graft.functions.MinHashSignature.minhashSignature(
@@ -1924,9 +1845,9 @@ object Dedup {
     graft.Artifact.Clustered(Seq("band_hash", "band_idx"), Seq("band_hash", "band_idx")))
 
   /** Fresh read of the materialized corpus bands (ensured on first call)
-    * — the standing-corpus side of the incremental screen. BY-NAME
-    * consumers (StreamOps.dedupScreenStream) re-evaluate per micro-batch,
-    * so appended band files are visible on the next batch. */
+    * — the standing-corpus side of the incremental screen. Each call
+    * lists the artifact anew, so appended band files are visible to the
+    * next call. */
   def corpusBandsOf(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables.documents(spark, dir)
       .filter(col("doc_id") % IncMod =!= IncRem)
@@ -1934,11 +1855,30 @@ object Dedup {
     Tables.parquet(spark, graft.Materialize.ensure(spark, BandIndex, dir, corpus))
   }
 
-  /** The screen over explicit batch/corpus relations — the core both the
-    * gate query and the streaming face (StreamOps.dedupScreenStream) run.
-    * `corpusBands` is BY-NAME: each caller evaluation (e.g. a streaming
-    * micro-batch) re-derives it, so a fresh read of an appended band
-    * artifact is picked up without restart. */
+  /** Incremental near-dup screening of a new ingest batch against the
+    * standing corpus — the continuous-pipeline face of dedup_minhash: a
+    * new batch must not re-run the corpus self-join, only probe it. Each
+    * batch doc is flagged if it shares an LSH band bucket with a corpus
+    * doc AND the signature-estimated Jaccard clears the pipeline
+    * threshold; `dup_of` is the smallest such corpus partner.
+    *
+    * Scale shape: the batch side is small by construction (one ingest
+    * increment), so its (band_idx, band_hash) keys fold into ONE bloom
+    * blob (scalar subquery) that probes the CORPUS band derivation below
+    * the join exchange — the q14 machinery: only corpus rows whose band
+    * key might match a batch key reach the shuffle, so the corpus-side
+    * cost is a scan + bloom pass, not a full band join. False positives
+    * only cost pruning efficiency (the exact band equi-join removes
+    * them); the corpus bands ARE a materialized artifact ([[BandIndex]],
+    * appended per ingest batch) and the probe reads it —
+    * per-ingest cost is a bloom pass over band files plus the pruned
+    * join, never a corpus signature re-derivation.
+    *
+    * This is the screen over explicit batch/corpus relations, the core the
+    * gate query runs. A doc's result depends only on its own row against
+    * the corpus bands, so the screen is exact per micro-batch of a stream
+    * of arrivals; `corpusBands` is evaluated once per call, so a fresh
+    * read of an appended band artifact is picked up on the next call. */
   def incrementalNearDupsOver(batchDocs: DataFrame, corpusBands: => DataFrame): DataFrame = {
     import graft.functions.SketchFunctions._
     // One long key per band row: hash is < HashMod (< 2^30), so * Bands

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
 import graft.oracle.OracleSql
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
@@ -69,17 +68,10 @@ object Dsir {
   /** text → hashed feature buckets, NATIVE kernel (GramBucketsExpr: one
     * tight-loop eval per doc instead of four interpreted lambda trees
     * re-run by the explode's pushdown filter — the MinHashSignature
-    * lesson, ~8× on the whole query at sf0.1). */
+    * lesson, ~8× on the whole query at sf0.1). DsirSpec pins bit parity
+    * with the composed twin, order included. */
   private def gramBuckets(text: Column): Column =
     graft.functions.GramBucketsExpr.gramBucketsF(lower(text), Buckets)
-
-  /** Composed-HOF reference implementation (interpreted; spec-only —
-    * DsirSpec pins bit parity, order included). */
-  private[graft] def gramBucketsComposed(text: Column): Column = {
-    val tk = TextFunctions.tokens(lower(text))
-    transform(concat(tk, TextFunctions.tokenWindows(tk, 2)),
-      g => pmod(TextFunctions.polyHash(g), lit(Buckets)))
-  }
 
   /** doc_id, tgt_dom, fit, bks (hashed gram buckets) per document. */
   private def featured(docs: DataFrame): DataFrame = {
@@ -201,8 +193,8 @@ object Dsir {
     modelCounts, graft.Artifact.Coalesced(1, 1),
     _.groupBy("bucket").agg(sum(col("t")).as("t"), sum(col("q")).as("q")))
 
-  /** Fresh read of the materialized model (ensured on first call) —
-    * BY-NAME consumers (the streaming face) see appends per batch. */
+  /** Fresh read of the materialized model (ensured on first call) — each
+    * call lists the artifact anew, so it sees appended fit batches. */
   def modelOf(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.parquet(spark,
       graft.Materialize.ensure(spark, Model, dir, graft.Tables.documents(spark, dir)))

@@ -5,9 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Time-window operators over the `events` table — the batch face of the
-  * engine's streaming surface (the same expressions run under readStream +
-  * withWatermark; see graft.streaming). Tumbling/sliding use Spark's
+/** Time-window operators over the `events` table (StreamingSpec runs the
+  * same window expressions under readStream + withWatermark). Tumbling/sliding use Spark's
   * epoch-aligned `window()`, sessions use `session_window` (gap-merge
   * semantics: a row extends the session while ts < prev_end = prev_ts+gap).
   *

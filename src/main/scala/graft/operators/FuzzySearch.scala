@@ -530,8 +530,8 @@ object FuzzySearch {
   /** The index-probing batch pipeline over an ARBITRARY query table
     * (`qid`, `clean_q`) — the core that `batchFuzzySearchIndexed` (fixed
     * derived query table), `batchFuzzySearchStopGramIndexed` (same plus
-    * the broadcast allowed-gram cut) and the `StreamOps` fuzzy faces
-    * (per-micro-batch query table) all run. `postings` is the
+    * the broadcast allowed-gram cut) run, and StreamingSpec runs per
+    * micro-batch of a query stream. `postings` is the
     * materialized index relation; `c` the corpus for the fetch/score
     * tail; `allowed` an optional broadcast-sized allowed-gram set — when
     * present, grams outside it never leave the index scan stage (the
@@ -666,8 +666,7 @@ object FuzzySearch {
 
   /** The artifact-served allowed-gram set of the df·inv ≤ n cut: folds
     * the additive `graft_gramdf`/`graft_gramn` stats (ensured on first
-    * call) — gram-space-bounded, so always broadcast-sized. Shared by the
-    * batch operator and the streaming face. */
+    * call) — gram-space-bounded, so always broadcast-sized. */
   def allowedGramsIndexed(spark: SparkSession, dir: String, c: DataFrame,
                           dfCapInverse: Long, version: Int = 1): DataFrame =
     allowedGramsDfIndexed(spark, dir, c, dfCapInverse, version)
@@ -1096,12 +1095,6 @@ object FuzzySearch {
       .groupBy(col("qid"), col("id")).agg(count(lit(1)).as("ngram_hits"))
   }
 
-  /** Mirror oracle: the posting-join spelling (the brute-force list_filter
-    * form cannot express a per-gram truncation), with the same scoring
-    * tail as the batch oracle. `rareGrams > 0` mirrors the rare-gram
-    * recall floor: each query's R rarest allowed grams (df asc, gram asc —
-    * the same rank the operator derives) join the FULL posting multiset,
-    * the rest join the champion lists. */
   /** DuckDB twin of the LSH channel's signature + band derivation: per
     * distinct corpus name (`nb`) and per query (`qb`), the
     * [[FuzzyLshHashes]]-long trigram-set MinHash (same permutation family
@@ -1144,6 +1137,12 @@ object FuzzySearch {
        |FROM qb JOIN nb USING (band_idx, band_hash)""".stripMargin
   }
 
+  /** Mirror oracle: the posting-join spelling (the brute-force list_filter
+    * form cannot express a per-gram truncation), with the same scoring
+    * tail as the batch oracle. `rareGrams > 0` mirrors the rare-gram
+    * recall floor: each query's R rarest allowed grams (df asc, gram asc —
+    * the same rank the operator derives) join the FULL posting multiset,
+    * the rest join the champion lists. */
   def batchFuzzySearchChampOracle(numResults: Int, dfCapInverse: Long,
                                   postingCap: Int = ChampPostingCap,
                                   cap: Int = DefaultCap,
@@ -1230,6 +1229,20 @@ object FuzzySearch {
        |ORDER BY qid, score DESC, id""".stripMargin
   }
 
+  /** Query BUDGET for the champ-recall instrument — the [[RecallProbeCap]]
+    * convention applied to the fuzzy ladder's instrument (round 12: at
+    * 4.4 s the instrument was the bench's slowest row because it sums
+    * THREE anchor pipelines over the full query stride). The instrument
+    * keeps the first `RecallQueryCap` queries of the stride
+    * (deterministic id prefix); per-query results are independent (every
+    * window, dedup, and cap partitions by qid), so the subsample is
+    * EXACTLY the full instrument restricted to those queries — the qid
+    * predicate pushes below the candidate joins on all three anchors, and
+    * the oracle carries the same predicate. Sampled queries ARE the
+    * contract: recall is an estimate whose query count is explicit in the
+    * signature, not an accident of corpus size. */
+  val RecallQueryCap = 64L
+
   /** Measured overlap@k of the champion tier against the UNCUT batch
     * results — the `ann_*_recall` convention applied to the fuzzy
     * ladder's own approximation: tier 3 changes results by design (the
@@ -1252,20 +1265,6 @@ object FuzzySearch {
     * ALREADY pays — its result set is the ceiling any cut plan can reach
     * — while `recall_vs_stopgram` isolates what the per-gram truncation
     * itself costs on top (the number the posting-cap knob moves). */
-  /** Query BUDGET for the champ-recall instrument — the [[RecallProbeCap]]
-    * convention applied to the fuzzy ladder's instrument (round 12: at
-    * 4.4 s the instrument was the bench's slowest row because it sums
-    * THREE anchor pipelines over the full query stride). The instrument
-    * keeps the first `RecallQueryCap` queries of the stride
-    * (deterministic id prefix); per-query results are independent (every
-    * window, dedup, and cap partitions by qid), so the subsample is
-    * EXACTLY the full instrument restricted to those queries — the qid
-    * predicate pushes below the candidate joins on all three anchors, and
-    * the oracle carries the same predicate. Sampled queries ARE the
-    * contract: recall is an estimate whose query count is explicit in the
-    * signature, not an accident of corpus size. */
-  val RecallQueryCap = 64L
-
   def batchFuzzyChampRecall(spark: SparkSession, dir: String, numResults: Int,
                             dfCapInverse: Long,
                             postingCap: Int = ChampPostingCap,
@@ -1466,19 +1465,6 @@ object FuzzySearch {
     * it is not measurably the slower choice. */
   val BatchCandidateBudget: Long = 8L * 1000 * 1000
 
-  /** The dispatching batch-fuzzy serving entry — admission control WIRED,
-    * not just available: runs [[batchCandidateCost]]'s bounded prediction
-    * (a join of two gram-space-bounded relations; sub-second at any
-    * corpus size) and only then chooses the plan. Below the budget it
-    * serves the uncut indexed batch (faithful cap-after-count semantics,
-    * geo_manager.py:584-586); above it, the stop-gram cut served from the
-    * gram-stats artifacts — the documented semantic deviation that a
-    * low-entropy corpus forces (without it the candidate join pays
-    * Σ qcount·df, measured 44× super-linear per 10× on the sf1 replica).
-    * The oracle twin dispatches the SAME way in SQL, so the gate checks
-    * the dispatch itself, not just the branches; OperatorParitySpec pins
-    * both branches against their direct operators and that a degenerate
-    * corpus selects the cut at the default budget. */
   /** Memo for the dispatch prediction below: the `.head()` is a real Spark
     * action at DataFrame-CONSTRUCTION time — unlike every other lazily
     * built registry entry — so without the memo it re-runs on every
@@ -1616,7 +1602,21 @@ object FuzzySearch {
   private val champPlanMemo =
     new scala.collection.concurrent.TrieMap[(String, String, String, String, Long, Long), (Int, Int, Int)]
 
-  /** THREE-tier dispatch (round 10 — the 100× rehearsal showed tier 2's
+  /** The dispatching batch-fuzzy serving entry — admission control WIRED,
+    * not just available: runs [[batchCandidateCost]]'s bounded prediction
+    * (a join of two gram-space-bounded relations; sub-second at any
+    * corpus size) and only then chooses the plan. Below the budget it
+    * serves the uncut indexed batch (faithful cap-after-count semantics,
+    * geo_manager.py:584-586); above it, the stop-gram cut served from the
+    * gram-stats artifacts — the documented semantic deviation that a
+    * low-entropy corpus forces (without it the candidate join pays
+    * Σ qcount·df, measured 44× super-linear per 10× on the sf1 replica).
+    * The oracle twin dispatches the SAME way in SQL, so the gate checks
+    * the dispatch itself, not just the branches; OperatorParitySpec pins
+    * both branches against their direct operators and that a degenerate
+    * corpus selects the cut at the default budget.
+    *
+    * THREE-tier dispatch (round 10 — the 100× rehearsal showed tier 2's
     * relative cut is still quadratic on a degenerate corpus): uncut
     * indexed (exact reference semantics) while the uncut volume fits the
     * budget; the stop-gram cut while ITS predicted volume fits; else the

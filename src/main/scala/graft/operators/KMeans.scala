@@ -96,15 +96,15 @@ object KMeans {
       .agg(array_sort(collect_list(struct(col("idx"), col("cv")))).as("s"))
       .select(col("cell").as("cid"), transform(col("s"), x => x("cv")).as("cemb"))
 
-  /** The trained codebook after `iters` Lloyd iterations — materialized
-    * write-once (training is an ingest-time job; queries read the tiny
-    * C-row artifact instead of re-running the iterations). */
   /** v2: spherical (unit-normalized) centroid means since round 4. The
     * quantization scale and mean convention are content-determining but
     * invisible in the kind — ArtifactParams golden-pins them against
     * this version (the round-15 tripwire). */
   val TrainedCentroidsVersion = 2
 
+  /** The trained codebook after `iters` Lloyd iterations — materialized
+    * write-once (training is an ingest-time job; queries read the tiny
+    * C-row artifact instead of re-running the iterations). */
   def trainedCentroids(spark: SparkSession, dir: String, iters: Int = DefaultIters,
                        mod: Long = 25L, numCentroids: Int = Similarity.IvfNumCentroids): DataFrame =
     Tables.parquet(spark, ensureTrainedCentroids(spark, dir, iters, mod, numCentroids))

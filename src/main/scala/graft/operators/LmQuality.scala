@@ -77,7 +77,7 @@ object LmQuality {
       lit(1000L)) < Pipeline.SplitTrainUpto
 
   /** (doc_id, tk) whitespace tokens of lowered text. */
-  private def tokenize(docs: DataFrame): DataFrame =
+  private[graft] def tokenize(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), tokens(lower(col("text"))).as("tk"))
 
   private def tokenized(spark: SparkSession, dir: String): DataFrame =
@@ -89,7 +89,7 @@ object LmQuality {
     * ' ' cannot occur inside a token and the joined window is a faithful
     * pair key). Docs with fewer than 2 tokens have no bigrams and drop
     * out here — the same contract as [[TextAnalysis.bigramScore]]. */
-  private def bigrams(tok: DataFrame): DataFrame =
+  private[graft] def bigrams(tok: DataFrame): DataFrame =
     tok.filter(size(col("tk")) >= 2)
       .select(col("doc_id"), explode(
         graft.functions.TextFunctions.tokenWindows(col("tk"), 2)).as("bg"))
@@ -117,8 +117,8 @@ object LmQuality {
     * reference slice (then every bigram scores (0+1)/(0+1) = 1.0 — a
     * defined everything-is-fluent degenerate instead of a
     * divide-by-zero that Spark nulls and DuckDB errors on). */
-  private def scoreWith(db: DataFrame, big: DataFrame, uni: DataFrame,
-                        v: DataFrame): DataFrame =
+  private[graft] def scoreWith(db: DataFrame, big: DataFrame, uni: DataFrame,
+                                v: DataFrame): DataFrame =
     db.join(big, Seq("bg"), "left")
       .withColumn("w1", substring_index(col("bg"), " ", 1))
       .join(uni, Seq("w1"), "left")
@@ -137,15 +137,6 @@ object LmQuality {
   private def trainedInline(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
     trainedOver(tokenized(spark, dir).filter(isTrain(col("doc_id"))))
-
-  /** Spec face: score `docs` under a model trained on `ref` (both raw
-    * (doc_id, text) relations) — what lets LmQualitySpec pin the
-    * discrimination semantics on a crafted corpus with an explicit
-    * reference slice, independent of the split hash. */
-  private[graft] def lmScoreOver(docs: DataFrame, ref: DataFrame): DataFrame = {
-    val (big, uni, v) = trainedOver(tokenize(ref))
-    scoreWith(bigrams(tokenize(docs)), big, uni, v)
-  }
 
   // ---------------------------------------------------------- gate faces
 
@@ -199,8 +190,7 @@ object LmQuality {
       graft.Tables.parquet(spark, ensureModel(spark, dir)))
 
   /** Score a raw (doc_id, text) relation against the kind-partitioned
-    * model relation — the core the indexed face and the streaming face
-    * share. A doc's score depends only on its own bigrams vs the static
+    * model relation — the core of the indexed face. A doc's score depends only on its own bigrams vs the static
     * model, so per-micro-batch evaluation is exact under any chunking. */
   private[graft] def scoreAgainstModel(docs: DataFrame, model: DataFrame): DataFrame = {
     val big = model.filter(col("kind") === "big")

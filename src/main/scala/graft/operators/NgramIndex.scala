@@ -41,10 +41,4 @@ object NgramIndex {
     postingPairs(corpus, n)
       .groupBy(col("ngram"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
-
-  /** Incremental insert: new entities' pairs append to the pairs relation.
-    * Exactness: postingPairs(a union b) == postingPairs(a) union
-    * postingPairs(b) — explode is row-local. */
-  def addEntities(existingPairs: DataFrame, newCorpus: DataFrame, n: Int = 3): DataFrame =
-    existingPairs.unionByName(postingPairs(newCorpus, n))
 }

@@ -301,10 +301,9 @@ object Pipeline {
       .orderBy(col("doc_id"))
 
   /** The schedule core over any (doc_id, source) relation and a mix plan
-    * — split out so the ingest-gate stream (`StreamOps.epochScheduleStream`)
-    * schedules arriving docs under the SAME static plan the batch query
-    * uses (the lmScoreStream pattern: plan by-name, so a re-planned mix
-    * is visible next micro-batch). */
+    * — split out so arriving docs are scheduled under the SAME static plan
+    * the batch query uses. Map-only and row-local, so it is exact per
+    * micro-batch of a stream (StreamingSpec runs it that way). */
   private[graft] def epochScheduleOver(docs: DataFrame,
                                        plan: DataFrame): DataFrame =
     epochCopiesOver(docs, plan)
@@ -1035,15 +1034,6 @@ object Pipeline {
   def corpusE2e(spark: SparkSession, dir: String): DataFrame =
     e2eManifestFrom(spark, ensureCorpusE2e(spark, dir))
 
-  /** DuckDB twin of the COMPOSITION: survivors (dedup pipeline) + LM
-    * scores → median fluency cut over the clean slice (all splits) →
-    * train split → budget prefix cut in shuffle order (single-node: one
-    * global cumulative window ≡ offset + per-shard running) → per-source
-    * pack offsets → water-filling epoch plan over the budgeted slice →
-    * hash-Bernoulli repetition schedule → per-copy shard assignment →
-    * per-shard manifest rollup. start_off equals pack_id·budget+pack_off
-    * exactly, so the pack checksum matches the Spark spelling term by
-    * term; copies are counted with multiplicity in every aggregate. */
   /** Shared CTE chain through the per-copy relation `copies`(doc_id,
     * n_tok, content_hash, start_off, copy) — the whole v3 composition up
     * to the shard assignment, consumed by the manifest oracle and the
@@ -1092,6 +1082,15 @@ object Pipeline {
        |           FROM sched WHERE n_copies > 0)""".stripMargin
   }
 
+  /** DuckDB twin of the COMPOSITION: survivors (dedup pipeline) + LM
+    * scores → median fluency cut over the clean slice (all splits) →
+    * train split → budget prefix cut in shuffle order (single-node: one
+    * global cumulative window ≡ offset + per-shard running) → per-source
+    * pack offsets → water-filling epoch plan over the budgeted slice →
+    * hash-Bernoulli repetition schedule → per-copy shard assignment →
+    * per-shard manifest rollup. start_off equals pack_id·budget+pack_off
+    * exactly, so the pack checksum matches the Spark spelling term by
+    * term; copies are counted with multiplicity in every aggregate. */
   def corpusE2eOracle: String = {
     val hc1 = OracleSql.polyHash(
       s"('$EpochShardSalt' || doc_id::VARCHAR || ':' || copy::VARCHAR)")

@@ -65,7 +65,7 @@ object QualityModel {
     featuresOver(Tables.documents(spark, dir))
 
   /** The same feature projection over an EXPLICIT document batch — the
-    * row-local core the streaming face scores arriving docs with. */
+    * row-local core arriving docs are scored with. */
   private[graft] def featuresOver(d: DataFrame): DataFrame = {
     val base = d.select(col("doc_id"), tokens(lower(col("text"))).as("tk"))
       .filter(size(col("tk")) > 0)
@@ -159,8 +159,8 @@ object QualityModel {
         .coalesce(1).write.mode("overwrite").parquet(p)
     }
 
-  /** Fresh read of the weight artifact (BY-NAME consumers: the streaming
-    * face picks up a refit on the next micro-batch). */
+  /** Fresh read of the weight artifact — each call lists it anew, so a
+    * refit is picked up by the next call. */
   def weightsOf(spark: SparkSession, dir: String): DataFrame =
     Tables.parquet(spark, ensureWeights(spark, dir))
 

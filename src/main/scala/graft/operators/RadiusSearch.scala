@@ -407,8 +407,8 @@ object RadiusSearch {
 
   /** The banded-join batch pipeline over an ARBITRARY probe table
     * (`probe_id`, `p_lat`, `p_lng`, `p_country`) — the core that
-    * `radiusSearchBatch` (fixed derived probe table) and
-    * `StreamOps.radiusStream` (per-micro-batch probe table) both run.
+    * `radiusSearchBatch` (fixed derived probe table) runs, and
+    * StreamingSpec runs per micro-batch of a probe stream.
     * `shp` is the point-shape relation (aggregates stay on the per-probe
     * path, see above). */
   def radiusSearchBatchOver(probes: DataFrame, shp: DataFrame,

@@ -61,8 +61,8 @@ object Retrieval {
       graft.Materialize.ensure(spark, WordStats, dir, docs))
 
   /** Fresh read of the materialized posting relation (ensured on first
-    * call) — BY-NAME consumers (streaming faces) pick up appended files
-    * on each evaluation. */
+    * call) — each call lists the artifact anew, so it picks up appended
+    * files. */
   def wordPostingsOf(spark: SparkSession, dir: String): DataFrame = {
     val (pp, _) = ensureWordIndex(spark, dir, Tables.documents(spark, dir))
     Tables.parquet(spark, pp)
@@ -85,18 +85,18 @@ object Retrieval {
   val TermBloomNumBits = 1000000L
 
   /** Batch BM25 over an explicit (qid, term) query relation, served from
-    * the MATERIALIZED word-posting index — the core the gate query and the
-    * streaming face (StreamOps.searchStream) share. Plan: the batch's
-    * distinct term set folds into a runtime bloom (scalar subquery)
-    * evaluated INSIDE the posting scan stage, so only postings of terms
+    * the MATERIALIZED word-posting index — the core of the gate query.
+    * Plan: the batch's distinct term set folds into a runtime bloom
+    * (scalar subquery) evaluated INSIDE the posting scan stage, so only postings of terms
     * some query might use survive to any exchange (the q14 machinery, the
     * round-3 fuzzy_batch_indexed story keyed by term); the exact
     * broadcast term join removes false positives; df is a tiny aggregate
     * over the PRUNED postings (identical to corpus-wide df for those
     * terms); per-(qid, doc) sums are map-side combinable over quantized
     * longs; the per-qid top-k is a rank-window (WindowGroupLimit applies
-    * the cap map-side). `postings`/`stats` are BY-NAME so a streaming
-    * micro-batch re-evaluates a fresh read of an appended artifact.
+    * the cap map-side). A request's ranking depends only on its own
+    * terms, so the core is exact per micro-batch of a stream whose
+    * requests arrive whole (StreamingSpec runs it that way).
     * At 100 TB the per-batch read cost is O(postings of the union of
     * query terms) + a bloom pass over scanned rows — never a corpus
     * tokenize. */
@@ -116,37 +116,6 @@ object Retrieval {
     val df = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val perQuery = matched.join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term"),
-        TextAnalysis.bm25Qs(col("tf"), col("df"), col("n"), col("sdl"), col("dl")).as("qs"))
-      .join(broadcast(qRel), "term")
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), sum(col("qs")).as("score_q"))
-    perQuery
-      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("score_q").desc, col("doc_id"))))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("doc_id"), col("n_terms"),
-        (col("score_q").cast("double") / Bm25Quant.toDouble).as("bm25"))
-      .orderBy(col("qid"), col("bm25").desc, col("doc_id"))
-  }
-
-  /** INLINE twin of [[bm25BatchOverPostings]] (tokenize-per-call) — kept
-    * as the spec anchor: indexed == inline over the same corpus
-    * (IncrementalIndexSpec), never the serving path. */
-  private[graft] def bm25BatchInline(queries: DataFrame, docs: DataFrame,
-                                     k: Int): DataFrame = {
-    import TextAnalysis.Bm25Quant
-    val qRel = queries.select(col("qid"), col("term")).distinct()
-    val tok = docs.select(col("doc_id"), tokens(lower(col("text"))).as("tk"))
-    val dl = tok.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
-    val st = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
-    val qTerms = qRel.select(col("term")).distinct()
-    val matched = tok.select(col("doc_id"), explode(col("tk")).as("term"))
-      .join(broadcast(qTerms), "term")
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val df = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val perQuery = matched.join(broadcast(df), "term").join(dl, "doc_id")
-      .crossJoin(broadcast(st))
       .select(col("doc_id"), col("term"),
         TextAnalysis.bm25Qs(col("tf"), col("df"), col("n"), col("sdl"), col("dl")).as("qs"))
       .join(broadcast(qRel), "term")

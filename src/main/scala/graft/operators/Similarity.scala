@@ -21,19 +21,11 @@ object Similarity {
   /** Sequential-fold dot product / cosine of two float arrays, as native
     * codegen'd expressions (graft.functions.VectorFunctions) — the fold
     * order matches the DuckDB oracle's `list_reduce`, so the result is
-    * bit-deterministic across both engines. The composed built-in forms
-    * are kept below for the parity spec. */
+    * bit-deterministic across both engines. VectorKernelSpec pins them
+    * bit-equal to the composed built-in forms. */
   def dot(a: Column, b: Column): Column = graft.functions.VectorFunctions.dotF(a, b)
 
   def cosine(a: Column, b: Column): Column = graft.functions.VectorFunctions.cosineF(a, b)
-
-  /** Composed-HOF reference implementations (interpreted; spec-only). */
-  def dotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def cosineComposed(a: Column, b: Column): Column =
-    dotComposed(a, b) / (sqrt(dotComposed(a, a)) * sqrt(dotComposed(b, b)))
 
   /** Top-k nearest to the probe vector (vec_id = probeId) by cosine. */
   def cosineTopK(spark: SparkSession, dir: String, probeId: Long, k: Int): DataFrame = {
@@ -65,24 +57,10 @@ object Similarity {
   /** Random-hyperplane LSH signature of an embedding column: sign bits of
     * the dot product against `planes` deterministic pseudo-random
     * hyperplanes (components derived from a hash of (plane, dim) — no RNG,
-    * reproducible across runs/engines). Native codegen'd expression; the
-    * composed form is kept for the parity spec. */
+    * reproducible across runs/engines). Native codegen'd expression;
+    * VectorKernelSpec pins it to the composed form. */
   def lshSignature(emb: Column, planes: Int): Column =
     graft.functions.VectorFunctions.lshSignatureF(emb, planes)
-
-  /** Composed-HOF reference implementation (interpreted; spec-only). */
-  def lshSignatureComposed(emb: Column, planes: Int): Column = {
-    // Pseudo-random plane component for (p, i): centered hash in [-0.5, 0.5).
-    def comp(p: Int): Column => Column = i =>
-      (pmod(i * 2654435761L + lit(p.toLong) * 40503L + 12345L, lit(1000L)).cast("double") / 1000.0) - 0.5
-    (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(emb, sequence(lit(0L), size(emb).cast("long") - 1L),
-          (x, i) => x.cast("double") * comp(p)(i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** Scale path: LSH bucket per vector. Vectors sharing a bucket are
     * candidates; exact cosine re-ranks. This replaces the O(N) probe scan
@@ -642,19 +620,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** The AUTO-sized served IVF read — the ncells growth policy wired
-    * instead of hand-tuned: the codebook size derives from the corpus
-    * count at ensure time (cells ≈ N/[[IvfTargetCellSize]]), and the
-    * artifact kind already carries the derived parameter (the
-    * champion-index parameter-in-kind precedent), so a corpus that grew
-    * past the next cell boundary re-keys and REBUILDS rather than
-    * serving a stale codebook size. At every gate corpus the derivation
-    * lands on the anchor 16, so the fixed-ncells oracle gates this row
-    * unchanged; OperatorParitySpec pins that equality explicitly plus
-    * the derived values at the replica counts, and SCALE.md §ncells
-    * growth measured records flat probed rows at the derived sizes
-    * without hand-tuning. The count() is one metadata-bounded job per build —
-    * at 100 TB it rides the same ingest pass that writes the index. */
   /** Memo for the corpus count the derivation reads — a construction-time
     * job (the cost-memo precedent); keyed by the input-dir fingerprint so
     * an ingest increment re-counts and re-keys the artifact. */
@@ -709,6 +674,19 @@ object Similarity {
           numCentroids, 4L, numCoarse, nprobe1, version), plan)
     }
 
+  /** The AUTO-sized served IVF read — the ncells growth policy wired
+    * instead of hand-tuned: the codebook size derives from the corpus
+    * count at ensure time (cells ≈ N/[[IvfTargetCellSize]]), and the
+    * artifact kind already carries the derived parameter (the
+    * champion-index parameter-in-kind precedent), so a corpus that grew
+    * past the next cell boundary re-keys and REBUILDS rather than
+    * serving a stale codebook size. At every gate corpus the derivation
+    * lands on the anchor 16, so the fixed-ncells oracle gates this row
+    * unchanged; OperatorParitySpec pins that equality explicitly plus
+    * the derived values at the replica counts, and SCALE.md §ncells
+    * growth measured records flat probed rows at the derived sizes
+    * without hand-tuning. The count() is one metadata-bounded job per build —
+    * at 100 TB it rides the same ingest pass that writes the index. */
   def ivfBucketedTopKAuto(spark: SparkSession, dir: String, probeId: Long,
                           k: Int, centroidMod: Long = 25L,
                           nprobe: Int = 2,
@@ -772,9 +750,9 @@ object Similarity {
   /** The IVF-probing batch pipeline over an ARBITRARY probe table
     * (`pid`, `pemb`) and an ARBITRARY cell-assigned relation (`vec_id`,
     * `label`, `embedding`, `cell`) — the core that `ivfBatchTopK` (fixed
-    * derived probes, inline assignment) and `StreamOps.annStream`
-    * (per-micro-batch probes against the MATERIALIZED cell-partitioned
-    * index) both run. Probe cells resolve as probes × constant-C codebook
+    * derived probes, inline assignment) runs and StreamingSpec runs per
+    * micro-batch of probes against the MATERIALIZED cell-partitioned
+    * index. Probe cells resolve as probes × constant-C codebook
     * with a per-probe window rank; candidates come from an equi-join on
     * the cell key (with the partitioned index, broadcast `probeCells`
     * drives partition pruning to the union of probed cells). */
@@ -1028,8 +1006,8 @@ object Similarity {
   /** PQ encoding — the ingest-time product (like the IVF cell
     * assignment): per (vector, subspace), the nearest codeword by squared
     * L2, computed map-only against the ONE-ROW broadcast codebook array by
-    * the native codegen kernel (all M codes in one eval — the interpreted
-    * composed spelling below is the bit-parity twin, PqKernelSpec). Ties →
+    * the native codegen kernel (all M codes in one eval — VectorKernelSpec
+    * holds the interpreted composed spelling as the bit-parity twin). Ties →
     * smallest cid. Output: (vec_id, m, code) — at scale stored as an
     * M-byte column beside the doc, 32× smaller than the raw floats, which
     * is what makes the coarse scoring pass I/O-cheap at 100 TB. */
@@ -1045,19 +1023,6 @@ object Similarity {
       .select(col("vec_id"),
         graft.functions.VectorFunctions.pqEncodeF(
           col("embedding"), col("bk"), PqM, PqDim).as("codes"))
-  }
-
-  /** Interpreted composed-HOF twin of the kernel encode (spec-only). */
-  private[graft] def pqEncodeComposed(e: DataFrame, books: DataFrame): DataFrame = {
-    val byM = books.groupBy(col("m"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("cemb")))).as("bs"))
-    e.withColumn("m", explode(sequence(lit(0), lit(PqM - 1))))
-      .join(broadcast(byM), "m")
-      .withColumn("sub", slice(col("embedding"), col("m") * PqDim + 1, lit(PqDim))
-        .cast("array<double>"))
-      .withColumn("best", array_max(transform(col("bs"), b =>
-        struct((-l2sq(col("sub"), b("cemb"))).as("nd"), (-b("cid")).as("nc")))))
-      .select(col("vec_id"), col("m"), (-col("best.nc")).as("code"))
   }
 
   /** PQ-ADC approximate top-k — asymmetric distance computation, THE
@@ -1265,9 +1230,8 @@ object Similarity {
   /** The batch IVF-PQ pipeline over an ARBITRARY probe table (`pid`,
     * `pemb`) and an ARBITRARY cell-partitioned codes relation (`vec_id`,
     * `codes`, `cell`) — the core [[ivfPqBatchTopK]] (derived probes,
-    * artifact read) and `StreamOps.annPqStream` (per-micro-batch probes)
-    * both run; the [[ivfBatchTopKOver]] analogue for the compressed
-    * path. */
+    * artifact read) runs and StreamingSpec runs per micro-batch of
+    * probes; the [[ivfBatchTopKOver]] analogue for the compressed path. */
   def ivfPqBatchTopKOver(probes: DataFrame, codesRel: DataFrame,
                          cent: DataFrame, books: DataFrame,
                          labels: DataFrame, k: Int, nprobe: Int): DataFrame = {
@@ -1421,18 +1385,6 @@ object Similarity {
        |FROM perx px LEFT JOIN perh ph USING (pid)""".stripMargin
   }
 
-  /** Coarse-plus-REFINE — the last stage of the production serving
-    * ladder (float32 master → int8 hot tier → PQ coarse codes): the
-    * served two-level IVF+PQ plan produces a `refine`·k-deep ADC
-    * shortlist (8-byte codes, DPP-pruned cells), and the shortlist's
-    * rows re-rank by dequantized-cosine POINT READS of the int8 tier —
-    * ≤ refine·k rows of a vec_id-keyed artifact, never the float
-    * vectors. The refine stage returns the stack to the family's exact
-    * user-facing metric (cosine, like `ann_ivf2_topk`) at hot-tier cost;
-    * `ann_refine_recall` keeps what it recovers over the raw ADC ranking
-    * visible. Both artifacts appendable under the same frozen codebooks.
-    * Zero vectors dequantize to NaN cosine → dropped (the int8 tier
-    * convention). */
   /** Per-probe row budgets of the SIZED refine ladder (round 14 — the
     * champion-cap discipline applied to the ANN knobs). Each knob's cost
     * is an exact row count, each budget a constant, so the derived plan
@@ -1696,6 +1648,18 @@ object Similarity {
     }
   }
 
+  /** Coarse-plus-REFINE — the last stage of the production serving
+    * ladder (float32 master → int8 hot tier → PQ coarse codes): the
+    * served two-level IVF+PQ plan produces a `refine`·k-deep ADC
+    * shortlist (8-byte codes, DPP-pruned cells), and the shortlist's
+    * rows re-rank by dequantized-cosine POINT READS of the int8 tier —
+    * ≤ refine·k rows of a vec_id-keyed artifact, never the float
+    * vectors. The refine stage returns the stack to the family's exact
+    * user-facing metric (cosine, like `ann_ivf2_topk`) at hot-tier cost;
+    * `ann_refine_recall` keeps what it recovers over the raw ADC ranking
+    * visible. Both artifacts appendable under the same frozen codebooks.
+    * Zero vectors dequantize to NaN cosine → dropped (the int8 tier
+    * convention). */
   def ivf2PqRefineTopK(spark: SparkSession, dir: String, probeId: Long, k: Int,
                        centroidMod: Long = 25L, nprobe: Int = 2,
                        numCentroids: Int = IvfNumCentroids,
@@ -2052,16 +2016,6 @@ object Similarity {
 
   // --------------------------------------------- int8 vector quantization
 
-  /** Per-vector symmetric int8 quantization — the 4× storage codec next
-    * to PQ's 32× (the standard serving-stack ladder: float32 master →
-    * int8 for the hot tier → PQ codes for the coarse pass). scale =
-    * max|x|/127, code_i = floor(x_i/scale + 0.5) (round-half-up — total
-    * and engine-identical, unlike banker's rounding); the max guarantees
-    * every code lands in [-127, 127] with no clamp. Map-only narrow
-    * projection; every output is order-free (max over a set, integer
-    * sums), so the row is bit-exact cross-engine, and the measured
-    * per-vector reconstruction error (≤ scale/2 by construction —
-    * worst 0.0021 on the gate corpus) stays visible in the gate. */
   /** The codec's two expressions — ONE spelling shared by the quantize
     * gate row, the dequantized search tier, and (via [[int8ScaleCte]] /
     * [[int8CodesSql]]) both SQL oracles, so the codec cannot fork. */
@@ -2085,6 +2039,16 @@ object Similarity {
        |     ELSE list_transform($emb, x -> floor(x::DOUBLE / $scale + 0.5)::BIGINT)
        |END""".stripMargin.replaceAll("\n", " ")
 
+  /** Per-vector symmetric int8 quantization — the 4× storage codec next
+    * to PQ's 32× (the standard serving-stack ladder: float32 master →
+    * int8 for the hot tier → PQ codes for the coarse pass). scale =
+    * max|x|/127, code_i = floor(x_i/scale + 0.5) (round-half-up — total
+    * and engine-identical, unlike banker's rounding); the max guarantees
+    * every code lands in [-127, 127] with no clamp. Map-only narrow
+    * projection; every output is order-free (max over a set, integer
+    * sums), so the row is bit-exact cross-engine, and the measured
+    * per-vector reconstruction error (≤ scale/2 by construction —
+    * worst 0.0021 on the gate corpus) stays visible in the gate. */
   def int8Quantize(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val withScale = e.select(col("vec_id"), col("embedding"), int8ScaleCol.as("scale"))
@@ -2266,24 +2230,12 @@ object Similarity {
 
   /** Deterministic Rademacher projection of the embedding column to
     * [[RpDim]] doubles — native codegen'd kernel
-    * (graft.functions.RpProjectExpr); the composed twin below is pinned
-    * bit-identical by VectorKernelSpec. Map-only: the projection is a
+    * (graft.functions.RpProjectExpr); VectorKernelSpec pins it
+    * bit-identical to a composed twin. Map-only: the projection is a
     * row-local expression, so the codec costs one narrow pass at ingest
     * and nothing at query time beyond reading 4× fewer components. */
   def rpProject(emb: Column): Column =
     graft.functions.VectorFunctions.rpProjectF(emb, RpDim)
-
-  /** Composed-HOF reference implementation (interpreted; spec-only).
-    * Unrolled per output component, exactly like lshSignatureComposed. */
-  def rpProjectComposed(emb: Column, dPrime: Int = RpDim): Column =
-    array((0 until dPrime).map { p =>
-      aggregate(
-        zip_with(emb, sequence(lit(0L), size(emb).cast("long") - 1L),
-          (x, i) => when(
-            pmod(i * 2654435761L + lit(p.toLong * 40503L + 12345L), lit(1000L)) < 500L,
-            x.cast("double")).otherwise(-x.cast("double"))),
-        lit(0.0), (acc, x) => acc + x)
-    }: _*)
 
   /** Oracle fragment: the RP component list of embedding column `e` —
     * unrolled per component (no nested-lambda captures, matching

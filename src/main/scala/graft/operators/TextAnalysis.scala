@@ -452,31 +452,14 @@ object TextAnalysis {
     * are floor-quantized to longs first — associative, order-free). */
   val Bm25Quant = 1000000L
 
-  /** BM25 top-k document retrieval (Robertson/Spärck Jones probabilistic
-    * relevance framework) — the keyword-search face of the engine. One
-    * DOCUMENTED deviation for cross-engine bit-exactness: the idf factor
-    * is the RATIONAL odds (N - df + 0.5)/(df + 0.5), not its log — log's
-    * last ulp differs between libm and the JVM, and the house rule is no
-    * transcendental in any gated value (see qualityScore / bigramScore).
-    * Per-term weighting is the same monotone statistic; score SUMS weight
-    * rare terms more steeply than log-BM25, which is the trade stated
-    * here.
-    *
-    * Scale shape: tokens explode once; the query-term filter cuts the
-    * relation to |Q| terms' postings BEFORE any aggregation (at 100 TB
-    * this is the materialized word-posting read — fuzzy_indexed's layout
-    * keyed by term instead of trigram); df and the corpus length stats
-    * are tiny broadcast aggregates; per-(doc, term) scores quantize to
-    * longs and sum per doc (map-side combinable); top-k is
-    * TakeOrderedAndProject. */
   /** Per-(doc, term) floor-quantized BM25 score — the ONE Column spelling
     * both the single and batch forms use. Association is explicit:
     * (idf * (num/den)) * Q — the SQL twin [[bm25QsSql]] parenthesizes the
     * quotient identically, because ((idf*num)/den)*Q is a DIFFERENT IEEE
     * rounding sequence and a score within an ulp of an integer would
     * floor to different longs on the two engines. */
-  private[operators] def bm25Qs(tf: Column, dfc: Column, n: Column,
-                                sdl: Column, dl: Column): Column = {
+  private[graft] def bm25Qs(tf: Column, dfc: Column, n: Column,
+                            sdl: Column, dl: Column): Column = {
     val idf = (n.cast("double") - dfc.cast("double") + 0.5) /
       (dfc.cast("double") + 0.5)
     val tfNorm = (tf.cast("double") * (Bm25K1 + 1.0)) /
@@ -494,6 +477,23 @@ object TextAnalysis {
        |         / ($sdl::DOUBLE / $n::DOUBLE))))
        | * $Bm25Quant.0)::BIGINT""".stripMargin.replaceAll("\n", " ")
 
+  /** BM25 top-k document retrieval (Robertson/Spärck Jones probabilistic
+    * relevance framework) — the keyword-search face of the engine. One
+    * DOCUMENTED deviation for cross-engine bit-exactness: the idf factor
+    * is the RATIONAL odds (N - df + 0.5)/(df + 0.5), not its log — log's
+    * last ulp differs between libm and the JVM, and the house rule is no
+    * transcendental in any gated value (see qualityScore / bigramScore).
+    * Per-term weighting is the same monotone statistic; score SUMS weight
+    * rare terms more steeply than log-BM25, which is the trade stated
+    * here.
+    *
+    * Scale shape: tokens explode once; the query-term filter cuts the
+    * relation to |Q| terms' postings BEFORE any aggregation (at 100 TB
+    * this is the materialized word-posting read — fuzzy_indexed's layout
+    * keyed by term instead of trigram); df and the corpus length stats
+    * are tiny broadcast aggregates; per-(doc, term) scores quantize to
+    * longs and sum per doc (map-side combinable); top-k is
+    * TakeOrderedAndProject. */
   def bm25TopK(spark: SparkSession, dir: String, query: Seq[String], k: Int): DataFrame = {
     val d = Tables.documents(spark, dir)
     val tok = d.select(col("doc_id"), tokens(lower(col("text"))).as("tk"))

@@ -171,11 +171,10 @@ object Unigram {
         when(col("ok"), col("bv")).otherwise(singlesScore).as("score"))
   }
 
-  /** The encode join both batch faces and the streaming ingest gate
-    * share: explode words, join the per-word result, one aggregate. Words
-    * absent from the table (an unseen stream word) contribute nothing —
-    * the by-name artifact re-read after a corpus version bump refreshes
-    * the segmentation. */
+  /** The encode join both batch faces share: explode words, join the
+    * per-word result, one aggregate. Words absent from the table (an
+    * unseen arriving word) contribute nothing — a re-read of the artifact
+    * after a corpus version bump refreshes the segmentation. */
   private[graft] def encodeOver(docs: DataFrame, enc: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(tokens(lower(col("text")))).as("word"))
       .join(enc, "word")

@@ -76,10 +76,6 @@ object GeoIngest {
         expr("try_cast(bbox.ll_longitude AS DOUBLE)").as("ll_longitude"),
         expr("try_cast(bbox.ur_longitude AS DOUBLE)").as("ur_longitude")))
 
-  /** Materialize the canonical table: the read-through cache of
-    * geo_manager.py:751-759 becomes a one-time columnar write. At scale,
-    * repartition by a lat-band bucket so radius queries prune files via
-    * Parquet min/max on latitude (SURVEY.md §7.4). */
   /** Small-file compaction — the maintenance job every long-lived ingest
     * needs: streaming/incremental writers leave many small files, and at
     * 100 TB the file-listing + per-file open cost dominates scan time
@@ -117,6 +113,10 @@ object GeoIngest {
         .otherwise(least(floor((col("latitude") + 90.0) / (180.0 / latBands)),
           lit(latBands - 1L))))
 
+  /** Materialize the canonical table: the read-through cache of
+    * geo_manager.py:751-759 becomes a one-time columnar write. At scale,
+    * repartition by a lat-band bucket so radius queries prune files via
+    * Parquet min/max on latitude (SURVEY.md §7.4). */
   def materialize(df: DataFrame, outPath: String, latBands: Int = 32): Unit =
     withLatBand(df, latBands)
       .repartition(col("lat_band"))

@@ -1,7 +1,8 @@
 package graft
 
+import graft.functions.TextFunctions
 import graft.operators.Dsir
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -11,6 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * exists for — documents resembling the fit slice must outrank the pool
   * — on a corpus where the target vocabulary is genuinely skewed. */
 class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import DsirSpec._
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -96,7 +98,7 @@ class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.functions.lower(col("text")), Dsir.Buckets).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
     val composed = df.select(col("doc_id"),
-      Dsir.gramBucketsComposed(col("text")).as("b"))
+      gramBucketsComposed(col("text")).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
     assert(native == composed, s"native=$native\ncomposed=$composed")
     // gate corpus too: every doc agrees at sf0.001
@@ -104,7 +106,7 @@ class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
     val both = d.select(
       graft.functions.GramBucketsExpr.gramBucketsF(
         org.apache.spark.sql.functions.lower(col("text")), Dsir.Buckets).as("n"),
-      Dsir.gramBucketsComposed(col("text")).as("c"))
+      gramBucketsComposed(col("text")).as("c"))
       .collect()
     assert(both.nonEmpty && both.forall(r =>
       r.getSeq[Long](0).toList == r.getSeq[Long](1).toList))
@@ -121,5 +123,17 @@ class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(4)))).toMap
     assert(rows(1L)._1 == 5L, s"gram count: $rows")
     assert(rows(11L) == ((0L, 0L)), s"blank doc: $rows")
+  }
+}
+
+object DsirSpec {
+  import org.apache.spark.sql.functions.{concat, lit, lower, pmod, transform}
+
+  /** Composed-HOF reference form of the native gram-bucket kernel
+    * (interpreted), checked bit-equal to it, order included. */
+  def gramBucketsComposed(text: Column): Column = {
+    val tk = TextFunctions.tokens(lower(text))
+    transform(concat(tk, TextFunctions.tokenWindows(tk, 2)),
+      g => pmod(TextFunctions.polyHash(g), lit(Dsir.Buckets)))
   }
 }

@@ -3,8 +3,9 @@ package graft
 import graft.functions.DamerauLevenshtein
 import graft.functions.GeoFunctions._
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +19,7 @@ object SparkTest {
 }
 
 class FunctionsSpec extends AnyFunSuite {
+  import FunctionsSpec._
   lazy val spark = SparkTest.spark
 
   private def eval1(c: org.apache.spark.sql.Column): Any =
@@ -186,5 +188,26 @@ class FunctionsSpec extends AnyFunSuite {
     val toks = tokens(lit("a b c d"))
     assert(eval1(wordShingles(toks, 3)).asInstanceOf[scala.collection.Seq[String]].toList == Seq("a b c", "b c d"))
     assert(eval1(wordShingles(tokens(lit("a b")), 3)).asInstanceOf[scala.collection.Seq[String]].toList == Seq("a b"))
+  }
+}
+
+/** Composed-HOF reference forms of the native text kernels (interpreted),
+  * the bit-parity twins the kernels are checked against. */
+object FunctionsSpec {
+
+  def tokenWindowsComposed(tk: Column, win: Int): Column =
+    when(size(tk) >= win,
+      transform(sequence(lit(0), size(tk) - win),
+        i => array_join(slice(tk, i + lit(1), lit(win)), " ")))
+      .otherwise(array().cast("array<string>"))
+
+  def polyHashComposed(c: Column): Column = {
+    // NOT split(c, ""): Java regex split keeps a trailing "" at limit -1,
+    // which would fold in a spurious 0. sequence() needs the empty guard
+    // because Spark's sequence(1, 0) infers step -1 (yields [1, 0]).
+    val codes = when(length(c) === 0, array().cast(ArrayType(LongType)))
+      .otherwise(transform(sequence(lit(1), length(c)),
+        i => ascii(c.substr(i, lit(1))).cast("long")))
+    aggregate(codes, lit(0L), (acc, x) => (acc * 31L + x) % HashMod)
   }
 }

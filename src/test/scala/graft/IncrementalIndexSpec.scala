@@ -16,6 +16,7 @@ import java.nio.file.Files
   * `spark.graft.materialize.dir` so the suite never touches the shared
   * warehouse copies. */
 class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import IncrementalIndexSpec._
 
   private val dir = "/root/testdata/sf0.001"
   private val artDir = Files.createTempDirectory("graft-incr-artifacts").toString
@@ -553,7 +554,7 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     Materialize.append(spark, Retrieval.WordStats, dir, batch)
     val reqs = Seq(0L -> "spark", 0L -> "query", 1L -> "customer", 1L -> "table")
     val viaIndex = Retrieval.bm25Batch(spark, dir, reqs, 10).collect().toSeq
-    val inline = Retrieval.bm25BatchInline(reqs.toDF("qid", "term"),
+    val inline = bm25BatchInline(reqs.toDF("qid", "term"),
       Tables.documents(spark, dir), 10).collect().toSeq
     assert(viaIndex.nonEmpty && viaIndex == inline)
     // compaction folds the appended file sets; contents (and query) unchanged
@@ -723,5 +724,41 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Materialize.servingPath(spark, "graft_mf_test", data, 1) == p3,
       "new resolutions must serve the rebuilt generation")
     assert(spark.read.parquet(p3).count() == 1, "stale artifact fully replaced")
+  }
+}
+
+object IncrementalIndexSpec {
+  import graft.functions.TextFunctions.tokens
+  import graft.operators.TextAnalysis
+  import org.apache.spark.sql.expressions.Window
+
+  /** Inline twin of `Retrieval.bm25BatchOverPostings`: the same ranking
+    * with the corpus tokenized per call, the anchor the indexed path is
+    * checked against. */
+  def bm25BatchInline(queries: DataFrame, docs: DataFrame, k: Int): DataFrame = {
+    import TextAnalysis.Bm25Quant
+    val qRel = queries.select(col("qid"), col("term")).distinct()
+    val tok = docs.select(col("doc_id"), tokens(lower(col("text"))).as("tk"))
+    val dl = tok.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
+    val st = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
+    val qTerms = qRel.select(col("term")).distinct()
+    val matched = tok.select(col("doc_id"), explode(col("tk")).as("term"))
+      .join(broadcast(qTerms), "term")
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+    val df = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val perQuery = matched.join(broadcast(df), "term").join(dl, "doc_id")
+      .crossJoin(broadcast(st))
+      .select(col("doc_id"), col("term"),
+        TextAnalysis.bm25Qs(col("tf"), col("df"), col("n"), col("sdl"), col("dl")).as("qs"))
+      .join(broadcast(qRel), "term")
+      .groupBy(col("qid"), col("doc_id"))
+      .agg(count(lit(1)).as("n_terms"), sum(col("qs")).as("score_q"))
+    perQuery
+      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("score_q").desc, col("doc_id"))))
+      .filter(col("rk") <= k)
+      .select(col("qid"), col("doc_id"), col("n_terms"),
+        (col("score_q").cast("double") / Bm25Quant.toDouble).as("bm25"))
+      .orderBy(col("qid"), col("bm25").desc, col("doc_id"))
   }
 }

@@ -6,11 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** One artifact lifecycle, enforced on the source: an appendable kind is
-  * an [[Artifact]] descriptor run by Materialize's descriptor faces, so
-  * `src/main` declares no per-kind `appendTo…` / `compact<Kind>` face and
-  * no operator calls the closure forms of the append and compact
-  * primitives (the ParquetReadSpec source-scan pattern). */
+/** Source scans of `src/main` (the ParquetReadSpec pattern). One artifact
+  * lifecycle: an appendable kind is an [[Artifact]] descriptor run by
+  * Materialize's descriptor faces, so `src/main` declares no per-kind
+  * `appendTo…` / `compact<Kind>` face and no operator calls the closure
+  * forms of the append and compact primitives. Test-only code lives in the
+  * specs: no composed reference twin or `…ForTest` def, and no stream is
+  * started outside the ingest cadence. Every doc comment documents the
+  * definition under it. */
 class LifecycleScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -62,5 +65,44 @@ class LifecycleScanSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"closure-form lifecycle calls in operators: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main declares no composed reference twin or ForTest def") {
+    val twin = """def\s+(\w+Composed|\w*ForTest)\b""".r
+    val offenders = sources(root).flatMap { case (p, src) =>
+      twin.findAllMatchIn(src).map(m => s"${at(p, src, m.start)} ${m.group(1)}")
+    }
+    assert(offenders.isEmpty,
+      s"test-only defs (move them to the spec that uses them): ${offenders.mkString(", ")}")
+  }
+
+  test("src/main starts a stream only in StreamOps.ingestCadenceStream") {
+    val defName = """def\s+(\w+)""".r
+    val offenders = sources(root).flatMap { case (p, src) =>
+      """\bwriteStream\b""".r.findAllMatchIn(src).filterNot { m =>
+        p.endsWith(Paths.get("graft/streaming/StreamOps.scala")) &&
+          defName.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+            .exists(_.group(1) == "ingestCadenceStream")
+      }.map(m => at(p, src, m.start))
+    }
+    assert(offenders.isEmpty,
+      s"writeStream outside the ingest cadence: ${offenders.mkString(", ")}")
+  }
+
+  test("no doc comment is followed directly by another doc comment") {
+    // the first of two stacked docs documents nothing: scaladoc attaches
+    // only the second to the definition below
+    def stacked(src: String): Seq[Int] =
+      Iterator.iterate(src.indexOf("/**"))(i => src.indexOf("/**", i + 1))
+        .takeWhile(_ >= 0).filter { i =>
+          val end = src.indexOf("*/", i + 3)
+          val next = if (end < 0) -1 else src.indexWhere(!_.isWhitespace, end + 2)
+          next >= 0 && src.startsWith("/**", next)
+        }.toSeq
+    val offenders = sources(root).flatMap { case (p, src) =>
+      stacked(src).map(at(p, src, _))
+    }
+    assert(offenders.isEmpty,
+      s"doc comments that document no definition: ${offenders.mkString(", ")}")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.LmQuality
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -12,6 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * semantics the filter exists for — text resembling the reference slice
   * must outscore gibberish — plus the hand-computed smoothing floors. */
 class LmQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
+  import LmQualitySpec._
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -44,7 +45,7 @@ class LmQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def scores(): Map[Long, Double] =
-    LmQuality.lmScoreOver(scored(), ref()).collect()
+    lmScoreOver(scored(), ref()).collect()
       .map(r => r.getLong(0) -> r.getDouble(3)).toMap
 
   test("fluency order: verbatim > fluent > mixed > gibberish") {
@@ -81,7 +82,7 @@ class LmQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("empty reference slice scores everything 1.0, never divides by zero") {
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val s = LmQuality.lmScoreOver(scored(), empty).collect()
+    val s = lmScoreOver(scored(), empty).collect()
       .map(r => r.getLong(0) -> r.getDouble(3)).toMap
     // V=0, every count 0 → the greatest(v,1) floor makes every bigram
     // (0+1)/(0+1): the defined everything-is-fluent degenerate
@@ -106,5 +107,17 @@ class LmQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // descending by c_big
     val cs = rows.map(_.getLong(2)).toSeq
     assert(cs == cs.sortBy(-_))
+  }
+}
+
+object LmQualitySpec {
+
+  /** Scores `docs` under a model trained on `ref` (both raw (doc_id, text)
+    * relations), so the discrimination semantics can be pinned on a
+    * crafted corpus with an explicit reference slice, independent of the
+    * split hash. */
+  def lmScoreOver(docs: DataFrame, ref: DataFrame): DataFrame = {
+    val (big, uni, v) = LmQuality.trainedOver(LmQuality.tokenize(ref))
+    LmQuality.scoreWith(LmQuality.bigrams(LmQuality.tokenize(docs)), big, uni, v)
   }
 }

@@ -10,6 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * dedup canonicalization, full-scan vs pruned-read IVF) must agree —
   * the alternates exist for SCALE, not different semantics. */
 class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+  import OperatorParitySpec._
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -210,7 +211,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SimHashFingerprint kernel == composed HOF form, bit for bit") {
     val kernel = Dedup.simhashSigs(spark, dir).orderBy("doc_id").collect()
-    val composed = Dedup.simhashSigsComposed(spark, dir).orderBy("doc_id").collect()
+    val composed = simhashSigsComposed(spark, dir).orderBy("doc_id").collect()
     assert(kernel.toSeq == composed.toSeq)
     assert(kernel.nonEmpty)
   }
@@ -221,7 +222,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq((1L, null.asInstanceOf[String]), (2L, "hello world"), (3L, ""))
       .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
     val kernel = Dedup.simhashSigs(spark, tmp).orderBy("doc_id").collect()
-    val composed = Dedup.simhashSigsComposed(spark, tmp).orderBy("doc_id").collect()
+    val composed = simhashSigsComposed(spark, tmp).orderBy("doc_id").collect()
     assert(kernel.toSeq == composed.toSeq)
     assert(kernel(0).isNullAt(1), "NULL text must give NULL fingerprint")
     assert(!kernel(1).isNullAt(1))
@@ -389,7 +390,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val uncut = pairsOf(Dedup.containmentPairsOver(c, 0.8))
-    val capped = pairsOf(Dedup.containmentCappedOver(c, 0.8, dfCapInverse = 2L))
+    val capped = pairsOf(containmentCappedOver(c, 0.8, dfCapInverse = 2L))
     assert(uncut.contains((1L, 2L)) && uncut.contains((9L, 10L)), uncut.toString)
     assert(!capped.contains((1L, 2L)),
       s"hot-gram pair should be cut: $capped")
@@ -972,11 +973,10 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("batched BPE: dominance drops conflicting pairs; simultaneous == sequential") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    import graft.operators.BpeTrainer
     // (a,b):3 ranks first; (b,c):2 shares 'b' with it -> dominated;
     // (d,e):2 is disjoint -> selected second
     val docs = Seq((0L, "ab ab ab bc bc de de")).toDF("doc_id", "text")
-    val (merges, _) = BpeTrainer.trainOver(docs, rounds = 1, m = 2)
+    val (merges, _) = trainOver(docs, rounds = 1, m = 2)
     val m = merges.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
     assert(m.toSeq == Seq((1L, "a", "b", 3L), (2L, "d", "e", 2L)), m.toSeq.toString)
@@ -985,21 +985,20 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     def syms(df: org.apache.spark.sql.DataFrame) =
       df.select(col("word"), col("idx"), col("sym")).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq.sorted
-    val batched = BpeTrainer.trainOver(docs2, rounds = 1, m = 2)._2
-    val sequential = BpeTrainer.trainOver(docs2, rounds = 2, m = 1)._2
+    val batched = trainOver(docs2, rounds = 1, m = 2)._2
+    val sequential = trainOver(docs2, rounds = 2, m = 1)._2
     assert(syms(batched).nonEmpty && syms(batched) == syms(sequential))
   }
 
   test("BPE under reliable checkpoint == local lineage cuts (preemptible-cluster mode)") {
     import spark.implicits._
-    import graft.operators.BpeTrainer
     val docs = Seq((0L, "ab ab ab bc bc de de xy xy")).toDF("doc_id", "text")
-    val local = BpeTrainer.trainOver(docs, rounds = 2, m = 2)._1.collect().toSeq
+    val local = trainOver(docs, rounds = 2, m = 2)._1.collect().toSeq
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("bpe_ckpt").toString)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
-      val reliable = BpeTrainer.trainOver(docs, rounds = 2, m = 2)._1.collect().toSeq
+      val reliable = trainOver(docs, rounds = 2, m = 2)._1.collect().toSeq
       assert(reliable.nonEmpty && reliable == local)
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
   }
@@ -1012,7 +1011,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // subtract vanished pairs exactly, add minted-symbol pairs, and leave
     // untouched words' contributions alone (zero-count entries drop out)
     val docs = Seq((0L, "abab abab cdcd xyz xyz qq aaaa")).toDF("doc_id", "text")
-    var s = BpeTrainer.symbols0ForTest(docs)
+    var s = symbols0Of(docs)
     var pc = BpeTrainer.pairCounts(s).localCheckpoint(true)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq.sorted
@@ -1037,7 +1036,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // ([aa, aa], never [aa, a, a] or a double-consume); second iteration
     // must pick the LEARNED symbol pair (aa, aa).
     val docs = Seq((0L, "aaaa aaaa b")).toDF("doc_id", "text")
-    val (merges, sK) = graft.operators.BpeTrainer.trainOver(docs, 2)
+    val (merges, sK) = trainOver(docs, 2)
     val m = merges.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
     // iter 1: (a, a) appears 3x per word instance, 2 instances -> 6
     assert(m(0) == (1L, "a", "a", 6L), m.toSeq.toString)
@@ -1248,7 +1247,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // 200 permille of docs collapse onto one text (one hot sig group;
     // the pairs spelling pays the B^2 clique there, the sig spelling one
     // group row — semantics identical either way).
-    def pairsOf(d: String) = Dedup.nearCanonByPairs(spark, d).collect()
+    def pairsOf(d: String) = nearCanonByPairs(spark, d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     def sigOf(d: String) = Dedup.nearCanonBySig(Dedup.minhashSignatures(spark, d))
       .filter(col("near_canon").isNotNull).collect()
@@ -1323,11 +1322,75 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object OperatorParitySpec {
-  import graft.operators.KMeans
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import graft.functions.TextFunctions.{HashMod, polyHash, tokens}
+  import graft.operators.{BpeTrainer, KMeans}
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
 
   def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+
+  /** Composed built-in form of `Dedup.simhashSigs` (interpreted). NULL
+    * text → NULL fingerprint, explicitly — without the guard the per-bit
+    * `when(null >= 0, …).otherwise(0)` would collapse NULL docs to
+    * fingerprint 0 while the kernel (UnaryExpression null propagation)
+    * yields NULL, breaking the kernel==composed pin. */
+  def simhashSigsComposed(spark: SparkSession, dir: String): DataFrame = {
+    import Dedup.{SimHashBits, permA, permB}
+    def bitSign(h: Column, b: Int): Column =
+      ((h * permA(b) + permB(b)) % HashMod % 2L) * 2L - 1L
+    val d = Tables.documents(spark, dir)
+    val tokHashes = transform(tokens(lower(col("text"))), t => polyHash(t))
+    val bits: Column = (0 until SimHashBits).map { b =>
+      val sumSign = aggregate(col("th"), lit(0L), (acc, h) => acc + bitSign(h, b))
+      when(sumSign >= 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    d.select(col("doc_id"), tokHashes.as("th"))
+      .select(col("doc_id"),
+        when(col("th").isNull, lit(null).cast("long")).otherwise(bits).as("simhash"))
+  }
+
+  /** The capped containment screen over an explicit (id, grams) relation
+    * with the df relation derived inline, so the cut's bite can be pinned
+    * on a crafted hot corpus without an artifact. */
+  def containmentCappedOver(c: DataFrame, threshold: Double,
+                            dfCapInverse: Long): DataFrame =
+    Dedup.cappedWithDf(c, threshold, dfCapInverse,
+      c.select(explode(col("grams")).as("g"))
+        .groupBy("g").agg(count(lit(1)).as("df")))
+
+  /** The pre-round-9 pairs-based spelling of `Dedup.nearCanonBySig`
+    * (quadratic on hot clusters). */
+  def nearCanonByPairs(spark: SparkSession, dir: String): DataFrame =
+    Dedup.minhashPairs(spark, dir)
+      .filter(col("est_jaccard") >= Dedup.PipelineEstThreshold)
+      .groupBy(col("doc_b").as("doc_id"))
+      .agg(min(col("doc_a")).as("near_canon"))
+
+  /** The initial symbol relation of an explicit (doc_id, text) corpus. */
+  def symbols0Of(docs: DataFrame): DataFrame =
+    BpeTrainer.symbols0(docs.select(explode(tokens(lower(col("text")))).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("cnt")))
+
+  /** Un-materialized in-plan BATCHED BPE fold over an explicit corpus
+    * (crafted tiny inputs; the plan growth per round is why the gate path
+    * materializes). Returns (merges, finalSymbols). With m=1 the dominance
+    * window degenerates to the single argmax pair, so this reproduces the
+    * sequential fold exactly. */
+  def trainOver(docs: DataFrame, rounds: Int, m: Int = 1): (DataFrame, DataFrame) = {
+    val s0 = symbols0Of(docs)
+    val (merges, sK) = (1 to rounds).foldLeft((Seq.empty[DataFrame], s0)) {
+      case ((ms, s), t) =>
+        val bs = BpeTrainer.bestPairs(s, m)
+        val tagged = bs.select((lit((t - 1).toLong * m) + col("sel")).as("iter"),
+          col("a").as("pair_a"), col("b").as("pair_b"),
+          concat(col("a"), col("b")).as("merged"), col("c").as("pair_count"))
+        // per-round lineage cut — the in-plan fold otherwise re-derives
+        // s_{t-1} for every consumer (2^t tree growth; the gate path
+        // materializes to parquet instead)
+        (ms :+ tagged, BpeTrainer.lineageCut(BpeTrainer.applyMerges(s, bs)))
+    }
+    (merges.reduce(_ union _).orderBy(col("iter")), sK)
+  }
 
   /** Reference for `Similarity.ivf2PqRefineTopKSized`: the sized face
     * composed per request, every query-invariant input rebuilt as a Spark

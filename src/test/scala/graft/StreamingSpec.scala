@@ -1,10 +1,10 @@
 package graft
 
 import graft.streaming.StreamOps
-import graft.streaming.StreamOps.{Event, SessionOut}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.sql.Timestamp
@@ -13,6 +13,7 @@ import java.sql.Timestamp
   * oracle run incrementally over a MemoryStream with watermarks and
   * custom flatMapGroupsWithState sessionization. */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import StreamingSpec._
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -30,6 +31,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Base = 24L * 3600 * 1000
   private def ts(minute: Int): Timestamp = new Timestamp(Base + minute * 60000L)
 
+  /** Serves batch core `f` from a stream: each micro-batch of `input` goes
+    * through `f` and the result to `sink`. A core whose row results depend
+    * only on the row itself against a static side is exact per micro-batch
+    * however the requests chunk. `f` runs once per micro-batch, so build
+    * the static side inside `f`: a read there lists the files anew and an
+    * artifact append is visible on the next micro-batch, while a DataFrame
+    * built outside `f` keeps the file listing it was created with. */
+  private def perBatch(input: DataFrame)(f: DataFrame => DataFrame)
+                      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .foreachBatch { (b: Dataset[Row], id: Long) => sink(f(b), id) }
+      .start()
+
   test("streaming tumbling counts match the batch run of the same transform") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -39,7 +53,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(String, Timestamp, Double)]
     stream.addData(rows: _*)
     val sdf = stream.toDF().toDF("event_type", "ts", "value")
-    val q = StreamOps.tumblingCounts(sdf)
+    val q = tumblingCounts(sdf)
       .writeStream.format("memory").queryName("tumbling_out")
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
@@ -47,7 +61,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = spark.table("tumbling_out")
       .orderBy("window_start", "event_type")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    val batch = StreamOps.tumblingCounts(rows.toDF("event_type", "ts", "value"))
+    val batch = tumblingCounts(rows.toDF("event_type", "ts", "value"))
       .orderBy("window_start", "event_type")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(got.toSeq == batch.toSeq)
@@ -61,7 +75,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(String, Timestamp, Double)]
     val sdf = stream.toDF().toDF("event_type", "ts", "value")
-    val q = StreamOps.tumblingCounts(sdf)
+    val q = tumblingCounts(sdf)
       .writeStream.format("memory").queryName("wm_out")
       .outputMode("append").start()
     try {
@@ -96,7 +110,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Event(3L, ts(0), 6.0), Event(3L, ts(10), 7.0))
 
     // Batch reference via the same fold + session_window cross-check.
-    val batchOut = StreamOps.sessionizeBatch(evs.toDS()).collect()
+    val batchOut = sessionizeBatch(evs.toDS()).collect()
       .sortBy(s => (s.user_id, s.session_start)).toSeq
     val sw = evs.toDF("user_id", "ts", "value")
       .groupBy(session_window(col("ts"), "10 minutes").as("w"), col("user_id"))
@@ -110,7 +124,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Streaming: two micro-batches; a far-future event advances the
     // watermark so every session times out and flushes.
     val stream = MemoryStream[Event]
-    val q = StreamOps.sessionize(stream.toDS())
+    val q = sessionize(stream.toDS())
       .writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
     try {
@@ -137,13 +151,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, Timestamp, Double)]
     stream.addData(rows: _*)
     val sdf = stream.toDF().toDF("user_id", "ts", "value")
-    val q = StreamOps.enrichStream(sdf, dim, "user_id")
+    val q = enrichStream(sdf, dim, "user_id")
       .writeStream.format("memory").queryName("enrich_out")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("enrich_out")
       .select("user_id", "tier").as[(Long, Option[String])].collect().sortBy(_._1).toSeq
-    val batch = StreamOps.enrichStream(rows.toDF("user_id", "ts", "value"), dim, "user_id")
+    val batch = enrichStream(rows.toDF("user_id", "ts", "value"), dim, "user_id")
       .select("user_id", "tier").as[(Long, Option[String])].collect().sortBy(_._1).toSeq
     assert(got == batch)
     assert(got == Seq((1L, Some("gold")), (2L, Some("silver")), (3L, None)))
@@ -154,7 +168,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(String, Timestamp, Double)]
     val sdf = stream.toDF().toDF("doc_key", "ts", "value")
-    val q = StreamOps.dedupStream(sdf, "doc_key")
+    val q = dedupStream(sdf, "doc_key")
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").start()
     try {
@@ -180,7 +194,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, ts(100), 20.0),  // within 1h of click@90 only
       (2L, ts(80), 30.0),   // 70min after click@10 — outside the hour
       (3L, ts(5), 40.0))    // no click
-    val batch = StreamOps.intervalJoinStreams(
+    val batch = intervalJoinStreams(
         clicks.toDF("user_id", "ts", "value"),
         purchases.toDF("user_id", "ts", "value"))
       .collect().map(r => (r.getLong(0), r.getTimestamp(2), r.getDouble(3)))
@@ -189,7 +203,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val cs = MemoryStream[(Long, Timestamp, Double)]
     val ps = MemoryStream[(Long, Timestamp, Double)]
-    val q = StreamOps.intervalJoinStreams(
+    val q = intervalJoinStreams(
         cs.toDF().toDF("user_id", "ts", "value"),
         ps.toDF().toDF("user_id", "ts", "value"))
       .writeStream.format("memory").queryName("sj_out")
@@ -238,10 +252,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming CDC apply converges to the batch latest-wins merge") {
     import spark.implicits._
-    import StreamOps.{Change, SnapRow}
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Change]
-    val q = StreamOps.applyChangesStream(stream.toDS())
+    val q = applyChangesStream(stream.toDS())
       .writeStream.format("memory").queryName("cdc_out")
       .outputMode("update").start()
     try {
@@ -281,8 +294,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("qid", "clean_q")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.fuzzyStream(sdf, postings, c, numResults = 20) { (out, _) =>
-      buf ++= out.collect().map(_.toSeq)
+    val q = perBatch(sdf)(b => FuzzySearch.batchFuzzySearchOver(b, postings, c, 20)) {
+      (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
       // Split the request stream across two micro-batches: per-qid results
@@ -313,7 +326,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("qid", "clean_q")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.fuzzyStopgramStream(sdf, postings, allowed, c, numResults = 20) {
+    val q = perBatch(sdf)(b => FuzzySearch.batchFuzzySearchOver(b, postings, c, 20,
+        FuzzySearch.DefaultCap, Some(allowed))) {
       (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -330,11 +344,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stop-gram stream picks up gram-stats appends on the next micro-batch") {
-    // The by-name `allowed` claim (StreamOps.fuzzyStopgramStream doc):
-    // a gram-stats append between micro-batches must change the NEXT batch's
-    // results without restarting the query. Exercised for real here — the
-    // thunk re-folds the artifact each micro-batch, stats start at the
-    // base slice, and the append lands mid-stream.
+    // A gram-stats append between micro-batches must change the NEXT
+    // batch's results without restarting the query. Exercised for real
+    // here — the allowed set is built inside the per-batch core, so it
+    // re-folds the artifact each micro-batch, stats start at the base
+    // slice, and the append lands mid-stream.
     import graft.operators.FuzzySearch
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -391,9 +405,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val stream = MemoryStream[(Long, String)]
       val sdf = stream.toDF().toDF("qid", "clean_q")
       val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-      val q = StreamOps.fuzzyStopgramStream(sdf, postings,
-        FuzzySearch.allowedGramsIndexed(spark, dir, c, inv, version = Ver),
-        c, numResults = 20) { (out, _) => buf ++= out.collect().map(_.toSeq) }
+      val q = perBatch(sdf)(b => FuzzySearch.batchFuzzySearchOver(b, postings, c, 20,
+          FuzzySearch.DefaultCap,
+          Some(FuzzySearch.allowedGramsIndexed(spark, dir, c, inv, version = Ver)))) {
+        (out, _) => buf ++= out.collect().map(_.toSeq)
+      }
       val (p1, p2) = try {
         stream.addData(qa: _*)
         q.processAllAvailable()
@@ -433,9 +449,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sdf = stream.toDF().toDF("doc_id", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     // the corpus side is the MATERIALIZED band artifact, re-read per
-    // micro-batch (by-name) — the same relation the batch gate probes
-    val q = StreamOps.dedupScreenStream(sdf, Dedup.corpusBandsOf(spark, dir)) { (out, _) =>
-      buf ++= out.collect().map(_.toSeq)
+    // micro-batch — the same relation the batch gate probes
+    val q = perBatch(sdf)(b => Dedup.incrementalNearDupsOver(b, Dedup.corpusBandsOf(spark, dir))) {
+      (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
       // A doc's screen result depends only on its own row vs the static
@@ -466,8 +482,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String, String)]
     val sdf = stream.toDF().toDF("doc_id", "source", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.labelStream(sdf, spark.read.parquet(modelPath)) { (out, _) =>
-      buf ++= out.collect().map(_.toSeq)
+    val q = perBatch(sdf)(b => CorpusPrep.docBaseOverModel(b, spark.read.parquet(modelPath))) {
+      (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
       // labels are row-local vs the frozen model — chunking must not
@@ -501,10 +517,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, Seq[String])]
     val sdf = stream.toDF().toDF("id", "grams")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.containmentScreenStream(sdf,
-      Dedup.canonGrams(spark, dir)
-        .filter(pmod(col("id"), lit(Dedup.IncMod)) =!= Dedup.IncRem),
-      t) { (out, _) => buf ++= out.collect().map(_.toSeq) }
+    val q = perBatch(sdf)(b => Dedup.containmentScreenOver(b,
+        Dedup.canonGrams(spark, dir)
+          .filter(pmod(col("id"), lit(Dedup.IncMod)) =!= Dedup.IncRem),
+        t)) { (out, _) => buf ++= out.collect().map(_.toSeq) }
     try {
       // a record's result depends only on itself vs the standing corpus —
       // chunking must not change the union of results
@@ -532,10 +548,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("qid", "term")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.searchStream(sdf,
-      graft.operators.Retrieval.wordPostingsOf(spark, dir),
-      graft.operators.Retrieval.wordStatsOf(spark, dir), k = 15) { (out, _) =>
-      buf ++= out.collect().map(_.toSeq)
+    val q = perBatch(sdf)(b => graft.operators.Retrieval.bm25BatchOverPostings(b,
+        graft.operators.Retrieval.wordPostingsOf(spark, dir),
+        graft.operators.Retrieval.wordStatsOf(spark, dir), k = 15)) {
+      (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
       // split BETWEEN requests (qids are atomic): qids 0-1 then 2-3
@@ -565,7 +581,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String, String, String)]
     val sdf = stream.toDF().toDF("doc_id", "source", "lang", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.decontaminateStream(sdf, evalW) { (out, _) =>
+    val q = perBatch(sdf)(b => CorpusPrep.decontaminateOver(b, evalW)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -594,7 +610,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("doc_id", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.dsirStream(sdf, model) { (out, _) =>
+    val q = perBatch(sdf)(b => Dsir.dsirScoreOver(b, model)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -626,7 +642,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("doc_id", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.qualityScoreStream(sdf, weights) { (out, _) =>
+    val q = perBatch(sdf)(b =>
+        QualityModel.scoreWith(QualityModel.featuresOver(b), weights)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -656,7 +673,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("doc_id", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.lmScoreStream(sdf, model) { (out, _) =>
+    val q = perBatch(sdf)(b => LmQuality.scoreAgainstModel(b, model)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -686,7 +703,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("doc_id", "text")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.minsegEncodeStream(sdf, enc) { (out, _) =>
+    val q = perBatch(sdf)(b => Unigram.encodeOver(b, enc)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -716,7 +733,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("doc_id", "source")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.epochScheduleStream(sdf, plan) { (out, _) =>
+    val q = perBatch(sdf)(b => Pipeline.epochScheduleOver(b, plan)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -761,10 +778,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (targetId, targetQ) = (target.getLong(0), target.getString(1))
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("qid", "clean_q")
-    val perBatch = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    // the static sides are BY-NAME: a fresh read (fresh file listing) per batch
-    val q = StreamOps.fuzzyStream(sdf, spark.read.parquet(path), c, 20) { (out, bid) =>
-      perBatch(bid) = out.collect().map(_.getLong(1)).toSet
+    val served = scala.collection.mutable.Map.empty[Long, Set[Long]]
+    // the postings read is built inside the per-batch core: a fresh file
+    // listing per micro-batch
+    val q = perBatch(sdf)(b =>
+        FuzzySearch.batchFuzzySearchOver(b, spark.read.parquet(path), c, 20)) { (out, bid) =>
+      served(bid) = out.collect().map(_.getLong(1)).toSet
     }
     try {
       stream.addData((1L, targetQ))
@@ -773,10 +792,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       stream.addData((2L, targetQ))
       q.processAllAvailable()
     } finally q.stop()
-    assert(!perBatch(0L).contains(targetId),
-      s"target $targetId indexed before the append: ${perBatch(0L)}")
-    assert(perBatch(1L).contains(targetId),
-      s"append not visible on the next micro-batch: ${perBatch(1L)}")
+    assert(!served(0L).contains(targetId),
+      s"target $targetId indexed before the append: ${served(0L)}")
+    assert(served(1L).contains(targetId),
+      s"append not visible on the next micro-batch: ${served(1L)}")
   }
 
   test("a DSIR model append is visible to the running stream on the next micro-batch") {
@@ -795,10 +814,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probeRow = probe.collect().map(r => (r.getLong(0), r.getString(1))).head
     val stream = MemoryStream[(Long, String)]
     val sdf = stream.toDF().toDF("doc_id", "text")
-    val perBatch = scala.collection.mutable.Map.empty[Long, Long]
-    // the model is BY-NAME: a fresh read (fresh file listing) per batch
-    val q = StreamOps.dsirStream(sdf, spark.read.parquet(path)) { (out, bid) =>
-      perBatch(bid) = out.collect().head.getLong(2)
+    val served = scala.collection.mutable.Map.empty[Long, Long]
+    // the model read is built inside the per-batch core: a fresh file
+    // listing per micro-batch
+    val q = perBatch(sdf)(b => Dsir.dsirScoreOver(b, spark.read.parquet(path))) { (out, bid) =>
+      served(bid) = out.collect().head.getLong(2)
     }
     try {
       stream.addData(probeRow)
@@ -815,9 +835,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val afterWant = scoreUnder(Dsir.modelCounts(d))
     assert(beforeWant != afterWant,
       "append changed nothing — the visibility pin is vacuous")
-    assert(perBatch(0L) == beforeWant, s"pre-append score: ${perBatch(0L)}")
-    assert(perBatch(1L) == afterWant,
-      s"append not visible on the next micro-batch: ${perBatch(1L)}")
+    assert(served(0L) == beforeWant, s"pre-append score: ${served(0L)}")
+    assert(served(1L) == afterWant,
+      s"append not visible on the next micro-batch: ${served(1L)}")
   }
 
   test("streaming radius search matches the batch flagship on the same probe set") {
@@ -837,7 +857,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, Double, Double, String)]
     val sdf = stream.toDF().toDF("probe_id", "p_lat", "p_lng", "p_country")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.radiusStream(sdf, shp, radius) { (out, _) =>
+    val q = perBatch(sdf)(b => RadiusSearch.radiusSearchBatchOver(b, shp, radius)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -874,8 +894,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, Array[Float])]
     val sdf = stream.toDF().toDF("pid", "pemb")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.annStream(sdf, indexed, cent, k, nprobe) { (out, _) =>
-      buf ++= out.collect().map(_.toSeq)
+    val q = perBatch(sdf)(b => Similarity.ivfBatchTopKOver(b, indexed, cent, k, nprobe)) {
+      (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
       val (a, b) = probes.splitAt(probes.length / 2)
@@ -915,8 +935,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = MemoryStream[(Long, Array[Float])]
     val sdf = stream.toDF().toDF("pid", "pemb")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = StreamOps.annPqStream(sdf, spark.read.parquet(codesPath), cent,
-        books, labels, k, nprobe) { (out, _) =>
+    val q = perBatch(sdf)(b => Similarity.ivfPqBatchTopKOver(b,
+        spark.read.parquet(codesPath), cent, books, labels, k, nprobe)) { (out, _) =>
       buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -1056,6 +1076,143 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         case Some(p) => spark.conf.set("spark.graft.materialize.dir", p)
         case None => spark.conf.unset("spark.graft.materialize.dir")
       }
+    }
+  }
+}
+
+/** The window, join, dedup, change-feed and sessionization transforms the
+  * spec runs under both `spark.read` and `spark.readStream`. */
+object StreamingSpec {
+
+  /** Tumbling 1-hour counts per event type with a 2-hour watermark: late
+    * rows beyond the watermark are dropped, on-time aggregation state is
+    * bounded. Works on batch and streaming inputs alike (on batch the
+    * watermark is a no-op, per Spark semantics). */
+  def tumblingCounts(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("n_events"), col("sum_value"))
+
+  /** Stream-static enrichment: the event stream joined to a static (batch)
+    * dimension — Spark re-plans the static side per micro-batch, so a
+    * broadcastable dimension costs one broadcast per batch and no stream
+    * state at all. */
+  def enrichStream(events: DataFrame, dim: DataFrame, key: String): DataFrame =
+    events.join(broadcast(dim), Seq(key), "left")
+
+  /** Streaming exact dedup: first arrival of each `keyCol` wins,
+    * duplicates arriving within the watermark horizon are dropped, and
+    * the key state is EVICTED once the watermark passes it (bounded state
+    * at any stream length — a plain dropDuplicates would grow state
+    * forever). */
+  def dedupStream(events: DataFrame, keyCol: String): DataFrame =
+    events
+      .withWatermark("ts", "2 hours")
+      .dropDuplicatesWithinWatermark(keyCol)
+
+  /** Stream-stream interval join: purchases attributed to the click they
+    * followed within one hour, both sides watermarked so the join state
+    * for a time range is EVICTED once the watermark passes it (the time
+    * bound is what makes an append-mode stream-stream join legal at all).
+    * Batch-runs identically. */
+  def intervalJoinStreams(clicks: DataFrame, purchases: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("ts", "2 hours").alias("c")
+    val p = purchases.withWatermark("ts", "2 hours").alias("p")
+    c.join(p, expr(
+        """c.user_id = p.user_id AND
+          |p.ts >= c.ts AND p.ts <= c.ts + interval 1 hour""".stripMargin))
+      .select(col("c.user_id").as("user_id"), col("c.ts").as("click_ts"),
+        col("p.ts").as("purchase_ts"), col("p.value").as("purchase_value"))
+  }
+
+  case class Change(key: Long, version: Long, price: Double, op: String)
+  case class SnapRow(key: Long, version: Long, price: Double, deleted: Boolean)
+
+  /** A change feed (upserts + delete markers, possibly out of order) folded
+    * into per-key latest-wins state via mapGroupsWithState; each batch
+    * emits the key's current snapshot row. Higher version wins; at equal
+    * versions a delete beats an upsert. State is ONE row per live key, and
+    * a late lower-version change never regresses the snapshot. */
+  def applyChangesStream(changes: Dataset[Change]): Dataset[SnapRow] = {
+    import changes.sparkSession.implicits._
+    changes
+      .groupByKey(_.key)
+      .mapGroupsWithState[SnapRow, SnapRow](GroupStateTimeout.NoTimeout) {
+        (key: Long, rows: Iterator[Change], state: GroupState[SnapRow]) =>
+          val prior = state.getOption
+            .map(s => Change(key, s.version, s.price, if (s.deleted) "D" else "U"))
+          val winner = (prior.iterator ++ rows)
+            .maxBy(c => (c.version, if (c.op == "D") 1 else 0))
+          val out = SnapRow(key, winner.version, winner.price, winner.op == "D")
+          state.update(out)
+          out
+      }
+  }
+
+  case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
+  case class SessionState(start: Long, lastTs: Long, n: Int, sum: Double)
+  case class SessionOut(user_id: Long, session_start: Long, n_events: Int,
+                        sum_value: Double)
+
+  val SessionGapMs: Long = 10 * 60 * 1000L
+
+  private def closed(userId: Long, s: SessionState): SessionOut =
+    SessionOut(userId, s.start / 1000, s.n, s.sum)
+
+  /** One user's events, in time order, folded onto the open session
+    * `open`: an event within [[SessionGapMs]] of the session's last event
+    * extends it (boundary-touching rows merge), a later one closes it and
+    * opens the next. Returns the closed sessions and the one left open. */
+  private def foldSessions(userId: Long, open: Option[SessionState],
+                           rows: Iterator[Event]): (Vector[SessionOut], Option[SessionState]) =
+    rows.toSeq.sortBy(_.ts.getTime).foldLeft((Vector.empty[SessionOut], open)) {
+      case ((done, Some(s)), e) if e.ts.getTime <= s.lastTs + SessionGapMs =>
+        (done, Some(s.copy(lastTs = math.max(s.lastTs, e.ts.getTime), n = s.n + 1,
+          sum = s.sum + e.value)))
+      case ((done, cur), e) =>
+        val t = e.ts.getTime
+        (done ++ cur.map(closed(userId, _)), Some(SessionState(t, t, 1, e.value)))
+    }
+
+  /** Stateful sessionization via flatMapGroupsWithState, matching
+    * `session_window` with a 10-minute gap: a session closes when event
+    * time passes lastTs + gap (emitted on the next batch for that key) or
+    * the group's event-time timeout fires. State per key is ONE open
+    * session; the watermark bounds how long idle state lives. */
+  def sessionize(events: Dataset[Event]): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    events
+      .withWatermark("ts", "2 hours")
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[SessionState, SessionOut](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            Iterator(closed(userId, s))
+          } else {
+            val (done, open) = foldSessions(userId, state.getOption, rows)
+            open.foreach { s =>
+              state.update(s)
+              state.setTimeoutTimestamp(s.lastTs + SessionGapMs)
+            }
+            done.iterator
+          }
+      }
+  }
+
+  /** The batch run of [[sessionize]] with every open session flushed: in
+    * batch mode each group sees ALL its rows in one call and nothing times
+    * out, so the open session left by the fold is the user's last one. */
+  def sessionizeBatch(events: Dataset[Event]): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(_.user_id).flatMapGroups { (userId, rows) =>
+      val (done, open) = foldSessions(userId, None, rows)
+      (done ++ open.map(closed(userId, _))).iterator
     }
   }
 }

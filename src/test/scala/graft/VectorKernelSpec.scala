@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -9,6 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Native vector/minhash kernels must be BIT-identical to the composed
   * built-in-expression forms (which the DuckDB oracles mirror). */
 class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import VectorKernelSpec._
 
   val Sf = "/root/testdata/sf0.001"
 
@@ -28,7 +29,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probe = emb.filter(col("vec_id") === 0L).select(col("embedding").as("p"))
     val diff = emb.crossJoin(probe)
       .select(Similarity.cosine(col("embedding"), col("p")).as("fast"),
-        Similarity.cosineComposed(col("embedding"), col("p")).as("slow"))
+        cosineComposed(col("embedding"), col("p")).as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(diff == 0)
   }
@@ -37,7 +38,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probe = emb.filter(col("vec_id") === 1L).select(col("embedding").as("p"))
     val diff = emb.crossJoin(probe)
       .select(Similarity.dot(col("embedding"), col("p")).as("fast"),
-        Similarity.dotComposed(col("embedding"), col("p")).as("slow"))
+        dotComposed(col("embedding"), col("p")).as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(diff == 0)
   }
@@ -46,7 +47,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val books = Similarity.pqCodebooks(emb, 25L)
     val fast = Similarity.pqEncode(emb, books).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val slow = Similarity.pqEncodeComposed(emb, books).collect()
+    val slow = pqEncodeComposed(emb, books).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(fast.nonEmpty && fast == slow)
   }
@@ -54,7 +55,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("LSH signature kernel matches the composed form") {
     val diff = emb
       .select(Similarity.lshSignature(col("embedding"), 8).as("fast"),
-        Similarity.lshSignatureComposed(col("embedding"), 8).as("slow"))
+        lshSignatureComposed(col("embedding"), 8).as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(diff == 0)
   }
@@ -63,7 +64,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val diff = emb
       .select(explode(zip_with(
         Similarity.rpProject(col("embedding")),
-        Similarity.rpProjectComposed(col("embedding")),
+        rpProjectComposed(col("embedding")),
         (fast, slow) => fast =!= slow)).as("ne"))
       .filter(col("ne")).count()
     assert(diff == 0)
@@ -71,7 +72,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MinHash signature expression matches the composed pipeline") {
     val fast = Dedup.minhashSignatures(spark, Sf)
-    val slow = Dedup.minhashSignaturesComposed(spark, Sf).withColumnRenamed("sig", "sig2")
+    val slow = minhashSignaturesComposed(spark, Sf).withColumnRenamed("sig", "sig2")
     val diff = fast.join(slow, "doc_id").filter(col("sig") =!= col("sig2")).count()
     assert(diff == 0)
   }
@@ -85,7 +86,7 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
         pmod(col("a.doc_id"), lit(13L)) === pmod(col("b.doc_id"), lit(13L)))
     val diff = pairs.select(
         Dedup.sigEst(col("a.sig"), col("b.sig")).as("fast"),
-        Dedup.sigEstComposed(col("a.sig"), col("b.sig")).as("slow"))
+        sigEstComposed(col("a.sig"), col("b.sig")).as("slow"))
       .filter(!(col("fast") <=> col("slow"))).count()
     assert(diff == 0)
   }
@@ -131,4 +132,83 @@ class VectorKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sigs(5L) != sigs(6L))
     assert(sigs.values.forall(_.length == 16))
   }
+}
+
+/** The composed built-in-expression forms (interpreted HOFs) the native
+  * kernels are checked against; the DuckDB oracles mirror these. */
+object VectorKernelSpec {
+  import graft.functions.TextFunctions.{HashMod, polyHash, tokens, wordShingles}
+
+  def dotComposed(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+
+  def cosineComposed(a: Column, b: Column): Column =
+    dotComposed(a, b) / (sqrt(dotComposed(a, a)) * sqrt(dotComposed(b, b)))
+
+  def lshSignatureComposed(emb: Column, planes: Int): Column = {
+    // Pseudo-random plane component for (p, i): centered hash in [-0.5, 0.5).
+    def comp(p: Int): Column => Column = i =>
+      (pmod(i * 2654435761L + lit(p.toLong) * 40503L + 12345L, lit(1000L)).cast("double") / 1000.0) - 0.5
+    (0 until planes).map { p =>
+      val proj = aggregate(
+        zip_with(emb, sequence(lit(0L), size(emb).cast("long") - 1L),
+          (x, i) => x.cast("double") * comp(p)(i)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+  }
+
+  /** Per (vector, subspace) argmin over the subspace's codewords; ties →
+    * smallest cid. */
+  def pqEncodeComposed(e: DataFrame, books: DataFrame): DataFrame = {
+    import Similarity.{PqDim, PqM, l2sq}
+    val byM = books.groupBy(col("m"))
+      .agg(array_sort(collect_list(struct(col("cid"), col("cemb")))).as("bs"))
+    e.withColumn("m", explode(sequence(lit(0), lit(PqM - 1))))
+      .join(broadcast(byM), "m")
+      .withColumn("sub", slice(col("embedding"), col("m") * PqDim + 1, lit(PqDim))
+        .cast("array<double>"))
+      .withColumn("best", array_max(transform(col("bs"), b =>
+        struct((-l2sq(col("sub"), b("cemb"))).as("nd"), (-b("cid")).as("nc")))))
+      .select(col("vec_id"), col("m"), (-col("best.nc")).as("code"))
+  }
+
+  /** Unrolled per output component, like lshSignatureComposed. */
+  def rpProjectComposed(emb: Column, dPrime: Int = Similarity.RpDim): Column =
+    array((0 until dPrime).map { p =>
+      aggregate(
+        zip_with(emb, sequence(lit(0L), size(emb).cast("long") - 1L),
+          (x, i) => when(
+            pmod(i * 2654435761L + lit(p.toLong * 40503L + 12345L), lit(1000L)) < 500L,
+            x.cast("double")).otherwise(-x.cast("double"))),
+        lit(0.0), (acc, x) => acc + x)
+    }: _*)
+
+  def charNgramsComposed(c: Column, n: Int): Column =
+    when(length(c) < n, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(0), length(c) - n), i => c.substr(i + 1, lit(n))))
+
+  def charNgramSetComposed(c: Column, n: Int): Column =
+    array_distinct(charNgramsComposed(c, n))
+
+  /** The minhash signature in its original composed formulation. */
+  def minhashSignaturesComposed(spark: SparkSession, dir: String): DataFrame = {
+    import Dedup.{MinHashK, ShingleWords, permA, permB}
+    val d = Tables.documents(spark, dir)
+    val toks = tokens(lower(col("text")))
+    val shingleHashes = array_distinct(transform(
+      wordShingles(toks, ShingleWords), s => polyHash(s)))
+    val sig = array((0 until MinHashK).map { i =>
+      array_min(transform(col("sh"), h => (h * permA(i) + permB(i)) % HashMod))
+    }: _*)
+    d.select(col("doc_id"), shingleHashes.as("sh"))
+      .withColumn("sig", sig)
+      .select(col("doc_id"), col("sig"))
+  }
+
+  def sigEstComposed(a: Column, b: Column): Column =
+    size(filter(sequence(lit(1), lit(Dedup.MinHashK)),
+      i => element_at(a, i) === element_at(b, i)))
+      .cast("double") / Dedup.MinHashK.toDouble
 }
