@@ -7,7 +7,10 @@ import org.apache.spark.sql.functions.col
   * `version`), the row-local derivation from an input relation, the file
   * layout its writes keep, and the fold compaction applies to the current
   * rows. [[Materialize]] runs ensure, append and compact from it
-  * generically, so a kind never hand-writes its own lifecycle.
+  * generically, so a kind never hand-writes its own lifecycle: every
+  * write below goes to a path no reader sees yet (the build of generation
+  * 0, or a staging dir that Materialize commits), never into a live
+  * generation.
   *
   * `derive` must be row-local (derive(a ∪ b) == derive(a) ∪ derive(b)):
   * that is what makes an append equal a rebuild. A derivation over a
@@ -23,10 +26,11 @@ final case class Artifact(kind: String, version: Int,
                           layout: Artifact.Layout,
                           fold: DataFrame => DataFrame = identity) {
 
-  /** Write `rows` in this artifact's layout; `appending` picks the
-    * append-side file count, the build side otherwise (compaction writes
-    * the build side). */
-  private[graft] def write(rows: DataFrame, path: String, mode: String,
+  /** Write `rows` in this artifact's layout to a fresh `path` (a build's
+    * target or a staging dir; appends and compactions stage too);
+    * `appending` picks the append-side file count, the build side
+    * otherwise (compaction writes the build side). */
+  private[graft] def write(rows: DataFrame, path: String,
                            appending: Boolean): Unit = {
     import Artifact._
     val laid = layout match {
@@ -37,7 +41,7 @@ final case class Artifact(kind: String, version: Int,
           .sortWithinPartitions(sortBy.map(col): _*)
       case Cells => rows
     }
-    val w = laid.write.mode(mode)
+    val w = laid.write.mode("overwrite")
     (if (layout == Cells) w.partitionBy("cell") else w).parquet(path)
   }
 }

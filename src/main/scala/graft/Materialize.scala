@@ -23,31 +23,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    dir, batch, batchTag)`, `compact(spark, a, dir)` and
   *    `compactIfDue(spark, a, dir)` — are its one lifecycle: new data
   *    batches land as new files in the same layout, and compaction folds
-  *    them back into the build layout. No per-kind ensure/append/compact
-  *    face exists.
+  *    them back into the build layout. Every append, tagged or not, goes
+  *    through [[appendBatch]], so every appended file carries its batch's
+  *    commit marker. No per-kind ensure/append/compact face exists.
   *  - **Staleness-guarded** — each artifact records a manifest of the
   *    input dir's direct children (name → mtime) at build/append time. A
   *    recorded child later MODIFIED or REMOVED marks the artifact stale:
-  *    `ensure` rebuilds it, `append` refuses (the base the append would
-  *    extend no longer exists). NEW children alone are a legitimate
-  *    ingest increment — the key stays stable so the append lifecycle
-  *    works — which is exactly the distinction a fingerprint folded into
-  *    the key cannot make (it re-keys on every increment and the
-  *    incremental path can never fire).
+  *    `ensure` rebuilds it, `append` and `refreshWith` refuse (the base
+  *    they would extend no longer exists). NEW children alone are a
+  *    legitimate ingest increment — the key stays stable so the append
+  *    lifecycle works — which is exactly the distinction a fingerprint
+  *    folded into the key cannot make (it re-keys on every increment and
+  *    the incremental path can never fire).
   *  - **Generation-pinned** (round 15) — every path this object returns
   *    (or [[servingPath]] resolves) is an IMMUTABLE COMMITTED GENERATION
   *    directory: no operation ever deletes or renames a file a committed
-  *    generation holds (appends only ADD files). The swap faces
-  *    ([[refreshWith]], [[compact]], a stale `ensure`) build the NEXT
-  *    generation as a sibling (`<artifact>.gen-000001`, …) and commit it
-  *    with one directory rename, so a reader holding a lazy plan over the
-  *    prior generation keeps evaluating correctly THROUGH the swap; new
-  *    resolutions see the new generation the instant its rename lands.
+  *    batch holds (appends only ADD files; the one delete is the repair of
+  *    a crashed attempt's unmarked files). The swap steps ([[refreshWith]],
+  *    [[compact]], a stale or invalidated `ensure`) build the NEXT
+  *    generation as a sibling (`<artifact>.gen-000001`, …) through one
+  *    stage-and-commit core ([[commitNext]]: repair the generation the
+  *    write reads, stage, require `_SUCCESS`, carry the `_BATCH_` markers,
+  *    record the manifest, commit with one directory rename), so a reader
+  *    holding a lazy plan over the prior generation keeps evaluating
+  *    correctly THROUGH the swap; new resolutions see the new generation
+  *    the instant its rename lands.
   *    [[invalidate]] tombstones instead of deleting for the same reason.
   *    [[gc]] reclaims superseded generations only after
   *    [[GcStagingMinAgeMs]] has passed since the CURRENT generation
   *    committed — the grace window a concurrent reader's in-flight
   *    request must finish within (MutationServeSpec pins the lifecycle).
+  *    [[refreshAuto]] is the one delta-vs-rebuild dispatcher of the
+  *    refreshWith families.
   *  - **Versioned** — callers bump `version` whenever the derivation
   *    changes; a stale layout written by earlier code is then simply a
   *    different path and can never be read by mistake.
@@ -190,35 +197,34 @@ object Materialize {
     * serving threads racing into a cold or just-invalidated `ensure`
     * would otherwise both see no committed generation and interleave
     * parquet writes on one path. Keyed by the qualified handle so
-    * distinct warehouses never share a lock. Readers don't lock. */
-  private def locked[T](spark: SparkSession, handle: String)(body: => T): T = {
-    val key = {
-      val p = new Path(handle)
-      fsOf(spark, p).makeQualified(p).toString
-    }
-    artifactLocks.computeIfAbsent(key, _ => new Object).synchronized(body)
+    * distinct warehouses never share a lock. Readers don't lock. `body`
+    * gets the handle's filesystem and the handle. */
+  private def locked[T](spark: SparkSession, handlePath: String)
+                       (body: (FileSystem, Path) => T): T = {
+    val handle = new Path(handlePath)
+    val fs = fsOf(spark, handle)
+    artifactLocks.computeIfAbsent(fs.makeQualified(handle).toString, _ => new Object)
+      .synchronized(body(fs, handle))
   }
 
   /** Whether the artifact has a COMMITTED, non-tombstoned generation —
-    * the refresh dispatchers' bootstrap test (a delta face needs a prior
+    * [[refreshAuto]]'s bootstrap test (a delta face needs a prior
     * to carry; absent ⇒ the first build is an ensure, not a refresh). */
   def isBuilt(spark: SparkSession, kind: String, dir: String, version: Int): Boolean = {
     val handle = new Path(artifactPath(spark, kind, dir, version))
     liveGen(fsOf(spark, handle), handle).isDefined
   }
 
-  /** Whether the live generation is committed AND manifest-fresh — the
-    * refresh dispatchers' precondition for their DELTA arm. A re-published
+  /** Whether the live generation is committed AND manifest-fresh —
+    * [[refreshAuto]]'s precondition for its DELTA arm. A re-published
     * input (recorded child modified or removed) makes the prior rows an
     * invalid delta base ([[refreshWith]] rejects it), so a dispatcher
     * seeing `false` here routes to the exact rebuild instead. */
   def isDeltaBase(spark: SparkSession, kind: String, dir: String,
                   version: Int): Boolean = {
     val handle = new Path(artifactPath(spark, kind, dir, version))
-    liveGen(fsOf(spark, handle), handle).exists { g =>
-      readManifest(spark, g.path.toString)
-        .exists(m => !staleAgainst(m, listInputs(spark, dir)))
-    }
+    liveGen(fsOf(spark, handle), handle)
+      .exists(g => isFresh(spark, g.path, listInputs(spark, dir)))
   }
 
   private val ManifestFile = "_GRAFT_INPUTS"
@@ -304,17 +310,107 @@ object Materialize {
                            current: Map[String, Long]): Boolean =
     recorded.exists { case (name, mtime) => !current.get(name).contains(mtime) }
 
-  /** Build the NEXT generation: stage the build, finalize its metadata,
-    * then commit with ONE directory rename — the instant the rename
-    * lands, new resolutions see a complete generation (`_SUCCESS`,
-    * manifest, any carried `_BATCH_` markers all present), and until it
-    * lands they see the prior one. Prior generations are never touched
-    * here; [[gc]] reclaims them after the grace window. */
-  private def commitNextGen(spark: SparkSession, fs: FileSystem, handle: Path,
-                            staging: Path, inputs: Option[Map[String, Long]]): String = {
-    require(fs.exists(new Path(staging, "_SUCCESS")),
-      s"build did not commit to $staging")
+  /** Whether generation `gen` has a manifest fresh against `current` (a
+    * pre-manifest generation reads as stale: provenance unknown). */
+  private def isFresh(spark: SparkSession, gen: Path,
+                      current: Map[String, Long]): Boolean =
+    readManifest(spark, gen.toString).exists(m => !staleAgainst(m, current))
+
+  // ---------------------------------------------------------------- //
+  // the lifecycle core: one staging path, one repair, one commit      //
+  // ---------------------------------------------------------------- //
+
+  private val MarkerPrefix = "_BATCH_"
+
+  /** The live generation a mutating step works on, under the caller's
+    * lock; a never-built or tombstoned artifact is refused. */
+  private def live(fs: FileSystem, handle: Path, step: String): Path =
+    liveGen(fs, handle).map(_.path).getOrElse(throw new IllegalArgumentException(
+      s"$step absent artifact $handle — build it with ensure() first"))
+
+  /** A step that extends or re-derives from the live rows (append,
+    * refresh) needs them manifest-fresh: over a re-published input they
+    * are no valid base, and carrying them into a fresh-manifested
+    * generation would launder the staleness into an artifact that
+    * ensure() then serves forever. */
+  private def requireFresh(spark: SparkSession, gen: Path, dir: String,
+                           current: Map[String, Long], step: String): Unit =
+    require(isFresh(spark, gen, current),
+      s"$step STALE artifact $gen — a recorded input of $dir was modified " +
+        "or removed; rebuild with ensure() first")
+
+  /** Every file under `dir`, by `listStatus` recursion. Not `listFiles`:
+    * it builds a `LocatedFileStatus` per file, which on the local
+    * filesystem reads each file's owner and permissions (measured on 4
+    * vCPU: +1.5 s on perfbench's `ingest_serve` compact step, 3 artifacts
+    * of ~35 files). */
+  private def filesUnder(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq.flatMap(s =>
+      if (s.isDirectory) filesUnder(fs, s.getPath) else Seq(s.getPath))
+
+  /** Generation `gen`'s committed batch tags (its `_BATCH_<tag>` markers)
+    * and its `batch-` data files at any depth (a cell-partitioned
+    * generation keeps them in its `cell=<k>` dirs). A file belongs to a
+    * committed batch iff it starts `batch-<tag>-` for a marked tag — never
+    * parsed out of the file name, so an artifact appended by an older
+    * build whose tags contained '-' keeps its committed files. */
+  private def batches(fs: FileSystem, gen: Path): (Set[String], Seq[Path]) = {
+    val files = filesUnder(fs, gen)
+    (files.map(_.getName).filter(_.startsWith(MarkerPrefix))
+      .map(_.stripPrefix(MarkerPrefix)).toSet,
+      files.filter(_.getName.startsWith("batch-")))
+  }
+
+  /** The repair run before a generation's rows are read into the next
+    * one: a crashed [[appendBatch]] attempt leaves `batch-<tag>-` files
+    * without their marker. Read in, the partial batch would be baked into
+    * the next generation, and the tag's at-least-once replay (marker
+    * still absent) would add the whole batch again. The delete is safe
+    * under the lock: the attempt's writer JVM is dead. Returns the
+    * committed tags. */
+  private def dropUncommitted(fs: FileSystem, gen: Path): Set[String] = {
+    val (tags, files) = batches(fs, gen)
+    files.filterNot(f => tags.exists(t => f.getName.startsWith(s"batch-$t-")))
+      .foreach(fs.delete(_, false))
+    tags
+  }
+
+  /** Run `write` into a clean staging dir; it must end with a committed
+    * parquet write (`_SUCCESS`). */
+  private def stage(fs: FileSystem, staging: Path)(write: String => Unit): Path = {
+    if (fs.exists(staging)) fs.delete(staging, true)
+    write(staging.toString)
+    require(fs.exists(new Path(staging, "_SUCCESS")), s"write did not commit to $staging")
+    staging
+  }
+
+  /** The one stage-and-commit core of every step that writes a NEXT
+    * generation — a stale or invalidated [[ensure]], [[compact]] and
+    * [[refreshWith]] — run under the caller's lock. `base` is the
+    * generation the write reads (compact, refresh; a rebuild reads none):
+    * it is repaired first, and its `_BATCH_` markers carry into the new
+    * generation, because the batches they record are inside the rows the
+    * write read — a late replay still short-circuits in [[appendBatch]].
+    * `write` stages at `<handle><suffix>`; `inputs` is the manifest the
+    * new generation records. */
+  private def commitNext(spark: SparkSession, fs: FileSystem, handle: Path,
+                         suffix: String, base: Option[Path],
+                         inputs: Option[Map[String, Long]])
+                        (write: String => Unit): String = {
+    val carried = base.map(dropUncommitted(fs, _)).getOrElse(Set.empty[String])
+    val staging = stage(fs, new Path(s"$handle$suffix"))(write)
+    carried.foreach(t => fs.create(new Path(staging, MarkerPrefix + t), true).close())
     inputs.foreach(writeManifest(spark, staging.toString, _))
+    commitNextGen(spark, fs, handle, staging)
+  }
+
+  /** Commit a finished staging dir as the next generation with ONE
+    * directory rename: the instant it lands, new resolutions see a
+    * complete generation (`_SUCCESS`, manifest, carried markers), and
+    * until it lands they see the prior one. Prior generations are never
+    * touched here; [[gc]] reclaims them after the grace window. */
+  private def commitNextGen(spark: SparkSession, fs: FileSystem, handle: Path,
+                            staging: Path): String = {
     val gen = nextGenPath(fs, handle)
     if (fs.exists(gen)) fs.delete(gen, true) // unreachable: k > every sibling
     require(fs.rename(staging, gen), s"could not commit $staging to $gen")
@@ -322,6 +418,27 @@ object Materialize {
     ensuredThisSession.add(fs.makeQualified(gen).toString)
     gen.toString
   }
+
+  /** [[compact]] and [[refreshWith]]: the next generation written from the
+    * live one's rows. They differ in the manifest only, and so in whether
+    * the prior must be fresh: a fold does not re-derive, so the prior's
+    * manifest carries over; a refresh re-derives against the current
+    * inputs and records them. */
+  private def advance(spark: SparkSession, kind: String, dir: String, version: Int,
+                      step: String, suffix: String, rederive: Boolean)
+                     (write: (DataFrame, String) => Unit): String =
+    locked(spark, artifactPath(spark, kind, dir, version)) { (fs, handle) =>
+      val g = live(fs, handle, step)
+      val inputs =
+        if (!rederive) readManifest(spark, g.toString)
+        else {
+          val current = listInputs(spark, dir)
+          requireFresh(spark, g, dir, current, step)
+          Some(current)
+        }
+      commitNext(spark, fs, handle, suffix, Some(g), inputs)(
+        write(Tables.parquet(spark, g.toString), _))
+    }
 
   private val EnsureStagingSuffix = ".genstage"
 
@@ -363,9 +480,7 @@ object Materialize {
 
   private def ensureAt(spark: SparkSession, handlePath: String,
                        current: Map[String, Long])
-                      (build: String => Unit): String = locked(spark, handlePath) {
-    val handle = new Path(handlePath)
-    val fs = fsOf(spark, handle)
+                      (build: String => Unit): String = locked(spark, handlePath) { (fs, handle) =>
     liveGen(fs, handle) match {
       case Some(g)
         if readManifest(spark, g.path.toString)
@@ -375,21 +490,7 @@ object Materialize {
         requireNonEmpty(spark, g.path.toString)
         ensuredThisSession.add(fs.makeQualified(g.path).toString)
         g.path.toString
-      case Some(_) =>
-        // stale — next generation; the stale one stays readable until gc
-        val staging = new Path(handlePath + EnsureStagingSuffix)
-        if (fs.exists(staging)) fs.delete(staging, true)
-        build(staging.toString)
-        commitNextGen(spark, fs, handle, staging, Some(current))
-      case None if readGen(fs, handle).isDefined =>
-        // only tombstoned generations remain (an invalidate) — rebuild as
-        // the next generation; the tombstoned one keeps serving readers
-        // that resolved before this commit
-        val staging = new Path(handlePath + EnsureStagingSuffix)
-        if (fs.exists(staging)) fs.delete(staging, true)
-        build(staging.toString)
-        commitNextGen(spark, fs, handle, staging, Some(current))
-      case None =>
+      case None if readGen(fs, handle).isEmpty =>
         // bootstrap: generation 0 builds in place at the handle (nothing
         // can be reading an artifact that never committed)
         build(handlePath)
@@ -397,43 +498,11 @@ object Materialize {
         requireNonEmpty(spark, handlePath)
         ensuredThisSession.add(fs.makeQualified(handle).toString)
         handlePath
-    }
-  }
-
-  /** Incremental artifact refresh — the materialized-layout face of the
-    * reference's `add_entity` (geo_manager.py:451-476): `appendBuild(path)`
-    * must finish with a committed `mode("append")` write, landing the new
-    * batch's rows as NEW FILES in the current generation's existing
-    * layout (same schema, same partitioning). Readers then see old ∪ new
-    * — an append never deletes or renames, so plans already evaluating
-    * stay valid (they simply don't see the new files until re-planned).
-    *
-    * Exactness holds for row-local derivations (posting explode, cell
-    * assignment under a FROZEN codebook): derive(corpus ∪ batch) ==
-    * derive(corpus) ∪ derive(batch), so append-then-read is bit-identical
-    * to rebuild-then-read (IncrementalIndexSpec pins both index kinds).
-    * The trade is file-level, not row-level: appended files cluster the
-    * BATCH by the layout key, so per-file min/max stats stay tight but the
-    * artifact accumulates one file set per batch — at scale a periodic
-    * compaction ([[compact]], now a next-generation fold) restores the
-    * single-sorted-run read. */
-  private[graft] def append(spark: SparkSession, kind: String, dir: String, version: Int)
-                            (appendBuild: String => Unit): String = {
-    val handlePath = artifactPath(spark, kind, dir, version)
-    locked(spark, handlePath) {
-      val handle = new Path(handlePath)
-      val fs = fsOf(spark, handle)
-      val g = liveGen(fs, handle).getOrElse(throw new IllegalArgumentException(
-        s"append to absent artifact $handlePath — build it with ensure() first"))
-      val current = listInputs(spark, dir)
-      require(readManifest(spark, g.path.toString)
-          .exists(m => !staleAgainst(m, current)),
-        s"append to STALE artifact ${g.path} — a recorded input of $dir was " +
-          "modified or removed; rebuild with ensure() first")
-      appendBuild(g.path.toString)
-      // future staleness checks compare against the post-append input state
-      writeManifest(spark, g.path.toString, current)
-      g.path.toString
+      case _ =>
+        // stale, or only tombstoned generations remain (an invalidate):
+        // rebuild as the next generation; the prior keeps serving readers
+        // that resolved before this commit, until gc
+        commitNext(spark, fs, handle, EnsureStagingSuffix, None, Some(current))(build)
     }
   }
 
@@ -451,11 +520,8 @@ object Materialize {
     * refresh cadence decides when to pay the exact rebuild. Returns true
     * if a live generation existed and was tombstoned. */
   def invalidate(spark: SparkSession, kind: String, dir: String,
-                 version: Int): Boolean = {
-    val handlePath = artifactPath(spark, kind, dir, version)
-    locked(spark, handlePath) {
-      val handle = new Path(handlePath)
-      val fs = fsOf(spark, handle)
+                 version: Int): Boolean =
+    locked(spark, artifactPath(spark, kind, dir, version)) { (fs, handle) =>
       liveGen(fs, handle) match {
         case None => false
         case Some(g) =>
@@ -463,86 +529,48 @@ object Materialize {
           true
       }
     }
-  }
 
-  /** Periodic compaction of an appended artifact: every [[append]] lands
-    * one batch-sized file set, so reads accumulate small files and lose
-    * the single-sorted-run property; `rewrite(current, tmpPath)` must
+  /** Periodic compaction of an appended artifact: every append lands one
+    * batch-sized file set, so reads accumulate small files and lose the
+    * single-sorted-run property; `rewrite(current, tmpPath)` must
     * re-derive the CANONICAL layout (the same write [[ensure]]'s build
     * performs) from the artifact's current contents into `tmpPath`, which
     * is then committed as the NEXT GENERATION. Contents are unchanged
     * — compaction reorganizes files, it does not re-derive from source —
     * so compact-then-read == read (IncrementalIndexSpec pins it against a
-    * wholesale rebuild). The prior generation's files are never touched:
-    * concurrent readers mid-plan keep a complete artifact; [[gc]]
-    * reclaims it after the grace window. */
+    * wholesale rebuild), and the input manifest carries over. */
   private[graft] def compact(spark: SparkSession, kind: String, dir: String, version: Int)
-                             (rewrite: (DataFrame, String) => Unit): String = {
-    val handlePath = artifactPath(spark, kind, dir, version)
-    locked(spark, handlePath) {
-      val handle = new Path(handlePath)
-      val fs = fsOf(spark, handle)
-      val g = liveGen(fs, handle).getOrElse(throw new IllegalArgumentException(
-        s"compact of absent artifact $handlePath — build it with ensure() first"))
-      val cur = g.path
-      // repair BEFORE folding: a crashed appendBatch attempt leaves
-      // `batch-<tag>-` data files with no `_BATCH_<tag>` marker; folding
-      // them into the canonical layout would bake the partial batch in,
-      // and the tag's later at-least-once replay (marker still absent)
-      // would re-add the whole batch — duplicating the folded rows. The
-      // partial attempt is dropped here instead, under the same safety
-      // argument as appendBatch's own repair path: its writer JVM is dead.
-      // membership is marker-driven (file startsWith "batch-<tag>-" for a
-      // committed tag), never parsed out of the file name — an artifact
-      // appended by an older build whose tags contained '-' would otherwise
-      // have its COMMITTED files misread as crashed attempts and deleted
-      val committedTags = fs.listStatus(cur).map(_.getPath.getName)
-        .filter(_.startsWith("_BATCH_")).map(_.stripPrefix("_BATCH_")).toSet
-      fs.listStatus(cur).filter { f =>
-        val n = f.getPath.getName
-        n.startsWith("batch-") &&
-          !committedTags.exists(t => n.startsWith(s"batch-$t-"))
-      }.foreach(f => fs.delete(f.getPath, false))
-      val tmp = new Path(handlePath + ".compacting")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      val manifest = readManifest(spark, cur.toString)
-      rewrite(Tables.parquet(spark, cur.toString), tmp.toString)
-      require(fs.exists(new Path(tmp, "_SUCCESS")),
-        s"rewrite did not commit to $tmp")
-      // batch-append commit markers survive the file reorganization, so a
-      // late at-least-once replay of an already-folded batch still
-      // short-circuits in appendBatch instead of re-adding its rows
-      fs.listStatus(cur).filter(_.getPath.getName.startsWith("_BATCH_"))
-        .foreach(f => fs.create(new Path(tmp, f.getPath.getName), true).close())
-      // compaction reorganizes files, it does not re-derive: provenance of
-      // the contents (the input manifest) carries over unchanged
-      commitNextGen(spark, fs, handle, tmp, manifest)
-    }
-  }
+                             (rewrite: (DataFrame, String) => Unit): String =
+    advance(spark, kind, dir, version, "compact of", ".compacting", rederive = false)(rewrite)
+
+  /** In-place-IDENTITY artifact refresh from its own prior contents —
+    * the DELTA face of [[invalidate]]+[[ensure]]: `build(prior, tmpPath)`
+    * derives the artifact's NEW contents (it may read the prior
+    * generation's rows) and commits them to `tmpPath`, which is then
+    * committed as the NEXT GENERATION. Unlike [[compact]], the result is
+    * a RE-DERIVATION against the current inputs, so a fresh manifest is
+    * recorded and the prior generation must itself be manifest-fresh. */
+  def refreshWith(spark: SparkSession, kind: String, dir: String, version: Int)
+                 (build: (DataFrame, String) => Unit): String =
+    advance(spark, kind, dir, version, "refresh of", ".refreshing", rederive = true)(build)
 
   /** Committed batches appended since the last canonical fold: the
-    * distinct tags among `batch-<tag>-` DATA files ([[compact]] folds
-    * those files into the next generation's canonical layout; the
-    * `_BATCH_` markers deliberately SURVIVE compaction for replay
-    * short-circuiting, so the marker count is lifetime-total, never
-    * pending). Uncommitted partial attempts (data files whose marker is
-    * absent) don't count — they are repair debt, not read debt that
-    * compaction is scheduled against. One driver-side listing of one
-    * artifact dir — bounded. */
+    * committed tags whose `batch-<tag>-` DATA files are still in the live
+    * generation ([[compact]] folds those files into the next generation's
+    * canonical layout; the `_BATCH_` markers deliberately SURVIVE
+    * compaction for replay short-circuiting, so the marker count is
+    * lifetime-total, never pending). Uncommitted partial attempts don't
+    * count — they are repair debt, not read debt that compaction is
+    * scheduled against — and neither does a tombstoned artifact, which
+    * the next `ensure` rebuilds. One driver-side listing of one artifact
+    * dir — bounded. */
   def pendingBatches(spark: SparkSession, kind: String, dir: String,
                      version: Int): Int = {
     val handle = new Path(artifactPath(spark, kind, dir, version))
     val fs = fsOf(spark, handle)
-    readGen(fs, handle) match {
-      case None => 0
-      case Some(g) =>
-        val names = fs.listStatus(g.path).map(_.getPath.getName)
-        val committed = names.filter(_.startsWith("_BATCH_"))
-          .map(_.stripPrefix("_BATCH_"))
-        val data = names.filter(_.startsWith("batch-"))
-        // marker-driven, like compact's repair: a tag is pending iff its
-        // own data files are still unfolded (robust to legacy '-' tags)
-        committed.count(t => data.exists(_.startsWith(s"batch-$t-")))
+    liveGen(fs, handle).fold(0) { g =>
+      val (tags, files) = batches(fs, g.path)
+      tags.count(t => files.exists(_.getName.startsWith(s"batch-$t-")))
     }
   }
 
@@ -566,12 +594,6 @@ object Materialize {
     * in-flight request over the prior generation must finish within. */
   val GcStagingMinAgeMs: Long = 10 * 60 * 1000L
 
-  /** The compact-vs-defer choice as a pure rule ([[refreshPlan]]
-    * precedent, one lifecycle stage down): fold once the committed
-    * pending-batch count reaches the budget. */
-  def compactPlan(pending: Long, maxPending: Long = CompactPendingMax): Boolean =
-    pending >= maxPending
-
   // ---------------------------------------------------------------- //
   // descriptor faces: the one lifecycle of every appendable kind       //
   // ---------------------------------------------------------------- //
@@ -582,111 +604,61 @@ object Materialize {
   def ensure(spark: SparkSession, a: Artifact, dir: String,
              input: => DataFrame): String =
     ensure(spark, a.kind, dir, a.version)(
-      a.write(a.derive(input), _, "overwrite", appending = false))
+      a.write(a.derive(input), _, appending = false))
 
-  /** Land `batch`'s derived rows as new files in `a`'s append-side layout.
-    * With a `batchTag` the append is the idempotent, replay-safe
-    * [[appendBatch]] (at-least-once callers); without one, a plain
-    * [[append]]. */
+  /** Land `batch`'s derived rows as new files in `a`'s append-side layout
+    * ([[appendBatch]]). A `batchTag` makes the append idempotent under
+    * at-least-once replay; without one the call is a batch of its own (a
+    * fresh unique tag), so its files are still counted by
+    * [[pendingBatches]] and folded by [[compactIfDue]]. */
   def append(spark: SparkSession, a: Artifact, dir: String, batch: DataFrame,
-             batchTag: Option[String] = None): String = {
-    def write(p: String, mode: String): Unit =
-      a.write(a.derive(batch), p, mode, appending = true)
-    batchTag match {
-      case Some(t) =>
-        // appendBatch renames the staged top-level entries into the
-        // generation; `cell=` directories renamed that way would no
-        // longer read as partitions
-        require(a.layout != Artifact.Cells,
-          s"${a.kind} is cell-partitioned: batch-tagged appends are unsupported")
-        appendBatch(spark, a.kind, dir, a.version, t)(write(_, "overwrite"))
-      case None => append(spark, a.kind, dir, a.version)(write(_, "append"))
-    }
-  }
+             batchTag: Option[String] = None): String =
+    appendBatch(spark, a.kind, dir, a.version,
+      batchTag.getOrElse("u" + java.util.UUID.randomUUID().toString.replace("-", "")))(
+      a.write(a.derive(batch), _, appending = true))
 
   /** Fold `a`'s current rows into the next generation in the build-side
     * layout ([[compact]]). */
   def compact(spark: SparkSession, a: Artifact, dir: String): String =
     compact(spark, a.kind, dir, a.version)((cur, tmp) =>
-      a.write(a.fold(cur), tmp, "overwrite", appending = false))
+      a.write(a.fold(cur), tmp, appending = false))
 
-  /** [[compact]] behind the dispatch: folds when [[compactPlan]] says the
-    * appended file debt is due, no-ops otherwise. Returns the CURRENT
+  /** [[compact]] behind the dispatch: folds once the committed pending
+    * batch count ([[pendingBatches]]) reaches `maxPending`, no-ops
+    * otherwise. Returns the CURRENT
     * generation path (the new fold, or the standing generation on defer)
     * and the decision string ("compact" | "defer"), the
     * refresh-dispatcher convention — probes record the decision next to
     * the wall so a replica that dispatched wrong is visible in the line. */
   def compactIfDue(spark: SparkSession, a: Artifact, dir: String,
                    maxPending: Long = CompactPendingMax): (String, String) =
-    if (compactPlan(pendingBatches(spark, a.kind, dir, a.version), maxPending))
+    if (pendingBatches(spark, a.kind, dir, a.version) >= maxPending)
       (compact(spark, a, dir), "compact")
     else (servingPath(spark, a.kind, dir, a.version), "defer")
 
-  /** In-place-IDENTITY artifact refresh from its own prior contents —
-    * the DELTA face of [[invalidate]]+[[ensure]]: `build(prior, tmpPath)`
-    * derives the artifact's NEW contents (it may read the prior
-    * generation's rows) and commits them to `tmpPath`, which is then
-    * committed as the NEXT GENERATION. Unlike [[compact]], the result is
-    * a RE-DERIVATION against the current inputs, so a fresh manifest is
-    * recorded and staleness tracks the new provenance. The PRIOR
-    * generation must itself be manifest-fresh (same check as [[append]]):
-    * a delta build carries the prior's rows forward for untouched keys,
-    * so refreshing over a re-published input would launder the staleness
-    * into a fresh-manifested artifact that ensure() then serves forever.
-    * `_BATCH_` replay markers carry forward (the prior's appended rows
-    * are inside the prior the delta reads, so a late at-least-once
-    * replay must keep short-circuiting). The prior generation's files
-    * are never touched — concurrent readers keep a complete artifact
-    * through the swap; [[gc]] reclaims it after the grace window. */
-  def refreshWith(spark: SparkSession, kind: String, dir: String, version: Int)
-                 (build: (DataFrame, String) => Unit): String = {
-    val handlePath = artifactPath(spark, kind, dir, version)
-    locked(spark, handlePath) {
-      val handle = new Path(handlePath)
-      val fs = fsOf(spark, handle)
-      val g = liveGen(fs, handle).getOrElse(throw new IllegalArgumentException(
-        s"refresh of absent artifact $handlePath — build it with ensure() first"))
-      val current = listInputs(spark, dir)
-      require(readManifest(spark, g.path.toString)
-          .exists(m => !staleAgainst(m, current)),
-        s"refresh of STALE artifact ${g.path} — a recorded input of $dir was " +
-          "modified or removed, so the prior rows are not a valid delta " +
-          "base; rebuild with invalidate()+ensure() instead")
-      val tmp = new Path(handlePath + ".refreshing")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      build(Tables.parquet(spark, g.path.toString), tmp.toString)
-      require(fs.exists(new Path(tmp, "_SUCCESS")),
-        s"refresh did not commit to $tmp")
-      fs.listStatus(g.path).filter(_.getPath.getName.startsWith("_BATCH_"))
-        .foreach(f => fs.create(new Path(tmp, f.getPath.getName), true).close())
-      commitNextGen(spark, fs, handle, tmp, Some(current))
-    }
-  }
-
-  /** Idempotent, batch-keyed variant of [[append]] for AT-LEAST-ONCE
-    * delivery — a Structured Streaming `foreachBatch` re-runs a
-    * micro-batch after a failure, and a plain append would then hold the
-    * batch's derived rows twice. A tag that COMPLETED (its `_BATCH_<tag>`
-    * commit marker exists in the current generation) short-circuits to a
-    * no-op: the healthy-replay path never touches a single file, so lazy
-    * plans other code holds over the artifact (a verdict DataFrame, a
-    * running stream's static side) stay valid through the replay. Only a
-    * genuinely PARTIAL prior attempt — marker absent, tag-prefixed files
-    * possibly present from a crash — takes the repair path: the batch's
-    * rows are staged to a temp dir (a committed parquet write), the
-    * partial attempt's files are deleted, the staged data files move in
-    * under tag-prefixed names, and the marker is created LAST as the
-    * commit point. The repair can itself die midway; the next replay
-    * repairs again, so a tag always converges to exactly one copy of its
-    * rows. Nobody can be evaluating a plan over the crashed attempt's
-    * files (that JVM died), which is what makes the delete safe exactly
-    * where it can happen. (Distinct tags must mean distinct batches —
-    * the caller's contract, which `foreachBatch` batch ids satisfy.)
-    * Same existence/staleness preconditions and manifest roll-forward as
-    * [[append]]; [[compact]] folds the tag-prefixed files into the next
-    * generation like any other appended file set but carries the markers
-    * forward, so a late replay after a compaction still short-circuits
-    * instead of re-adding its rows. */
+  /** The append primitive — the materialized-layout face of the
+    * reference's `add_entity` (geo_manager.py:451-476): `build(path)`
+    * stages the batch's rows with a committed parquet write, and they
+    * land as NEW FILES in the live generation's layout, so readers then
+    * see old ∪ new and a plan already evaluating stays valid (an append
+    * never deletes a committed file). Exact for row-local derivations:
+    * derive(corpus ∪ batch) == derive(corpus) ∪ derive(batch)
+    * (IncrementalIndexSpec pins every kind).
+    *
+    * Idempotent per `batchTag` for AT-LEAST-ONCE delivery (a Structured
+    * Streaming `foreachBatch` re-runs a micro-batch after a failure). A
+    * tag that COMPLETED (its `_BATCH_<tag>` marker exists in the live
+    * generation) short-circuits to a no-op: the healthy replay touches no
+    * file, so lazy plans over the artifact stay valid. Otherwise the
+    * staged data files move in under the `batch-<tag>-` prefix, each into
+    * the same relative dir (a `cell=<k>` file stays in its partition),
+    * after any files of a crashed prior attempt of the tag are deleted;
+    * the marker is created LAST as the commit point. The move can itself
+    * die midway; the next replay repairs again, so a tag converges to
+    * exactly one copy of its rows. (Distinct tags must mean distinct
+    * batches — the caller's contract, which `foreachBatch` batch ids
+    * satisfy.) The live generation must exist and be manifest-fresh, and
+    * its manifest rolls forward to the current inputs. */
   private[graft] def appendBatch(spark: SparkSession, kind: String, dir: String,
                                  version: Int, batchTag: String)(build: String => Unit): String = {
     // no '-' in tags: keeps `batch-<tag>-` prefixes prefix-free across
@@ -695,34 +667,26 @@ object Materialize {
     // prefixes; ambiguity would make a kept orphan possible)
     require(batchTag.matches("[A-Za-z0-9_]+"),
       s"batch tag '$batchTag' must be filesystem-safe ([A-Za-z0-9_]+)")
-    val handlePath = artifactPath(spark, kind, dir, version)
-    locked(spark, handlePath) {
-      val handle = new Path(handlePath)
-      val fs = fsOf(spark, handle)
-      val g = liveGen(fs, handle).getOrElse(throw new IllegalArgumentException(
-        s"append to absent artifact $handlePath — build it with ensure() first"))
-      val cur = g.path
-      val marker = new Path(cur, s"_BATCH_$batchTag")
+    locked(spark, artifactPath(spark, kind, dir, version)) { (fs, handle) =>
+      val cur = live(fs, handle, "append to")
+      val marker = new Path(cur, MarkerPrefix + batchTag)
       if (!fs.exists(marker)) {
         val current = listInputs(spark, dir)
-        require(readManifest(spark, cur.toString)
-            .exists(m => !staleAgainst(m, current)),
-          s"append to STALE artifact $cur — a recorded input of $dir was " +
-            "modified or removed; rebuild with ensure() first")
-        val staging = new Path(handlePath + s".batch_$batchTag")
-        if (fs.exists(staging)) fs.delete(staging, true)
-        build(staging.toString)
-        require(fs.exists(new Path(staging, "_SUCCESS")),
-          s"batch build did not commit to $staging")
+        requireFresh(spark, cur, dir, current, "append to")
+        val staging = stage(fs, new Path(s"$handle.batch_$batchTag"))(build)
         val prefix = s"batch-$batchTag-"
-        fs.listStatus(cur).filter(_.getPath.getName.startsWith(prefix))
-          .foreach(f => fs.delete(f.getPath, false))
-        fs.listStatus(staging)
-          .filter { f =>
-            val n = f.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
+        filesUnder(fs, cur).filter(_.getName.startsWith(prefix))
+          .foreach(fs.delete(_, false))
+        val root = fs.makeQualified(staging).toUri.getPath
+        filesUnder(fs, staging)
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .foreach { f =>
+            val rel = f.getParent.toUri.getPath.stripPrefix(root).stripPrefix("/")
+            val to = if (rel.isEmpty) cur else new Path(cur, rel)
+            if (rel.nonEmpty) fs.mkdirs(to)
+            require(fs.rename(f, new Path(to, prefix + f.getName)),
+              s"could not move $f into $to")
           }
-          .foreach(f => fs.rename(f.getPath, new Path(cur, prefix + f.getPath.getName)))
         fs.create(marker, true).close()
         fs.delete(staging, true)
         writeManifest(spark, cur.toString, current)
@@ -765,6 +729,32 @@ object Materialize {
     if (arrivals == 0L) "ensure"
     else if (n < floorDocs || arrivals.toDouble > n.toDouble * majority) "rebuild"
     else "delta"
+
+  /** The refresh dispatcher of a [[refreshWith]] family, so a caller
+    * refreshes without knowing its rebuild wall. `ensure` builds or serves
+    * the artifact, `counts` returns (corpus size, arrivals) for
+    * [[refreshPlan]], and `delta` runs the family's refreshWith face; each
+    * runs only on the arm that needs it. An artifact with no live
+    * generation bootstraps through `ensure`; one whose prior rows are no
+    * valid delta base (a re-published input, [[isDeltaBase]]) and the
+    * plan's "rebuild" invalidate and ensure. Returns the path and the
+    * decision ("bootstrap" | "ensure" | "rebuild" | "delta"). */
+  def refreshAuto(spark: SparkSession, kind: String, dir: String, version: Int,
+                  floorDocs: Long, majority: Double)
+                 (ensure: => String, counts: => (Long, Long),
+                  delta: => String): (String, String) = {
+    def rebuild: String = { invalidate(spark, kind, dir, version); ensure }
+    if (!isBuilt(spark, kind, dir, version)) (ensure, "bootstrap")
+    else if (!isDeltaBase(spark, kind, dir, version)) (rebuild, "rebuild")
+    else {
+      val (n, arrivals) = counts
+      refreshPlan(n, arrivals, floorDocs, majority) match {
+        case "ensure"  => (ensure, "ensure")
+        case "rebuild" => (rebuild, "rebuild")
+        case _         => (delta, "delta")
+      }
+    }
+  }
 
   /** Artifact paths ensured in THIS JVM session — the set the GC faces
     * must never delete: a DataFrame constructed over an ensured path is

@@ -89,7 +89,7 @@ object CorpusPrep {
     * gate query runs. A doc's flag depends only on its own windows vs the
     * static eval set, so the screen is exact per micro-batch of a stream
     * (StreamingSpec runs it that way). */
-  def decontaminateOver(trainDocs: DataFrame, evalWindows: => DataFrame,
+  def decontaminateOver(trainDocs: DataFrame, evalWindows: DataFrame,
                         win: Int = ContamWin): DataFrame = {
     val wins = trainDocs.select(col("doc_id"), explode(
       graft.functions.TextFunctions.tokenWindows(
@@ -132,7 +132,7 @@ object CorpusPrep {
     * eval set broadcasts, one doc_id exchange for the count rollup —
     * docs with fewer tokens than the window width have 0 windows and
     * report 0. */
-  def contaminationFracOver(trainDocs: DataFrame, evalWindows: => DataFrame,
+  def contaminationFracOver(trainDocs: DataFrame, evalWindows: DataFrame,
                             win: Int = ContamWin): DataFrame = {
     val wins = trainDocs.select(col("doc_id"), explode(
       graft.functions.TextFunctions.tokenWindows(
@@ -488,7 +488,7 @@ object CorpusPrep {
     * `provisional_admit` is the cadence's per-batch verdict: admit unless
     * either screen fired. */
   private[graft] def ingestScreenOver(batchDocs: DataFrame,
-      standingHashes: DataFrame, standingBands: => DataFrame): DataFrame = {
+      standingHashes: DataFrame, standingBands: DataFrame): DataFrame = {
     val near = Dedup.incrementalNearDupsOver(batchDocs, standingBands)
     val batchHashes = batchDocs.select(col("doc_id"),
       xxhash64(col("text")).as("h"))
@@ -676,65 +676,61 @@ object CorpusPrep {
     * is a scale knob someone forgets). Counts the standing corpus and the
     * arrivals from the artifacts the cadence already maintains — one
     * docbase distinct-id count (which doubles as the cadence coverage
-    * guard) minus a footer-only count-star of the prior overlay — picks
-    * by [[graft.Materialize.refreshPlan]], and
-    * returns the refreshed path plus the decision taken (the
+    * guard) minus a footer-only count-star of the prior overlay — and
+    * dispatches through [[graft.Materialize.refreshAuto]], returning the
+    * refreshed path plus the decision taken (the
     * `ensureIvfIndexAuto` return convention). A corpus with no committed
     * overlay yet bootstraps through plain ensure. Measured anchors for
     * this family: gate rebuild 1.3 s vs delta 3.6 s; 10× 16.3 s vs
     * 5.9–8.2 s; 100× 154.1 s vs 36.0/20.0 s (SCALE.md §round-12). */
   def compactionRefreshAuto(spark: SparkSession, dir: String,
                             floorDocs: Long = graft.Materialize.RefreshDeltaFloor,
-                            majority: Double = graft.Materialize.RefreshArrivalMajority): (String, String) = {
-    if (!graft.Materialize.isBuilt(spark, "graft_docglobal", dir, DocGlobalVersion))
-      return (ensureDocGlobal(spark, dir), "bootstrap")
-    // a re-published corpus input invalidates the prior rows as a delta
-    // base (refreshWith rejects them); route straight to the exact rebuild
-    if (!graft.Materialize.isDeltaBase(spark, "graft_docglobal", dir, DocGlobalVersion))
-      return (compactionRefresh(spark, dir), "rebuild")
-    val n = graft.Tables.parquet(spark, graft.Materialize.ensure(spark, docBase(spark, dir), dir,
-        graft.Tables.documents(spark, dir)))
-      .select(col("doc_id")).distinct().count()
-    // the delta's own cadence precondition, checked HERE (and only here —
-    // the delta arm below skips its duplicate): a batch that reached the
-    // corpus dir without ingestIncrement is in neither docbase nor the
-    // overlay, so the arrival count below cannot see it — without this
-    // check the dispatcher would return "ensure" as success while the
-    // served overlay permanently excludes those docs
-    require(n == graft.Tables.documents(spark, dir).count(),
-      s"compactionRefreshAuto of $dir: docbase has not labeled every " +
-        "current doc — run ingestIncrement for each arrived batch first")
-    // arrivals = docs the overlay has not labeled. The isDeltaBase gate
-    // above makes count ARITHMETIC exact here, no anti-join needed: a
-    // fresh manifest means no recorded corpus child was modified or
-    // removed, so the overlay's ids (one row per doc it covered, by
-    // construction of docGlobalOver) are a SUBSET of the current ids and
-    // the uncovered count is just the difference. The overlay side is a
-    // count-star over parquet footers — no doc_id scan, no join. Residual
-    // caveat shared with the manifest itself: an edit that preserves a
-    // child's mtime is invisible (then re-path the dir or bump the
-    // version) — the previous anti-join spelling was equally blind to it.
-    val covered = graft.Tables.parquet(spark,
-        graft.Materialize.servingPath(spark, "graft_docglobal", dir, DocGlobalVersion))
-      .count()
-    // The arithmetic's subset premise can be violated from OUTSIDE the
-    // cadence contract: a replayed UNTAGGED ingestIncrement (plain append,
-    // no batch marker) lands duplicate docbase/overlay rows — the distinct
-    // coverage guard above still passes, but the overlay count-star
-    // overcounts and arrivals would silently undercount (the dispatcher
-    // could return "ensure" while real arrivals stay unlabeled). Fail
-    // loudly instead of serving a wrong decision.
-    require(covered <= n,
-      s"compactionRefreshAuto of $dir: overlay has $covered rows for $n " +
-        "distinct docs — duplicated overlay rows (replayed un-tagged " +
-        "append?); run compactionRefresh to rebuild the overlay")
-    val arrivals = n - covered
-    graft.Materialize.refreshPlan(n, arrivals, floorDocs, majority) match {
-      case "ensure"  => (ensureDocGlobal(spark, dir), "ensure")
-      case "rebuild" => (compactionRefresh(spark, dir), "rebuild")
-      case _         => (deltaOverlayRefreshImpl(spark, dir, checkCoverage = false), "delta")
-    }
-  }
+                            majority: Double = graft.Materialize.RefreshArrivalMajority): (String, String) =
+    graft.Materialize.refreshAuto(spark, "graft_docglobal", dir, DocGlobalVersion,
+        floorDocs, majority)(
+      ensure = ensureDocGlobal(spark, dir),
+      counts = {
+        val n = graft.Tables.parquet(spark, graft.Materialize.ensure(spark, docBase(spark, dir), dir,
+            graft.Tables.documents(spark, dir)))
+          .select(col("doc_id")).distinct().count()
+        // the delta's own cadence precondition, checked HERE (and only
+        // here — the delta arm below skips its duplicate): a batch that
+        // reached the corpus dir without ingestIncrement is in neither
+        // docbase nor the overlay, so the arrival count below cannot see
+        // it — without this check the dispatcher would return "ensure" as
+        // success while the served overlay permanently excludes those docs
+        require(n == graft.Tables.documents(spark, dir).count(),
+          s"compactionRefreshAuto of $dir: docbase has not labeled every " +
+            "current doc — run ingestIncrement for each arrived batch first")
+        // arrivals = docs the overlay has not labeled. The dispatcher's
+        // delta-base gate makes count ARITHMETIC exact here, no anti-join
+        // needed: a fresh manifest means no recorded corpus child was
+        // modified or removed, so the overlay's ids (one row per doc it
+        // covered, by construction of docGlobalOver) are a SUBSET of the
+        // current ids and the uncovered count is just the difference. The
+        // overlay side is a count-star over parquet footers — no doc_id
+        // scan, no join. Residual caveat shared with the manifest itself:
+        // an edit that preserves a child's mtime is invisible (then
+        // re-path the dir or bump the version).
+        val covered = graft.Tables.parquet(spark,
+            graft.Materialize.servingPath(spark, "graft_docglobal", dir, DocGlobalVersion))
+          .count()
+        // The arithmetic's subset premise can be violated from OUTSIDE the
+        // cadence contract: a replayed UNTAGGED ingestIncrement (each
+        // untagged call is a batch of its own, so its replay is a second
+        // batch) lands duplicate docbase/overlay rows — the distinct
+        // coverage guard above still passes, but the overlay count-star
+        // overcounts and arrivals would silently undercount (the
+        // dispatcher could return "ensure" while real arrivals stay
+        // unlabeled). Fail loudly instead of serving a wrong decision.
+        require(covered <= n,
+          s"compactionRefreshAuto of $dir: overlay has $covered rows for $n " +
+            "distinct docs — duplicated overlay rows (an untagged " +
+            "ingestIncrement replayed? only a batchTag makes a replay " +
+            "converge); run compactionRefresh to rebuild the overlay")
+        (n, n - covered)
+      },
+      delta = deltaOverlayRefreshImpl(spark, dir, checkCoverage = false))
 
   /** The cadence's compaction CLOCK, dispatched — [[compactionRefreshAuto]]
     * handles the overlay's content refresh; this face handles the FILE
@@ -744,7 +740,7 @@ object CorpusPrep {
     * tax (listing + footers + diluted clustering — the measured curve in
     * SCALE.md §compact-cadence) while the fold is one artifact-sized
     * rewrite, so each artifact folds independently once ITS committed
-    * pending count reaches the budget (`Materialize.compactPlan`). Run at
+    * pending count reaches the budget (`Materialize.compactIfDue`). Run at
     * the same quiesced window as the overlay refresh — the fold swaps
     * files in place, same single-driver caveat as compact. Returns
     * artifact kind → decision ("compact" | "defer"). */

@@ -1877,9 +1877,9 @@ object Dedup {
     * This is the screen over explicit batch/corpus relations, the core the
     * gate query runs. A doc's result depends only on its own row against
     * the corpus bands, so the screen is exact per micro-batch of a stream
-    * of arrivals; `corpusBands` is evaluated once per call, so a fresh
-    * read of an appended band artifact is picked up on the next call. */
-  def incrementalNearDupsOver(batchDocs: DataFrame, corpusBands: => DataFrame): DataFrame = {
+    * of arrivals; pass a fresh read of the band artifact per call so its
+    * appended files are picked up. */
+  def incrementalNearDupsOver(batchDocs: DataFrame, corpusBands: DataFrame): DataFrame = {
     import graft.functions.SketchFunctions._
     // One long key per band row: hash is < HashMod (< 2^30), so * Bands
     // + idx is collision-free.

@@ -215,7 +215,7 @@ object Dsir {
     * (the corpus is scanned once for grams, the ratio table broadcasts);
     * the dense model means the gram join never drops a row. One output
     * row per input doc (zero-gram docs score 0 via the roster join). */
-  def dsirScoreOver(docs: DataFrame, model: => DataFrame): DataFrame = {
+  def dsirScoreOver(docs: DataFrame, model: DataFrame): DataFrame = {
     val grams = docs
       .select(col("doc_id"), explode(gramBuckets(col("text"))).as("bucket"))
     val score = grams.join(broadcast(modelRatio(model)), "bucket")

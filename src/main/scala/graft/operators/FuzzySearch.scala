@@ -753,7 +753,7 @@ object FuzzySearch {
         // v3 carries the rank key: a delta refresh re-ranks a merged list
         // row-locally instead of joining the corpus back on for population
         .select(col("ngram"), col("id"), col("population"))
-      Postings.write(kept, path, "overwrite", appending = false)
+      Postings.write(kept, path, appending = false)
     }
     // parameter sweeps (and the parity spec's deliberate K=∞ build) would
     // otherwise accumulate one full posting copy per (inv, K) pair forever
@@ -839,12 +839,12 @@ object FuzzySearch {
             .orderBy(col("population").desc_nulls_last, col("id"))))
         .filter(col("prn") <= postingCap)
         .select(col("ngram"), col("id"), col("population"))
-      Postings.write(kept, tmpP, "overwrite", appending = false)
+      Postings.write(kept, tmpP, appending = false)
     }
   }
 
-  /** Champion-index refresh, DISPATCHED — [[graft.Materialize.refreshPlan]]
-    * applied to the second refreshWith family, so the ingest cadence's
+  /** Champion-index refresh, DISPATCHED by [[graft.Materialize.refreshAuto]]
+    * for the second refreshWith family, so the ingest cadence's
     * caller never hand-picks the delta (the same posture fix the IVF
     * build got in `ensureIvfIndexAuto`). The corpus size comes from the
     * additive `graft_gramn` stats artifact the cadence already appends
@@ -862,36 +862,18 @@ object FuzzySearch {
                           majority: Double = graft.Materialize.RefreshArrivalMajority,
                           version: Int = ChampVersion,
                           statsVersion: Int = 1,
-                          postingsVersion: Int = 1): (String, String) = {
-    val kind = s"graft_champost_${dfCapInverse}_$postingCap"
-    if (!graft.Materialize.isBuilt(spark, kind, dir, version))
-      return (ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap,
-        version), "bootstrap")
-    // re-published input ⇒ the prior lists are not a valid delta base
-    // (refreshWith rejects them); route straight to the exact rebuild
-    if (!graft.Materialize.isDeltaBase(spark, kind, dir, version)) {
-      graft.Materialize.invalidate(spark, kind, dir, version)
-      return (ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap,
-        version), "rebuild")
-    }
-    graft.Materialize.ensure(spark, GramDf.copy(version = statsVersion), dir, c)
-    val np = graft.Materialize.ensure(spark, GramN.copy(version = statsVersion), dir, c)
-    val n = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
-      .head().getLong(0)
-    val arrivals = batch.count()
-    graft.Materialize.refreshPlan(n, arrivals, floorDocs, majority) match {
-      case "ensure" =>
-        (ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap,
-          version), "ensure")
-      case "rebuild" =>
-        graft.Materialize.invalidate(spark, kind, dir, version)
-        (ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap,
-          version), "rebuild")
-      case _ =>
-        (deltaChampionRefresh(spark, dir, c, batch, dfCapInverse, postingCap,
-          version, statsVersion, postingsVersion), "delta")
-    }
-  }
+                          postingsVersion: Int = 1): (String, String) =
+    graft.Materialize.refreshAuto(spark, s"graft_champost_${dfCapInverse}_$postingCap",
+        dir, version, floorDocs, majority)(
+      ensure = ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap, version),
+      counts = {
+        graft.Materialize.ensure(spark, GramDf.copy(version = statsVersion), dir, c)
+        val np = graft.Materialize.ensure(spark, GramN.copy(version = statsVersion), dir, c)
+        (Tables.parquet(spark, np).agg(sum(col("n")).as("n")).head().getLong(0),
+          batch.count())
+      },
+      delta = deltaChampionRefresh(spark, dir, c, batch, dfCapInverse, postingCap,
+        version, statsVersion, postingsVersion))
 
   // ---------------- LSH candidate channel (tier-3 recall, round 14)
 

@@ -100,8 +100,8 @@ object Retrieval {
     * At 100 TB the per-batch read cost is O(postings of the union of
     * query terms) + a bloom pass over scanned rows — never a corpus
     * tokenize. */
-  def bm25BatchOverPostings(queries: DataFrame, postings: => DataFrame,
-                            stats: => DataFrame, k: Int): DataFrame = {
+  def bm25BatchOverPostings(queries: DataFrame, postings: DataFrame,
+                            stats: DataFrame, k: Int): DataFrame = {
     import graft.functions.SketchFunctions._
     import TextAnalysis.Bm25Quant
     // Dedupe request rows: a repeated (qid, term) must not double-count

@@ -403,6 +403,17 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaIndex.nonEmpty && viaIndex == inline)
   }
 
+  test("compactIfDue defers on an invalidated artifact; the next ensure rebuilds it") {
+    val (full, base, batch) = corpusParts()
+    val a = FuzzySearch.GramN.copy(version = 953)
+    Materialize.ensure(spark, a, dir, base)
+    Materialize.append(spark, a, dir, batch, Some("b1"))
+    assert(Materialize.invalidate(spark, a.kind, dir, a.version))
+    assert(Materialize.compactIfDue(spark, a, dir, maxPending = 1)._2 == "defer")
+    val n = spark.read.parquet(Materialize.ensure(spark, a, dir, full)).agg(sum(col("n")))
+    assert(n.head().getLong(0) == full.count())
+  }
+
   test("append to an absent artifact is refused (build with ensure first)") {
     val (_, _, batch) = corpusParts()
     intercept[IllegalArgumentException] {
@@ -418,9 +429,13 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val appended = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 903), dir, base)
     Materialize.append(spark, FuzzySearch.Postings.copy(version = 903), dir, batch)
     val before = parquetFiles(appended)
-    // compaction commits a NEW generation (the appended one keeps serving
-    // in-flight readers until gc) — the canonical layout is at its path
-    val compacted = Materialize.compact(spark, FuzzySearch.Postings.copy(version = 903), dir)
+    // an untagged append is a marked batch of its own: it is pending debt,
+    // and compactIfDue folds it as a NEW generation (the appended one keeps
+    // serving in-flight readers until gc) — the canonical layout is there
+    assert(Materialize.pendingBatches(spark, "graft_postings", dir, 903) == 1)
+    val (compacted, decision) = Materialize.compactIfDue(spark,
+      FuzzySearch.Postings.copy(version = 903), dir, maxPending = 1)
+    assert(decision == "compact")
     val rebuilt = Materialize.ensure(spark, FuzzySearch.Postings.copy(version = 904), dir, full)
     def rows(p: String): Seq[(String, Long)] =
       spark.read.parquet(p).collect()
@@ -439,13 +454,22 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (e, cent, base, batch) = embParts()
     val ivf = Similarity.ivfIndex(cent, 25L, Similarity.IvfNumCentroids)
     val appended = Materialize.ensure(spark, ivf.copy(version = 903), dir, base)
-    Materialize.append(spark, ivf.copy(version = 903), dir, batch)
-    val compacted = Materialize.compact(spark, ivf.copy(version = 903), dir)
+    // a tagged append moves its files into their cell dirs; its replay
+    // no-ops, and a crashed attempt's unmarked file in a cell dir is
+    // repaired away by the fold, not folded in
+    Seq(1, 2).foreach(_ => Materialize.append(spark, ivf.copy(version = 903), dir, batch, Some("b1")))
     val rebuilt = Materialize.ensure(spark, ivf.copy(version = 904), dir, e)
     def rows(p: String): Seq[(Long, Long)] =
       spark.read.parquet(p)
         .select(col("vec_id"), col("cell").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(rows(appended) == rows(rebuilt) &&
+      Materialize.pendingBatches(spark, ivf.kind, dir, 903) == 1)
+    val cellFile = new java.io.File(appended).listFiles().filter(_.getName.startsWith("cell="))
+      .flatMap(_.listFiles()).find(_.getName.startsWith("batch-b1-")).get
+    java.nio.file.Files.copy(cellFile.toPath,
+      cellFile.toPath.resolveSibling("batch-b9-orphan.parquet"))
+    val compacted = Materialize.compact(spark, ivf.copy(version = 903), dir)
     // still a cell-partitioned layout (directories, not flat files)
     assert(new java.io.File(compacted).listFiles()
       .exists(f => f.isDirectory && f.getName.startsWith("cell=")))
@@ -705,8 +729,8 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$data/t2.parquet")
     val p2 = Materialize.ensure(spark, "graft_mf_test", data, 1)(build("v2"))
     assert(p2 == p1 && builds == 1 && content(p2) == "v1")
-    Materialize.append(spark, "graft_mf_test", data, 1) { p =>
-      Seq("appended").toDF("content").write.mode("append").parquet(p)
+    Materialize.appendBatch(spark, "graft_mf_test", data, 1, "b1") { p =>
+      Seq("appended").toDF("content").write.parquet(p)
     }
     assert(spark.read.parquet(p1).count() == 2)
 
@@ -717,7 +741,7 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq((1L, "uno")).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$data/t.parquet")
     intercept[IllegalArgumentException] {
-      Materialize.append(spark, "graft_mf_test", data, 1)(_ => ())
+      Materialize.appendBatch(spark, "graft_mf_test", data, 1, "b2")(_ => ())
     }
     val p3 = Materialize.ensure(spark, "graft_mf_test", data, 1)(build("v3"))
     assert(p3 != p1 && builds == 2 && content(p3) == "v3")

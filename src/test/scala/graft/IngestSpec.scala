@@ -189,9 +189,9 @@ class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     ensure()
     assert(builds == 1, "an increment (new files only) must not invalidate")
-    Materialize.append(spark, "graft_refresh_probe", cache, version = 1) { p =>
+    Materialize.appendBatch(spark, "graft_refresh_probe", cache, version = 1, "b1") { p =>
       spark.read.parquet(cache).filter(col("id") === 9089)
-        .select(col("id")).write.mode("append").parquet(p)
+        .select(col("id")).write.parquet(p)
     }
     val afterAppend = spark.read.parquet(ensure())
       .collect().map(_.getLong(0)).toSet

@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * lifecycle: an appendable kind is an [[Artifact]] descriptor run by
   * Materialize's descriptor faces, so `src/main` declares no per-kind
   * `appendTo…` / `compact<Kind>` face and no operator calls the closure
-  * forms of the append and compact primitives. Test-only code lives in the
+  * forms of the append and compact primitives, nor hand-codes the refresh
+  * dispatch that `Materialize.refreshAuto` holds. Test-only code lives in the
   * specs: no composed reference twin or `…ForTest` def, and no stream is
   * started outside the ingest cadence. Every doc comment documents the
   * definition under it. */
@@ -65,6 +66,15 @@ class LifecycleScanSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"closure-form lifecycle calls in operators: ${offenders.mkString(", ")}")
+  }
+
+  test("operators dispatch a refresh only through Materialize.refreshAuto") {
+    val call = """\b(isDeltaBase|refreshPlan)\s*\(""".r
+    val offenders = sources(root.resolve("graft/operators")).flatMap { case (p, src) =>
+      call.findAllMatchIn(src).map(m => s"${at(p, src, m.start)} ${m.group(1)}")
+    }
+    assert(offenders.isEmpty,
+      s"hand-coded refresh dispatch in operators: ${offenders.mkString(", ")}")
   }
 
   test("src/main declares no composed reference twin or ForTest def") {

@@ -178,4 +178,23 @@ class MutationServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(
       Materialize.servingPath(spark, kind, dataDir, 1)).count() == 100L)
   }
+
+  test("refreshWith drops a crashed append's unmarked files before reading, as compact does") {
+    // an uncommitted `batch-x-` file (its append died before the marker)
+    // carried into the next generation would be added again by its replay
+    def planted(kind: String): Unit = {
+      val gen = java.nio.file.Paths.get(Materialize.ensure(spark, kind, dataDir, 1)(writeEpoch(_, 0)))
+      val donor = gen.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.copy(donor.toPath, gen.resolve("batch-x-orphan.parquet"))
+      assert(spark.read.parquet(gen.toString).count() > 100L, "the orphan must be visible")
+    }
+    def rows(p: String): Seq[String] = spark.read.parquet(p).collect().map(_.toString).toSeq.sorted
+    planted("graft_mutspec_orphan_r")
+    planted("graft_mutspec_orphan_c")
+    val refreshed = rows(Materialize.refreshWith(spark, "graft_mutspec_orphan_r", dataDir, 1) {
+      (prior, tmp) => prior.write.mode("overwrite").parquet(tmp)
+    })
+    assert(refreshed.size == 100 && refreshed == rows(Materialize.compact(spark,
+      "graft_mutspec_orphan_c", dataDir, 1)((cur, tmp) => cur.write.mode("overwrite").parquet(tmp))))
+  }
 }

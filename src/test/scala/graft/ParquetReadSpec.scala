@@ -76,8 +76,8 @@ class ParquetReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(Tables.parquet(spark, gen).count() == 10L)
     assert(Tables.parquet(spark, gen).count() == 10L)
-    Materialize.append(spark, kind, dir, 1) { p =>
-      spark.range(10, 25).toDF("id").write.mode("append").parquet(p)
+    Materialize.appendBatch(spark, kind, dir, 1, "b1") { p =>
+      spark.range(10, 25).toDF("id").write.parquet(p)
     }
     val served = Materialize.servingPath(spark, kind, dir, 1)
     assert(served == gen) // an append extends the generation in place
