@@ -166,15 +166,7 @@ object DiversityReplica {
     * GATE row run verbatim at the replica dir. */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: DiversityReplica <src*k=dest | dir> ...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.mainSession()
     val spec = "(.+)\\*(\\d+)=(.+)".r
     val docsSpec = "docs:(.+)\\*(\\d+)=(.+)".r
     val instruments = Seq("fuzzy_batch_champ_recall",

@@ -236,13 +236,8 @@ object Materialize {
     * (both the fresh build and the reuse path) and after compaction. */
   private def requireNonEmpty(spark: SparkSession, artifact: String): Unit = {
     val p = new Path(artifact)
-    val fs = fsOf(spark, p)
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val n = it.next().getPath.getName
-      found = !n.startsWith("_") && !n.startsWith(".")
-    }
+    val found = filesUnder(fsOf(spark, p), p).map(_.getName)
+      .exists(n => !n.startsWith("_") && !n.startsWith("."))
     require(found,
       s"artifact $artifact is committed but contains no data files — " +
         "gutted artifact dir; delete it and rebuild with ensure()")
@@ -339,14 +334,16 @@ object Materialize {
       s"$step STALE artifact $gen — a recorded input of $dir was modified " +
         "or removed; rebuild with ensure() first")
 
-  /** Every file under `dir`, by `listStatus` recursion. Not `listFiles`:
-    * it builds a `LocatedFileStatus` per file, which on the local
-    * filesystem reads each file's owner and permissions (measured on 4
-    * vCPU: +1.5 s on perfbench's `ingest_serve` compact step, 3 artifacts
-    * of ~35 files). */
-  private def filesUnder(fs: FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq.flatMap(s =>
-      if (s.isDirectory) filesUnder(fs, s.getPath) else Seq(s.getPath))
+  /** Every file under `dir`, by lazy `listStatus` recursion: a
+    * subdirectory is listed only when the walk reaches it, so a caller
+    * that stops at its first match lists no further. Not `listFiles`: it
+    * builds a `LocatedFileStatus` per file, which on the local filesystem
+    * reads each file's owner and permissions (measured on 4 vCPU: +1.5 s
+    * on perfbench's `ingest_serve` compact step, 3 artifacts of ~35
+    * files). */
+  private def filesUnder(fs: FileSystem, dir: Path): Iterator[Path] =
+    fs.listStatus(dir).iterator.flatMap(s =>
+      if (s.isDirectory) filesUnder(fs, s.getPath) else Iterator.single(s.getPath))
 
   /** Generation `gen`'s committed batch tags (its `_BATCH_<tag>` markers)
     * and its `batch-` data files at any depth (a cell-partitioned
@@ -355,7 +352,7 @@ object Materialize {
     * parsed out of the file name, so an artifact appended by an older
     * build whose tags contained '-' keeps its committed files. */
   private def batches(fs: FileSystem, gen: Path): (Set[String], Seq[Path]) = {
-    val files = filesUnder(fs, gen)
+    val files = filesUnder(fs, gen).toSeq
     (files.map(_.getName).filter(_.startsWith(MarkerPrefix))
       .map(_.stripPrefix(MarkerPrefix)).toSet,
       files.filter(_.getName.startsWith("batch-")))

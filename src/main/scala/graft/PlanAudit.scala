@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.mainSession()
     val dir = "/root/testdata/sf0.01"
     val targets = if (args.nonEmpty) args.toSeq else Seq(
       "fuzzy_search", "geo_radius_search", "ann_ivf_topk", "ev_asof_orders", "q3_revenue_topk")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,8 @@ object Verify {
     // (local iteration); the driver always passes exactly two.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is INT64 TIMESTAMP(NANOS) parquet — read raw, rebuilt in
-      // graft.operators.EventOps.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    def wanted(name: String): Boolean = only.isEmpty || only.contains(name)
+    val spark = SparkEntry.mainSession()
     // Clean slate: a stale dump from a previous run would mask a query
     // that now fails BEFORE its overwrite (gate detects errors by absent
     // output).
@@ -30,40 +20,22 @@ object Verify {
     val out = new java.io.File(outDir)
     if (out.exists()) rmTree(out)
     out.mkdirs()
-    // Drift guard: an oracle for a query that no longer exists means the
-    // driver would DuckDB-run SQL with no Spark counterpart to compare.
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    require(orphans.isEmpty, s"oracleSql keys without queries: $orphans")
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.nonEmpty && !only.contains(name)) ()
-      else try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      if (wanted(name))
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+      .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
+    def write(file: String, v: Any): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), json.writeValueAsString(v))
+    write("oracle_sql.json", SparkEntry.oracleSql.filter { case (k, _) => wanted(k) })
     // Full query manifest, so the local gate can fail queries whose dump
     // errored (try/catch above) and rows-only-check the oracle-less ones.
-    val manifest = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.contains(n))
-    Files.writeString(Paths.get(s"$outDir/queries.json"),
-      manifest.map(q).mkString("[", ",", "]"))
+    write("queries.json", SparkEntry.queries.keys.toSeq.sorted.filter(wanted))
     spark.stop()
   }
 }
