@@ -254,27 +254,6 @@ object Materialize {
     catch { case _: java.io.IOException => Map.empty[String, Long] }
   }
 
-  /** Cheap content fingerprint of a directory, for driver-side memo keys
-    * (e.g. admission-control cost predictions cached per stats state):
-    * the FULL sorted (name, length, mtime) listing of direct children —
-    * not a hash, so distinct states can never collide into a false cache
-    * hit (a stale hit would silently pin the wrong dispatch plan, a far
-    * worse failure than the sub-second re-prediction a miss costs). One
-    * `listStatus`, no job, no data read; the string is
-    * children-count-sized, fine for an in-memory key. Residual caveat,
-    * same as [[listInputs]] and the staleness manifest: an edit that
-    * preserves a child's name+length+mtime is invisible — then the dir
-    * must be re-pathed or the artifact version bumped. */
-  def fingerprint(spark: SparkSession, dir: String): String = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, p)
-    val entries =
-      try fs.listStatus(p)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      catch { case _: java.io.IOException => Array.empty[String] }
-    entries.sorted.mkString("\n")
-  }
-
   private def readManifest(spark: SparkSession, artifact: String): Option[Map[String, Long]] = {
     val mp = new Path(artifact, ManifestFile)
     val fs = fsOf(spark, mp)

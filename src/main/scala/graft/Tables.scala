@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Loaders for the generated input parquet tables (TESTDATA.md), and the
   * one parquet read path of the program ([[parquet]]): input tables and
@@ -16,17 +13,14 @@ import org.apache.spark.sql.types.StructType
   *
   * Schema reuse: a bare `spark.read.parquet` runs one Spark job per call to
   * read a footer and infer the schema — on a serving request that job is
-  * most of the fixed cost of a read. [[parquet]] infers once per key and
-  * hands the cached schema to every later read of that key, which then
-  * launches no job. Each read (a path, or the documents glob) keeps one
-  * entry, valid while the files it names and their (modification time,
-  * length) are unchanged — one `getFileStatus` or glob listing, no job —
-  * and under the same session schema-inference confs. So:
-  *  - a table re-published at the same path (new mtime) is re-inferred;
-  *  - an artifact generation is immutable apart from appends, which keep
-  *    its schema (and, adding files, move the directory's mtime anyway);
-  *  - the file listing is NOT cached: every read lists afresh, so rows
-  *    appended to a generation are visible on the next read.
+  * most of the fixed cost of a read. [[parquet]] infers once and hands the
+  * [[Memo]]ized schema to every later read, which then launches no job.
+  * The key is the read (a path, or the documents glob); the stamp is the
+  * files it names with their (modification time, length) — one
+  * `getFileStatus` or glob listing, no job — and the session's
+  * schema-inference confs. The file listing itself is NOT memoized: every
+  * read lists afresh, so rows appended to a generation are visible on the
+  * next read.
   */
 object Tables {
   /** Every driver table (TESTDATA.md) — the single source for warmup
@@ -86,18 +80,13 @@ object Tables {
     readPath(spark, path, s"parquet input $path does not exist")
 
   /** The session confs that change what parquet schema inference returns;
-    * their values are part of the cache key. */
+    * their values are part of the stamp. */
   private val InferenceConfs = Seq(
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema",
     "spark.sql.legacy.parquet.nanosAsLong")
-
-  private final case class Stamp(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
-
-  /** qualified path or glob → (stamp it was inferred under, schema) */
-  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
 
   private def readPath(spark: SparkSession, p: String, missing: String): DataFrame = {
     val path = new Path(p)
@@ -107,16 +96,17 @@ object Tables {
     read(spark, st.getPath.toString, Seq(p), Seq(st))
   }
 
+  /** `key` is the qualified path or glob. */
   private def read(spark: SparkSession, key: String, paths: Seq[String],
                    sts: Seq[FileStatus]): DataFrame = {
-    val stamp = Stamp(sts.map(s => (s.getPath.toString, s.getModificationTime, s.getLen)),
+    val stamp = (sts.map(s => (s.getPath.toString, s.getModificationTime, s.getLen)),
       InferenceConfs.map(spark.conf.getOption))
-    Option(schemas.get(key)) match {
-      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(paths: _*)
-      case _ =>
-        val df = spark.read.parquet(paths: _*)
-        schemas.put(key, (stamp, df.schema))
-        df
+    // a miss serves the inferring read itself, so it lists the files once
+    var inferred: Option[DataFrame] = None
+    val schema = Memo(("parquet schema", key), stamp) {
+      inferred = Some(spark.read.parquet(paths: _*))
+      inferred.get.schema
     }
+    inferred.getOrElse(spark.read.schema(schema).parquet(paths: _*))
   }
 }

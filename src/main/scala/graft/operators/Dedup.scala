@@ -348,44 +348,30 @@ object Dedup {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** Candidate-row budget for [[containmentPairsAuto]] — the same
-    * measured curve as `fuzzy_batch_auto`'s (SCALE.md
-    * §admission-control: candidate verify ≈ 0.33 µs/row + fixed, the
-    * capped screen nearly flat), so the same 8 M crossover keeps the
-    * EXACT uncut semantics wherever it is not measurably the slower
-    * plan. */
-  val ContainmentCandidateBudget: Long = 8L * 1000 * 1000
-
-  /** Memo for the dispatch prediction — `.head()` is a construction-time
-    * action (the batchFuzzySearchAuto precedent); keyed by the input and
-    * stats-artifact fingerprints so an ingest or rebuild re-predicts,
-    * AND by the threshold: a lower threshold lengthens every prefix, so
-    * a prediction cached for one threshold must never dispatch another
-    * (the fuzzy memo is threshold-free only because its cost model takes
-    * no such parameter). */
-  private val ctCostMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String, Double), Long]
-
   /** The dispatching containment entry — admission control WIRED: run
     * the bounded prediction, then choose the plan. Below budget: the
     * uncut prefix-filtered join (exact semantics). Above: the df-capped
     * screen (the documented recall cut a boilerplate-dominated corpus
     * forces). The oracle twin dispatches the same way in SQL, so the
-    * gate checks the dispatch itself, not just the branches. */
+    * gate checks the dispatch itself, not just the branches. The budget
+    * is [[FuzzySearch.CandidateBudget]] (the same measured curve). The
+    * prediction is a construction-time action, so it is [[graft.Memo]]ized
+    * under the input and stats-artifact listings, keyed by the threshold
+    * (a lower threshold lengthens every prefix). */
   def containmentPairsAuto(spark: SparkSession, dir: String, threshold: Double,
                            dfCapInverse: Long,
-                           budget: Long = ContainmentCandidateBudget): DataFrame = {
+                           budget: Long = FuzzySearch.CandidateBudget): DataFrame = {
     val dp = ensureContainmentDf(spark, dir)
-    val predicted = ctCostMemo.getOrElseUpdate(
-      (dir, graft.Materialize.fingerprint(spark, dir),
-        graft.Materialize.fingerprint(spark, dp), threshold),
-      containmentCandidateCost(spark, dir, threshold).head().getLong(0))
+    val predicted = graft.Memo(("containment cost", dir, threshold),
+        graft.Memo.listing(spark, dir, dp)) {
+      containmentCandidateCost(spark, dir, threshold).head().getLong(0)
+    }
     if (predicted <= budget) containmentPairs(spark, dir, threshold)
     else containmentPairsCapped(spark, dir, threshold, dfCapInverse)
   }
 
   def containmentPairsAutoOracle(threshold: Double, dfCapInverse: Long,
-                                 budget: Long = ContainmentCandidateBudget): String =
+                                 budget: Long = FuzzySearch.CandidateBudget): String =
     s"""WITH cost AS (${containmentCandidateCostOracle(threshold)})
        |SELECT id_a, id_b, containment
        |FROM (
@@ -895,11 +881,6 @@ object Dedup {
     * comment in [[minhashRecall]]. */
   val RecallCandJoinBudget: Long = 8L * 1000 * 1000
 
-  /** Memo for [[minhashRecall]]'s dispatch prediction — see the
-    * construction-time-action note there. */
-  private val recallCostMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), Long]
-
   /** Exact truth pairs, count-join spelling: shared shingles per pair =
     * count of equi-join matches (map-side-combinable group-by), so no
     * shingle ARRAY ever enters a shuffle and no per-pair array
@@ -993,15 +974,14 @@ object Dedup {
     // Σdf² rows; prefix path ≈ 10 s flat (df join + two windows + array
     // verify of the ~0.4 M surviving candidates) → escalate near 8 M.
     // Memoized (the `.head()` is an action at construction time): the
-    // prediction derives only from the documents table, so it is keyed by
-    // (dir, input fingerprint) — re-predicted when the input dir changes,
-    // driver-side-only on every later construction.
+    // prediction derives only from the documents table, so its stamp is
+    // the input dir's listing.
     val ex = ds.select(col("doc_id"), explode(col("sh")).as("s"))
-    val predicted = recallCostMemo.getOrElseUpdate(
-      (dir, graft.Materialize.fingerprint(spark, dir)),
+    val predicted = graft.Memo(("recall cost", dir), graft.Memo.listing(spark, dir)) {
       ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .agg(coalesce(sum(col("df") * (col("df") - 1L)), lit(0L)))
-        .head().getLong(0) / 2L)
+        .head().getLong(0) / 2L
+    }
     val truth =
       (if (predicted <= RecallCandJoinBudget) recallTruthCountJoin(ds, ex)
        else recallTruthPrefixFilter(ds, ex))
@@ -1728,26 +1708,6 @@ object Dedup {
        |       (SELECT count(*) FROM cp JOIN ch USING (doc_a, doc_b))::DOUBLE
        |         / (SELECT count(*) FROM cp)::DOUBLE AS recall_vs_capped""".stripMargin
 
-  /** Candidate-row budget for [[winnowPairsAuto]] — the sibling families'
-    * measured crossover (SCALE.md §admission-control: pair verification
-    * ≈ 0.33 µs/row + fixed; the capped form ~1.4 s slower than uncapped
-    * when nothing is hot, measured at the 10× replica). 8 M keeps the
-    * EXACT uncapped semantics wherever it is not measurably the slower
-    * plan — the boilerplate corpus of SCALE.md §The winnow df-cap's
-    * value case predicts ~50 M pairs and correctly escalates. */
-  val WinnowCandidateBudget: Long = 8L * 1000 * 1000
-
-  /** Memo for the dispatch predictions — `.head()` is a
-    * construction-time action (the batchFuzzySearchAuto precedent);
-    * keyed by the input and stats-artifact fingerprints so an ingest
-    * increment or stats append re-predicts. The tier-1 model is
-    * parameter-free; the tier-2 model keys on dfCapInverse (its allowed
-    * set depends on it). */
-  private val winnowCostMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String), Long]
-  private val winnowCappedCostMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String, Long), Long]
-
   /** THREE-tier dispatching winnow-pairs entry (round 11 — the 100×
     * clone replica showed the relative cut's blind spot the same way the
     * 100× rehearsal showed the stop-gram tier's): uncapped (exact
@@ -1756,16 +1716,21 @@ object Dedup {
     * per-fp truncation — the only tier whose volume is bounded at any
     * corpus. Both predictions fold from the bounded stats artifact; the
     * oracle dispatches identically in SQL, so the gate checks the
-    * dispatch itself. */
+    * dispatch itself. The budget is [[FuzzySearch.CandidateBudget]] (the
+    * sibling families' measured crossover; the boilerplate corpus of
+    * SCALE.md §The winnow df-cap's value case predicts ~50 M pairs and
+    * escalates). Both predictions are construction-time actions,
+    * [[graft.Memo]]ized under the input and stats-artifact listings; the
+    * tier-2 one is keyed by dfCapInverse (its allowed set depends on it). */
   def winnowPairsAuto(spark: SparkSession, dir: String, dfCapInverse: Long,
-                      budget: Long = WinnowCandidateBudget,
+                      budget: Long = FuzzySearch.CandidateBudget,
                       perFpCap: Int = WinnowPerFpCap): DataFrame = {
     val d = Tables.documents(spark, dir)
     val dp = graft.Materialize.ensure(spark, WinnowDf, dir, d)
-    val fps = (dir, graft.Materialize.fingerprint(spark, dir),
-      graft.Materialize.fingerprint(spark, dp))
-    val predicted = winnowCostMemo.getOrElseUpdate(fps,
-      winnowCandidateCost(spark, dir).head().getLong(0))
+    val stamp = graft.Memo.listing(spark, dir, dp)
+    val predicted = graft.Memo(("winnow cost", dir), stamp) {
+      winnowCandidateCost(spark, dir).head().getLong(0)
+    }
     // every tier is SERVED from the materialized selection artifact —
     // the selection derivation (tokenize + windows + argmin over raw
     // text) dominated the inline read at the 100× replica, and it is
@@ -1774,16 +1739,16 @@ object Dedup {
       .repartition(col("fp"))
     if (predicted <= budget) winnowPairsFromSel(sel)
     else {
-      val cappedPredicted = winnowCappedCostMemo.getOrElseUpdate(
-        (fps._1, fps._2, fps._3, dfCapInverse),
-        winnowCappedCandidateCost(spark, dir, dfCapInverse).head().getLong(0))
+      val cappedPredicted = graft.Memo(("winnow capped cost", dir, dfCapInverse), stamp) {
+        winnowCappedCandidateCost(spark, dir, dfCapInverse).head().getLong(0)
+      }
       if (cappedPredicted <= budget) winnowPairsCappedFromSel(sel, dfCapInverse)
       else winnowPairsChampFromSel(sel, dfCapInverse, perFpCap)
     }
   }
 
   def winnowPairsAutoOracle(dfCapInverse: Long,
-                            budget: Long = WinnowCandidateBudget,
+                            budget: Long = FuzzySearch.CandidateBudget,
                             perFpCap: Int = WinnowPerFpCap): String =
     s"""WITH cost AS ($winnowCandidateCostOracle),
        |cost2 AS (${winnowCappedCandidateCostOracle(dfCapInverse)})

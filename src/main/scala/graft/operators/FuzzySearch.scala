@@ -1435,8 +1435,10 @@ object FuzzySearch {
        |       (SELECT count(*) FROM q)::BIGINT AS n_queries
        |FROM qg JOIN dfr USING (ngram)""".stripMargin
 
-  /** Candidate-row budget for [[batchFuzzySearchAuto]]'s dispatch — the
-    * point where the uncut indexed read stops being the cheaper plan.
+  /** Candidate-row budget of every admission-controlled pair dispatcher
+    * ([[batchFuzzySearchAuto]], `Dedup.containmentPairsAuto`,
+    * `Dedup.winnowPairsAuto`) — the point where the uncut read stops being
+    * the cheaper plan.
     * Derived from measured reads (SCALE.md §admission-control): the uncut
     * candidate join costs ≈ 0.33 µs/row + ~1.1 s fixed at local[32]
     * (2.44 M rows → 1.9 s at sf0.1; 245 M rows → ~80 s at the sf1
@@ -1444,28 +1446,11 @@ object FuzzySearch {
     * (its per-batch cost is a gram-space-bounded broadcast fold). The
     * curves cross near 6–8 M candidate rows; 8 M keeps the uncut plan —
     * which is the EXACT reference semantics, cap-after-count — wherever
-    * it is not measurably the slower choice. */
-  val BatchCandidateBudget: Long = 8L * 1000 * 1000
-
-  /** Memo for the dispatch prediction below: the `.head()` is a real Spark
-    * action at DataFrame-CONSTRUCTION time — unlike every other lazily
-    * built registry entry — so without the memo it re-runs on every
-    * invocation, used or not. Keyed by (dir, input-dir fingerprint,
-    * gram-stats artifact fingerprint): a new ingest increment or a stats
-    * append changes a fingerprint and re-predicts; otherwise construction
-    * is driver-side-only after the first call. */
-  private val costMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String), Long]
-
-  /** Memo for the tier-2 prediction (same keying rationale; the stop cut
-    * is parameterized by dfCapInverse, so it keys too). Unlike tier 1 it
-    * ALSO keys on the gramn artifact fingerprint: the allowed-set
-    * predicate df·inv ≤ n reads both stats artifacts, and the memo must
-    * re-predict if either moves — relying on every ingest appending to
-    * [[GramDf]] and [[GramN]] together would make that invariant load-bearing
-    * here instead of where it belongs. */
-  private val stopCostMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String, String, Long), Long]
+    * it is not measurably the slower choice. The containment verify
+    * (≈ 0.33 µs/row, the capped screen nearly flat) and the winnow pair
+    * join (the capped form ~1.4 s slower than uncapped when nothing is
+    * hot, at the 10× replica) measure on the same curve. */
+  val CandidateBudget: Long = 8L * 1000 * 1000
 
   /** Champion posting caps the dispatcher may budget-size tier 3 to,
     * DESCENDING — the largest feasible cap wins. Floor is
@@ -1578,12 +1563,6 @@ object FuzzySearch {
     ChampPlanLadder.find(p => vol(p) <= budget).getOrElse(ChampPlanLadder.last)
   }
 
-  /** Memo for the tier-3 plan sizing (same construction-time-action
-    * rationale as the cost memos; keys on both stats artifacts like the
-    * tier-2 memo, plus the cut parameter and the budget). */
-  private val champPlanMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String, String, Long, Long), (Int, Int, Int)]
-
   /** The dispatching batch-fuzzy serving entry — admission control WIRED,
     * not just available: runs [[batchCandidateCost]]'s bounded prediction
     * (a join of two gram-space-bounded relations; sub-second at any
@@ -1605,24 +1584,30 @@ object FuzzySearch {
     * champion index (absolute per-gram truncation — the only tier whose
     * candidate volume is linear in the batch at any corpus size). Both
     * predictions fold from the bounded stats artifacts; the oracle
-    * dispatches identically in SQL. */
+    * dispatches identically in SQL.
+    *
+    * Each prediction is a real Spark action at DataFrame-CONSTRUCTION
+    * time, so each is [[graft.Memo]]ized: tier 1 under the input and
+    * [[GramDf]] listings; tiers 2 and 3, whose allowed-set predicate
+    * df·inv ≤ n reads both stats artifacts, under the [[GramN]] listing
+    * too, keyed by dfCapInverse (tier 3 also by the budget). */
   def batchFuzzySearchAuto(spark: SparkSession, dir: String, numResults: Int,
                            dfCapInverse: Long, cap: Int = DefaultCap,
-                           budget: Long = BatchCandidateBudget,
+                           budget: Long = CandidateBudget,
                            postingCap: Int = 0): DataFrame = {
     val c = corpus(spark, dir)
     val dp = graft.Materialize.ensure(spark, GramDf, dir, c)
     val np = graft.Materialize.ensure(spark, GramN, dir, c)
-    val fps = (dir, graft.Materialize.fingerprint(spark, dir),
-      graft.Materialize.fingerprint(spark, dp))
-    val predicted = costMemo.getOrElseUpdate(fps,
-      batchCandidateCost(spark, dir).head().getLong(0))
+    val stamp = graft.Memo.listing(spark, dir, dp)
+    val predicted = graft.Memo(("fuzzy cost", dir), stamp) {
+      batchCandidateCost(spark, dir).head().getLong(0)
+    }
     if (predicted <= budget) batchFuzzySearchIndexed(spark, dir, numResults, cap)
     else {
-      val stopPredicted = stopCostMemo.getOrElseUpdate(
-        (fps._1, fps._2, graft.Materialize.fingerprint(spark, np),
-          fps._3, dfCapInverse),
-        batchStopgramCandidateCost(spark, dir, dfCapInverse).head().getLong(0))
+      val statsStamp = stamp ++ graft.Memo.listing(spark, np)
+      val stopPredicted = graft.Memo(("stop-gram cost", dir, dfCapInverse), statsStamp) {
+        batchStopgramCandidateCost(spark, dir, dfCapInverse).head().getLong(0)
+      }
       if (stopPredicted <= budget)
         batchFuzzySearchStopGramIndexed(spark, dir, numResults, dfCapInverse, cap)
       else {
@@ -1633,10 +1618,9 @@ object FuzzySearch {
         // and LSH width (parameter sweeps, parity pins).
         val (bands, rr, pc) =
           if (postingCap > 0) (FuzzyLshMaxBands, ChampRareGrams, postingCap)
-          else champPlanMemo.getOrElseUpdate(
-            (fps._1, fps._2, graft.Materialize.fingerprint(spark, np),
-              fps._3, dfCapInverse, budget),
-            champPlanFor(spark, dir, dfCapInverse, budget))
+          else graft.Memo(("champion plan", dir, dfCapInverse, budget), statsStamp) {
+            champPlanFor(spark, dir, dfCapInverse, budget)
+          }
         batchFuzzySearchChampIndexed(spark, dir, numResults, dfCapInverse,
           pc, cap, rr, bands)
       }
@@ -1679,7 +1663,7 @@ object FuzzySearch {
     * fixed branch. */
   def batchFuzzySearchAutoOracle(numResults: Int, dfCapInverse: Long,
                                  cap: Int = DefaultCap,
-                                 budget: Long = BatchCandidateBudget,
+                                 budget: Long = CandidateBudget,
                                  postingCap: Int = 0): String = {
     val champBranches =
       if (postingCap > 0)

@@ -145,17 +145,10 @@ object Similarity {
     val assign = cellAssignment(e, cent)
     val probe = e.filter(col("vec_id") === probeId)
       .select(col("embedding").as("pemb"))
-    val probeCells = cent.crossJoin(broadcast(probe))
-      .select(col("cid"), cosine(col("cemb"), col("pemb")).as("pc"))
-      .orderBy(col("pc").desc, col("cid")).limit(nprobe)
-      .select(col("cid").as("cell"))
+    val probeCells = ivfProbeCells(cent, probe, nprobe)
     val cand = assign.join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId).select("vec_id")
-    e.join(cand, "vec_id").crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), col("pemb")), 4).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id"))
-      .limit(k)
+    exactRerank(e.join(cand, "vec_id"), probe, k)
   }
 
   /** Two-level IVF — the escalation the round-9 ncells measurement calls
@@ -187,11 +180,7 @@ object Similarity {
       coarseStride, numCoarse, nprobe1, nprobe)
     val cand = cellAssignment(e, fine).join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId).select("vec_id")
-    e.join(cand, "vec_id").crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), col("pemb")), 4).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id"))
-      .limit(k)
+    exactRerank(e.join(cand, "vec_id"), probe, k)
   }
 
   /** The coarse-rep subsample of a fine codebook (every
@@ -226,13 +215,29 @@ object Similarity {
       .select(col("gid"), cosine(col("gemb"), col("pemb")).as("gc"))
       .orderBy(col("gc").desc, col("gid")).limit(nprobe1)
       .select(col("gid"))
-    fine.join(broadcast(f2c), "cid")
-      .join(broadcast(probeGroups), "gid")
-      .crossJoin(broadcast(probe))
+    ivfProbeCells(fine.join(broadcast(f2c), "cid").join(broadcast(probeGroups), "gid"),
+      probe, nprobe)
+  }
+
+  /** The flat probe-cell selection: rank the centroids (`cid`, `cemb`) by
+    * cosine to the one-row probe (`pemb`), keep `nprobe` cells. */
+  private[graft] def ivfProbeCells(cent: DataFrame, probe: DataFrame,
+                                   nprobe: Int): DataFrame =
+    cent.crossJoin(broadcast(probe))
       .select(col("cid"), cosine(col("cemb"), col("pemb")).as("pc"))
       .orderBy(col("pc").desc, col("cid")).limit(nprobe)
       .select(col("cid").as("cell"))
-  }
+
+  /** The exact re-rank every single-probe IVF form ends in: the candidate
+    * rows (`vec_id`, `label`, `embedding`) against the one-row probe
+    * (`pemb`), cosine rounded to 4 places, top `k` by (cosine_sim desc,
+    * vec_id). */
+  private[graft] def exactRerank(cand: DataFrame, probe: DataFrame, k: Int): DataFrame =
+    cand.crossJoin(broadcast(probe))
+      .select(col("vec_id"), col("label"),
+        round(cosine(col("embedding"), col("pemb")), 4).as("cosine_sim"))
+      .orderBy(col("cosine_sim").desc, col("vec_id"))
+      .limit(k)
 
   /** The SERVED two-level form: the same coarse→fine probe-cell
     * selection as [[ivf2TopK]] (codebook-sized work, O(√C) query-side),
@@ -255,13 +260,8 @@ object Similarity {
     val probeCells = ivf2ProbeCells(fine, probe, centroidMod,
       coarseStride, numCoarse, nprobe1, nprobe)
     val indexPath = ensureIvfIndex(spark, dir, e, fine, centroidMod, numCentroids)
-    Tables.parquet(spark, indexPath).join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), col("pemb")), 4).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id"))
-      .limit(k)
+    exactRerank(Tables.parquet(spark, indexPath).join(broadcast(probeCells), "cell")
+      .filter(col("vec_id") =!= probeId), probe, k)
   }
 
   def ivf2TopKOracle(probeId: Long, k: Int, centroidMod: Long = 25L,
@@ -401,13 +401,8 @@ object Similarity {
       coarseStride, numCoarse, nprobe1, nprobe)
     val path = ensureIvf2AssignedIndex(spark, dir, e, fine, centroidMod,
       numCentroids, coarseStride, numCoarse, nprobe1)
-    Tables.parquet(spark, path).join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), col("pemb")), 4).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id"))
-      .limit(k)
+    exactRerank(Tables.parquet(spark, path).join(broadcast(probeCells), "cell")
+      .filter(col("vec_id") =!= probeId), probe, k)
   }
 
   def ivf2AssignedTopKOracle(probeId: Long, k: Int, centroidMod: Long = 25L,
@@ -607,24 +602,16 @@ object Similarity {
     val bucketed = Tables.parquet(spark, indexPath)
     val probe = e.filter(col("vec_id") === probeId)
       .select(col("embedding").as("pemb"))
-    val probeCells = cent.crossJoin(broadcast(probe))
-      .select(col("cid"), cosine(col("cemb"), col("pemb")).as("pc"))
-      .orderBy(col("pc").desc, col("cid")).limit(nprobe)
-      .select(col("cid").as("cell"))
-    bucketed.join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), col("pemb")), 4).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col("vec_id"))
-      .limit(k)
+    val probeCells = ivfProbeCells(cent, probe, nprobe)
+    exactRerank(bucketed.join(broadcast(probeCells), "cell")
+      .filter(col("vec_id") =!= probeId), probe, k)
   }
 
-  /** Memo for the corpus count the derivation reads — a construction-time
-    * job (the cost-memo precedent); keyed by the input-dir fingerprint so
-    * an ingest increment re-counts and re-keys the artifact. */
-  private val autoCountMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), Long]
+  /** The embeddings row count of `dir` at `listing` (its [[graft.Memo.listing]]),
+    * [[graft.Memo]]ized: one count job per listing, shared by the auto-sized
+    * IVF read and the ANN model. */
+  private def embeddingsCount(spark: SparkSession, dir: String, listing: Seq[String]): Long =
+    graft.Memo(("embeddings count", dir), listing)(Tables.embeddings(spark, dir).count())
 
   /** Build-work budget for the default IVF ensure path, in vector×centroid
     * cosine evaluations — the build-side admission control the query-side
@@ -691,9 +678,7 @@ object Similarity {
                           k: Int, centroidMod: Long = 25L,
                           nprobe: Int = 2,
                           budget: Long = IvfAssignBudget): DataFrame = {
-    val n = autoCountMemo.getOrElseUpdate(
-      (dir, graft.Materialize.fingerprint(spark, dir)),
-      Tables.embeddings(spark, dir).count())
+    val n = embeddingsCount(spark, dir, graft.Memo.listing(spark, dir))
     val ncells = autoNumCentroids(n)
     // the serving probe rule must match how the BUILD quantized: the
     // flat-assigned index is probed flat, the two-level-assigned index by
@@ -1042,27 +1027,12 @@ object Similarity {
     pqAdcTopK(pqEncode(e, books), books, e, probeId, k)
   }
 
-  /** Shared ADC scoring tail of the inline, indexed, and trained PQ
-    * spellings. */
+  /** [[adcScore]] for one probe id: fetches the probe row from `e` and
+    * drops it from `codes` — the inline, indexed and trained PQ spellings. */
   private[graft] def pqAdcTopK(codes: DataFrame, books: DataFrame, e: DataFrame,
-                               probeId: Long, k: Int): DataFrame = {
-    val probe = e.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("pemb"))
-    val lut = books.crossJoin(broadcast(probe))
-      .select(col("m"), col("cid").as("code"),
-        l2sq(slice(col("pemb"), col("m") * PqDim + 1, lit(PqDim))
-          .cast("array<double>"), col("cemb")).as("d"))
-    codes.join(broadcast(lut), Seq("m", "code"))
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("m"), col("d")))).as("ds"))
-      .select(col("vec_id"),
-        aggregate(col("ds"), lit(0.0), (acc, x) => acc + x("d")).as("pq_dist"))
-      .filter(col("vec_id") =!= probeId)
-      .join(e.select(col("vec_id"), col("label")), "vec_id")
-      .select(col("vec_id"), col("label"), col("pq_dist"))
-      .orderBy(col("pq_dist"), col("vec_id"))
-      .limit(k)
-  }
+                               probeId: Long, k: Int): DataFrame =
+    adcScore(codes.filter(col("vec_id") =!= probeId), books, e,
+      e.filter(col("vec_id") === probeId).select(col("embedding").as("pemb")), k)
 
   /** The PQ codes artifact — the ingest product: one row per vector, the
     * whole M-code array, vec_id-clustered. At 100 TB this is the 8-byte
@@ -1102,20 +1072,17 @@ object Similarity {
     val books = pqCodebooks(e, mod)
     val probe = e.filter(col("vec_id") === probeId)
       .select(col("embedding").as("pemb"))
-    val probeCells = cent.crossJoin(broadcast(probe))
-      .select(col("cid"), cosine(col("cemb"), col("pemb")).as("pc"))
-      .orderBy(col("pc").desc, col("cid")).limit(nprobe)
-      .select(col("cid").as("cell"))
+    val probeCells = ivfProbeCells(cent, probe, nprobe)
     val cand = cellAssignment(e, cent).join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= probeId).select("vec_id")
     adcScore(pqEncode(e, books).join(cand, "vec_id"), books, e, probe, k)
   }
 
-  /** Shared ADC-over-candidates tail of the IVF+PQ compositions: LUT from
-    * the one-row broadcast probe, lookup-sum per candidate (the same
-    * m-sorted bit-stable fold as [[pqAdcTopK]]), label fetch, top-k.
-    * `codes` arrives already restricted to the probed cells' members (the
-    * probe row excluded upstream). */
+  /** The one ADC scoring tail of every single-probe PQ form: LUT from the
+    * one-row broadcast probe, lookup-sum per candidate folded over an
+    * m-sorted list (bit-stable across engines), label fetch, top-k.
+    * `codes` arrives already restricted to the candidates, the probe row
+    * excluded. */
   private[graft] def adcScore(codes: DataFrame, books: DataFrame, e: DataFrame,
                               probe: DataFrame, k: Int): DataFrame = {
     val lut = books.crossJoin(broadcast(probe))
@@ -1209,7 +1176,7 @@ object Similarity {
     * all probes' cells, 8-byte codes — never the float vectors); scoring
     * is the per-probe ADC LUT (P × M·K rows — broadcastable while the
     * probe batch is bounded, the standard batch-ADC shape) with the same
-    * m-sorted bit-stable fold as [[pqAdcTopK]]. Per-probe rank by
+    * m-sorted bit-stable fold as [[adcScore]]. Per-probe rank by
     * (pq_dist, vec_id), so each probe's slice equals [[ivfPqTopK]] run
     * alone (OperatorParitySpec pins it). */
   def ivfPqBatchTopK(spark: SparkSession, dir: String, k: Int,
@@ -1454,10 +1421,11 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cell").parquet(p)
     }
 
-  /** Which artifact generation an [[AnnModel]] was built from: the input
-    * dir's fingerprint and the serving paths of the trained fine
-    * codebook, the trained-assigned PQ codes and the int8 tier. */
-  private[graft] final case class AnnKey(fingerprint: String, finePath: String,
+  /** Which artifact generation an [[AnnModel]] was built from — its
+    * [[graft.Memo]] stamp: the input dir's listing and the serving paths
+    * of the trained fine codebook, the trained-assigned PQ codes and the
+    * int8 tier. */
+  private[graft] final case class AnnKey(listing: Seq[String], finePath: String,
                                          codesPath: String, int8Path: String)
 
   /** The query-invariant state of [[ivf2PqRefineTopKSized]] for one
@@ -1518,34 +1486,21 @@ object Similarity {
       s.map(_.asInstanceOf[Double]).toArray
     }
 
-  /** One [[AnnModel]] per input dir, replaced when the dir's key changes. */
-  private[graft] val annModels =
-    new java.util.concurrent.ConcurrentHashMap[String, AnnModel]
-
-  private val annModelBuild = new Object
-
-  /** The current [[AnnModel]] of `dir`. Every call fingerprints the dir
-    * and runs the three artifact ensures (driver-side listings; no Spark
-    * job unless an artifact is missing or stale); only a new key counts
-    * the corpus and builds a model, two more jobs, one build at a time
-    * so racing cold requests build it once. */
+  /** The current [[AnnModel]] of `dir`, [[graft.Memo]]ized per dir under
+    * its [[AnnKey]]. Every call lists the dir once and runs the three
+    * artifact ensures (driver-side listings; no Spark job unless an
+    * artifact is missing or stale); only a new listing counts the corpus
+    * and only a new key builds a model, two more jobs. */
   private[graft] def annModel(spark: SparkSession, dir: String): AnnModel = {
-    val fp = graft.Materialize.fingerprint(spark, dir)
-    val held = Option(annModels.get(dir))
+    val listing = graft.Memo.listing(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    val n = held.filter(_.key.fingerprint == fp).map(_.n).getOrElse(e.count())
+    val n = embeddingsCount(spark, dir, listing)
     val (ncells, ncoarse, np1, nprobe, _) = annRefinePlan(n, 1) // refine is per-k
     val finePath = KMeans.ensureTrainedCentroids(spark, dir, AnnTrainIters, 25L, ncells)
-    val key = AnnKey(fp, finePath,
+    val key = AnnKey(listing, finePath,
       ensureIvfPqCodesTrained(spark, dir, finePath, 25L, ncells),
       graft.Materialize.ensure(spark, Int8Codes, dir, e))
-    held.filter(_.key == key).getOrElse(annModelBuild.synchronized {
-      Option(annModels.get(dir)).filter(_.key == key).getOrElse {
-        val built = buildAnnModel(spark, e, key, n, ncoarse, np1, nprobe)
-        annModels.put(dir, built)
-        built
-      }
-    })
+    graft.Memo(("ann model", dir), key)(buildAnnModel(spark, e, key, n, ncoarse, np1, nprobe))
   }
 
   private def buildAnnModel(spark: SparkSession, e: DataFrame, key: AnnKey,

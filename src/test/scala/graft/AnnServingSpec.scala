@@ -11,8 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import OperatorParitySpec.{composedRefineTopKSized, rows}
 import SparkJobs.jobsOf
 
-import scala.jdk.CollectionConverters._
-
 /** The sized ANN face serves from a per-generation model held in driver
   * memory ([[Similarity.AnnModel]]): a warm request runs three Spark jobs,
   * a re-published input builds a new model in place of the old one, and
@@ -90,10 +88,14 @@ class AnnServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     writeEmbeddings(pristine, 800, 4L)
     assert(after == ann(pristine, 5L))
     assert(after != before)
-    // two generations of `dir`, one model held for it
+    // two generations of `dir`, one model held for it, stamped with the
+    // dir's current listing
     val tag = Materialize.tag(dir)
-    assert(Similarity.annModels.values.asScala.count(_.key.codesPath.contains(tag)) == 1)
-    assert(Similarity.annModels.get(dir).key.fingerprint == Materialize.fingerprint(spark, dir))
+    val held = Memo.entries.values.collect {
+      case (k: Similarity.AnnKey, _: Similarity.AnnModel) if k.codesPath.contains(tag) => k
+    }
+    assert(held.size == 1)
+    assert(held.head.listing == Memo.listing(spark, dir))
   }
 
   test("two threads racing the first request on a fresh dir get identical rows") {

@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * forms of the append and compact primitives, nor hand-codes the refresh
   * dispatch that `Materialize.refreshAuto` holds. Test-only code lives in the
   * specs: no composed reference twin or `…ForTest` def, and no stream is
-  * started outside the ingest cadence. Every doc comment documents the
+  * started outside the ingest cadence. Driver-side memory of computed
+  * results lives in [[Memo]] only. Every doc comment documents the
   * definition under it. */
 class LifecycleScanSpec extends AnyFunSuite {
 
@@ -97,6 +98,28 @@ class LifecycleScanSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"writeStream outside the ingest cadence: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main holds no cache map outside Memo") {
+    // Materialize's two concurrent maps are a lock table and a set of
+    // ensured paths, not caches of computed results
+    val allowed = Set("artifactLocks", "ensuredThisSession")
+    val map = """\b(TrieMap|ConcurrentHashMap)\b""".r
+    val valName = """\bval\s+(\w+)""".r
+    // the val declared on the line of `at` or the line above
+    def declared(src: String, at: Int): Option[String] = {
+      val from = src.lastIndexOf('\n', src.lastIndexOf('\n', at - 1) - 1) + 1
+      valName.findAllMatchIn(src.substring(from, at)).toSeq.lastOption.map(_.group(1))
+    }
+    val offenders = sources(root).flatMap { case (p, src) =>
+      map.findAllMatchIn(src).filterNot { m =>
+        p.endsWith(Paths.get("graft/Memo.scala")) ||
+          p.endsWith(Paths.get("graft/Materialize.scala")) &&
+            m.group(1) == "ConcurrentHashMap" && declared(src, m.start).exists(allowed)
+      }.map(m => s"${at(p, src, m.start)} ${m.group(1)}")
+    }
+    assert(offenders.isEmpty,
+      s"hand-rolled caches (hold computed results in Memo): ${offenders.mkString(", ")}")
   }
 
   test("no doc comment is followed directly by another doc comment") {

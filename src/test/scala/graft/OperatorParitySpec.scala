@@ -172,7 +172,7 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("p_partkey", "p_name").write.parquet(s"$tmp/part.parquet")
     val pred = FuzzySearch.batchCandidateCost(spark, tmp)
       .collect().head.getLong(0)
-    assert(pred > FuzzySearch.BatchCandidateBudget,
+    assert(pred > FuzzySearch.CandidateBudget,
       s"crafted corpus predicts only $pred candidate rows — not degenerate")
     val auto = FuzzySearch.batchFuzzySearchAuto(spark, tmp, 20, 10L).collect()
     val served = FuzzySearch.batchFuzzySearchStopGramIndexed(spark, tmp, 20, 10L)
