@@ -76,10 +76,15 @@ object TextFunctions {
   def geoSearchScore(search: Column, source: Column, population: Column): Column = {
     val postal = search.rlike("^[0-9]+$")
     val effSource = when(postal, split(source, " ").getItem(0)).otherwise(source)
-    val base = entityFuzzyScore(search, effSource)
+    geoSearchScore(entityFuzzyScore(search, effSource), population)
+  }
+
+  /** geo_manager.py:497-501 — the ranking score from a precomputed `base`
+    * (the `entityFuzzyScore` of the query against the effective source),
+    * so a caller that already holds that score does not compute it again. */
+  def geoSearchScore(base: Column, population: Column): Column =
     when(population <= 0 || base <= 0.65, base * 0.9)
       .otherwise(base * 0.9 + log(population) * 0.1)
-  }
 
   /** Explicit whitespace class, identical under Java regex and RE2 —
     * bare `\s` is NOT (Java's includes \x0B, RE2's does not), which would

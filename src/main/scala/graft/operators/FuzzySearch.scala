@@ -4,28 +4,29 @@ import graft.Tables
 import graft.functions.DamerauLevenshtein._
 import graft.functions.TextFunctions._
 import graft.oracle.OracleSql
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Auto-complete fuzzy search — the reference's flagship pipeline
-  * (geo_manager.py:525-619), re-expressed as one declarative DataFrame plan:
+  * (geo_manager.py:525-619). A request runs in three steps:
   *
-  *   query trigrams (literal, with multiplicity)
-  *     ⋈ exploded trigram postings of the corpus        -- candidate gen
-  *     → groupBy(id).count                              -- shared-trigram hits
-  *     → top max(k, 500) by (hits desc, id)             -- the 500-cap
-  *       (geo_manager.py:554/585 — kept as an explicit plan barrier: it is
-  *        observable semantics, comments at :552/:583)
-  *     ⋈ corpus (broadcast)                             -- fetch records
-  *     → score (DL distance, tversky+prefix, population rank)
-  *     → dedup best-score-per-clean_value               -- deterministic
-  *       version of the reference's dict-keying (geo_manager.py:587-588)
-  *     → top-k by score                                 -- TakeOrderedAndProject
+  *   1. hits (executors): query trigrams (a pushed or inline `isin`)
+  *        ∩ trigram postings of the corpus              -- candidate gen
+  *        → groupBy(id).count                            -- shared-trigram hits
+  *        → top max(k, 500) by (hits desc, id)           -- the 500-cap
+  *      (geo_manager.py:554/585 — observable semantics, comments at
+  *      :552/:583); only the capped ids reach the driver;
+  *   2. records (executors): the corpus filtered to those ids — Catalyst
+  *      pushes `id IN (…)` below the derivation into the scan, so only the
+  *      ≤ cap fetched names are cleaned — then filters, then scoring (DL
+  *      distance, tversky+prefix, population rank), collected;
+  *   3. rank (driver): best score per clean_value (deterministic version of
+  *      the reference's dict-keying, geo_manager.py:587-588), then top-k.
   *
-  * The candidate join broadcasts the tiny query-trigram side; the cap and
-  * final top-k plan as `TakeOrderedAndProject` (no full sort). At 100 TB
-  * the postings explode is the only wide stage and is bucketable by ngram
-  * (SURVEY.md §7.4).
+  * The reference likewise counts posting hits, keeps the top 500 ids and
+  * fetches only those records from a dict (geo_manager.py:582-619). The
+  * hits step is the only wide stage; the cap bounds everything after it
+  * at any corpus size.
   *
   * Corpus is the `part` table dressed as shapes (deterministic population),
   * so DuckDB can oracle the whole pipeline.
@@ -88,12 +89,10 @@ object FuzzySearch {
     // Counter over flattened posting lists (geo_manager.py:584-586).
     val qGramSet = queryTrigrams(q).distinct
     val c = corpusOf(spark, dir)
-
-    val qdf = spark.createDataFrame(qGramSet.map(Tuple1(_))).toDF("ngram")
-    val postings = c.select(col("id"), explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-    val hits = postings.join(broadcast(qdf), "ngram")
+    val hits = c.select(col("id"), explode(charNgrams(col("clean_value"), 3)).as("ngram"))
+      .filter(col("ngram").isin(qGramSet: _*))
       .groupBy(col("id")).agg(count(lit(1)).as("ngram_hits"))
-    rankCandidates(c, q, hits, numResults, cap, filters)
+    rankCandidates(spark, c, q, hits, numResults, cap, filters)
   }
 
   /** The posting index (`graft_postings`, at scale built at ingest):
@@ -110,18 +109,18 @@ object FuzzySearch {
   def ensurePostingsIndex(spark: SparkSession, dir: String, c: DataFrame): String =
     graft.Materialize.ensure(spark, Postings, dir, c)
 
-  /** Materialized-index fuzzy search: candidate generation reads the
-    * PRE-BUILT posting-pairs relation (NgramIndex.postingPairsMulti) from
-    * an ngram-clustered parquet layout instead of deriving postings inline
-    * per query. The query's trigram set becomes an `isin` predicate PUSHED
-    * INTO the parquet scan (PushedFilters: In(ngram, ...)), so with the
-    * pairs sorted by ngram within each file, row-group min/max stats skip
-    * everything but the probed trigrams' postings — the index-lookup read
-    * pattern SCALE.md promises (at 100 TB: bucketed+sorted by ngram, a
-    * query touches |q-grams|/|gram-space| of the index). Scoring is the
-    * identical pipeline (FuzzyIndexSpec pins bit-equal results; the shared
-    * oracle gates it). Serves the part-name [[corpus]] only: the posting
-    * artifact is keyed by input dir and version, not by corpus. */
+  /** Materialized-index fuzzy search: the hits step reads the PRE-BUILT
+    * posting pairs (NgramIndex.postingPairsMulti) instead of deriving
+    * postings from the corpus per query. The query's trigram set is an
+    * `isin` predicate pushed into the parquet scan (PushedFilters:
+    * In(ngram, ...)); the records and rank steps are [[fuzzySearch]]'s
+    * (OperatorParitySpec pins bit-equal results; the shared oracle gates
+    * both). The pushdown prunes almost nothing in today's layout: the
+    * pairs are hash-clustered, so each file is one row group whose ngram
+    * stats span a wide slice of the gram space, and a request reads nearly
+    * every file (SCALE.md, `fuzzy_indexed`). Serves the
+    * part-name [[corpus]] only: the posting artifact is keyed by input dir
+    * and version, not by corpus. */
   def fuzzySearchIndexed(spark: SparkSession, dir: String, query: String,
                          numResults: Int, cap: Int = DefaultCap): DataFrame = {
     val q = cleanQuery(query)
@@ -131,49 +130,61 @@ object FuzzySearch {
     val hits = Tables.parquet(spark, path)
       .filter(col("ngram").isin(qGramSet: _*))
       .groupBy(col("id")).agg(count(lit(1)).as("ngram_hits"))
-    rankCandidates(c, q, hits, numResults, cap)
+    rankCandidates(spark, c, q, hits, numResults, cap)
   }
 
   /** Shared scoring projection (DL distance, tversky+prefix similarity,
     * population-ranked score) — the per-record math the global AND
     * partitioned tails apply after their caps (one definition so the two
-    * faces can never drift). */
+    * faces can never drift). `entityFuzzyScore` is computed once per row:
+    * `score` reads `efs_raw` unless the query is all digits, which scores
+    * against the source's first space-token (geo_manager.py:493-495). */
   private def scoreCols(df: DataFrame, q: String): DataFrame = {
     val qLit = lit(q)
+    val base =
+      if (isPostal(q)) entityFuzzyScore(qLit, split(col("clean_value"), " ").getItem(0))
+      else col("efs_raw")
     df.withColumn("efs_raw", entityFuzzyScore(qLit, col("clean_value")))
       .withColumn("distance",
         geoDamerauLevenshtein(qLit, col("clean_value")).cast("long"))
       .withColumn("ngram_similarity", round(col("efs_raw"), 6))
-      .withColumn("score",
-        round(geoSearchScore(qLit, col("clean_value"), col("population")), 6))
+      .withColumn("score", round(geoSearchScore(base, col("population")), 6))
   }
 
-  /** The shared scoring tail of the pipeline: 500-cap → fetch → filters →
-    * score → best-per-clean_value dedup → top-k. `filters` replicate the
-    * reference's ORDER: applied to the candidate records AFTER the 500-cap
-    * (the results comprehension, geo_manager.py:578-580/614-617), so a
-    * filter never widens the candidate pool. */
-  private def rankCandidates(c: DataFrame, q: String, hits: DataFrame,
-                             numResults: Int, cap: Int,
+  /** Digits-only (cleaned) query: `geoSearchScore`'s postal branch. */
+  private def isPostal(q: String): Boolean = q.matches("^[0-9]+$")
+
+  /** The shared tail after the hits step: 500-cap → fetch → filters →
+    * score → best-per-clean_value dedup → top-k. The cap runs on the
+    * executors and hands the driver at most max(k, cap) ids; one job
+    * fetches and scores only those records (none when there are no ids);
+    * the dedup and top-k run on the driver over those ≤ max(k, cap) rows,
+    * returned as a local relation. `filters` replicate the reference's
+    * ORDER: applied to the candidate records AFTER the 500-cap (the results
+    * comprehension, geo_manager.py:578-580/614-617), so a filter never
+    * widens the candidate pool. */
+  private def rankCandidates(spark: SparkSession, c: DataFrame, q: String,
+                             hits: DataFrame, numResults: Int, cap: Int,
                              filters: Seq[(String, Any)] = Nil): DataFrame = {
-    val capped = hits.orderBy(col("ngram_hits").desc, col("id"))
-      .limit(math.max(numResults, cap))
+    val ids = hits.orderBy(col("ngram_hits").desc, col("id"))
+      .limit(math.max(numResults, cap)).select(col("id"))
+      .collect().map(_.get(0)).toSeq
 
     val filterOk = filters.map { case (k, v) => col(k) === lit(v) }
       .foldLeft(lit(true))(_ && _)
-    val scored = scoreCols(capped.join(c, "id").filter(filterOk), q)
+    val scored = scoreCols(c.filter(col("id").isin(ids: _*)).filter(filterOk), q)
+      .select(col("id"), col("value"), col("clean_value"), col("distance"),
+        col("ngram_similarity"), col("score"))
+    val rows = if (ids.isEmpty) Array.empty[Row] else scored.collect()
 
     // Deterministic dedup: best score (then lowest id) per clean_value —
     // replaces the reference's unspecified dict-insertion-order "last wins"
-    // (SURVEY.md §2.6).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("clean_value"))
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("id"), col("value"), col("clean_value"), col("distance"),
-        col("ngram_similarity"), col("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(numResults)
+    // (SURVEY.md §2.6); rows ordered as `orderBy(score.desc, id)`.
+    def before(a: Row, b: Row): Boolean =
+      Similarity.ranksBefore(a.getDouble(5), a.getLong(0), b.getDouble(5), b.getLong(0))
+    val best = rows.groupBy(_.get(2)).values.map(_.reduce((a, b) => if (before(b, a)) b else a))
+    val top = best.toSeq.sortWith(before).take(numResults)
+    spark.createDataFrame(java.util.Arrays.asList(top: _*), scored.schema)
   }
 
   /** best_fuzzy_search (geo_manager.py:503-523): the top-1 result gated by
@@ -318,7 +329,7 @@ object FuzzySearch {
     val sset = OracleSql.trigramSet("clean_value")
     val tv = OracleSql.tversky(qGramSet, sset, 0.85, 0.15)
     val efs = s"($tv * (1.0 + CASE WHEN starts_with(clean_value, '$qq') THEN 0.15 ELSE 0.0 END))"
-    val scoreBase = if (q.matches("^[0-9]+$")) {
+    val scoreBase = if (isPostal(q)) {
       val tok = "split_part(clean_value, ' ', 1)"
       val tvP = OracleSql.tversky(qGramSet, OracleSql.trigramSet(tok), 0.85, 0.15)
       s"($tvP * (1.0 + CASE WHEN starts_with($tok, '$qq') THEN 0.15 ELSE 0.0 END))"
@@ -1813,7 +1824,7 @@ object FuzzySearch {
     // ngram_similarity and the DL distance always use the full source
     // (fuzzy_search result dict, geo_manager.py:560-573). For non-numeric
     // queries the branch constant-folds away on both engines.
-    val scoreBase = if (q.matches("^[0-9]+$")) {
+    val scoreBase = if (isPostal(q)) {
       val tok = "split_part(clean_value, ' ', 1)"
       val tvP = OracleSql.tversky(qGramSet, OracleSql.trigramSet(tok), 0.85, 0.15)
       s"($tvP * (1.0 + CASE WHEN starts_with($tok, '$qq') THEN 0.15 ELSE 0.0 END))"

@@ -1470,14 +1470,19 @@ object Similarity {
       }
   }
 
-  /** The `keep` ids of highest score, ties to the smaller id, under
-    * Spark's double ordering (NaN largest, 0.0 == -0.0) — the rows
+  /** Whether (score `sa`, id `ia`) comes before (`sb`, `ib`) under
+    * `orderBy(score.desc, id)`: Spark's double ordering (NaN largest,
+    * 0.0 == -0.0), ties to the smaller id. */
+  private[graft] def ranksBefore(sa: Double, ia: Long, sb: Double, ib: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(sa, sb)
+    c > 0 || (c == 0 && ia < ib)
+  }
+
+  /** The `keep` ids of highest score under [[ranksBefore]] — the rows
     * `orderBy(score.desc, id).limit(keep)` returns. */
   private def rankDesc(ids: Array[Long], scores: Array[Double], keep: Int): Array[Long] =
-    ids.indices.sortWith { (a, b) =>
-      val c = SQLOrderingUtil.compareDoubles(scores(a), scores(b))
-      c > 0 || (c == 0 && ids(a) < ids(b))
-    }.take(keep).map(ids).toArray
+    ids.indices.sortWith((a, b) => ranksBefore(scores(a), ids(a), scores(b), ids(b)))
+      .take(keep).map(ids).toArray
 
   /** Column `i` of a collected row as a double vector; None when null. */
   private def vectorOf(r: Row, i: Int): Option[Array[Double]] =

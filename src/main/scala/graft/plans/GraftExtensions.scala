@@ -174,7 +174,9 @@ object GraftExtensions {
     * plans, so the SQL face can never drift from the API the oracle
     * gates. Arguments must be literals — they parameterize plan
     * CONSTRUCTION (which tables are read, which deltas are folded), not
-    * row evaluation. */
+    * row evaluation. `fuzzy_search` resolves its candidates when the SQL
+    * is analyzed: its operator runs the hits and records jobs then and
+    * returns the ranked rows as a local relation. */
   val tableInjections: Seq[(String, ExpressionInfo, TableFunctionBuilder)] =
     tableInjectionsFor(None)
 

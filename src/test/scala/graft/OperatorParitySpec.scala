@@ -50,10 +50,16 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("indexed candidate generation pushes the ngram set into the scan") {
-    val plan = FuzzySearch.fuzzySearchIndexed(spark, dir, "smal widget", 20)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("In(ngram"),
-      s"expected In(ngram,...) pushed to the postings scan:\n$plan")
+    // the plans the request executes: the face runs its hits and records
+    // jobs while it is called and returns a local relation
+    val plans = PlanAudit.executed(spark)(
+      FuzzySearch.fuzzySearchIndexed(spark, dir, "smal widget", 20).collect())._2
+      .map(_.executedPlan.toString)
+    val scans = plans.flatMap(_.split("\n")).filter(_.contains("PushedFilters"))
+    assert(scans.exists(_.contains("In(ngram")),
+      s"expected In(ngram,...) pushed to the postings scan:\n${plans.mkString("\n")}")
+    assert(scans.exists(_.contains("In(p_partkey")),
+      s"expected the records fetched by a pushed id filter:\n${plans.mkString("\n")}")
   }
 
   test("stop-gram cut bites: hot grams exist, results differ from the uncut batch") {

@@ -40,9 +40,27 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
+  /** Every plan the query executes, whole (final and initial), for faces
+    * that run jobs while they are called and return a local relation. */
+  private def executedPlans(name: String): Seq[String] =
+    PlanAudit.executed(spark)(SparkEntry.queries(name)(spark, dir).collect())._2
+      .map(_.executedPlan.toString)
+
+  /** Parquet scan lines of `plans` with a filter pushed on `column`. */
+  private def pushedOn(plans: Seq[String], column: String): Seq[String] =
+    plans.flatMap(_.split("\n")).filter(l =>
+      l.contains("PushedFilters") && l.contains(s"In($column"))
+
   test("fuzzy_search top-k plans as TakeOrderedAndProject, never a full sort") {
-    val p = finalPlan("fuzzy_search")
-    assert(p.contains("TakeOrderedAndProject"), p)
+    val ps = executedPlans("fuzzy_search")
+    val all = ps.mkString("\n")
+    // the 500-cap is the hits step's TakeOrderedAndProject; the dedup and
+    // top-k run on the driver, so no step sorts, and none joins: the query
+    // trigrams are a filter, the records are fetched by a pushed id filter
+    assert(all.contains("TakeOrderedAndProject"), all)
+    assert("""\bSort \[""".r.findFirstIn(all).isEmpty, all)
+    assert(!all.contains("Join"), all)
+    assert(pushedOn(ps, "p_partkey").nonEmpty, all)
   }
 
   test("partitioned fuzzy rank-limits plan map-side (WindowGroupLimit)") {
@@ -139,8 +157,9 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("indexed fuzzy candidate scan carries the In(ngram) pushdown") {
-    val p = finalPlan("fuzzy_indexed")
-    assert(p.contains("In(ngram"), p)
+    val ps = executedPlans("fuzzy_indexed")
+    assert(pushedOn(ps, "ngram").exists(_.contains("graft_postings")), ps.mkString("\n"))
+    assert(pushedOn(ps, "p_partkey").nonEmpty, ps.mkString("\n"))
   }
 
   test("bloom probe filters the fact scan stage before any exchange") {
