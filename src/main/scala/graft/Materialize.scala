@@ -53,8 +53,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    [[GcStagingMinAgeMs]] has passed since the CURRENT generation
   *    committed — the grace window a concurrent reader's in-flight
   *    request must finish within (MutationServeSpec pins the lifecycle).
-  *    [[refreshAuto]] is the one delta-vs-rebuild dispatcher of the
-  *    refreshWith families.
+  *    [[refreshAuto]] is the one delta-vs-rebuild dispatcher of a
+  *    refreshWith family (the docglobal overlay's).
   *  - **Versioned** — callers bump `version` whenever the derivation
   *    changes; a stale layout written by earlier code is then simply a
   *    different path and can never be read by mistake.
@@ -673,10 +673,9 @@ object Materialize {
 
   /** Corpus-size floor under which a refresh dispatches to the exact
     * rebuild: below it the delta's fixed probe-plan overhead exceeds the
-    * whole rebuild (measured on BOTH refreshWith families — docglobal:
-    * gate 500 docs rebuild 1.3 s vs delta 3.6 s, 10× 50k docs 16.3 s vs
-    * 5.9–8.2 s; champion: 10× rebuild 2.4 s vs delta 2.0 s, 100× 8.7 s
-    * vs 1.8 s — SCALE.md §round-12). The floor sits inside the measured
+    * whole rebuild (measured on the docglobal overlay: gate 500 docs
+    * rebuild 1.3 s vs delta 3.6 s, 10× 50k docs 16.3 s vs 5.9–8.2 s —
+    * SCALE.md §round-12). The floor sits inside the measured
     * 500→50k bracket, conservative toward the exact rebuild, which is
     * cheap by definition wherever the floor applies. */
   val RefreshDeltaFloor = 10000L

@@ -5,28 +5,34 @@ import graft.functions.DamerauLevenshtein._
 import graft.functions.TextFunctions._
 import graft.oracle.OracleSql
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Auto-complete fuzzy search — the reference's flagship pipeline
-  * (geo_manager.py:525-619). A request runs in three steps:
+  * (geo_manager.py:525-619). Every face runs the same four steps:
   *
-  *   1. hits (executors): query trigrams (a pushed or inline `isin`)
-  *        ∩ trigram postings of the corpus              -- candidate gen
-  *        → groupBy(id).count                            -- shared-trigram hits
-  *        → top max(k, 500) by (hits desc, id)           -- the 500-cap
+  *   1. hits: query trigrams ∩ trigram postings of the corpus (derived
+  *      inline or read from the materialized index) → count per id, the
+  *      shared-trigram hits;
+  *   2. cap: the top max(k, 500) ids by (hits desc, id) — the 500-cap
   *      (geo_manager.py:554/585 — observable semantics, comments at
-  *      :552/:583); only the capped ids reach the driver;
-  *   2. records (executors): the corpus filtered to those ids — Catalyst
-  *      pushes `id IN (…)` below the derivation into the scan, so only the
-  *      ≤ cap fetched names are cleaned — then filters, then scoring (DL
-  *      distance, tversky+prefix, population rank), collected;
-  *   3. rank (driver): best score per clean_value (deterministic version of
-  *      the reference's dict-keying, geo_manager.py:587-588), then top-k.
+  *      :552/:583);
+  *   3. score: DL distance, tversky+prefix similarity and the
+  *      population-ranked score, one projection ([[scoreCols]]);
+  *   4. rank: best score per clean_value (deterministic version of the
+  *      reference's dict-keying, geo_manager.py:587-588), then top-k.
   *
-  * The reference likewise counts posting hits, keeps the top 500 ids and
-  * fetches only those records from a dict (geo_manager.py:582-619). The
-  * hits step is the only wide stage; the cap bounds everything after it
-  * at any corpus size.
+  * The single-query faces filter postings to the query's trigrams with an
+  * `isin`, cap on the executors and hand only the capped ids to the
+  * driver; one job fetches and scores those records (Catalyst pushes
+  * `id IN (…)` below the derivation into the scan, so only the ≤ cap
+  * fetched names are cleaned) and the driver ranks them — as the
+  * reference keeps the top 500 ids and fetches only those records from a
+  * dict (geo_manager.py:582-619). The batch faces (one row per query,
+  * key `qid`) and the partitioned faces (key `partition`) run the same
+  * steps per key in one plan: the cap, the dedup and the top-k are rank
+  * windows over the key ([[capHits]], [[rankKeyed]]). Every oracle runs
+  * the same score-and-rank tail in SQL ([[rankSql]]).
   *
   * Corpus is the `part` table dressed as shapes (deterministic population),
   * so DuckDB can oracle the whole pipeline.
@@ -77,22 +83,78 @@ object FuzzySearch {
        |       population, country, geo_type
        |FROM (${GeoShapes.oracleCte})""".stripMargin
 
+  // ------------------------------------------------------- the one pipeline
+
+  /** Inline trigram postings of a corpus: one (id, `keys`…, ngram) row per
+    * trigram OCCURRENCE in the record (add_entity appends per occurrence,
+    * geo_manager.py:470-476). */
+  private def inlinePostings(c: DataFrame, keys: String*): DataFrame =
+    c.select(("id" +: keys).map(col) :+
+      explode(charNgrams(col("clean_value"), 3)).as("ngram"): _*)
+
+  /** Hits of ONE query, counted per (id, `keys`…): postings filtered to the
+    * query's DEDUPED trigrams (dict-comprehension keys,
+    * geo_manager.py:582) by an `isin`, which an index scan takes as a
+    * pushed In(ngram) — so ngram_hits == Counter over flattened posting
+    * lists (geo_manager.py:584-586). */
+  private def queryHits(postings: DataFrame, q: String, keys: String*): DataFrame =
+    postings.filter(col("ngram").isin(queryTrigrams(q).distinct: _*))
+      .groupBy(("id" +: keys).map(col): _*).agg(count(lit(1)).as("ngram_hits"))
+
+  /** The reference's 500-candidate order (geo_manager.py:553-555). */
+  private val capOrder: Seq[Column] = Seq(col("ngram_hits").desc, col("id"))
+
+  private def capLimit(numResults: Int): Int = math.max(numResults, DefaultCap)
+
+  /** The 500-cap per `key` (`qid` or `partition`), a rank window that
+    * plans map-side as WindowGroupLimit. */
+  private def capHits(hits: DataFrame, key: String, numResults: Int): DataFrame =
+    hits.withColumn("crn", row_number().over(Window.partitionBy(col(key)).orderBy(capOrder: _*)))
+      .filter(col("crn") <= capLimit(numResults)).drop("crn")
+
+  /** The scoring projection every face applies after its cap: DL distance,
+    * tversky+prefix similarity, population-ranked score, against the query
+    * `q` (a literal or a per-row column). `entityFuzzyScore` is computed
+    * once per row: `score` reads `efs_raw` unless the query is all digits,
+    * which scores against the source's first space-token
+    * (geo_manager.py:493-495). The postal test is a Column, so it
+    * constant-folds away for a literal query and branches per row in a
+    * batch. */
+  private def scoreCols(df: DataFrame, q: Column): DataFrame = {
+    val base = when(q.rlike("^[0-9]+$"),
+      entityFuzzyScore(q, split(col("clean_value"), " ").getItem(0)))
+      .otherwise(col("efs_raw"))
+    df.withColumn("efs_raw", entityFuzzyScore(q, col("clean_value")))
+      .withColumn("distance", geoDamerauLevenshtein(q, col("clean_value")).cast("long"))
+      .withColumn("ngram_similarity", round(col("efs_raw"), 6))
+      .withColumn("score", round(geoSearchScore(base, col("population")), 6))
+  }
+
+  private val resultCols = Seq("id", "value", "clean_value", "distance",
+    "ngram_similarity", "score")
+
+  /** The keyed rank tail: best score (then lowest id) per (`key`,
+    * clean_value) — replaces the reference's unspecified dict-insertion
+    * "last wins" (SURVEY.md §2.6) — then the top-k per key, ordered. */
+  private def rankKeyed(scored: DataFrame, key: String, numResults: Int): DataFrame = {
+    val order = Seq(col("score").desc, col("id"))
+    scored
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col(key), col("clean_value")).orderBy(order: _*)))
+      .filter(col("rn") === 1)
+      .withColumn("rk", row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+      .filter(col("rk") <= numResults)
+      .select((key +: resultCols).map(col): _*)
+      .orderBy(col(key) +: order: _*)
+  }
+
   def fuzzySearch(spark: SparkSession, dir: String, query: String,
-                  numResults: Int, cap: Int = DefaultCap,
+                  numResults: Int,
                   corpusOf: (SparkSession, String) => DataFrame = corpus,
                   filters: Seq[(String, Any)] = Nil): DataFrame = {
     val q = cleanQuery(query)
-    // Multiplicity sides per the reference: query trigrams are DEDUPED
-    // (dict-comprehension keys, geo_manager.py:582) while posting lists
-    // keep one entry per trigram OCCURRENCE in the record (add_entity
-    // appends per occurrence, geo_manager.py:470-476) — so ngram_hits ==
-    // Counter over flattened posting lists (geo_manager.py:584-586).
-    val qGramSet = queryTrigrams(q).distinct
     val c = corpusOf(spark, dir)
-    val hits = c.select(col("id"), explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-      .filter(col("ngram").isin(qGramSet: _*))
-      .groupBy(col("id")).agg(count(lit(1)).as("ngram_hits"))
-    rankCandidates(spark, c, q, hits, numResults, cap, filters)
+    rankCandidates(spark, c, q, queryHits(inlinePostings(c), q), numResults, filters)
   }
 
   /** The posting index (`graft_postings`, at scale built at ingest):
@@ -113,7 +175,7 @@ object FuzzySearch {
     * posting pairs (NgramIndex.postingPairsMulti) instead of deriving
     * postings from the corpus per query. The query's trigram set is an
     * `isin` predicate pushed into the parquet scan (PushedFilters:
-    * In(ngram, ...)); the records and rank steps are [[fuzzySearch]]'s
+    * In(ngram, ...)); the cap, score and rank steps are [[fuzzySearch]]'s
     * (OperatorParitySpec pins bit-equal results; the shared oracle gates
     * both). The pushdown prunes almost nothing in today's layout: the
     * pairs are hash-clustered, so each file is one row group whose ngram
@@ -122,64 +184,34 @@ object FuzzySearch {
     * part-name [[corpus]] only: the posting artifact is keyed by input dir
     * and version, not by corpus. */
   def fuzzySearchIndexed(spark: SparkSession, dir: String, query: String,
-                         numResults: Int, cap: Int = DefaultCap): DataFrame = {
+                         numResults: Int): DataFrame = {
     val q = cleanQuery(query)
-    val qGramSet = queryTrigrams(q).distinct
     val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
-    val hits = Tables.parquet(spark, path)
-      .filter(col("ngram").isin(qGramSet: _*))
-      .groupBy(col("id")).agg(count(lit(1)).as("ngram_hits"))
-    rankCandidates(spark, c, q, hits, numResults, cap)
+    rankCandidates(spark, c, q, queryHits(Tables.parquet(spark, path), q), numResults)
   }
 
-  /** Shared scoring projection (DL distance, tversky+prefix similarity,
-    * population-ranked score) — the per-record math the global AND
-    * partitioned tails apply after their caps (one definition so the two
-    * faces can never drift). `entityFuzzyScore` is computed once per row:
-    * `score` reads `efs_raw` unless the query is all digits, which scores
-    * against the source's first space-token (geo_manager.py:493-495). */
-  private def scoreCols(df: DataFrame, q: String): DataFrame = {
-    val qLit = lit(q)
-    val base =
-      if (isPostal(q)) entityFuzzyScore(qLit, split(col("clean_value"), " ").getItem(0))
-      else col("efs_raw")
-    df.withColumn("efs_raw", entityFuzzyScore(qLit, col("clean_value")))
-      .withColumn("distance",
-        geoDamerauLevenshtein(qLit, col("clean_value")).cast("long"))
-      .withColumn("ngram_similarity", round(col("efs_raw"), 6))
-      .withColumn("score", round(geoSearchScore(base, col("population")), 6))
-  }
-
-  /** Digits-only (cleaned) query: `geoSearchScore`'s postal branch. */
-  private def isPostal(q: String): Boolean = q.matches("^[0-9]+$")
-
-  /** The shared tail after the hits step: 500-cap → fetch → filters →
-    * score → best-per-clean_value dedup → top-k. The cap runs on the
-    * executors and hands the driver at most max(k, cap) ids; one job
+  /** The single-query cap → fetch → score → rank. The cap runs on the
+    * executors and hands the driver at most max(k, 500) ids; one job
     * fetches and scores only those records (none when there are no ids);
-    * the dedup and top-k run on the driver over those ≤ max(k, cap) rows,
-    * returned as a local relation. `filters` replicate the reference's
-    * ORDER: applied to the candidate records AFTER the 500-cap (the results
-    * comprehension, geo_manager.py:578-580/614-617), so a filter never
-    * widens the candidate pool. */
+    * the dedup and top-k run on the driver over those rows, ordered as
+    * [[rankKeyed]] orders them, and return a local relation. `filters`
+    * replicate the reference's ORDER: applied to the candidate records
+    * AFTER the 500-cap (the results comprehension,
+    * geo_manager.py:578-580/614-617), so a filter never widens the
+    * candidate pool. */
   private def rankCandidates(spark: SparkSession, c: DataFrame, q: String,
-                             hits: DataFrame, numResults: Int, cap: Int,
+                             hits: DataFrame, numResults: Int,
                              filters: Seq[(String, Any)] = Nil): DataFrame = {
-    val ids = hits.orderBy(col("ngram_hits").desc, col("id"))
-      .limit(math.max(numResults, cap)).select(col("id"))
+    val ids = hits.orderBy(capOrder: _*).limit(capLimit(numResults)).select(col("id"))
       .collect().map(_.get(0)).toSeq
 
     val filterOk = filters.map { case (k, v) => col(k) === lit(v) }
       .foldLeft(lit(true))(_ && _)
-    val scored = scoreCols(c.filter(col("id").isin(ids: _*)).filter(filterOk), q)
-      .select(col("id"), col("value"), col("clean_value"), col("distance"),
-        col("ngram_similarity"), col("score"))
+    val scored = scoreCols(c.filter(col("id").isin(ids: _*)).filter(filterOk), lit(q))
+      .select(resultCols.map(col): _*)
     val rows = if (ids.isEmpty) Array.empty[Row] else scored.collect()
 
-    // Deterministic dedup: best score (then lowest id) per clean_value —
-    // replaces the reference's unspecified dict-insertion-order "last wins"
-    // (SURVEY.md §2.6); rows ordered as `orderBy(score.desc, id)`.
     def before(a: Row, b: Row): Boolean =
       Similarity.ranksBefore(a.getDouble(5), a.getLong(0), b.getDouble(5), b.getLong(0))
     val best = rows.groupBy(_.get(2)).values.map(_.reduce((a, b) => if (before(b, a)) b else a))
@@ -202,13 +234,12 @@ object FuzzySearch {
     * surface (geo_manager.py:623-641 asserts partitioned off; :544-580 is
     * the dead branch: per-partition `search_dict[partition]` /
     * `geo_shape_dict[partition]`, searched one named partition per call).
-    * Spark form (SURVEY.md §2.5): ONE plan over EVERY partition at once —
-    * the per-partition 500-cap, best-per-clean_value dedup, and top-k are
-    * `Window.partitionBy(partition)` versions of the global pipeline's
-    * steps (rank-limit windows plan map-side via WindowGroupLimit, the
-    * batchFuzzySearch shape), so a partition column costs a window key,
-    * not a per-partition job loop — at 100 TB one shuffle keyed by
-    * (data-derived) ngram and one by partition, never |partitions| jobs.
+    * Spark form (SURVEY.md §2.5): ONE plan over EVERY partition of the
+    * [[zipCorpus]], partitioned by country — the pipeline's steps keyed by
+    * `partition` (rank-limit windows plan map-side via WindowGroupLimit),
+    * so a partition costs a window key, not a per-partition job loop — at
+    * 100 TB one shuffle keyed by (data-derived) id and one by partition,
+    * never |partitions| jobs.
     *
     * FIXED DEVIATION (documented): the reference's dead branch fetches
     * `value` (:558) and `population` (:571) through the UNPARTITIONED
@@ -223,55 +254,39 @@ object FuzzySearch {
     * `self.partitions` (:546-547) — a `Some` filter restricts the search
     * the same way, and an unknown name yields the same empty result. */
   def fuzzySearchPartitioned(spark: SparkSession, dir: String, query: String,
-                             numResults: Int, cap: Int = DefaultCap,
-                             corpusOf: (SparkSession, String) => DataFrame = zipCorpus,
-                             partitionCol: String = "country",
+                             numResults: Int,
                              partitions: Option[Seq[String]] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = cleanQuery(query)
-    val qGramSet = queryTrigrams(q).distinct
-    val c0 = corpusOf(spark, dir)
-    val c = partitions.map(ps => c0.filter(col(partitionCol).isin(ps: _*)))
-      .getOrElse(c0).withColumnRenamed(partitionCol, "partition")
-    val qdf = spark.createDataFrame(qGramSet.map(Tuple1(_))).toDF("ngram")
-    val postings = c.select(col("id"), col("partition"),
-      explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-    val hits = postings.join(broadcast(qdf), "ngram")
-      .groupBy(col("id"), col("partition")).agg(count(lit(1)).as("ngram_hits"))
-    // the 500-cap PER PARTITION (Counter.most_common over one partition's
-    // search_dict, geo_manager.py:551-554)
-    val capped = hits.withColumn("rn", row_number().over(
-        Window.partitionBy(col("partition"))
-          .orderBy(col("ngram_hits").desc, col("id"))))
-      .filter(col("rn") <= math.max(numResults, cap)).drop("rn")
-    val scored = scoreCols(capped.join(c, Seq("id", "partition")), q)
-    val dedup = scored.withColumn("rn", row_number().over(
-        Window.partitionBy(col("partition"), col("clean_value"))
-          .orderBy(col("score").desc, col("id"))))
-      .filter(col("rn") === 1).drop("rn")
-    dedup.withColumn("rk", row_number().over(
-        Window.partitionBy(col("partition"))
-          .orderBy(col("score").desc, col("id"))))
-      .filter(col("rk") <= numResults)
-      .select(col("partition"), col("id"), col("value"), col("clean_value"),
-        col("distance"), col("ngram_similarity"), col("score"))
-      .orderBy(col("partition"), col("score").desc, col("id"))
+    val c = inPartitions(partitionedCorpus(spark, dir), partitions)
+    partitionedTail(c, queryHits(inlinePostings(c, "partition"), q, "partition"), q, numResults)
   }
+
+  private def partitionedCorpus(spark: SparkSession, dir: String): DataFrame =
+    zipCorpus(spark, dir).withColumnRenamed("country", "partition")
+
+  private def inPartitions(df: DataFrame, partitions: Option[Seq[String]]): DataFrame =
+    partitions.fold(df)(ps => df.filter(col("partition").isin(ps: _*)))
+
+  /** Cap, score and rank per partition (the 500-cap PER PARTITION:
+    * Counter.most_common over one partition's search_dict,
+    * geo_manager.py:551-554). */
+  private def partitionedTail(c: DataFrame, hits: DataFrame, q: String,
+                              numResults: Int): DataFrame =
+    rankKeyed(scoreCols(capHits(hits, "partition", numResults)
+      .join(c, Seq("id", "partition")), lit(q)), "partition", numResults)
 
   /** The PARTITIONED posting index — the partitioned mode's serving
     * artifact (the `fuzzy_indexed` precedent applied to the reference's
     * declared-but-disabled partitioned branch, geo_manager.py:463-476):
-    * (ngram, partition, id) occurrence pairs clustered by ngram so the
-    * single query's trigram literals push into the scan as In(ngram) and
-    * row-group stats skip everything else; the partition predicate (when
-    * a partition subset is queried) pushes beside it. Row-local explode,
-    * so appendable. Kind carries the partition column — a country-keyed
-    * artifact must never serve a different partitioning. */
-  def partPostings(partitionCol: String = "country"): graft.Artifact =
-    graft.Artifact(s"graft_partpost_$partitionCol", 1,
-      _.select(col("id"), col(partitionCol).as("partition"),
-        explode(charNgrams(col("clean_value"), 3)).as("ngram")),
-      graft.Artifact.Clustered(Seq("ngram"), Seq("ngram", "partition")))
+    * (id, partition, ngram) occurrence rows of the [[zipCorpus]], partition
+    * = country, clustered by ngram so the single query's trigram literals
+    * push into the scan as In(ngram) and row-group stats skip everything
+    * else; the partition predicate (when a partition subset is queried)
+    * pushes beside it. Row-local explode, so appendable. The kind names
+    * the partition column. */
+  val PartPostings: graft.Artifact = graft.Artifact("graft_partpost_country", 1,
+    c => inlinePostings(c.withColumnRenamed("country", "partition"), "partition"),
+    graft.Artifact.Clustered(Seq("ngram"), Seq("ngram", "partition")))
 
   /** [[fuzzySearchPartitioned]] SERVED from the materialized partitioned
     * posting artifact — identical semantics (the same oracle gates both),
@@ -281,88 +296,26 @@ object FuzzySearch {
     * verdict's "partitioned mode is inline-only" item). */
   def fuzzySearchPartitionedIndexed(spark: SparkSession, dir: String,
                                     query: String, numResults: Int,
-                                    cap: Int = DefaultCap,
-                                    corpusOf: (SparkSession, String) => DataFrame = zipCorpus,
-                                    partitionCol: String = "country",
                                     partitions: Option[Seq[String]] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = cleanQuery(query)
-    val qGramSet = queryTrigrams(q).distinct
-    val c0 = corpusOf(spark, dir)
-    val c = partitions.map(ps => c0.filter(col(partitionCol).isin(ps: _*)))
-      .getOrElse(c0).withColumnRenamed(partitionCol, "partition")
-    val path = graft.Materialize.ensure(spark, partPostings(partitionCol), dir, c0)
-    val postings0 = Tables.parquet(spark, path)
-      .filter(col("ngram").isin(qGramSet: _*))
-    val postings = partitions.map(ps =>
-      postings0.filter(col("partition").isin(ps: _*))).getOrElse(postings0)
-    val hits = postings
-      .groupBy(col("id"), col("partition")).agg(count(lit(1)).as("ngram_hits"))
-    val capped = hits.withColumn("rn", row_number().over(
-        Window.partitionBy(col("partition"))
-          .orderBy(col("ngram_hits").desc, col("id"))))
-      .filter(col("rn") <= math.max(numResults, cap)).drop("rn")
-    val scored = scoreCols(capped.join(c, Seq("id", "partition")), q)
-    val dedup = scored.withColumn("rn", row_number().over(
-        Window.partitionBy(col("partition"), col("clean_value"))
-          .orderBy(col("score").desc, col("id"))))
-      .filter(col("rn") === 1).drop("rn")
-    dedup.withColumn("rk", row_number().over(
-        Window.partitionBy(col("partition"))
-          .orderBy(col("score").desc, col("id"))))
-      .filter(col("rk") <= numResults)
-      .select(col("partition"), col("id"), col("value"), col("clean_value"),
-        col("distance"), col("ngram_similarity"), col("score"))
-      .orderBy(col("partition"), col("score").desc, col("id"))
+    val path = graft.Materialize.ensure(spark, PartPostings, dir, zipCorpus(spark, dir))
+    val postings = inPartitions(Tables.parquet(spark, path), partitions)
+    partitionedTail(inPartitions(partitionedCorpus(spark, dir), partitions),
+      queryHits(postings, q, "partition"), q, numResults)
   }
 
-  /** DuckDB mirror of [[fuzzySearchPartitioned]] — the global oracle with
-    * every window keyed by the partition column. */
+  /** DuckDB mirror of [[fuzzySearchPartitioned]] — the single-query oracle
+    * with every window keyed by the partition column. */
   def fuzzySearchPartitionedOracle(query: String, numResults: Int,
-                                   cap: Int = DefaultCap,
-                                   corpusSql: String = zipCorpusCte,
-                                   partitionCol: String = "country",
                                    partitions: Option[Seq[String]] = None): String = {
     val q = cleanQuery(query)
-    val qGramSet = sqlList(queryTrigrams(q).distinct)
-    val qq = q.replace("'", "''")
-    val sset = OracleSql.trigramSet("clean_value")
-    val tv = OracleSql.tversky(qGramSet, sset, 0.85, 0.15)
-    val efs = s"($tv * (1.0 + CASE WHEN starts_with(clean_value, '$qq') THEN 0.15 ELSE 0.0 END))"
-    val scoreBase = if (isPostal(q)) {
-      val tok = "split_part(clean_value, ' ', 1)"
-      val tvP = OracleSql.tversky(qGramSet, OracleSql.trigramSet(tok), 0.85, 0.15)
-      s"($tvP * (1.0 + CASE WHEN starts_with($tok, '$qq') THEN 0.15 ELSE 0.0 END))"
-    } else efs
-    val dl = s"least(damerau_levenshtein(split_part('$qq', ',', 1), split_part(clean_value, ',', 1)), " +
-      s"damerau_levenshtein('$qq', clean_value))"
+    val part = "\"partition\""
     val partFilter = partitions.map(ps =>
-      s"WHERE $partitionCol IN (${ps.map(p => s"'${p.replace("'", "''")}'").mkString(", ")})")
-      .getOrElse("")
-    s"""WITH corpus AS (SELECT * FROM ($corpusSql) $partFilter),
-       |cand AS (
-       |  SELECT *, len(list_filter(${OracleSql.trigrams("clean_value")}, g -> list_contains($qGramSet, g)))::BIGINT AS ngram_hits
-       |  FROM corpus),
-       |capped AS (
-       |  SELECT * FROM cand WHERE ngram_hits > 0
-       |  QUALIFY row_number() OVER (PARTITION BY $partitionCol ORDER BY ngram_hits DESC, id) <= ${math.max(numResults, cap)}),
-       |scored AS (
-       |  SELECT $partitionCol AS "partition", id, value, clean_value, population,
-       |         $efs AS efs_raw, $scoreBase AS score_base, $dl::BIGINT AS distance
-       |  FROM capped),
-       |ranked AS (
-       |  SELECT "partition", id, value, clean_value, distance,
-       |         round(efs_raw, 6) AS ngram_similarity,
-       |         round(CASE WHEN population <= 0 OR score_base <= 0.65 THEN score_base * 0.9
-       |                    ELSE score_base * 0.9 + ln(population) * 0.1 END, 6) AS score
-       |  FROM scored),
-       |dedup AS (
-       |  SELECT * FROM ranked
-       |  QUALIFY row_number() OVER (PARTITION BY "partition", clean_value ORDER BY score DESC, id) = 1)
-       |SELECT "partition", id, value, clean_value, distance, ngram_similarity, score
-       |FROM dedup
-       |QUALIFY row_number() OVER (PARTITION BY "partition" ORDER BY score DESC, id) <= $numResults
-       |ORDER BY "partition", score DESC, id""".stripMargin
+      s"WHERE country IN (${ps.map(sqlStr).mkString(", ")})").getOrElse("")
+    s"""WITH corpus AS (SELECT *, country AS $part FROM ($zipCorpusCte) $partFilter),
+       |${queryHitsSql(q)},
+       |capped AS (SELECT * FROM cand WHERE ngram_hits > 0 ${capSql(Some(part), numResults)}),
+       |${rankSql(Some(part), sqlStr(q), numResults)}""".stripMargin
   }
 
   /** Query-table stride for the batch query (89 keeps it non-vacuous at
@@ -378,38 +331,26 @@ object FuzzySearch {
         cleanEntity(concat(substring(col("value"), 1, 3),
           expr("substring(value, 5)"))).as("clean_q"))
 
+  /** DuckDB twin of [[batchQueries]]: the `q` CTE over the corpus CTE
+    * (declared above the oracle vals that read it). */
+  val batchQueriesCte: String =
+    s"""q AS (SELECT id AS qid,
+       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
+       |      FROM corpus WHERE id % $BatchQueryMod = 0)""".stripMargin
+
   /** BATCH fuzzy search — the flagship pipeline over a QUERY TABLE in one
     * distributed plan (the reference runs fuzzy_search once per request,
-    * geo_manager.py:525-619). Differences from the single-query plan, all
-    * scale-positive:
-    *  - query trigram sets derive in-plan (charNgramSet per query row) and
-    *    join postings on the ngram key — data-derived shuffle, no
-    *    per-query driver round-trip;
-    *  - the 500-cap and the final top-k become per-qid WINDOW limits
-    *    (rank over partition by qid), which parallelize across queries
-    *    instead of a driver-side limit per call;
-    *  - scoring reuses the exact column expressions (they branch at
-    *    runtime, so one plan serves every query; no digits-only query
-    *    exists in this table, and both engines take the non-postal branch
-    *    uniformly).
-    * At 100 TB with the materialized ngram-clustered posting index this is
-    * a semi-join of the query gram table against the index — batch
-    * auto-complete/geocoding at cluster throughput. */
-  def batchFuzzySearch(spark: SparkSession, dir: String, numResults: Int,
-                       cap: Int = DefaultCap): DataFrame = {
+    * geo_manager.py:525-619), keyed by `qid`: query trigram sets derive
+    * in-plan (charNgramSet per query row) and join postings on the ngram
+    * key — data-derived shuffle, no per-query driver round-trip — and the
+    * 500-cap, dedup and top-k are per-qid rank windows. The score branches
+    * per row (a digits-only query takes the postal branch). At 100 TB with
+    * the materialized ngram-clustered posting index this is a semi-join of
+    * the query gram table against the index ([[batchFuzzySearchIndexed]]) —
+    * batch auto-complete/geocoding at cluster throughput. */
+  def batchFuzzySearch(spark: SparkSession, dir: String, numResults: Int): DataFrame = {
     val c = corpus(spark, dir)
-    val queries = batchQueries(c)
-    val qGrams = queries.select(col("qid"),
-      explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-    val postings = c.select(col("id"),
-      explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-    val hits = postings.join(qGrams, "ngram")
-      .groupBy(col("qid"), col("id")).agg(count(lit(1)).as("ngram_hits"))
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("ngram_hits").desc, col("id"))
-    val capped = hits.withColumn("crn", row_number().over(capW))
-      .filter(col("crn") <= math.max(numResults, cap)).drop("crn")
-    scoreBatch(capped, c, queries, numResults)
+    batchOver(batchQueries(c), inlinePostings(c), c, numResults, None)
   }
 
   /** Query-table stride for the ZIP batch (sf0.001's ~150-shape corpus
@@ -420,7 +361,7 @@ object FuzzySearch {
     * `ZipBatchQueryMod`-th shape's zip digit token with its 4th digit
     * dropped — a postal typo query per stratum, so the postal scoring
     * branch (geo_manager.py:493-495) runs per ROW in the batch shape
-    * (the part-corpus batch deliberately has no digits-only query). */
+    * (the part-corpus batch has no digits-only query). */
   def batchZipQueries(c: DataFrame): DataFrame = {
     val tok = substring_index(col("clean_value"), " ", 1)
     c.filter(pmod(col("id"), lit(ZipBatchQueryMod)) === 0)
@@ -429,82 +370,19 @@ object FuzzySearch {
           .as("clean_q"))
   }
 
-  /** BATCH fuzzy search over the ZIP corpus — identical pipeline to
-    * `batchFuzzySearch`, but every query is digits-only, so
-    * `geoSearchScore`'s runtime postal branch (score against the FIRST
-    * SPACE-TOKEN of the source) is exercised in the serving shape too.
-    * Own oracle (the postal branch changes scores by design). */
-  def batchFuzzySearchZip(spark: SparkSession, dir: String, numResults: Int,
-                          cap: Int = DefaultCap): DataFrame = {
-    val c = zipCorpus(spark, dir)
-    val queries = batchZipQueries(c)
-    val qGrams = queries.select(col("qid"),
-      explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-    val postings = c.select(col("id"),
-      explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-    val hits = postings.join(qGrams, "ngram")
-      .groupBy(col("qid"), col("id")).agg(count(lit(1)).as("ngram_hits"))
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("ngram_hits").desc, col("id"))
-    val capped = hits.withColumn("crn", row_number().over(capW))
-      .filter(col("crn") <= math.max(numResults, cap)).drop("crn")
-    scoreBatch(capped, c, queries, numResults)
-  }
-
-  def batchFuzzySearchZipOracle(numResults: Int, cap: Int = DefaultCap): String = {
-    val qsetQ = OracleSql.trigramSet("q.clean_q")
-    val qset = OracleSql.trigramSet("clean_q")
-    val tv = OracleSql.tversky(qset, OracleSql.trigramSet("clean_value"), 0.85, 0.15)
-    val efs = s"($tv * (1.0 + CASE WHEN starts_with(clean_value, clean_q) THEN 0.15 ELSE 0.0 END))"
-    // geoSearchScore's RUNTIME postal branch, mirrored per row: a
-    // digits-only query scores against the first space-token of the
-    // source; ngram_similarity and the DL distance always use the full
-    // source (same split as the single-query postal oracle).
-    val tok = "split_part(clean_value, ' ', 1)"
-    val tvP = OracleSql.tversky(qset, OracleSql.trigramSet(tok), 0.85, 0.15)
-    val efsP = s"($tvP * (1.0 + CASE WHEN starts_with($tok, clean_q) THEN 0.15 ELSE 0.0 END))"
-    val scoreBase =
-      s"(CASE WHEN regexp_matches(clean_q, '^[0-9]+$$') THEN $efsP ELSE $efs END)"
-    val dl = "least(damerau_levenshtein(split_part(clean_q, ',', 1), split_part(clean_value, ',', 1)), " +
-      "damerau_levenshtein(clean_q, clean_value))"
-    s"""WITH corpus AS ($zipCorpusCte),
-       |q AS (SELECT id AS qid,
+  /** DuckDB twin of [[batchZipQueries]]. */
+  private val zipQueriesCte: String =
+    s"""q AS (SELECT id AS qid,
        |        substr(split_part(clean_value, ' ', 1), 1, 3) ||
        |        substr(split_part(clean_value, ' ', 1), 5) AS clean_q
-       |      FROM corpus WHERE id % $ZipBatchQueryMod = 0),
-       |-- posting-join spelling (round 13, same as batchFuzzySearchOracle):
-       |-- occurrence-vs-query-gram-set equi-join folds the identical
-       |-- ngram_hits without the |Q|x|corpus| per-pair list evaluations
-       |cg AS (SELECT id, unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus),
-       |qg AS (SELECT qid, unnest($qset) AS g FROM q),
-       |h AS (SELECT qg.qid, cg.id, count(*)::BIGINT AS ngram_hits
-       |      FROM cg JOIN qg USING (g)
-       |      GROUP BY qg.qid, cg.id),
-       |cand AS (SELECT q.qid, q.clean_q, c.*, h.ngram_hits
-       |         FROM h JOIN corpus c ON c.id = h.id JOIN q ON q.qid = h.qid),
-       |capped AS (
-       |  SELECT * FROM cand WHERE ngram_hits > 0
-       |  QUALIFY row_number() OVER (PARTITION BY qid
-       |                             ORDER BY ngram_hits DESC, id) <= ${math.max(numResults, cap)}),
-       |scored AS (
-       |  SELECT qid, clean_q, id, value, clean_value, population,
-       |         $efs AS efs_raw, $scoreBase AS score_base,
-       |         $dl::BIGINT AS distance
-       |  FROM capped),
-       |ranked AS (
-       |  SELECT qid, id, value, clean_value, distance,
-       |         round(efs_raw, 6) AS ngram_similarity,
-       |         round(CASE WHEN population <= 0 OR score_base <= 0.65 THEN score_base * 0.9
-       |                    ELSE score_base * 0.9 + ln(population) * 0.1 END, 6) AS score
-       |  FROM scored),
-       |dedup AS (
-       |  SELECT * FROM ranked
-       |  QUALIFY row_number() OVER (PARTITION BY qid, clean_value
-       |                             ORDER BY score DESC, id) = 1)
-       |SELECT qid, id, value, clean_value, distance, ngram_similarity, score
-       |FROM dedup
-       |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) <= $numResults
-       |ORDER BY qid, score DESC, id""".stripMargin
+       |      FROM corpus WHERE id % $ZipBatchQueryMod = 0)""".stripMargin
+
+  /** BATCH fuzzy search over the ZIP corpus — `batchFuzzySearch` over
+    * [[batchZipQueries]], so the postal branch is exercised in the serving
+    * shape too. Own oracle (the postal branch changes scores by design). */
+  def batchFuzzySearchZip(spark: SparkSession, dir: String, numResults: Int): DataFrame = {
+    val c = zipCorpus(spark, dir)
+    batchOver(batchZipQueries(c), inlinePostings(c), c, numResults, None)
   }
 
   /** Bloom sizing for the batch index probe: the build side is the batch's
@@ -530,12 +408,10 @@ object FuzzySearch {
     * from O(index) to O(postings of the union of query grams) + a bloom
     * pass over scanned rows. The scoring tail still fetches only capped
     * candidates. */
-  def batchFuzzySearchIndexed(spark: SparkSession, dir: String, numResults: Int,
-                              cap: Int = DefaultCap): DataFrame = {
+  def batchFuzzySearchIndexed(spark: SparkSession, dir: String, numResults: Int): DataFrame = {
     val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
-    batchFuzzySearchOver(batchQueries(c), Tables.parquet(spark, path), c,
-      numResults, cap)
+    batchFuzzySearchOver(batchQueries(c), Tables.parquet(spark, path), c, numResults)
   }
 
   /** The index-probing batch pipeline over an ARBITRARY query table
@@ -548,37 +424,45 @@ object FuzzySearch {
     * present, grams outside it never leave the index scan stage (the
     * stop-gram cut). */
   def batchFuzzySearchOver(queries: DataFrame, postings: DataFrame, c: DataFrame,
-                           numResults: Int, cap: Int = DefaultCap,
+                           numResults: Int,
                            allowed: Option[DataFrame] = None): DataFrame =
-    scoreBatch(capHits(indexHits(queries, postings, allowed), numResults, cap),
+    batchOver(queries, bloomProbe(postings, queryGrams(queries)), c, numResults, allowed)
+
+  private def batchOver(queries: DataFrame, postings: DataFrame, c: DataFrame,
+                        numResults: Int, allowed: Option[DataFrame]): DataFrame =
+    batchTail(capHits(batchHits(queries, postings, allowed), "qid", numResults),
       c, queries, numResults)
 
-  /** The bloom-probed index-read hit counting shared by every indexed
-    * batch face: query grams fold into a runtime bloom evaluated inside
-    * the posting scan, survivors equi-join the gram table, hits = posting
-    * rows per (qid, id). */
-  private def indexHits(queries: DataFrame, postings: DataFrame,
-                        allowed: Option[DataFrame]): DataFrame = {
-    import graft.functions.SketchFunctions._
-    val qGrams = queries.select(col("qid"),
-      explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-    val gramBloom = qGrams.agg(
-      bloomFilterAgg(xxhash64(col("ngram")), IndexBloomEstItems, IndexBloomNumBits).as("bf"))
-    val indexSide = postings
-      .filter(mightContain(gramBloom.scalar(), xxhash64(col("ngram"))))
-    allowed.fold(indexSide)(a => indexSide.join(broadcast(a), "ngram"))
-      .join(qGrams, "ngram")
+  /** Each query's distinct trigrams, one (qid, ngram) row each. */
+  private def queryGrams(queries: DataFrame): DataFrame =
+    queries.select(col("qid"), explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
+
+  /** Batch hits per (qid, id): the postings (cut to `allowed` when given)
+    * equi-joined with the query gram table. An index read arrives through
+    * the [[bloomProbe]]; inline postings derive from the corpus in the same
+    * stage and join plainly. */
+  private def batchHits(queries: DataFrame, postings: DataFrame,
+                        allowed: Option[DataFrame]): DataFrame =
+    allowed.fold(postings)(a => postings.join(broadcast(a), "ngram"))
+      .join(queryGrams(queries), "ngram")
       .groupBy(col("qid"), col("id")).agg(count(lit(1)).as("ngram_hits"))
+
+  /** The index probe of every batch index read: the query grams fold into
+    * a runtime bloom evaluated inside the posting scan, so only grams some
+    * query probes reach the exchange. */
+  private def bloomProbe(postings: DataFrame, qGrams: DataFrame): DataFrame = {
+    import graft.functions.SketchFunctions._
+    val bloom = qGrams.agg(
+      bloomFilterAgg(xxhash64(col("ngram")), IndexBloomEstItems, IndexBloomNumBits).as("bf"))
+    postings.filter(mightContain(bloom.scalar(), xxhash64(col("ngram"))))
   }
 
-  /** The reference's 500-candidate cap (geo_manager.py:553-555), applied
-    * per query by (ngram_hits DESC, id). */
-  private def capHits(hits: DataFrame, numResults: Int, cap: Int): DataFrame = {
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("ngram_hits").desc, col("id"))
-    hits.withColumn("crn", row_number().over(capW))
-      .filter(col("crn") <= math.max(numResults, cap)).drop("crn")
-  }
+  /** The batch fetch → score → rank over capped (qid, id) candidates, each
+    * scored against its own query row. */
+  private def batchTail(cand: DataFrame, c: DataFrame, queries: DataFrame,
+                        numResults: Int): DataFrame =
+    rankKeyed(scoreCols(cand.join(c, "id").join(broadcast(queries), "qid"),
+      col("clean_q")), "qid", numResults)
 
   /** OPT-IN stop-gram mitigation for the batch candidate cliff (SCALE.md's
     * fuzzy_batch cost model: candidate rows = Σ_g qcount(g)·df(g), ~0.55·Q·N
@@ -593,34 +477,26 @@ object FuzzySearch {
     * broadcast as dedup_jaccard's prefix filter. The cut is exact-integer
     * (df · dfCapInverse ≤ N) so both engines agree bit-wise. */
   def batchFuzzySearchStopGram(spark: SparkSession, dir: String, numResults: Int,
-                               dfCapInverse: Long, cap: Int = DefaultCap): DataFrame = {
+                               dfCapInverse: Long): DataFrame = {
     val c = corpus(spark, dir)
-    val queries = batchQueries(c)
-    val n = c.count()
-    val qGrams = queries.select(col("qid"),
-      explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-    val postings = c.select(col("id"),
-      explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-    val hits = postings.join(broadcast(allowedGrams(postings, n, dfCapInverse)), "ngram")
-      .join(qGrams, "ngram")
-      .groupBy(col("qid"), col("id")).agg(count(lit(1)).as("ngram_hits"))
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("ngram_hits").desc, col("id"))
-    val capped = hits.withColumn("crn", row_number().over(capW))
-      .filter(col("crn") <= math.max(numResults, cap)).drop("crn")
-    scoreBatch(capped, c, queries, numResults)
+    batchOver(batchQueries(c), inlinePostings(c), c, numResults,
+      Some(allowedGrams(c, dfCapInverse)))
   }
 
-  /** The stop-gram cut's allowed set: grams whose multiplicity df clears
-    * df · dfCapInverse ≤ n. ONE derivation, the one SCALE.md's published
-    * candidate-volume measurements (the `fuzzy_batch` audit row) were
-    * taken with. */
-  private[graft] def allowedGrams(postings: DataFrame, n: Long,
-                                  dfCapInverse: Long): DataFrame =
-    postings.groupBy(col("ngram"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") * dfCapInverse <= n)
-      .select(col("ngram"))
+  /** The stop-gram cut's allowed set over a corpus: grams whose
+    * multiplicity df clears df · dfCapInverse ≤ n, with n derived in the
+    * plan (no job runs while the DataFrame is built). ONE derivation, the
+    * one SCALE.md's published candidate-volume measurements (the
+    * `fuzzy_batch` audit row) were taken with. */
+  private def allowedGrams(c: DataFrame, dfCapInverse: Long): DataFrame =
+    gramCut(gramDf(c), gramN(c), dfCapInverse).select(col("ngram"))
+
+  /** (ngram, df) rows of the grams that clear df · dfCapInverse ≤ n, `nRel`
+    * the one-row count. */
+  private def gramCut(dfRel: DataFrame, nRel: DataFrame, dfCapInverse: Long): DataFrame =
+    dfRel.crossJoin(broadcast(nRel))
+      .filter(col("df") * dfCapInverse <= col("n"))
+      .select(col("ngram"), col("df"))
 
   // ------------- materialized gram-df stats (stop-gram serving path)
 
@@ -667,12 +543,11 @@ object FuzzySearch {
     * here the per-batch cost of the cut is a broadcast of a ≤ 37³-row
     * fold, and the hottest posting lists never leave the index scan stage. */
   def batchFuzzySearchStopGramIndexed(spark: SparkSession, dir: String,
-                                      numResults: Int, dfCapInverse: Long,
-                                      cap: Int = DefaultCap): DataFrame = {
+                                      numResults: Int, dfCapInverse: Long): DataFrame = {
     val c = corpus(spark, dir)
     val path = ensurePostingsIndex(spark, dir, c)
     batchFuzzySearchOver(batchQueries(c), Tables.parquet(spark, path), c,
-      numResults, cap, Some(allowedGramsIndexed(spark, dir, c, dfCapInverse)))
+      numResults, Some(allowedGramsIndexed(spark, dir, c, dfCapInverse)))
   }
 
   /** The artifact-served allowed-gram set of the df·inv ≤ n cut: folds
@@ -680,24 +555,21 @@ object FuzzySearch {
     * call) — gram-space-bounded, so always broadcast-sized. */
   def allowedGramsIndexed(spark: SparkSession, dir: String, c: DataFrame,
                           dfCapInverse: Long, version: Int = 1): DataFrame =
-    allowedGramsDfIndexed(spark, dir, c, dfCapInverse, version)
+    allowedGramsDfIndexed(spark, dir, c, Some(dfCapInverse), version)
       .select(col("ngram"))
 
-  /** [[allowedGramsIndexed]] WITH each allowed gram's folded df — the
-    * ONE derivation of the artifact-served cut, so a consumer that needs
-    * the df alongside the set (the entered-arm volume prediction in
-    * [[deltaChampionRefresh]]) can never drift from the served allowed
-    * set through a second copy of the fold. */
+  /** The ONE fold of the artifact-served gram stats: (ngram, df) summed
+    * from `graft_gramdf`, cut to df·inv ≤ n (n summed from `graft_gramn`)
+    * when `cut` is given — so every consumer of the allowed set, and of
+    * its df (the cost predictions, the rare-gram rank), reads the same
+    * derivation. */
   def allowedGramsDfIndexed(spark: SparkSession, dir: String, c: DataFrame,
-                            dfCapInverse: Long, version: Int = 1): DataFrame = {
+                            cut: Option[Long], version: Int = 1): DataFrame = {
     val dp = graft.Materialize.ensure(spark, GramDf.copy(version = version), dir, c)
     val np = graft.Materialize.ensure(spark, GramN.copy(version = version), dir, c)
     val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
       .agg(sum(col("df")).as("df"))
-    val nRel = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
-    dfRel.crossJoin(broadcast(nRel))
-      .filter(col("df") * dfCapInverse <= col("n"))
-      .select(col("ngram"), col("df"))
+    cut.fold(dfRel)(gramCut(dfRel, Tables.parquet(spark, np).agg(sum(col("n")).as("n")), _))
   }
 
   // ------------------- champion-list tier (absolute posting truncation)
@@ -710,17 +582,10 @@ object FuzzySearch {
     * (12 of 30 allowed grams carry df > 64). */
   val ChampPostingCap = 64
 
-  /** Row budget under which [[deltaChampionRefresh]] BROADCASTS the
-    * entered grams' pruned posting slice for its rank-key join (so the
-    * corpus streams map-side instead of shuffling): (ngram, id) pairs,
-    * ~4M rows ≈ 64 MB. Σ df over the entered grams predicts the slice's
-    * size exactly before any read. */
-  val ChampEnteredBroadcastBudget = 4000000L
-
   /** v2: champion rank key changed from raw id to (population DESC, id) —
     * a v1 artifact under the new oracle would silently serve the biased
-    * lists. */
-  val ChampVersion = 3 // v3: + population (the rank key) — delta-refresh merges are row-local
+    * lists. v3: + population (the rank key) per row. */
+  val ChampVersion = 3
 
   /** Write-once champion posting index — the stop-gram-cut posting
     * relation with each surviving gram's list truncated to its
@@ -736,33 +601,23 @@ object FuzzySearch {
     * COUNT per id is clamp(K − #better-ranked rows, 0, multiplicity)).
     * Min-K per gram is mergeable, but the allowed set depends on global
     * df — so no APPEND face: an ingest increment is staleness and ensure
-    * rebuilds (the docglobal precedent — and like docglobal since round
-    * 12, the rebuild has a DELTA face: [[deltaChampionRefresh]] recomputes
-    * only the threshold crossings and merges everything else). Same
-    * ngram-clustered layout as the full index. */
+    * rebuilds (the docglobal precedent). Same ngram-clustered layout as the
+    * full index. */
   def ensureChampionIndex(spark: SparkSession, dir: String, c: DataFrame,
-                          dfCapInverse: Long, postingCap: Int = ChampPostingCap,
-                          version: Int = ChampVersion): String = {
+                          dfCapInverse: Long, postingCap: Int = ChampPostingCap): String = {
     // the cut parameters are part of the artifact IDENTITY (kind, not
     // version): a K=∞ build must never serve a K=64 read — caught by
     // OperatorParitySpec when a parameter-blind key let exactly that
     // happen within one warehouse
     val kind = s"graft_champost_${dfCapInverse}_$postingCap"
-    val p = graft.Materialize.ensure(spark, kind, dir, version) { path =>
-      val postings = NgramIndex.postingPairsMulti(c)
-      val n = c.count()
+    val p = graft.Materialize.ensure(spark, kind, dir, ChampVersion) { path =>
       // population rides the explode (row-local) rather than joining the
       // corpus back onto corpus-scale postings — the rank key is free
-      val popPostings = c.select(col("id"), col("population"),
-        explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-      val kept = popPostings
-        .join(broadcast(allowedGrams(postings, n, dfCapInverse)), "ngram")
-        .withColumn("prn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("ngram"))
-            .orderBy(col("population").desc_nulls_last, col("id"))))
+      val kept = inlinePostings(c, "population")
+        .join(broadcast(allowedGrams(c, dfCapInverse)), "ngram")
+        .withColumn("prn", row_number().over(Window.partitionBy(col("ngram"))
+          .orderBy(col("population").desc_nulls_last, col("id"))))
         .filter(col("prn") <= postingCap)
-        // v3 carries the rank key: a delta refresh re-ranks a merged list
-        // row-locally instead of joining the corpus back on for population
         .select(col("ngram"), col("id"), col("population"))
       Postings.write(kept, path, appending = false)
     }
@@ -771,120 +626,6 @@ object FuzzySearch {
     graft.Materialize.gcSupersededKinds(spark, "graft_champost_", kind, dir)
     p
   }
-
-  /** Champion-index DELTA refresh — the second application of the
-    * `Materialize.refreshWith` lifecycle (the docglobal precedent). The
-    * reason this artifact has no append face is that the allowed set
-    * depends on GLOBAL df: a batch moves `n` and every gram's df, so
-    * grams cross the df·inv ≤ n threshold in BOTH directions. The delta
-    * recomputes exactly those crossings and merges everything else:
-    *
-    *  - STAYED grams: global top-K == top-K(prior list ∪ batch rows).
-    *    An occurrence row ranked past K had ≥ K better-ranked rows above
-    *    it, all of which the prior list kept and an append never removes
-    *    — so a truncated row can never re-enter, and the v3 rank key
-    *    makes the merge row-local (no corpus join).
-    *  - ENTERED grams (under the risen threshold now, over it before):
-    *    absent from the prior artifact entirely; their full lists are
-    *    read from the posting index — ngram-clustered, so the read
-    *    prunes to exactly those grams — with the rank key joined from
-    *    the corpus by id. That join must not SHUFFLE the corpus (the
-    *    delta exists to avoid corpus-scale work), and the pruned slice's
-    *    exact row count is Σ df over entered grams — predictable from
-    *    the stats fold before any read (gramDf counts posting pairs), so
-    *    the slice BROADCASTS and the corpus streams map-side whenever
-    *    the predicted volume fits `enteredBroadcastBudget`; only a
-    *    threshold-storm batch (entered lists near the n/inv bound) pays
-    *    the shuffle join.
-    *  - LEFT grams (batch df pushed them over): dropped.
-    *
-    * Preconditions are the ingest cadence's: the posting index and the
-    * additive gram stats were appended for every arrived batch
-    * ([[allowedGramsIndexed]] folds the updated stats — the same allowed
-    * set a rebuild would derive). `batch` is the accumulated arrivals
-    * since the artifact was last built or refreshed. */
-  def deltaChampionRefresh(spark: SparkSession, dir: String, c: DataFrame,
-                           batch: DataFrame, dfCapInverse: Long,
-                           postingCap: Int = ChampPostingCap,
-                           version: Int = ChampVersion,
-                           statsVersion: Int = 1,
-                           postingsVersion: Int = 1,
-                           enteredBroadcastBudget: Long = ChampEnteredBroadcastBudget): String = {
-    val kind = s"graft_champost_${dfCapInverse}_$postingCap"
-    // the allowed set WITH its df — the same single fold every served
-    // cut reads, so the entered arm's volume prediction cannot drift
-    val allowedDf = allowedGramsDfIndexed(spark, dir, c, dfCapInverse,
-      statsVersion)
-    val postingsPath = graft.Materialize.ensure(spark,
-      Postings.copy(version = postingsVersion), dir, c)
-    graft.Materialize.refreshWith(spark, kind, dir, version) { (prior, tmpP) =>
-      val priorGrams = prior.select(col("ngram")).distinct()
-      val stayed = allowedDf.select(col("ngram")).join(priorGrams, "ngram")
-      val entered = allowedDf.join(priorGrams, Seq("ngram"), "left_anti")
-      // batch occurrence rows for STAYED grams only — entered grams'
-      // lists come whole from the posting index (which the cadence
-      // already appended the batch to; adding batch rows again there
-      // would double-count them)
-      val batchRows = batch.select(col("id"), col("population"),
-          explode(charNgrams(col("clean_value"), 3)).as("ngram"))
-        .join(broadcast(stayed), "ngram")
-        .select(col("ngram"), col("id"), col("population"))
-      val stayedRows = prior.join(broadcast(stayed), "ngram")
-        .select(col("ngram"), col("id"), col("population"))
-      // Σ df over entered grams == the pruned slice's exact row count
-      // (gramDf counts posting pairs) — the admission-control read that
-      // decides whether the rank-key join can stream the corpus
-      val enteredVolume = entered
-        .agg(coalesce(sum(col("df")), lit(0L)).as("v")).head().getLong(0)
-      val pruned = Tables.parquet(spark, postingsPath)
-        .join(broadcast(entered.select(col("ngram"))), "ngram")
-      val enteredRows = (
-        if (enteredVolume <= enteredBroadcastBudget)
-          c.select(col("id"), col("population")).join(broadcast(pruned), "id")
-        else
-          pruned.join(c.select(col("id"), col("population")), "id")
-      ).select(col("ngram"), col("id"), col("population"))
-      val kept = stayedRows.unionByName(batchRows).unionByName(enteredRows)
-        .withColumn("prn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("ngram"))
-            .orderBy(col("population").desc_nulls_last, col("id"))))
-        .filter(col("prn") <= postingCap)
-        .select(col("ngram"), col("id"), col("population"))
-      Postings.write(kept, tmpP, appending = false)
-    }
-  }
-
-  /** Champion-index refresh, DISPATCHED by [[graft.Materialize.refreshAuto]]
-    * for the second refreshWith family, so the ingest cadence's
-    * caller never hand-picks the delta (the same posture fix the IVF
-    * build got in `ensureIvfIndexAuto`). The corpus size comes from the
-    * additive `graft_gramn` stats artifact the cadence already appends
-    * (one tiny-file fold, no corpus scan); the arrivals are the caller's
-    * accumulated batch since the last build/refresh — the delta's own
-    * input, so no extra tracking. A corpus with no committed champion
-    * artifact bootstraps through plain ensure; "ensure" (nothing arrived)
-    * also delegates there, which rebuilds only on manifest staleness.
-    * Measured anchors for this family: 10× rebuild 2.4 s vs delta 2.0 s,
-    * 100× 8.7 s vs 1.8 s (SCALE.md §round-12). */
-  def championRefreshAuto(spark: SparkSession, dir: String, c: DataFrame,
-                          batch: DataFrame, dfCapInverse: Long,
-                          postingCap: Int = ChampPostingCap,
-                          floorDocs: Long = graft.Materialize.RefreshDeltaFloor,
-                          majority: Double = graft.Materialize.RefreshArrivalMajority,
-                          version: Int = ChampVersion,
-                          statsVersion: Int = 1,
-                          postingsVersion: Int = 1): (String, String) =
-    graft.Materialize.refreshAuto(spark, s"graft_champost_${dfCapInverse}_$postingCap",
-        dir, version, floorDocs, majority)(
-      ensure = ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap, version),
-      counts = {
-        graft.Materialize.ensure(spark, GramDf.copy(version = statsVersion), dir, c)
-        val np = graft.Materialize.ensure(spark, GramN.copy(version = statsVersion), dir, c)
-        (Tables.parquet(spark, np).agg(sum(col("n")).as("n")).head().getLong(0),
-          batch.count())
-      },
-      delta = deltaChampionRefresh(spark, dir, c, batch, dfCapInverse, postingCap,
-        version, statsVersion, postingsVersion))
 
   // ---------------- LSH candidate channel (tier-3 recall, round 14)
 
@@ -958,7 +699,7 @@ object FuzzySearch {
     * values tie heavily on pool-token corpora), and none is needed —
     * the admission control already bounds the bucket-join volume, and the
     * rep expansion bounds the scoring tail at ≤ 2 rows per matched name
-    * EXACTLY: the per-(qid, clean_value) dedup winner in [[scoreBatch]]
+    * EXACTLY: the per-(qid, clean_value) dedup winner in [[batchTail]]
     * can only ever be the name's max-population id (score is
     * non-decreasing in population inside the efs > 0.65 branch,
     * (population DESC, id) picks it) or its global min id (every other
@@ -976,7 +717,7 @@ object FuzzySearch {
       .filter(col("band_idx") < bands)
     val matched = art.join(broadcast(qb), Seq("band_idx", "band_hash"))
       .select(col("qid"), col("clean_value")).distinct()
-    val byPop = org.apache.spark.sql.expressions.Window
+    val byPop = Window
       .partitionBy(col("clean_value"))
       .orderBy(col("population").desc_nulls_last, col("id"))
     val reps = c.withColumn("prn", row_number().over(byPop))
@@ -1018,31 +759,24 @@ object FuzzySearch {
   def batchFuzzySearchChampIndexed(spark: SparkSession, dir: String,
                                    numResults: Int, dfCapInverse: Long,
                                    postingCap: Int = ChampPostingCap,
-                                   cap: Int = DefaultCap,
                                    rareGrams: Int = ChampRareGrams,
                                    lshBands: Int = FuzzyLshMaxBands): DataFrame = {
     val c = corpus(spark, dir)
-    val path = ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap)
-    val champ = Tables.parquet(spark, path)
-    if (rareGrams <= 0 && lshBands <= 0)
-      batchFuzzySearchOver(batchQueries(c), champ, c, numResults, cap)
-    else {
-      val queries = batchQueries(c)
-      val hits =
-        if (rareGrams <= 0) indexHits(queries, champ, None)
-        else {
-          val full = Tables.parquet(spark, ensurePostingsIndex(spark, dir, c))
-          val allowedDf = allowedGramsDfIndexed(spark, dir, c, dfCapInverse)
-          champRareUnionHits(queries, champ, full, allowedDf, rareGrams)
-        }
-      val gramCapped = capHits(hits, numResults, cap)
-        .select(col("qid"), col("id"))
-      val cand =
-        if (lshBands <= 0) gramCapped
-        else gramCapped.unionByName(
-          lshCandidates(spark, dir, c, queries, lshBands)).distinct()
-      scoreBatch(cand, c, queries, numResults)
-    }
+    val champ = Tables.parquet(spark, ensureChampionIndex(spark, dir, c, dfCapInverse, postingCap))
+    val queries = batchQueries(c)
+    val hits =
+      if (rareGrams <= 0) batchHits(queries, bloomProbe(champ, queryGrams(queries)), None)
+      else {
+        val full = Tables.parquet(spark, ensurePostingsIndex(spark, dir, c))
+        val allowedDf = allowedGramsDfIndexed(spark, dir, c, Some(dfCapInverse))
+        champRareUnionHits(queries, champ, full, allowedDf, rareGrams)
+      }
+    val gramCapped = capHits(hits, "qid", numResults)
+    val cand =
+      if (lshBands <= 0) gramCapped
+      else gramCapped.select(col("qid"), col("id")).unionByName(
+        lshCandidates(spark, dir, c, queries, lshBands)).distinct()
+    batchTail(cand, c, queries, numResults)
   }
 
   /** Candidate hits of the champion tier WITH the rare-gram recall floor
@@ -1066,19 +800,13 @@ object FuzzySearch {
   private def champRareUnionHits(queries: DataFrame, champ: DataFrame,
                                  full: DataFrame, allowedDf: DataFrame,
                                  rareGrams: Int): DataFrame = {
-    import graft.functions.SketchFunctions._
-    val qGrams = queries.select(col("qid"),
-      explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-    val rareW = org.apache.spark.sql.expressions.Window
+    val qGrams = queryGrams(queries)
+    val rareW = Window
       .partitionBy(col("qid")).orderBy(col("df"), col("ngram"))
     val flagged = qGrams.join(broadcast(allowedDf), "ngram")
       .withColumn("rrn", row_number().over(rareW))
-    def side(postings: DataFrame, qg: DataFrame): DataFrame = {
-      val bloom = qg.agg(bloomFilterAgg(xxhash64(col("ngram")),
-        IndexBloomEstItems, IndexBloomNumBits).as("bf"))
-      postings.filter(mightContain(bloom.scalar(), xxhash64(col("ngram"))))
-        .join(qg, "ngram").select(col("qid"), col("id"))
-    }
+    def side(postings: DataFrame, qg: DataFrame): DataFrame =
+      bloomProbe(postings, qg).join(qg, "ngram").select(col("qid"), col("id"))
     val rareQg = flagged.filter(col("rrn") <= rareGrams)
       .select(col("qid"), col("ngram"))
     val restQg = flagged.filter(col("rrn") > rareGrams)
@@ -1122,9 +850,7 @@ object FuzzySearch {
       s"coalesce(sum(CASE WHEN band_idx < $b THEN 1 END), 0)::BIGINT AS lsh_$b")
       .mkString(",\n       |       ")
     s"""WITH corpus AS ($corpusCte),
-       |q AS (SELECT id AS qid,
-       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
-       |      FROM corpus WHERE id % $BatchQueryMod = 0),
+       |$batchQueriesCte,
        |${lshSigBandCtes(FuzzyLshMaxBands)}
        |SELECT $sums
        |FROM qb JOIN nb USING (band_idx, band_hash)""".stripMargin
@@ -1138,24 +864,16 @@ object FuzzySearch {
     * the rest join the champion lists. */
   def batchFuzzySearchChampOracle(numResults: Int, dfCapInverse: Long,
                                   postingCap: Int = ChampPostingCap,
-                                  cap: Int = DefaultCap,
                                   rareGrams: Int = ChampRareGrams,
                                   lshBands: Int = FuzzyLshMaxBands): String = {
-    val qset = OracleSql.trigramSet("clean_q")
-    val tv = OracleSql.tversky(qset, OracleSql.trigramSet("clean_value"), 0.85, 0.15)
-    val efs = s"($tv * (1.0 + CASE WHEN starts_with(clean_value, clean_q) THEN 0.15 ELSE 0.0 END))"
-    val dl = "least(damerau_levenshtein(split_part(clean_q, ',', 1), split_part(clean_value, ',', 1)), " +
-      "damerau_levenshtein(clean_q, clean_value))"
-    val capN = math.max(numResults, cap)
     val hitsCte =
       if (rareGrams <= 0)
         s"""h AS (SELECT qg.qid, champ.id, count(*)::BIGINT AS ngram_hits
            |      FROM champ JOIN qg USING (g) GROUP BY qg.qid, champ.id),""".stripMargin
       else
-        s"""dfg AS (SELECT g, count(*) AS df FROM ag GROUP BY g),
-           |qd AS (SELECT qg.qid, qg.g, row_number() OVER (PARTITION BY qg.qid
-           |                             ORDER BY dfg.df, qg.g) AS rrn
-           |       FROM qg JOIN dfg USING (g) JOIN al USING (g)),
+        s"""qd AS (SELECT qg.qid, qg.g, row_number() OVER (PARTITION BY qg.qid
+           |                             ORDER BY al.df, qg.g) AS rrn
+           |       FROM qg JOIN al USING (g)),
            |h AS (SELECT qid, id, count(*)::BIGINT AS ngram_hits FROM (
            |        SELECT qd.qid, ag.id FROM qd JOIN ag USING (g)
            |        WHERE qd.rrn <= $rareGrams
@@ -1183,43 +901,18 @@ object FuzzySearch {
            |         UNION SELECT qid, id FROM lshi),""".stripMargin
     s"""WITH corpus AS ($corpusCte),
        |ag AS (SELECT id, population, unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus),
-       |al AS (SELECT g FROM ag GROUP BY g
-       |       HAVING count(*) * $dfCapInverse <= (SELECT count(*) FROM corpus)),
+       |al AS (${gramDfSql(Some(dfCapInverse))}),
        |champ AS (SELECT id, g FROM (
        |    SELECT ag.id, ag.g,
        |           row_number() OVER (PARTITION BY ag.g
        |                              ORDER BY ag.population DESC NULLS LAST, ag.id) AS prn
        |    FROM ag JOIN al USING (g)) WHERE prn <= $postingCap),
-       |q AS (SELECT id AS qid,
-       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
-       |      FROM corpus WHERE id % $BatchQueryMod = 0),
-       |qg AS (SELECT qid, unnest($qset) AS g FROM q),
+       |$batchQueriesCte,
+       |qg AS (SELECT qid, unnest(${OracleSql.trigramSet("clean_q")}) AS g FROM q),
        |$hitsCte
-       |gcap AS (SELECT qid, id FROM h WHERE ngram_hits > 0
-       |         QUALIFY row_number() OVER (PARTITION BY qid
-       |                   ORDER BY ngram_hits DESC, id) <= $capN),
+       |${batchCapSql(numResults)},
        |$candCte
-       |capped AS (SELECT d.qid, q.clean_q, c.*
-       |           FROM cand d JOIN corpus c ON c.id = d.id
-       |           JOIN q ON q.qid = d.qid),
-       |scored AS (
-       |  SELECT qid, clean_q, id, value, clean_value, population,
-       |         $efs AS efs_raw, $dl::BIGINT AS distance
-       |  FROM capped),
-       |ranked AS (
-       |  SELECT qid, id, value, clean_value, distance,
-       |         round(efs_raw, 6) AS ngram_similarity,
-       |         round(CASE WHEN population <= 0 OR efs_raw <= 0.65 THEN efs_raw * 0.9
-       |                    ELSE efs_raw * 0.9 + ln(population) * 0.1 END, 6) AS score
-       |  FROM scored),
-       |dedup AS (
-       |  SELECT * FROM ranked
-       |  QUALIFY row_number() OVER (PARTITION BY qid, clean_value
-       |                             ORDER BY score DESC, id) = 1)
-       |SELECT qid, id, value, clean_value, distance, ngram_similarity, score
-       |FROM dedup
-       |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) <= $numResults
-       |ORDER BY qid, score DESC, id""".stripMargin
+       |${batchRankSql("cand", numResults)}""".stripMargin
   }
 
   /** Query BUDGET for the champ-recall instrument — the [[RecallProbeCap]]
@@ -1261,7 +954,6 @@ object FuzzySearch {
   def batchFuzzyChampRecall(spark: SparkSession, dir: String, numResults: Int,
                             dfCapInverse: Long,
                             postingCap: Int = ChampPostingCap,
-                            cap: Int = DefaultCap,
                             rareGrams: Int = ChampRareGrams,
                             lshBands: Int = FuzzyLshMaxBands): DataFrame = {
     val qidBound = BatchQueryMod * RecallQueryCap
@@ -1271,15 +963,14 @@ object FuzzySearch {
     // one assembled plan — while persist (13.6 s) and eager cut (12.2 s)
     // both split the anchors into separate query executions that cannot
     // reuse each other's exchanges (inline: 5.8 s at sf0.1 local[32]).
-    val exact = batchFuzzySearchIndexed(spark, dir, numResults, cap)
+    val exact = batchFuzzySearchIndexed(spark, dir, numResults)
       .filter(col("qid") < qidBound)
       .select(col("qid"), col("clean_value"), col("score"))
-    val stop = batchFuzzySearchStopGramIndexed(spark, dir, numResults,
-        dfCapInverse, cap)
+    val stop = batchFuzzySearchStopGramIndexed(spark, dir, numResults, dfCapInverse)
       .filter(col("qid") < qidBound)
       .select(col("qid"), col("clean_value"))
     val champFull = batchFuzzySearchChampIndexed(spark, dir, numResults,
-        dfCapInverse, postingCap, cap, rareGrams, lshBands)
+        dfCapInverse, postingCap, rareGrams, lshBands)
       .filter(col("qid") < qidBound)
     val champ = champFull.select(col("qid"), col("clean_value"))
     def hitsOf(base: DataFrame, name: String): DataFrame =
@@ -1319,17 +1010,16 @@ object FuzzySearch {
 
   def batchFuzzyChampRecallOracle(numResults: Int, dfCapInverse: Long,
                                   postingCap: Int = ChampPostingCap,
-                                  cap: Int = DefaultCap,
                                   rareGrams: Int = ChampRareGrams,
                                   lshBands: Int = FuzzyLshMaxBands): String = {
     val qidBound = BatchQueryMod * RecallQueryCap
-    s"""WITH ex AS MATERIALIZED (SELECT qid, clean_value, score FROM (${batchFuzzySearchOracle(numResults, cap)})
+    s"""WITH ex AS MATERIALIZED (SELECT qid, clean_value, score FROM (${batchFuzzySearchOracle(numResults)})
        |       WHERE qid < $qidBound),
        |st AS MATERIALIZED (SELECT qid, clean_value
-       |       FROM (${batchFuzzySearchOracle(numResults, cap, Some(dfCapInverse))})
+       |       FROM (${batchFuzzySearchOracle(numResults, Some(dfCapInverse))})
        |       WHERE qid < $qidBound),
        |chf AS MATERIALIZED (SELECT qid, clean_value, score
-       |       FROM (${batchFuzzySearchChampOracle(numResults, dfCapInverse, postingCap, cap, rareGrams, lshBands)})
+       |       FROM (${batchFuzzySearchChampOracle(numResults, dfCapInverse, postingCap, rareGrams, lshBands)})
        |       WHERE qid < $qidBound),
        |ch AS (SELECT qid, clean_value FROM chf),
        |t3min AS (SELECT qid, min(score) AS t3_min FROM chf GROUP BY qid),
@@ -1369,17 +1059,27 @@ object FuzzySearch {
     * instead of the join itself. A serving tier runs this to decide
     * between the uncut and stop-gram plans BEFORE paying the cliff
     * (sf1 rehearsal: 245 M rows ≈ 80 s vs a sub-second prediction). */
-  def batchCandidateCost(spark: SparkSession, dir: String): DataFrame = {
+  def batchCandidateCost(spark: SparkSession, dir: String): DataFrame =
+    candidateCost(spark, dir, None)
+
+  /** The STOP-GRAM-CUT candidate volume, predicted the same way: Σ over
+    * ALLOWED grams of qcount·df, folded from the same bounded stats
+    * artifacts — what [[batchFuzzySearchAuto]]'s second tier costs
+    * before it is chosen. Equals the stop-gram candidate join's row
+    * count by the same argument as the uncut prediction. */
+  def batchStopgramCandidateCost(spark: SparkSession, dir: String,
+                                 dfCapInverse: Long): DataFrame =
+    candidateCost(spark, dir, Some(dfCapInverse))
+
+  /** Σ qcount·df over the grams the `cut` allows (every gram when None),
+    * with the query count beside it. */
+  private def candidateCost(spark: SparkSession, dir: String,
+                            cut: Option[Long]): DataFrame = {
     val c = corpus(spark, dir)
-    val dp = graft.Materialize.ensure(spark, GramDf, dir, c)
-    graft.Materialize.ensure(spark, GramN, dir, c)
-    val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
-      .agg(sum(col("df")).as("df"))
+    val allowedDf = allowedGramsDfIndexed(spark, dir, c, cut)
     val queries = batchQueries(c)
-    val qc = queries.select(col("qid"),
-        explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-      .groupBy(col("ngram")).agg(count(lit(1)).as("qcount"))
-    qc.join(broadcast(dfRel), "ngram")
+    val qc = queryGrams(queries).groupBy(col("ngram")).agg(count(lit(1)).as("qcount"))
+    qc.join(broadcast(allowedDf), "ngram")
       .agg(coalesce(sum(col("qcount") * col("df")), lit(0L))
         .cast("long").as("candidate_rows"))
       .crossJoin(broadcast(
@@ -1388,63 +1088,21 @@ object FuzzySearch {
 
   /** DuckDB twin of batchCandidateCost (same derivations, same BIGINT
     * output types). */
-  val batchCandidateCostOracle: String =
-    s"""WITH corpus AS ($corpusCte),
-       |q AS (SELECT id AS qid,
-       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
-       |      FROM corpus WHERE id % $BatchQueryMod = 0),
-       |qg AS (SELECT g AS ngram, count(*) AS qcount
-       |       FROM (SELECT qid, unnest(${OracleSql.trigramSet("clean_q")}) AS g FROM q)
-       |       GROUP BY g),
-       |dfr AS (SELECT g AS ngram, count(*) AS df
-       |        FROM (SELECT unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus)
-       |        GROUP BY g)
-       |SELECT coalesce(sum(qg.qcount * dfr.df), 0)::BIGINT AS candidate_rows,
-       |       (SELECT count(*) FROM q)::BIGINT AS n_queries
-       |FROM qg JOIN dfr USING (ngram)""".stripMargin
-
-  /** The STOP-GRAM-CUT candidate volume, predicted the same way: Σ over
-    * ALLOWED grams of qcount·df, folded from the same bounded stats
-    * artifacts — what [[batchFuzzySearchAuto]]'s second tier costs
-    * before it is chosen. Equals the stop-gram candidate join's row
-    * count by the same argument as the uncut prediction. */
-  def batchStopgramCandidateCost(spark: SparkSession, dir: String,
-                                 dfCapInverse: Long): DataFrame = {
-    val c = corpus(spark, dir)
-    val dp = graft.Materialize.ensure(spark, GramDf, dir, c)
-    val np = graft.Materialize.ensure(spark, GramN, dir, c)
-    val dfRel = Tables.parquet(spark, dp).groupBy(col("ngram"))
-      .agg(sum(col("df")).as("df"))
-    val nRel = Tables.parquet(spark, np).agg(sum(col("n")).as("n"))
-    val allowedDf = dfRel.crossJoin(broadcast(nRel))
-      .filter(col("df") * dfCapInverse <= col("n"))
-      .select(col("ngram"), col("df"))
-    val queries = batchQueries(c)
-    val qc = queries.select(col("qid"),
-        explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
-      .groupBy(col("ngram")).agg(count(lit(1)).as("qcount"))
-    qc.join(broadcast(allowedDf), "ngram")
-      .agg(coalesce(sum(col("qcount") * col("df")), lit(0L))
-        .cast("long").as("candidate_rows"))
-      .crossJoin(broadcast(
-        queries.agg(count(lit(1)).cast("long").as("n_queries"))))
-  }
+  val batchCandidateCostOracle: String = candidateCostOracle(None)
 
   def batchStopgramCandidateCostOracle(dfCapInverse: Long): String =
+    candidateCostOracle(Some(dfCapInverse))
+
+  private def candidateCostOracle(cut: Option[Long]): String =
     s"""WITH corpus AS ($corpusCte),
-       |q AS (SELECT id AS qid,
-       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
-       |      FROM corpus WHERE id % $BatchQueryMod = 0),
-       |qg AS (SELECT g AS ngram, count(*) AS qcount
+       |$batchQueriesCte,
+       |qg AS (SELECT g, count(*) AS qcount
        |       FROM (SELECT qid, unnest(${OracleSql.trigramSet("clean_q")}) AS g FROM q)
        |       GROUP BY g),
-       |dfr AS (SELECT g AS ngram, count(*) AS df
-       |        FROM (SELECT unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus)
-       |        GROUP BY g
-       |        HAVING count(*) * $dfCapInverse <= (SELECT count(*) FROM corpus))
+       |dfr AS (${gramDfSql(cut)})
        |SELECT coalesce(sum(qg.qcount * dfr.df), 0)::BIGINT AS candidate_rows,
        |       (SELECT count(*) FROM q)::BIGINT AS n_queries
-       |FROM qg JOIN dfr USING (ngram)""".stripMargin
+       |FROM qg JOIN dfr USING (g)""".stripMargin
 
   /** Candidate-row budget of every admission-controlled pair dispatcher
     * ([[batchFuzzySearchAuto]], `Dedup.containmentPairsAuto`,
@@ -1501,11 +1159,10 @@ object FuzzySearch {
   def batchChampCandidateCosts(spark: SparkSession, dir: String,
                                dfCapInverse: Long): DataFrame = {
     val c = corpus(spark, dir)
-    val allowedDf = allowedGramsDfIndexed(spark, dir, c, dfCapInverse)
-    val rareW = org.apache.spark.sql.expressions.Window
+    val allowedDf = allowedGramsDfIndexed(spark, dir, c, Some(dfCapInverse))
+    val rareW = Window
       .partitionBy(col("qid")).orderBy(col("df"), col("ngram"))
-    val qd = batchQueries(c).select(col("qid"),
-        explode(charNgramSet(col("clean_q"), 3)).as("ngram"))
+    val qd = queryGrams(batchQueries(c))
       .join(broadcast(allowedDf), "ngram")
       .withColumn("rrn", row_number().over(rareW))
     val rareCol = coalesce(sum(when(col("rrn") <= ChampRareGrams, col("df"))),
@@ -1603,7 +1260,7 @@ object FuzzySearch {
     * df·inv ≤ n reads both stats artifacts, under the [[GramN]] listing
     * too, keyed by dfCapInverse (tier 3 also by the budget). */
   def batchFuzzySearchAuto(spark: SparkSession, dir: String, numResults: Int,
-                           dfCapInverse: Long, cap: Int = DefaultCap,
+                           dfCapInverse: Long,
                            budget: Long = CandidateBudget,
                            postingCap: Int = 0): DataFrame = {
     val c = corpus(spark, dir)
@@ -1613,14 +1270,14 @@ object FuzzySearch {
     val predicted = graft.Memo(("fuzzy cost", dir), stamp) {
       batchCandidateCost(spark, dir).head().getLong(0)
     }
-    if (predicted <= budget) batchFuzzySearchIndexed(spark, dir, numResults, cap)
+    if (predicted <= budget) batchFuzzySearchIndexed(spark, dir, numResults)
     else {
       val statsStamp = stamp ++ graft.Memo.listing(spark, np)
       val stopPredicted = graft.Memo(("stop-gram cost", dir, dfCapInverse), statsStamp) {
         batchStopgramCandidateCost(spark, dir, dfCapInverse).head().getLong(0)
       }
       if (stopPredicted <= budget)
-        batchFuzzySearchStopGramIndexed(spark, dir, numResults, dfCapInverse, cap)
+        batchFuzzySearchStopGramIndexed(spark, dir, numResults, dfCapInverse)
       else {
         // postingCap = 0 (the default) means BUDGET-SIZED: the first
         // ChampPlanLadder point whose predicted volume fits — all the
@@ -1633,7 +1290,7 @@ object FuzzySearch {
             champPlanFor(spark, dir, dfCapInverse, budget)
           }
         batchFuzzySearchChampIndexed(spark, dir, numResults, dfCapInverse,
-          pc, cap, rr, bands)
+          pc, rr, bands)
       }
     }
   }
@@ -1649,14 +1306,9 @@ object FuzzySearch {
         s"coalesce(sum(CASE WHEN rrn <= $ChampRareGrams THEN least(df, $cp) END), 0)::BIGINT AS rarecut_$cp")))
       .mkString(",\n       |       ")
     s"""WITH corpus AS ($corpusCte),
-       |q AS (SELECT id AS qid,
-       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
-       |      FROM corpus WHERE id % $BatchQueryMod = 0),
+       |$batchQueriesCte,
        |qg AS (SELECT qid, unnest(${OracleSql.trigramSet("clean_q")}) AS g FROM q),
-       |dfr AS (SELECT g, count(*) AS df
-       |        FROM (SELECT unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus)
-       |        GROUP BY g
-       |        HAVING count(*) * $dfCapInverse <= (SELECT count(*) FROM corpus)),
+       |dfr AS (${gramDfSql(Some(dfCapInverse))}),
        |qd AS (SELECT qg.qid, qg.g, dfr.df,
        |              row_number() OVER (PARTITION BY qg.qid
        |                                 ORDER BY dfr.df, qg.g) AS rrn
@@ -1673,16 +1325,15 @@ object FuzzySearch {
     * champion branch per ladder cap; an explicit cap emits the single
     * fixed branch. */
   def batchFuzzySearchAutoOracle(numResults: Int, dfCapInverse: Long,
-                                 cap: Int = DefaultCap,
                                  budget: Long = CandidateBudget,
                                  postingCap: Int = 0): String = {
     val champBranches =
       if (postingCap > 0)
-        s"""  SELECT * FROM (${batchFuzzySearchChampOracle(numResults, dfCapInverse, postingCap, cap)}) ch
+        s"""  SELECT * FROM (${batchFuzzySearchChampOracle(numResults, dfCapInverse, postingCap)}) ch
            |  WHERE (SELECT candidate_rows FROM cost) > $budget
            |    AND (SELECT candidate_rows FROM cost2) > $budget""".stripMargin
       else ChampPlanLadder.zipWithIndex.map { case ((bands, rr, cp), i) =>
-        s"""  SELECT * FROM (${batchFuzzySearchChampOracle(numResults, dfCapInverse, cp, cap, rr, bands)}) ch_$i
+        s"""  SELECT * FROM (${batchFuzzySearchChampOracle(numResults, dfCapInverse, cp, rr, bands)}) ch_$i
            |  WHERE (SELECT candidate_rows FROM cost) > $budget
            |    AND (SELECT candidate_rows FROM cost2) > $budget
            |    AND (SELECT pick FROM chosen) = $i""".stripMargin
@@ -1711,10 +1362,10 @@ object FuzzySearch {
        |cost2 AS (${batchStopgramCandidateCostOracle(dfCapInverse)})$chosenCte
        |SELECT qid, id, value, clean_value, distance, ngram_similarity, score
        |FROM (
-       |  SELECT * FROM (${batchFuzzySearchOracle(numResults, cap)}) u
+       |  SELECT * FROM (${batchFuzzySearchOracle(numResults)}) u
        |  WHERE (SELECT candidate_rows FROM cost) <= $budget
        |  UNION ALL
-       |  SELECT * FROM (${batchFuzzySearchOracle(numResults, cap, Some(dfCapInverse))}) s
+       |  SELECT * FROM (${batchFuzzySearchOracle(numResults, Some(dfCapInverse))}) s
        |  WHERE (SELECT candidate_rows FROM cost) > $budget
        |    AND (SELECT candidate_rows FROM cost2) <= $budget
        |  UNION ALL
@@ -1723,142 +1374,127 @@ object FuzzySearch {
        |ORDER BY qid, score DESC, id""".stripMargin
   }
 
-  /** Shared scoring tail of the two batch spellings. */
-  private def scoreBatch(capped: DataFrame, c: DataFrame, queries: DataFrame,
-                         numResults: Int): DataFrame = {
-    val scored = capped.join(c, "id").join(broadcast(queries), "qid")
-      .withColumn("efs_raw", entityFuzzyScore(col("clean_q"), col("clean_value")))
-      .withColumn("distance",
-        geoDamerauLevenshtein(col("clean_q"), col("clean_value")).cast("long"))
-      .withColumn("ngram_similarity", round(col("efs_raw"), 6))
-      .withColumn("score",
-        round(geoSearchScore(col("clean_q"), col("clean_value"), col("population")), 6))
-    val dedupW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"), col("clean_value"))
-      .orderBy(col("score").desc, col("id"))
-    val topW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
-    scored.withColumn("rn", row_number().over(dedupW)).filter(col("rn") === 1)
-      .withColumn("qrn", row_number().over(topW)).filter(col("qrn") <= numResults)
-      .select(col("qid"), col("id"), col("value"), col("clean_value"),
-        col("distance"), col("ngram_similarity"), col("score"))
-      .orderBy(col("qid"), col("score").desc, col("id"))
-  }
-
-  def batchFuzzySearchOracle(numResults: Int, cap: Int = DefaultCap,
-                             dfCapInverse: Option[Long] = None): String = {
-    val qsetQ = OracleSql.trigramSet("q.clean_q")
-    val qset = OracleSql.trigramSet("clean_q")
-    val tv = OracleSql.tversky(qset, OracleSql.trigramSet("clean_value"), 0.85, 0.15)
-    val efs = s"($tv * (1.0 + CASE WHEN starts_with(clean_value, clean_q) THEN 0.15 ELSE 0.0 END))"
-    val dl = "least(damerau_levenshtein(split_part(clean_q, ',', 1), split_part(clean_value, ',', 1)), " +
-      "damerau_levenshtein(clean_q, clean_value))"
-    // Stop-gram cut (batchFuzzySearchStopGram): grams with df·inv > N are
-    // excluded from hit counting — exact-integer compare, multiplicity df.
-    // Posting-join spelling (round 13): hits fold from an equi-join of
-    // corpus trigram OCCURRENCES against each query's trigram SET — an
-    // occurrence matches at most once per distinct query gram, so the
-    // count is identical to the original brute-force list_filter form,
-    // but the work is Σ qcount·df join rows instead of |Q|·|corpus|
-    // per-pair list evaluations (450 M trigram list ops at the sf1
-    // replica — the brute-force form ran for hours there; the champ
-    // oracle already used this shape).
-    val allowedCte = dfCapInverse.map { inv =>
-      s"""allowed AS (SELECT g FROM (SELECT unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus) t
-         |            GROUP BY g
-         |            HAVING count(*) * $inv <= (SELECT count(*) FROM corpus)),
-         |""".stripMargin
-    }.getOrElse("")
-    val allowedJoin = if (dfCapInverse.isDefined) " JOIN allowed USING (g)" else ""
-    s"""WITH corpus AS ($corpusCte),
-       |${allowedCte}q AS (SELECT id AS qid,
-       |             ${OracleSql.clean("(substr(value, 1, 3) || substr(value, 5))")} AS clean_q
-       |      FROM corpus WHERE id % $BatchQueryMod = 0),
-       |cg AS (SELECT id, unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus),
-       |qg AS (SELECT qid, unnest($qset) AS g FROM q),
-       |h AS (SELECT qg.qid, cg.id, count(*)::BIGINT AS ngram_hits
-       |      FROM cg$allowedJoin JOIN qg USING (g)
-       |      GROUP BY qg.qid, cg.id),
-       |cand AS (SELECT q.qid, q.clean_q, c.*, h.ngram_hits
-       |         FROM h JOIN corpus c ON c.id = h.id JOIN q ON q.qid = h.qid),
-       |capped AS (
-       |  SELECT * FROM cand WHERE ngram_hits > 0
-       |  QUALIFY row_number() OVER (PARTITION BY qid
-       |                             ORDER BY ngram_hits DESC, id) <= ${math.max(numResults, cap)}),
-       |scored AS (
-       |  SELECT qid, clean_q, id, value, clean_value, population,
-       |         $efs AS efs_raw, $dl::BIGINT AS distance
-       |  FROM capped),
-       |ranked AS (
-       |  SELECT qid, id, value, clean_value, distance,
-       |         round(efs_raw, 6) AS ngram_similarity,
-       |         round(CASE WHEN population <= 0 OR efs_raw <= 0.65 THEN efs_raw * 0.9
-       |                    ELSE efs_raw * 0.9 + ln(population) * 0.1 END, 6) AS score
-       |  FROM scored),
-       |dedup AS (
-       |  SELECT * FROM ranked
-       |  QUALIFY row_number() OVER (PARTITION BY qid, clean_value
-       |                             ORDER BY score DESC, id) = 1)
-       |SELECT qid, id, value, clean_value, distance, ngram_similarity, score
-       |FROM dedup
-       |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) <= $numResults
-       |ORDER BY qid, score DESC, id""".stripMargin
-  }
-
   // ---------------------------------------------------------------- oracle
 
-  private def sqlList(xs: Seq[String]): String =
-    xs.map(x => s"'${x.replace("'", "''")}'").mkString("[", ", ", "]")
+  private def sqlStr(s: String): String = s"'${s.replace("'", "''")}'"
 
-  def fuzzySearchOracle(query: String, numResults: Int, cap: Int = DefaultCap,
-                        corpusSql: String = corpusCte,
-                        filters: Seq[(String, Any)] = Nil): String = {
-    val q = cleanQuery(query)
-    val qGramSet = sqlList(queryTrigrams(q).distinct)
-    val qq = q.replace("'", "''")
-    val sset = OracleSql.trigramSet("clean_value")
-    val tv = OracleSql.tversky(qGramSet, sset, 0.85, 0.15)
-    val efs = s"($tv * (1.0 + CASE WHEN starts_with(clean_value, '$qq') THEN 0.15 ELSE 0.0 END))"
-    // geo_search_score's postal branch (geo_manager.py:493-495): a
-    // digits-only query scores against the FIRST SPACE-TOKEN of the source;
-    // ngram_similarity and the DL distance always use the full source
-    // (fuzzy_search result dict, geo_manager.py:560-573). For non-numeric
-    // queries the branch constant-folds away on both engines.
-    val scoreBase = if (isPostal(q)) {
-      val tok = "split_part(clean_value, ' ', 1)"
-      val tvP = OracleSql.tversky(qGramSet, OracleSql.trigramSet(tok), 0.85, 0.15)
-      s"($tvP * (1.0 + CASE WHEN starts_with($tok, '$qq') THEN 0.15 ELSE 0.0 END))"
-    } else efs
-    val dl = s"least(damerau_levenshtein(split_part('$qq', ',', 1), split_part(clean_value, ',', 1)), " +
-      s"damerau_levenshtein('$qq', clean_value))"
-    // Filters apply AFTER the cap (the reference's results comprehension,
-    // geo_manager.py:578-580) — mirrored by rankCandidates.
-    val filterSql = if (filters.isEmpty) "" else "WHERE " + filters.map {
-      case (k, v: String) => s"$k = '${v.replace("'", "''")}'"
-      case (k, v) => s"$k = $v"
-    }.mkString(" AND ")
-    s"""WITH corpus AS ($corpusSql),
-       |cand AS (
+  private def partitionBy(key: Option[String]): String =
+    key.fold("")(k => s"PARTITION BY $k ")
+
+  /** The oracle's 500-cap window, per `key` or over one query's hits. */
+  private def capSql(key: Option[String], numResults: Int): String =
+    s"QUALIFY row_number() OVER (${partitionBy(key)}ORDER BY ngram_hits DESC, id) <= ${capLimit(numResults)}"
+
+  /** The `cand` CTE of one literal query: every corpus row with its hits. */
+  private def queryHitsSql(q: String): String = {
+    val qGramSet = queryTrigrams(q).distinct.map(sqlStr).mkString("[", ", ", "]")
+    s"""cand AS (
        |  SELECT *, len(list_filter(${OracleSql.trigrams("clean_value")}, g -> list_contains($qGramSet, g)))::BIGINT AS ngram_hits
-       |  FROM corpus),
-       |capped AS (
-       |  SELECT * FROM cand WHERE ngram_hits > 0
-       |  QUALIFY row_number() OVER (ORDER BY ngram_hits DESC, id) <= ${math.max(numResults, cap)}),
-       |scored AS (
-       |  SELECT id, value, clean_value, population, $efs AS efs_raw,
-       |         $scoreBase AS score_base,
-       |         $dl::BIGINT AS distance
-       |  FROM capped $filterSql),
+       |  FROM corpus)""".stripMargin
+  }
+
+  /** (g, df) per corpus trigram, df counting occurrences; with `cut`, only
+    * the grams that clear df·inv ≤ n (the stop-gram cut, exact-integer). */
+  private def gramDfSql(cut: Option[Long]): String =
+    s"""SELECT g, count(*) AS df
+       |        FROM (SELECT unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus)
+       |        GROUP BY g""".stripMargin +
+      cut.fold("")(inv => s"\n        HAVING count(*) * $inv <= (SELECT count(*) FROM corpus)")
+
+  /** The per-qid cap over `h`(qid, id, ngram_hits): the `gcap` CTE. */
+  private def batchCapSql(numResults: Int): String =
+    s"gcap AS (SELECT qid, id FROM h WHERE ngram_hits > 0 ${capSql(Some("qid"), numResults)})"
+
+  /** The batch fetch → score → rank over the (qid, id) CTE `cand`. */
+  private def batchRankSql(cand: String, numResults: Int): String =
+    s"""capped AS (SELECT d.qid, q.clean_q, c.*
+       |           FROM $cand d JOIN corpus c ON c.id = d.id
+       |           JOIN q ON q.qid = d.qid),
+       |${rankSql(Some("qid"), "clean_q", numResults)}""".stripMargin
+
+  /** DuckDB twin of [[scoreCols]] + [[rankKeyed]]: from a `capped` CTE of
+    * records (with `key` and the query's columns), the `scored`, `ranked`
+    * and `dedup` CTEs and the top-k select, against the query expression
+    * `q` (a quoted literal or a column). geo_search_score's postal branch
+    * (geo_manager.py:493-495): a digits-only query scores against the
+    * FIRST SPACE-TOKEN of the source; ngram_similarity and the DL distance
+    * always use the full source (fuzzy_search result dict,
+    * geo_manager.py:560-573). For a literal query the branch constant-folds
+    * on both engines. */
+  private def rankSql(key: Option[String], q: String, numResults: Int): String = {
+    val k = key.fold("")(_ + ", ")
+    def efs(src: String): String =
+      s"(${OracleSql.tversky(OracleSql.trigramSet(q), OracleSql.trigramSet(src), 0.85, 0.15)}" +
+        s" * (1.0 + CASE WHEN starts_with($src, $q) THEN 0.15 ELSE 0.0 END))"
+    val tok = "split_part(clean_value, ' ', 1)"
+    s"""scored AS (
+       |  SELECT ${k}id, value, clean_value, population,
+       |         ${efs("clean_value")} AS efs_raw,
+       |         (CASE WHEN regexp_matches($q, '^[0-9]+$$') THEN ${efs(tok)}
+       |               ELSE ${efs("clean_value")} END) AS score_base,
+       |         least(damerau_levenshtein(split_part($q, ',', 1), split_part(clean_value, ',', 1)),
+       |               damerau_levenshtein($q, clean_value))::BIGINT AS distance
+       |  FROM capped),
        |ranked AS (
-       |  SELECT id, value, clean_value, distance,
+       |  SELECT ${k}id, value, clean_value, distance,
        |         round(efs_raw, 6) AS ngram_similarity,
        |         round(CASE WHEN population <= 0 OR score_base <= 0.65 THEN score_base * 0.9
        |                    ELSE score_base * 0.9 + ln(population) * 0.1 END, 6) AS score
        |  FROM scored),
        |dedup AS (
        |  SELECT * FROM ranked
-       |  QUALIFY row_number() OVER (PARTITION BY clean_value ORDER BY score DESC, id) = 1)
-       |SELECT id, value, clean_value, distance, ngram_similarity, score
-       |FROM dedup ORDER BY score DESC, id LIMIT $numResults""".stripMargin
+       |  QUALIFY row_number() OVER (PARTITION BY ${k}clean_value ORDER BY score DESC, id) = 1)
+       |SELECT ${k}id, value, clean_value, distance, ngram_similarity, score
+       |FROM dedup
+       |QUALIFY row_number() OVER (${partitionBy(key)}ORDER BY score DESC, id) <= $numResults
+       |ORDER BY ${k}score DESC, id""".stripMargin
+  }
+
+  /** DuckDB twin of the batch faces (`dfCapInverse`: the stop-gram cut).
+    * Posting-join spelling (round 13): hits fold from an equi-join of
+    * corpus trigram OCCURRENCES against each query's trigram SET — an
+    * occurrence matches at most once per distinct query gram, so the
+    * count is identical to the brute-force list_filter form, but the work
+    * is Σ qcount·df join rows instead of |Q|·|corpus| per-pair list
+    * evaluations (450 M trigram list ops at the sf1 replica — the
+    * brute-force form ran for hours there). */
+  def batchFuzzySearchOracle(numResults: Int,
+                             dfCapInverse: Option[Long] = None): String =
+    batchOracle(corpusCte, batchQueriesCte, numResults, dfCapInverse)
+
+  def batchFuzzySearchZipOracle(numResults: Int): String =
+    batchOracle(zipCorpusCte, zipQueriesCte, numResults, None)
+
+  private def batchOracle(corpusSql: String, queriesCte: String, numResults: Int,
+                          cut: Option[Long]): String = {
+    val allowedCte = cut.fold("")(inv => s"allowed AS (${gramDfSql(Some(inv))}),\n")
+    val allowedJoin = if (cut.isDefined) " JOIN allowed USING (g)" else ""
+    s"""WITH corpus AS ($corpusSql),
+       |$queriesCte,
+       |${allowedCte}cg AS (SELECT id, unnest(${OracleSql.trigrams("clean_value")}) AS g FROM corpus),
+       |qg AS (SELECT qid, unnest(${OracleSql.trigramSet("clean_q")}) AS g FROM q),
+       |h AS (SELECT qg.qid, cg.id, count(*)::BIGINT AS ngram_hits
+       |      FROM cg$allowedJoin JOIN qg USING (g)
+       |      GROUP BY qg.qid, cg.id),
+       |${batchCapSql(numResults)},
+       |${batchRankSql("gcap", numResults)}""".stripMargin
+  }
+
+  def fuzzySearchOracle(query: String, numResults: Int,
+                        corpusSql: String = corpusCte,
+                        filters: Seq[(String, Any)] = Nil): String = {
+    val q = cleanQuery(query)
+    // Filters apply AFTER the cap (the reference's results comprehension,
+    // geo_manager.py:578-580) — mirrored by rankCandidates.
+    val filterSql = if (filters.isEmpty) "" else "WHERE " + filters.map {
+      case (k, v: String) => s"$k = ${sqlStr(v)}"
+      case (k, v) => s"$k = $v"
+    }.mkString(" AND ")
+    s"""WITH corpus AS ($corpusSql),
+       |${queryHitsSql(q)},
+       |capped AS (
+       |  SELECT * FROM (SELECT * FROM cand WHERE ngram_hits > 0 ${capSql(None, numResults)})
+       |  $filterSql),
+       |${rankSql(None, sqlStr(q), numResults)}""".stripMargin
   }
 }

@@ -91,7 +91,7 @@ class ArtifactLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val books = Similarity.pqCodebooks(e, 25L)
     Seq(
       FuzzySearch.Postings -> "corpus",
-      FuzzySearch.partPostings() -> "zips",
+      FuzzySearch.PartPostings -> "zips",
       FuzzySearch.GramDf -> "corpus",
       FuzzySearch.GramN -> "corpus",
       FuzzySearch.FuzzyLsh -> "corpus",

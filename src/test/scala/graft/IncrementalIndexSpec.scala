@@ -55,9 +55,9 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = zc.filter(pmod(col("id"), lit(7)) =!= 0)
     val batch = zc.filter(pmod(col("id"), lit(7)) === 0)
     assert(batch.count() > 0 && base.count() > 0)
-    val appended = Materialize.ensure(spark, FuzzySearch.partPostings().copy(version = 901), dir, base)
-    Materialize.append(spark, FuzzySearch.partPostings().copy(version = 901), dir, batch)
-    val rebuilt = Materialize.ensure(spark, FuzzySearch.partPostings().copy(version = 902), dir, zc)
+    val appended = Materialize.ensure(spark, FuzzySearch.PartPostings.copy(version = 901), dir, base)
+    Materialize.append(spark, FuzzySearch.PartPostings.copy(version = 901), dir, batch)
+    val rebuilt = Materialize.ensure(spark, FuzzySearch.PartPostings.copy(version = 902), dir, zc)
     def rows(p: String): Seq[(String, String, Long)] =
       spark.read.parquet(p).collect()
         .map(r => (r.getAs[String]("ngram"), r.getAs[String]("partition"),
@@ -239,118 +239,6 @@ class IncrementalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     Materialize.append(spark, CorpusPrep.DocWins.copy(version = 931), dir, batch,
       Some("b1"))
     assert(rows(ap) == once, "a late replay of a folded batch must still no-op")
-  }
-
-  test("champion index: delta refresh == rebuild across stop-gram threshold crossings") {
-    // Crafted so the batch drives every crossing the delta must handle
-    // (inv = 2: allowed iff df·2 ≤ n; K = 2 so truncation bites):
-    //  - "abc" df 4 of n 7 (8 > 7, cut) → 8 ≤ 15 after the batch: ENTERS
-    //  - "xyz" df 1 (allowed) → batch adds 7: 16 > 15: LEAVES
-    //  - "mno" stays; the batch's pop-99 doc must displace the pop-50 one
-    //    in the K=2 list (the row-local merge re-ranks correctly)
-    import graft.operators.FuzzySearch
-    import spark.implicits._
-    val c0 = Seq(
-      (1L, "abc", 10L), (2L, "abc", 20L), (3L, "abc", 30L), (4L, "abc", 40L),
-      (5L, "xyz", 70L), (6L, "mno", 50L), (7L, "mno", 60L))
-      .toDF("id", "clean_value", "population")
-    val batch = (Seq((15L, "mno", 99L)) ++ (8L to 14L).map(i => (i, "xyz", i)))
-      .toDF("id", "clean_value", "population")
-    val full = c0.unionByName(batch)
-    // version range disjoint from every other test's: this test ensures
-    // POSTINGS at v over a crafted corpus, and a shared version would
-    // poison the real-corpus artifact a later test expects to build
-    // (exactly what v=903 did to the posting-compaction test)
-    val v = 923
-    // prior generation + the cadence's per-batch appends
-    Materialize.ensure(spark, FuzzySearch.Postings.copy(version = v), dir, c0)
-    Materialize.ensure(spark, FuzzySearch.GramDf.copy(version = v), dir, c0)
-    Materialize.ensure(spark, FuzzySearch.GramN.copy(version = v), dir, c0)
-    FuzzySearch.ensureChampionIndex(spark, dir, c0, dfCapInverse = 2L,
-      postingCap = 2, version = v)
-    Materialize.append(spark, FuzzySearch.Postings.copy(version = v), dir, batch)
-    Materialize.append(spark, FuzzySearch.GramDf.copy(version = v), dir, batch)
-    Materialize.append(spark, FuzzySearch.GramN.copy(version = v), dir, batch)
-    val dp = FuzzySearch.deltaChampionRefresh(spark, dir, full, batch,
-      dfCapInverse = 2L, postingCap = 2, version = v,
-      statsVersion = v, postingsVersion = v)
-    val rp = FuzzySearch.ensureChampionIndex(spark, dir, full,
-      dfCapInverse = 2L, postingCap = 2, version = v + 1)
-    def rows(p: String): Seq[(String, Long, Long)] =
-      spark.read.parquet(p).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-    val d = rows(dp)
-    assert(d == rows(rp), "delta-refreshed champion index diverges from the rebuild")
-    assert(d.map(_._1).contains("abc"), "the entered gram must gain its list")
-    assert(!d.map(_._1).contains("xyz"), "the left gram must lose its list")
-    assert(d.filter(_._1 == "mno").map(_._2) == Seq(7L, 15L),
-      "the stayed gram's K=2 list must re-rank with the batch's pop-99 doc")
-    // threshold-storm arm: budget 0 forces the SHUFFLE rank-key join for
-    // the entered lists (the broadcast-dispatch's fallback) — identical
-    // artifact, only the physical join differs
-    FuzzySearch.ensureChampionIndex(spark, dir, c0, dfCapInverse = 2L,
-      postingCap = 2, version = 941)
-    val sp = FuzzySearch.deltaChampionRefresh(spark, dir, full, batch,
-      dfCapInverse = 2L, postingCap = 2, version = 941,
-      statsVersion = v, postingsVersion = v, enteredBroadcastBudget = 0L)
-    assert(rows(sp) == d,
-      "the shuffle-arm entered join must match the broadcast arm")
-  }
-
-  test("champion refresh dispatch: every arm serves what a rebuild would") {
-    import graft.operators.FuzzySearch
-    import spark.implicits._
-    val c0 = Seq(
-      (1L, "abc", 10L), (2L, "abd", 20L), (3L, "abe", 30L), (4L, "abf", 40L),
-      (5L, "xyz", 70L), (6L, "mno", 50L), (7L, "mnp", 60L))
-      .toDF("id", "clean_value", "population")
-    val batch = Seq((8L, "mnq", 99L), (9L, "xya", 5L))
-      .toDF("id", "clean_value", "population")
-    val full = c0.unionByName(batch)
-    val v = 925 // crafted-corpus artifacts: own version range (see above)
-    def rows(p: String): Seq[(String, Long, Long)] =
-      spark.read.parquet(p).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-
-    // no committed artifact → bootstrap through plain ensure
-    val (p0, d0) = FuzzySearch.championRefreshAuto(spark, dir, c0,
-      c0.limit(0), dfCapInverse = 2L, postingCap = 2,
-      version = v, statsVersion = v, postingsVersion = v)
-    assert(d0 == "bootstrap" && rows(p0).nonEmpty)
-
-    // the cadence appends the batch's postings + stats, then dispatches:
-    // n (9 docs, from the additive stats fold) is under the default
-    // floor → the exact rebuild arm, equal to a from-scratch build
-    Materialize.ensure(spark, FuzzySearch.Postings.copy(version = v), dir, c0)
-    Materialize.ensure(spark, FuzzySearch.GramDf.copy(version = v), dir, c0)
-    Materialize.ensure(spark, FuzzySearch.GramN.copy(version = v), dir, c0)
-    Materialize.append(spark, FuzzySearch.Postings.copy(version = v), dir, batch)
-    Materialize.append(spark, FuzzySearch.GramDf.copy(version = v), dir, batch)
-    Materialize.append(spark, FuzzySearch.GramN.copy(version = v), dir, batch)
-    val (p1, d1) = FuzzySearch.championRefreshAuto(spark, dir, full, batch,
-      dfCapInverse = 2L, postingCap = 2,
-      version = v, statsVersion = v, postingsVersion = v)
-    assert(d1 == "rebuild")
-    val rebuilt = rows(FuzzySearch.ensureChampionIndex(spark, dir, full,
-      dfCapInverse = 2L, postingCap = 2, version = v + 1))
-    assert(rows(p1) == rebuilt)
-
-    // floor forced under the corpus and a minority batch → the delta arm,
-    // still equal to the rebuild (the crossings spec's core equality,
-    // here reached through the dispatcher)
-    graft.Materialize.invalidate(spark, s"graft_champost_2_2", dir, v)
-    FuzzySearch.ensureChampionIndex(spark, dir, c0, dfCapInverse = 2L,
-      postingCap = 2, version = v)
-    val (p2, d2) = FuzzySearch.championRefreshAuto(spark, dir, full, batch,
-      dfCapInverse = 2L, postingCap = 2, floorDocs = 1L,
-      version = v, statsVersion = v, postingsVersion = v)
-    assert(d2 == "delta" && rows(p2) == rebuilt)
-
-    // nothing arrived → ensure (no rebuild of a fresh artifact)
-    val (p3, d3) = FuzzySearch.championRefreshAuto(spark, dir, full,
-      full.limit(0), dfCapInverse = 2L, postingCap = 2, floorDocs = 1L,
-      version = v, statsVersion = v, postingsVersion = v)
-    assert(d3 == "ensure" && rows(p3) == rebuilt)
   }
 
   test("indexed fuzzy search over an appended index == inline over the union corpus") {

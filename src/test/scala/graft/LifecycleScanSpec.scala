@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
   * specs: no composed reference twin or `…ForTest` def, and no stream is
   * started outside the ingest cadence. Driver-side memory of computed
   * results lives in [[Memo]] only. Every doc comment documents the
-  * definition under it. */
+  * definition under it. FuzzySearch spells its cap window and its oracle
+  * rank formula once. */
 class LifecycleScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -137,5 +138,15 @@ class LifecycleScanSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"doc comments that document no definition: ${offenders.mkString(", ")}")
+  }
+
+  test("FuzzySearch spells the cap window and the oracle rank formula once") {
+    val p = root.resolve("graft/operators/FuzzySearch.scala")
+    val src = Files.readString(p)
+    for (spelling <- Seq("col(\"ngram_hits\").desc", "ln(population) * 0.1")) {
+      val found = Iterator.iterate(src.indexOf(spelling))(i => src.indexOf(spelling, i + 1))
+        .takeWhile(_ >= 0).map(at(p, src, _)).toSeq
+      assert(found.size == 1, s"$spelling spelled ${found.size} times: ${found.mkString(", ")}")
+    }
   }
 }

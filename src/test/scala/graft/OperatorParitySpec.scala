@@ -193,6 +193,42 @@ class OperatorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served.nonEmpty && served.toSeq == inline.toSeq)
   }
 
+  test("building the inline stop-gram batch runs no Spark job") {
+    // the cut's corpus count n is derived in the plan, not by a count()
+    // while the DataFrame is built
+    FuzzySearch.batchFuzzySearchStopGram(spark, dir, 20, 10L).collect()
+    assert(SparkJobs.jobsOf(spark)(
+      FuzzySearch.batchFuzzySearchStopGram(spark, dir, 20, 10L): Unit) == 0)
+  }
+
+  test("a batch mixing digits-only and text queries scores each row like the single-query face") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val zc = FuzzySearch.zipCorpus(spark, dir)
+    val names = zc.orderBy(col("id")).select(col("clean_value")).limit(4)
+      .collect().map(_.getString(0)).toSeq
+    // per name: the zip token with a digit dropped (postal branch), the
+    // whole "<zip> <country>" with a digit dropped (text branch), and a
+    // text query with no digits at all
+    val qs = names.flatMap { n =>
+      val zip = n.split(" ")(0)
+      Seq(zip.patch(3, "", 1), n.patch(2, "", 1))
+    } :+ "us" :+ "zip us"
+    val queries = qs.zipWithIndex.map { case (q, i) => (i.toLong, q) }.toDF("qid", "clean_q")
+    assert(qs.exists(_.matches("^[0-9]+$")) && qs.exists(!_.matches("^[0-9]+$")))
+    val k = 15
+    val batch = FuzzySearch.batchFuzzySearchOver(queries,
+      graft.operators.NgramIndex.postingPairsMulti(zc), zc, k).collect()
+    qs.zipWithIndex.foreach { case (q, i) =>
+      val got = batch.filter(_.getLong(0) == i.toLong).map(_.toSeq.tail).toSeq
+      val want = FuzzySearch.fuzzySearch(spark, dir, q, k,
+        corpusOf = FuzzySearch.zipCorpus).collect().map(_.toSeq).toSeq
+      assert(got == want, s"query '$q'")
+    }
+    assert(batch.map(_.getLong(0)).distinct.length >= 2 * names.length,
+      "every zip-derived query must return rows")
+  }
+
   test("rpTopKIndexed (materialized projection) == rpTopK (inline)") {
     val inline = Similarity.rpTopK(spark, dir, 0L, 10).collect()
     val indexed = Similarity.rpTopKIndexed(spark, dir, 0L, 10).collect()

@@ -327,7 +327,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sdf = stream.toDF().toDF("qid", "clean_q")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val q = perBatch(sdf)(b => FuzzySearch.batchFuzzySearchOver(b, postings, c, 20,
-        FuzzySearch.DefaultCap, Some(allowed))) {
+        Some(allowed))) {
       (out, _) => buf ++= out.collect().map(_.toSeq)
     }
     try {
@@ -371,7 +371,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val postings = spark.read.parquet(FuzzySearch.ensurePostingsIndex(spark, dir, c))
       def expect(qs: Seq[(Long, String)], allowed: DataFrame): List[Seq[Any]] =
         FuzzySearch.batchFuzzySearchOver(qs.toDF("qid", "clean_q"), postings, c,
-            20, FuzzySearch.DefaultCap, Some(allowed))
+            20, Some(allowed))
           .collect().map(_.toSeq).toList.sortBy(_.mkString("|"))
       // Inline folds of the two stats states (additivity makes the appended
       // artifact fold equal the full-corpus fold, IncrementalIndexSpec).
@@ -406,7 +406,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val sdf = stream.toDF().toDF("qid", "clean_q")
       val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
       val q = perBatch(sdf)(b => FuzzySearch.batchFuzzySearchOver(b, postings, c, 20,
-          FuzzySearch.DefaultCap,
           Some(FuzzySearch.allowedGramsIndexed(spark, dir, c, inv, version = Ver)))) {
         (out, _) => buf ++= out.collect().map(_.toSeq)
       }
